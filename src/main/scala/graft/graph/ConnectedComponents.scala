@@ -1,39 +1,56 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** E15 — connected components / island analysis (reference:
   * navmesh_connectivity.py:157-207: BFS islands over KNN edges).
   *
-  * Iterative min-label propagation as a DataFrame fixpoint loop: each
-  * round every node takes min(own label, neighbors' labels); stop when no
-  * label changes. Converges in O(diameter) rounds; each round is one
-  * shuffle join + aggregation — no GraphFrames dependency, no driver-side
-  * graph (the reference BFS walks an in-memory dict; this form scales to
-  * edge tables that don't fit one machine). The driver-side loop only
-  * checks a scalar convergence count per round.
+  * Every form returns (node, component = min node id reachable), one row
+  * per distinct node of an undirected (src, dst) edge list:
+  *  - [[unionFind]] / [[localUnionFind]]: union-find on the driver over a
+  *    collected edge list — one read, no per-round job latency; the
+  *    reference's in-memory BFS at its ≤200-sample scale;
+  *  - [[alternatingStar]]: the distributed large-star/small-star fixpoint,
+  *    O(log n) rounds, for edge tables that don't fit one machine;
+  *  - [[labelPropagation]]: plain min-label propagation, O(diameter)
+  *    rounds — the simple distributed baseline the others are checked
+  *    against.
+  * [[components]] picks between the first two by edge count.
   */
 object ConnectedComponents {
 
-  /** Size-adaptive CC: small edge sets run union-find on the driver (one
-    * collect, no per-round job latency — mirrors the reference's in-memory
-    * BFS at its ≤200-sample scale); large edge sets use the distributed
-    * alternating-star fixpoint (O(log n) rounds vs the O(diameter) of
-    * plain label propagation — the difference between ~40 and ~10⁶ rounds
-    * on a chain-shaped dedup graph). The cutover is a cheap count. */
+  /** Size-adaptive CC: small edge sets run union-find on the driver;
+    * large edge sets use the distributed alternating-star fixpoint
+    * (O(log n) rounds vs the O(diameter) of plain label propagation — the
+    * difference between ~40 and ~10⁶ rounds on a chain-shaped dedup
+    * graph). The cutover reads at most `localThreshold + 1` edges to the
+    * driver in one `limit` collect; at or below the threshold those rows
+    * ARE the edge list, so the local branch reads the input only once. */
   def components(edges: DataFrame, localThreshold: Long = 1000000L): DataFrame = {
-    val n = edges.limit((localThreshold + 1).toInt).count()
-    if (n <= localThreshold) localUnionFind(edges) else alternatingStar(edges)
+    val head = longEdges(edges).limit((localThreshold + 1).toInt).collect()
+    if (head.length <= localThreshold) labelled(edges, head)
+    else alternatingStar(edges)
   }
 
-  /** Driver-side weighted union-find over a collected edge list; returns
-    * the same (node, component=min reachable id) contract as
-    * [[labelPropagation]]. */
-  def localUnionFind(edges: DataFrame): DataFrame = {
+  /** Driver-side union-find over a collected edge list; returns the same
+    * (node, component=min reachable id) contract as [[labelPropagation]]. */
+  def localUnionFind(edges: DataFrame): DataFrame =
+    labelled(edges, longEdges(edges).collect())
+
+  private def longEdges(edges: DataFrame): DataFrame =
+    edges.select(col("src").cast("long"), col("dst").cast("long"))
+
+  private def labelled(edges: DataFrame, rows: Array[Row]): DataFrame = {
     val spark = edges.sparkSession
-    val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    import spark.implicits._
+    unionFind(rows.map(r => (r.getLong(0), r.getLong(1)))).toDF("node", "component")
+  }
+
+  /** Union-find (union toward the smaller root, path compression) over an
+    * edge list held on the driver: (node, component = min reachable id)
+    * for every node that has an edge, sorted by node. */
+  private[graph] def unionFind(edges: Iterable[(Long, Long)]): Seq[(Long, Long)] = {
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -46,12 +63,10 @@ object ConnectedComponents {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
-    es.foreach { case (a, b) =>
+    edges.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b); union(a, b)
     }
-    val rows = parent.keys.toSeq.sorted.map(nd => (nd, find(nd)))
-    import spark.implicits._
-    rows.toDF("node", "component")
+    parent.keys.toSeq.sorted.map(nd => (nd, find(nd)))
   }
 
   /** @param edges (src, dst) undirected edge list (any orientation)

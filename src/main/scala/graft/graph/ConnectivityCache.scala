@@ -3,8 +3,9 @@ package graft.graph
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** S14 — per-map connectivity analysis cache (reference:
   * navmesh_connectivity.py:209-231, invalidation :272-290).
@@ -18,82 +19,111 @@ import org.apache.spark.sql.functions._
   * set plus the analysis parameters: the cached row is valid iff the
   * exact inputs that produced it are unchanged — stronger than the
   * reference's date/mtime check (robust to rewrites that keep mtime, to
-  * clock skew, and to task retries) and computable in one map-side
-  * aggregation pass.
+  * clock skew, and to task retries) and computable in one map-side pass.
   *
-  * Scale posture: the fingerprint is an order-independent, multiplicity-
-  * sensitive SUM of per-row `xxhash64` (wrapping mod 2^64), so it needs no
-  * sort and no shuffle beyond one partial aggregate; the analysis itself
-  * reuses [[Knn]] / [[ConnectedComponents]] (bounded kNN + label
-  * propagation). The cache table stays one row per map — driver-size by
-  * construction.
+  * Cost posture: a map is ≤ a few hundred samples, so a read-through is
+  * dominated by Spark job launches, not by work. A hit is two jobs (the
+  * fingerprint pass and the cache probe); a miss adds one kNN run, whose
+  * edge list is collected once and summarized on the driver, and one
+  * write. Per-map bound: [[Knn.bruteForce]] broadcasts the whole point
+  * set, so a map must fit in a broadcast, and its edge list (k rows per
+  * point) then fits on the driver. The cache table stays one row per
+  * map — driver-size by construction.
   */
 object ConnectivityCache {
+
+  /** The cache document, in document order. The nullability is part of
+    * the parquet schema the cache's files carry; a rewritten partition
+    * must keep its siblings' schema. */
+  private val DocSchema: StructType = StructType(Seq(
+    StructField("map_name", StringType, nullable = false),
+    StructField("analysis_date", StringType, nullable = false),
+    StructField("sample_count", LongType, nullable = false),
+    StructField("k_nearest", IntegerType, nullable = false),
+    StructField("num_islands", LongType, nullable = false),
+    StructField("island_ratios", ArrayType(StructType(Seq(
+      StructField("size", LongType, nullable = false),
+      StructField("ratio", DoubleType, nullable = true))), containsNull = false),
+      nullable = false),
+    StructField("selected_island_size", LongType, nullable = true),
+    StructField("input_fingerprint", LongType, nullable = false)))
 
   /** Order-independent content fingerprint of the analysis inputs: SUM of
     * `xxhash64` over the id+coordinate rows, wrapping mod 2^64
     * (commutative AND multiplicity-sensitive — unlike XOR, duplicate rows
     * don't cancel, so {A,A,B} and {C,C,B} can't alias), mixed with the
     * row count and the parameters so a k or ratio change also
-    * invalidates. The sum runs in decimal(38,0) so ANSI mode can't
-    * overflow it, then wraps to a long.
+    * invalidates.
     */
   def inputFingerprint(points: DataFrame, idCol: String, vecCol: String,
-      k: Int, minRatio: Double): Long = {
-    val row = points.agg(
-      sum(xxhash64(col(idCol), col(vecCol).cast("string"))
-        .cast("decimal(38,0)")).as("h"),
-      count(lit(1)).as("n")).head()
-    val dataHash =
-      if (row.isNullAt(0)) 0L
-      else row.getDecimal(0).toBigInteger.longValue() // wraps mod 2^64
-    dataHash ^ java.lang.Long.rotateLeft(row.getLong(1), 31) ^
+      k: Int, minRatio: Double): Long =
+    fingerprintAndCount(points, idCol, vecCol, k, minRatio)._1
+
+  /** The fingerprint and the row count in one map-side pass: each
+    * partition sums its row hashes as a wrapping long, the driver adds
+    * the partition sums. Wrapping addition is exact mod 2^64, so the value
+    * equals a decimal SUM wrapped to a long — the form earlier caches
+    * were stamped with. */
+  private def fingerprintAndCount(points: DataFrame, idCol: String,
+      vecCol: String, k: Int, minRatio: Double): (Long, Long) = {
+    val parts = points
+      .select(xxhash64(col(idCol), col(vecCol).cast("string")))
+      .as(Encoders.scalaLong)
+      .mapPartitions { hashes =>
+        var sum = 0L
+        var n = 0L
+        hashes.foreach { h => sum += h; n += 1 }
+        Iterator.single((sum, n))
+      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .collect()
+    val dataHash = parts.foldLeft(0L)(_ + _._1)
+    val n = parts.foldLeft(0L)(_ + _._2)
+    val fp = dataHash ^ java.lang.Long.rotateLeft(n, 31) ^
       java.lang.Long.rotateLeft(k.toLong, 17) ^
       java.lang.Double.doubleToLongBits(minRatio)
+    (fp, n)
   }
 
   /** The analysis document for one map: kNN edges over the sample
     * embedding, connected components, island ratios — one summary row.
     * `analysisDate` is caller-supplied (the reference stamps the run
     * date); keeping it a parameter keeps the document deterministic.
-    *
-    * The whole document is ONE lazy plan — component sizes aggregate
-    * once, the ratio list / island count / selected size derive from that
-    * single-row result with array functions, and `sample_count` rides a
-    * crossJoin of two scalar aggregates. No per-field driver actions.
+    * Runs the analysis eagerly and returns a one-row local DataFrame.
     */
   def analysisDoc(points: DataFrame, mapName: String, idCol: String,
       vecCol: String, dim: Int, k: Int, minRatio: Double,
-      analysisDate: String, fingerprint: Long): DataFrame = {
+      analysisDate: String, fingerprint: Long): DataFrame =
+    local(points.sparkSession, analyse(points, mapName, idCol, vecCol, dim,
+      k, minRatio, analysisDate, fingerprint, points.count()))
+
+  /** The document row. The kNN edge list is collected once and labelled
+    * by the driver-side union-find; over the nodes that have edges, each
+    * island's ratio is size ÷ node count. Islands go largest first, ties
+    * to the larger component id (component = min node id); those below
+    * `minRatio` leave `island_ratios` but still count in `num_islands`.
+    * With no edges the ratios are empty and the selected size is null. */
+  private def analyse(points: DataFrame, mapName: String, idCol: String,
+      vecCol: String, dim: Int, k: Int, minRatio: Double,
+      analysisDate: String, fingerprint: Long, sampleCount: Long): Row = {
     val edges = Knn.bruteForce(points, idCol = idCol, vecCol = vecCol,
         k = k, dim = dim)
-      .select(col("src_id").as("src"), col("dst_id").as("dst"))
-    val comps = ConnectedComponents.components(edges)
-    val sizes = comps.groupBy("component").agg(count(lit(1)).as("size"))
-    val compStats = sizes.agg(
-      sum(col("size")).as("total"),
-      count(lit(1)).as("num_islands"),
-      collect_list(struct(col("size"), col("component"))).as("all_islands"))
-    val sampleCount = points.agg(count(lit(1)).as("sample_count"))
-    compStats.crossJoin(sampleCount)
-      .withColumn("island_ratios",
-        filter(
-          transform(sort_array(col("all_islands"), asc = false),
-            s => struct(s.getField("size").as("size"),
-              (s.getField("size").cast("double") /
-                col("total").cast("double")).as("ratio"))),
-          s => s.getField("ratio") >= lit(minRatio)))
-      .select(
-        lit(mapName).as("map_name"),
-        lit(analysisDate).as("analysis_date"),
-        col("sample_count"),
-        lit(k).as("k_nearest"),
-        col("num_islands"),
-        col("island_ratios"),
-        try_element_at(col("island_ratios"), lit(1))
-          .getField("size").as("selected_island_size"),
-        lit(fingerprint).as("input_fingerprint"))
+      .select(col("src_id").cast("long"), col("dst_id").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val labels = ConnectedComponents.unionFind(edges)
+    val islands = labels.groupMapReduce(_._2)(_ => 1L)(_ + _)
+      .toSeq.map { case (component, size) => (size, component) }
+      .sorted(Ordering[(Long, Long)].reverse)
+    val total = labels.size.toDouble
+    val ratios = islands.map { case (size, _) => (size, size.toDouble / total) }
+      .filter(_._2 >= minRatio)
+    Row(mapName, analysisDate, sampleCount, k, islands.size.toLong,
+      ratios.map { case (size, ratio) => Row(size, ratio) },
+      ratios.headOption.map(r => java.lang.Long.valueOf(r._1)).orNull,
+      fingerprint)
   }
+
+  private def local(spark: SparkSession, doc: Row): DataFrame =
+    spark.createDataFrame(java.util.List.of(doc), DocSchema)
 
   /** Write (or replace) the per-map cache row. Partitioned by map_name so
     * a single map's refresh uses dynamic partition overwrite and never
@@ -104,22 +134,26 @@ object ConnectivityCache {
       .partitionBy("map_name").parquet(path)
 
   /** The cached document for `mapName` if present AND its fingerprint
-    * matches; None on cold cache or stale inputs. Existence is probed
-    * through the Hadoop FileSystem API (so HDFS/S3 cache roots hit, not
-    * just local paths), and ANY unreadable state — existing-but-empty
-    * directory (`UNABLE_TO_INFER_SCHEMA`), `_SUCCESS`-only partial write,
-    * corrupt footer — is a normal cold cache, not an error (reference:
-    * navmesh_connectivity.py:272-290 treats load failure as analyze). */
+    * matches, as a one-row local DataFrame; None on cold cache or stale
+    * inputs. The probe reads with [[DocSchema]] (no schema-inference job)
+    * and collects the partition-pruned match in one job. Existence is
+    * probed through the Hadoop FileSystem API (so HDFS/S3 cache roots
+    * hit, not just local paths), and ANY unreadable state — empty
+    * directory, `_SUCCESS`-only partial write, files without the
+    * fingerprint column, corrupt footer — is a normal cold cache, not an
+    * error (reference: navmesh_connectivity.py:272-290 treats load
+    * failure as analyze). */
   def readValid(spark: SparkSession, path: String, mapName: String,
       fingerprint: Long): Option[DataFrame] = {
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(hPath)) return None
     try {
-      val cached = spark.read.parquet(path)
+      val cached = spark.read.schema(DocSchema).parquet(path)
         .filter(col("map_name") === mapName &&
           col("input_fingerprint") === fingerprint)
-      if (cached.isEmpty) None else Some(cached)
+      cached.collect().headOption.map(r => spark.createDataFrame(
+        java.util.List.of(r), cached.schema))
     } catch {
       case NonFatal(_) => None // unreadable cache == cold cache
     }
@@ -128,16 +162,19 @@ object ConnectivityCache {
   /** Read-through entry point: serve the cached analysis when the inputs
     * are unchanged, else recompute, refresh the cache, and return the
     * fresh document (reference's load-or-analyze flow,
-    * navmesh_connectivity.py:272-290). */
+    * navmesh_connectivity.py:272-290). Either way the result is a
+    * one-row local DataFrame in the cache's column order (`map_name`
+    * last, as a partitioned read returns it). */
   def readOrCompute(spark: SparkSession, path: String, points: DataFrame,
       mapName: String, idCol: String, vecCol: String, dim: Int, k: Int,
       minRatio: Double, analysisDate: String): DataFrame = {
-    val fp = inputFingerprint(points, idCol, vecCol, k, minRatio)
+    val (fp, n) = fingerprintAndCount(points, idCol, vecCol, k, minRatio)
     readValid(spark, path, mapName, fp).getOrElse {
-      val doc = analysisDoc(points, mapName, idCol, vecCol, dim, k,
-        minRatio, analysisDate, fp)
+      val doc = local(spark, analyse(points, mapName, idCol, vecCol, dim, k,
+        minRatio, analysisDate, fp, n))
       write(doc, path)
-      spark.read.parquet(path).filter(col("map_name") === mapName)
+      doc.select((DocSchema.fieldNames.filterNot(_ == "map_name") :+ "map_name")
+        .map(col): _*)
     }
   }
 }

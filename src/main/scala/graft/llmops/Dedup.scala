@@ -706,7 +706,7 @@ object Dedup {
     * Scale shape: CC is the size-adaptive
     * [[graft.graph.ConnectedComponents.components]] (driver union-find
     * below 1M edges — pair tables are orders of magnitude smaller than
-    * the corpus — distributed label-propagation fixpoint above), the
+    * the corpus — distributed alternating-star fixpoint above), the
     * membership join is a left join on the doc id, and cluster_size /
     * is_kept come from ONE window over cluster_id (components labels a
     * cluster by its min node, so the keeper test is `id == cluster_id`
@@ -716,11 +716,11 @@ object Dedup {
   def dedupClusters(universe: DataFrame, idCol: String,
       pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // materialize the edge list ONCE on executors: components() issues a
-    // size probe plus the union-find/fixpoint reads, and without this each
-    // action would replay the whole upstream pair search (the minhash
-    // pipeline costs far more than the pair list it emits). Same eager
-    // localCheckpoint pattern as the LSH candidate table above — pair
+    // materialize the edge list ONCE on executors: components() reads it
+    // for the size probe and, above the cutover, in every fixpoint round,
+    // and without this each read would replay the whole upstream pair
+    // search (the minhash pipeline costs far more than the pair list it
+    // emits). Same eager localCheckpoint pattern as the LSH candidate table above — pair
     // tables are small (verified near-dups), never corpus-sized.
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .localCheckpoint(true)

@@ -1,14 +1,50 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.graph.ConnectivityCache
 import graft.model.Tables
 
 class ConnectivityCacheSpec extends SparkSpec {
+  import spark.implicits._
+
   private val sf = "/root/testdata/sf0.001"
 
   private def points = Tables.embeddings(spark, sf).filter(col("vec_id") < 30)
+
+  /** The fingerprint as first shipped: a decimal(38,0) SUM of the row
+    * hashes wrapped to a long, mixed with the count and the parameters.
+    * Caches already on disk carry this value, so the production form
+    * must reproduce it bit for bit. */
+  private def legacyFingerprint(df: DataFrame, idCol: String, vecCol: String,
+      k: Int, minRatio: Double): Long = {
+    val row = df.agg(
+      sum(xxhash64(col(idCol), col(vecCol).cast("string"))
+        .cast("decimal(38,0)")).as("h"),
+      count(lit(1)).as("n")).head()
+    val dataHash =
+      if (row.isNullAt(0)) 0L else row.getDecimal(0).toBigInteger.longValue()
+    dataHash ^ java.lang.Long.rotateLeft(row.getLong(1), 31) ^
+      java.lang.Long.rotateLeft(k.toLong, 17) ^
+      java.lang.Double.doubleToLongBits(minRatio)
+  }
+
+  /** 3-D points laid out as separate clusters: cluster c holds `sizes(c)`
+    * points one unit apart on a line at x = 100·c, ids 10·c + i. */
+  private def clusters(sizes: Int*): DataFrame =
+    sizes.zipWithIndex.flatMap { case (n, c) =>
+      (0 until n).map(i => ((10 * c + i).toLong, Seq(100.0 * c + i, 0.0, 0.0)))
+    }.toDF("id", "vec")
+
+  private def files(dir: String, map: String): Set[String] = {
+    val s = Files.list(Path.of(dir, s"map_name=$map"))
+    try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+  }
+
+  private def byName(r: Row): Map[String, Any] =
+    r.schema.fieldNames.map(f => f -> r.getAs[Any](f)).toMap
 
   test("analysisDoc summarizes the island analysis in one row") {
     val fp = ConnectivityCache.inputFingerprint(points, "vec_id", "embedding", 3, 0.10)
@@ -102,5 +138,95 @@ class ConnectivityCacheSpec extends SparkSpec {
     assert(after.filter(col("map_name") === "mA").count() == 1)
     assert(after.filter(col("map_name") === "mB").head()
       .getAs[String]("analysis_date") == "2026-05-05")
+  }
+
+  test("fingerprint equals the decimal-sum formula when the hash sum wraps past 2^63") {
+    // rows whose hash is above 2^62: any two of them overflow a long sum
+    val big = Tables.embeddings(spark, sf)
+      .filter(xxhash64(col("vec_id"), col("embedding").cast("string")) > lit(Long.MaxValue / 2))
+      .limit(6)
+    val exact = big.agg(sum(xxhash64(col("vec_id"), col("embedding").cast("string"))
+      .cast("decimal(38,0)"))).head().getDecimal(0).toBigInteger
+    assert(big.count() >= 2)
+    assert(exact.compareTo(java.math.BigInteger.valueOf(Long.MaxValue)) > 0,
+      s"fixture must wrap: $exact")
+    assert(ConnectivityCache.inputFingerprint(big, "vec_id", "embedding", 3, 0.10) ==
+      legacyFingerprint(big, "vec_id", "embedding", 3, 0.10))
+  }
+
+  test("fingerprint equals the decimal-sum formula on empty and multi-partition inputs") {
+    val empty = points.filter(lit(false))
+    assert(ConnectivityCache.inputFingerprint(empty, "vec_id", "embedding", 8, 0.05) ==
+      legacyFingerprint(empty, "vec_id", "embedding", 8, 0.05))
+    val spread = points.repartition(5)
+    assert(spread.rdd.getNumPartitions == 5)
+    assert(ConnectivityCache.inputFingerprint(spread, "vec_id", "embedding", 3, 0.10) ==
+      legacyFingerprint(spread, "vec_id", "embedding", 3, 0.10))
+    assert(ConnectivityCache.inputFingerprint(spread, "vec_id", "embedding", 3, 0.10) ==
+      ConnectivityCache.inputFingerprint(points, "vec_id", "embedding", 3, 0.10))
+  }
+
+  test("analysisDoc on a single-point map: no islands, empty ratios, null selection") {
+    val doc = ConnectivityCache.analysisDoc(clusters(1), "solo", "id", "vec",
+      dim = 3, k = 2, minRatio = 0.2, analysisDate = "2026-01-01", fingerprint = 7L).head()
+    assert(doc.getAs[String]("map_name") == "solo")
+    assert(doc.getAs[Long]("sample_count") == 1L)
+    assert(doc.getAs[Int]("k_nearest") == 2)
+    assert(doc.getAs[Long]("num_islands") == 0L)
+    assert(doc.getSeq[Row](doc.fieldIndex("island_ratios")).isEmpty)
+    assert(doc.isNullAt(doc.fieldIndex("selected_island_size")))
+    assert(doc.getAs[Long]("input_fingerprint") == 7L)
+  }
+
+  test("analysisDoc orders islands largest first, drops small ones, counts them all") {
+    // islands of 5, 4, 4 and 3 points (k = 2 keeps each cluster connected
+    // and apart): 3/16 < 0.2 is filtered out of the ratios but still
+    // counted in num_islands; the two 4-point islands tie on size
+    val doc = ConnectivityCache.analysisDoc(clusters(5, 4, 4, 3), "m", "id", "vec",
+      dim = 3, k = 2, minRatio = 0.2, analysisDate = "2026-01-01", fingerprint = 0L).head()
+    assert(doc.getAs[Long]("sample_count") == 16L)
+    assert(doc.getAs[Long]("num_islands") == 4L)
+    val ratios = doc.getSeq[Row](doc.fieldIndex("island_ratios"))
+      .map(r => (r.getAs[Long]("size"), r.getAs[Double]("ratio")))
+    assert(ratios == Seq((5L, 5.0 / 16), (4L, 4.0 / 16), (4L, 4.0 / 16)))
+    assert(doc.getAs[Long]("selected_island_size") == 5L)
+  }
+
+  test("readValid is cold for a cache whose files lack input_fingerprint") {
+    val dir = Files.createTempDirectory("conncache-noprint").toFile.getAbsolutePath
+    val doc = ConnectivityCache.analysisDoc(points, "m1", "vec_id", "embedding",
+      dim = 64, k = 3, minRatio = 0.10, analysisDate = "2026-01-01", fingerprint = 42L)
+    ConnectivityCache.write(doc.drop("input_fingerprint"), dir)
+    assert(ConnectivityCache.readValid(spark, dir, "m1", 42L).isEmpty)
+    assert(ConnectivityCache.readValid(spark, dir, "m1", 0L).isEmpty)
+  }
+
+  test("readValid is cold for a partition holding a corrupt parquet file") {
+    val dir = Files.createTempDirectory("conncache-corrupt").toFile.getAbsolutePath
+    val fp = ConnectivityCache.inputFingerprint(points, "vec_id", "embedding", 3, 0.10)
+    ConnectivityCache.readOrCompute(spark, dir, points, "m1",
+      "vec_id", "embedding", 64, 3, 0.10, analysisDate = "2026-01-01")
+    assert(ConnectivityCache.readValid(spark, dir, "m1", fp).nonEmpty)
+    files(dir, "m1").filter(_.endsWith(".parquet")).foreach { f =>
+      Files.write(Path.of(dir, "map_name=m1", f), "not a parquet file".getBytes("UTF-8"))
+    }
+    assert(ConnectivityCache.readValid(spark, dir, "m1", fp).isEmpty)
+  }
+
+  test("a hit serves the first-written row unchanged and rewrites no file") {
+    val dir = Files.createTempDirectory("conncache-hit").toFile.getAbsolutePath
+    val miss = ConnectivityCache.readOrCompute(spark, dir, points, "m1",
+      "vec_id", "embedding", 64, 3, 0.10, analysisDate = "2026-01-01").head()
+    // the row a miss returns is the row it wrote
+    assert(byName(miss) == byName(spark.read.parquet(dir).head()))
+    val before = files(dir, "m1")
+    val fp = ConnectivityCache.inputFingerprint(points, "vec_id", "embedding", 3, 0.10)
+    val hit = ConnectivityCache.readValid(spark, dir, "m1", fp).get.collect()
+    assert(hit.length == 1)
+    assert(byName(hit.head) == byName(miss))
+    val again = ConnectivityCache.readOrCompute(spark, dir, points, "m1",
+      "vec_id", "embedding", 64, 3, 0.10, analysisDate = "2026-02-02").head()
+    assert(byName(again) == byName(miss))
+    assert(files(dir, "m1") == before)
   }
 }

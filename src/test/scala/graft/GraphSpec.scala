@@ -42,6 +42,24 @@ class GraphSpec extends SparkSpec {
       canon(ConnectedComponents.localUnionFind(df)))
   }
 
+  test("components cuts over to alternating star just above localThreshold") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+    def canon(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val expected = canon(ConnectedComponents.localUnionFind(edges))
+    val n = edges.count()
+    // at the threshold the edge list is read once and labelled on the
+    // driver: the result is a local table
+    val local = ConnectedComponents.components(edges, localThreshold = n)
+    assert(local.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(canon(local) == expected)
+    // one edge over: the distributed fixpoint, whose result is an aggregate
+    val star = ConnectedComponents.components(edges, localThreshold = n - 1)
+    assert(star.queryExecution.analyzed.exists(_.isInstanceOf[Aggregate]))
+    assert(!star.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(canon(star) == expected)
+  }
+
   test("grid kNN equals brute force when cellSize covers the k-th-neighbor radius") {
     import graft.graph.Knn
     import org.apache.spark.sql.functions.col
