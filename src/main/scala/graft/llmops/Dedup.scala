@@ -189,24 +189,14 @@ object Dedup {
   def minhashBase(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long") % MinhashPrime
 
-  private def minhashPerm(j: Int, base: Column): Column =
-    (base * minhashA(j) + minhashB(j)) % MinhashPrime
-
-  /** MinHash signature per id: numHashes min-of-affine-permutation values
-    * over the document's shingle rows. */
-  def minhashSignatures(shingleDf: DataFrame, idCol: String, numHashes: Int): DataFrame = {
-    val withBase = shingleDf.withColumn("_hb", minhashBase(col("shingle")))
-    val aggs = (0 until numHashes).map(j =>
-      min(minhashPerm(j, col("_hb"))).as(s"mh_$j"))
-    withBase.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-  }
-
   /** Signature as ONE array column: a single fold over the shingle hashes
     * that maintains all `numHashes` running minima at once
     * (`aggregate` + `zip_with` against literal coefficient arrays).
-    * Values are identical to [[minhashSignatures]] component-wise;
-    * the expression tree is O(1) in numHashes instead of O(numHashes)
-    * copies of the array scan — an order of magnitude less generated
+    * Component j is the min over the document's shingles of
+    * `(base * minhashA(j) + minhashB(j)) % p` — identical to the fold
+    * [[minhashSignatureArrayFold]] and to the DuckDB oracle's `mh_j`
+    * columns. The expression tree is O(1) in numHashes instead of one
+    * min() aggregate per hash — an order of magnitude less generated
     * code to JIT, and one pass over the hashes instead of numHashes
     * passes. The md5 base array sits in the aggregate's *input* argument
     * slot, which is evaluated once per row even when projection collapse

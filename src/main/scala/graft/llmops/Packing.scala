@@ -1,9 +1,8 @@
 package graft.llmops
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Sequence packing: laying documents into fixed-capacity training
   * examples — the step between a curated corpus and a pretraining
@@ -21,10 +20,11 @@ import org.apache.spark.sql.types._
   *    the current bin if it fits, else opens a new one. The bin id
   *    depends on the previous *output* (fill so far), so it is not a
   *    window function — same recurrence class as the trajectory
-  *    rate-clamp, and implemented with the same device: repartition by
-  *    shard, secondary sort, one O(1)-state streaming pass. Memory is
-  *    O(1) per task regardless of shard length; the sort rides the
-  *    shuffle's spill machinery.
+  *    rate-clamp, and run on the same [[graft.operators.KeyedScan]]
+  *    (via [[TextStats.packSequences]]): repartition by shard,
+  *    secondary sort, one O(1)-state streaming pass. Memory is O(1) per
+  *    task regardless of shard length; the sort rides the shuffle's
+  *    spill machinery.
   *
   * Sharding: both forms pack WITHIN a shard key (at 100 TB a global
   * sequential pack is a single serial chain — shard first, pack within;
@@ -62,40 +62,21 @@ object Packing {
         pmod(start, lit(capacity)).cast("long").as("offset"))
   }
 
-  private val greedySchema = StructType(Seq(
-    StructField("shard", StringType), StructField("id", LongType),
-    StructField("n_tokens", LongType), StructField("bin", LongType),
-    StructField("fill_after", LongType)))
-
   /** Greedy next-fit with atomic documents: (shard, id, n_tokens, bin,
     * fill_after). `bin` is 0-based per shard; `fill_after` is the bin's
     * token count after this doc (== padding diagnostic: capacity −
     * fill_after of each bin's LAST doc is the bin's padding).
     * `shardCol` must be non-null (a null shard key has no well-defined
     * scan boundary — hash nulls to a sentinel shard upstream, as the
-    * window form [[packChunked]] would put them in one null group). */
+    * window form [[packChunked]] would put them in one null group).
+    * [[TextStats.packSequences]] over the docs with ≥ 1 token and the id
+    * cast to long, with its columns renamed. */
   def packGreedy(docs: DataFrame, idCol: String, nTokCol: String,
       shardCol: String, capacity: Int): DataFrame = {
     require(capacity >= 1, s"capacity must be >= 1, got $capacity")
-    implicit val enc = Encoders.row(greedySchema)
-    docs
-      .filter(col(nTokCol) >= 1)
-      .select(col(shardCol).cast("string").as("shard"),
-        col(idCol).cast("long").as("id"),
-        col(nTokCol).cast("long").as("n_tokens"))
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("id"))
-      .mapPartitions { rows =>
-        var cur: String = null
-        var bin = 0L
-        var fill = 0L
-        rows.map { r =>
-          val shard = r.getString(0); val id = r.getLong(1); val n = r.getLong(2)
-          if (shard != cur) { cur = shard; bin = 0L; fill = 0L }
-          if (fill > 0 && fill + n > capacity) { bin += 1; fill = 0L }
-          fill += n
-          Row(shard, id, n, bin, fill)
-        }
-      }
+    TextStats.packSequences(
+        docs.filter(col(nTokCol) >= 1).withColumn(idCol, col(idCol).cast("long")),
+        shardCol, idCol, nTokCol, capacity)
+      .withColumnsRenamed(Map("ord" -> "id", "pack_id" -> "bin", "pack_fill" -> "fill_after"))
   }
 }

@@ -255,42 +255,36 @@ object TextStats {
     * starts whenever the running total would overflow (an over-budget
     * single document gets its own pack). The running total depends on the
     * previous *pack's* fill, so like the rate clamp (W7) this is a true
-    * recurrence: implemented as one shuffle on the shard key + a sorted
-    * in-partition scan with O(1) state. Shards pack independently — the
-    * standard distributed-packing layout: parallelism = shard count,
-    * packing quality is per-shard greedy.
+    * recurrence: it runs on [[graft.operators.KeyedScan]] — one shuffle on
+    * the shard key + a sorted in-partition scan with O(1) state, spilling
+    * through the shuffle sort. Shards pack independently — the standard
+    * distributed-packing layout: parallelism = shard count, packing
+    * quality is per-shard greedy. [[Packing.packGreedy]] is this operator
+    * under other column names.
     *
     * Output: (shard, order key, n_tokens, pack_id (0-based per shard),
     * pack_fill = running tokens in the pack after this doc).
     */
   def packSequences(df: DataFrame, shardCol: String, orderCol: String,
       tokensCol: String, maxTokens: Long): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     // the order key stays in its NATIVE type — a cast-to-long would null
     // out non-numeric keys (string doc ids) and scramble the pack order
     val ordType = df.select(col(orderCol)).schema.head.dataType
-    val prepared = df
-      .repartition(col(shardCol))
-      .sortWithinPartitions(col(shardCol), col(orderCol))
-      .select(col(shardCol).cast("string").as("shard"),
-        col(orderCol).as("ord"),
-        col(tokensCol).cast("long").as("n_tokens"))
-    implicit val enc = Encoders.row(StructType(Seq(
+    val schema = StructType(Seq(
       StructField("shard", StringType), StructField("ord", ordType),
       StructField("n_tokens", LongType), StructField("pack_id", LongType),
-      StructField("pack_fill", LongType))))
-    prepared.mapPartitions { rows =>
-      var cur: String = null
+      StructField("pack_fill", LongType)))
+    graft.operators.KeyedScan(df, shardCol, Seq(col(orderCol)),
+        Seq(col(orderCol), col(tokensCol).cast("long")), schema) { () =>
       var pack = 0L
       var fill = 0L
-      rows.map { r =>
-        val shard = r.getString(0)
-        if (shard != cur) { cur = shard; pack = 0L; fill = 0L }
+      (_, r) => {
         val n = r.getLong(2)
         if (fill > 0 && fill + n > maxTokens) { pack += 1; fill = 0L }
         fill += n
-        Row(shard, r.get(1), n, pack, fill)
+        Row(r.getString(0), r.get(1), n, pack, fill)
       }
     }
   }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.KeyedScan
 
 /** CUSUM change-point detection over per-key metric series — the
   * sequential drift alarm next to the batch z-score outlier flag: a
@@ -18,12 +19,12 @@ import org.apache.spark.sql.types._
   * threshold.
   *
   * Like [[graft.trajectory.TrajectoryOps.rateClamp]], the output
-  * depends on the previous OUTPUT, so no window expresses it; the scan
-  * runs as one ordered pass per key after a single repartition +
-  * secondary sort — O(1) state per series, no group buffering, series
-  * count scales with partitions. Float determinism: each step is the
-  * identical operation tree `max(0, s + (x − k))` in both engines, so
-  * the doubles match bit-for-bit (the q_rate_clamp discipline).
+  * depends on the previous OUTPUT, so no window expresses it; the batch
+  * form runs on [[graft.operators.KeyedScan]] — O(1) state per series,
+  * no group buffering, series count scales with partitions. Float
+  * determinism: each step is the identical operation tree
+  * `max(0, s + (x − k))` in both engines, so the doubles match
+  * bit-for-bit (the q_rate_clamp discipline).
   */
 object ChangePoint {
 
@@ -84,28 +85,18 @@ object ChangePoint {
   def cusum(df: DataFrame, seqCol: String, orderCols: Seq[String],
       valueCol: String, k: Double, h: Double): DataFrame = {
     require(orderCols.nonEmpty && h > 0)
-    val prepared = df
-      .filter(col(seqCol).isNotNull && col(valueCol).isNotNull)
-      .repartition(col(seqCol))
-      .sortWithinPartitions((seqCol +: orderCols).map(col): _*)
-      .select(col(seqCol).cast("string").as("seq"),
-        col(valueCol).cast("double").as("x"))
-    implicit val enc = Encoders.row(StructType(Seq(
+    val schema = StructType(Seq(
       StructField("seq", StringType), StructField("idx", LongType),
       StructField("value", DoubleType), StructField("s", DoubleType),
-      StructField("alarm", BooleanType))))
-    prepared.mapPartitions { rows =>
-      var cur: String = null
+      StructField("alarm", BooleanType)))
+    KeyedScan(df.filter(col(seqCol).isNotNull && col(valueCol).isNotNull),
+        seqCol, orderCols.map(col), Seq(col(valueCol).cast("double")), schema) { () =>
       var s = 0.0
-      var pos = 0L
-      rows.map { r =>
-        val seq = r.getString(0)
-        if (seq != cur) { cur = seq; s = 0.0; pos = 0L }
-        pos += 1
+      (pos, r) => {
         val x = r.getDouble(1)
         s = math.max(0.0, s + (x - k))
         val alarm = s >= h
-        val out = Row(seq, pos, x, s, alarm)
+        val out = Row(r.getString(0), pos, x, s, alarm)
         if (alarm) s = 0.0
         out
       }

@@ -42,13 +42,8 @@ object Extrinsics {
     * CSV layout of camera_exporter.py:404-407). */
   def extrinsicRows(df: DataFrame, frame: String,
       x: String, y: String, z: String,
-      roll: String, pitch: String, yaw: String): DataFrame = {
-    val m = extrinsicUdf(col(x), col(y), col(z), col(roll), col(pitch), col(yaw))
-    val withM = df.withColumn("_m", m)
-    val cells = for (r <- 0 until 4; c <- 0 until 4)
-      yield element_at(col("_m"), r * 4 + c + 1).as(s"m$r$c")
-    withM.select((col(frame).as("frame") +: cells): _*)
-  }
+      roll: String, pitch: String, yaw: String): DataFrame =
+    extrinsicRowsKeyed(df, Nil, frame, x, y, z, roll, pitch, yaw)
 
   /** [[extrinsicRows]] with pass-through key columns — for consumers that
     * need the matrix rows joined back to their sequence (the export CSV

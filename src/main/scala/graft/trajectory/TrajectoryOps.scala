@@ -1,9 +1,10 @@
 package graft.trajectory
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.KeyedScan
 
 /** Trajectory window chain (SURVEY.md §2.5: W2-W8; reference:
   * sequence/worker_create.py, keyframe/transform_track.py,
@@ -56,33 +57,26 @@ object TrajectoryOps {
 
   /** W7 — rate-clamp recurrence: out(i) = out(i-1) + clamp(target(i) −
     * out(i-1), ±maxDelta). Depends on the previous *output*, so it is not
-    * a window function; implemented as a secondary sort — one shuffle on
-    * the sequence id, sort by (seq, order) within partitions, then a
-    * single streaming pass that resets state at sequence boundaries
+    * a window function; runs on [[graft.operators.KeyedScan]] — one
+    * shuffle on the sequence id, a secondary sort by (seq, idx), one
+    * O(1)-state streaming pass that spills through the shuffle sort
     * (reference: transform_track.py:215-262).
-    *
-    * Unlike groupByKey.flatMapGroups this never buffers a group: memory
-    * is O(1) per task regardless of trajectory length, and the sort rides
-    * the shuffle's spill machinery — the form that survives a 100× frame
-    * count.
     *
     * Input columns: (seqCol: string-able, idxCol: long-able, targetCol:
     * double). Output: (seq, idx, target, clamped), idx = the input index.
+    * Rows whose target is NULL or NaN, or whose index is NULL (or does
+    * not cast to a long), are dropped before the scan: a NULL crashes the
+    * typed scan, and a NaN target collides with the scan's fresh-sequence
+    * sentinel.
     */
   def rateClamp(df: DataFrame, seqCol: String, idxCol: String,
       targetCol: String, maxDelta: Double): DataFrame = {
-    // NULL/NaN targets dropped, same contract (and reason) as
-    // [[ewmaOrdered]]: NULL crashes the typed scan, NaN collides with
-    // the scan's fresh-sequence sentinel
-    val prepared = df
-      .filter(col(targetCol).isNotNull && !isnan(col(targetCol).cast("double")))
-      .repartition(col(seqCol))
-      .sortWithinPartitions(col(seqCol), col(idxCol).cast("long"))
-      .select(
-        col(seqCol).cast("string").as("seq"),
-        col(idxCol).cast("long").as("idx"),
-        col(targetCol).cast("double").as("target"))
-    clampScan(prepared, maxDelta, emitPosition = false)
+    val idx = col(idxCol).cast("long")
+    KeyedScan(validTarget(df, targetCol).filter(idx.isNotNull), seqCol, Seq(idx),
+        Seq(idx, col(targetCol).cast("double")), clampSchema) { () =>
+      val step = clampStep(maxDelta)
+      (_, r) => Row(r.getString(0), r.getLong(1), r.getDouble(2), step(r.getDouble(2)))
+    }
   }
 
   /** [[rateClamp]] over rows ordered by arbitrary columns instead of a
@@ -90,39 +84,29 @@ object TrajectoryOps {
     * extra shuffle). Output idx is the 1-based position within the
     * sequence under `orderCols`. */
   def rateClampOrdered(df: DataFrame, seqCol: String, orderCols: Seq[String],
-      targetCol: String, maxDelta: Double): DataFrame = {
-    val prepared = df
-      .filter(col(targetCol).isNotNull && !isnan(col(targetCol).cast("double")))
-      .repartition(col(seqCol))
-      .sortWithinPartitions((seqCol +: orderCols).map(col): _*)
-      .select(
-        col(seqCol).cast("string").as("seq"),
-        lit(0L).as("idx"),
-        col(targetCol).cast("double").as("target"))
-    clampScan(prepared, maxDelta, emitPosition = true)
-  }
+      targetCol: String, maxDelta: Double): DataFrame =
+    KeyedScan(validTarget(df, targetCol), seqCol, orderCols.map(col),
+        Seq(col(targetCol).cast("double")), clampSchema) { () =>
+      val step = clampStep(maxDelta)
+      (pos, r) => Row(r.getString(0), pos, r.getDouble(1), step(r.getDouble(1)))
+    }
 
-  /** Streaming clamp pass over (seq, idx, target) rows already sorted by
-    * sequence (and order within it). */
-  private def clampScan(prepared: DataFrame, maxDelta: Double,
-      emitPosition: Boolean): DataFrame = {
-    implicit val enc = Encoders.row(StructType(Seq(
-      StructField("seq", StringType), StructField("idx", LongType),
-      StructField("target", DoubleType), StructField("clamped", DoubleType))))
-    prepared.mapPartitions { rows =>
-      var cur: String = null
-      var out = Double.NaN
-      var pos = 0L
-      rows.map { r =>
-        val seq = r.getString(0)
-        if (seq != cur) { cur = seq; out = Double.NaN; pos = 0L }
-        pos += 1
-        val target = r.getDouble(2)
-        out =
-          if (out.isNaN) target
-          else out + math.max(math.min(target - out, maxDelta), -maxDelta)
-        Row(seq, if (emitPosition) pos else r.getLong(1), target, out)
-      }
+  private val clampSchema = StructType(Seq(
+    StructField("seq", StringType), StructField("idx", LongType),
+    StructField("target", DoubleType), StructField("clamped", DoubleType)))
+
+  /** Drops NULL and NaN targets (see [[ewmaOrdered]] for why). */
+  private def validTarget(df: DataFrame, targetCol: String): DataFrame =
+    df.filter(col(targetCol).isNotNull && !isnan(col(targetCol).cast("double")))
+
+  /** One sequence's clamp state: target → clamped output. */
+  private def clampStep(maxDelta: Double): Double => Double = {
+    var out = Double.NaN
+    target => {
+      out =
+        if (out.isNaN) target
+        else out + math.max(math.min(target - out, maxDelta), -maxDelta)
+      out
     }
   }
 
@@ -135,9 +119,8 @@ object TrajectoryOps {
     * step bit-for-bit (pick α with a short binary expansion, e.g. 0.25,
     * to keep the literal itself trivially identical).
     *
-    * Same scale shape as the clamp: repartition by sequence, sort WITHIN
-    * partitions (rides the shuffle's spill machinery), one O(1)-state
-    * streaming pass — no per-group buffering at any trajectory length.
+    * Same [[graft.operators.KeyedScan]] as the clamp: O(1) state per
+    * sequence, no per-group buffering at any trajectory length.
     * Output idx is the 1-based position under `orderCols`.
     *
     * NULL/NaN targets are DROPPED before indexing (idx counts surviving
@@ -149,27 +132,16 @@ object TrajectoryOps {
   def ewmaOrdered(df: DataFrame, seqCol: String, orderCols: Seq[String],
       targetCol: String, alpha: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
-    val prepared = df
-      .filter(col(targetCol).isNotNull && !isnan(col(targetCol).cast("double")))
-      .repartition(col(seqCol))
-      .sortWithinPartitions((seqCol +: orderCols).map(col): _*)
-      .select(
-        col(seqCol).cast("string").as("seq"),
-        col(targetCol).cast("double").as("target"))
-    implicit val enc = Encoders.row(StructType(Seq(
+    val schema = StructType(Seq(
       StructField("seq", StringType), StructField("idx", LongType),
-      StructField("target", DoubleType), StructField("smoothed", DoubleType))))
-    prepared.mapPartitions { rows =>
-      var cur: String = null
+      StructField("target", DoubleType), StructField("smoothed", DoubleType)))
+    KeyedScan(validTarget(df, targetCol), seqCol, orderCols.map(col),
+        Seq(col(targetCol).cast("double")), schema) { () =>
       var s = Double.NaN
-      var pos = 0L
-      rows.map { r =>
-        val seq = r.getString(0)
-        if (seq != cur) { cur = seq; s = Double.NaN; pos = 0L }
-        pos += 1
+      (pos, r) => {
         val x = r.getDouble(1)
         s = if (s.isNaN) x else s + alpha * (x - s)
-        Row(seq, pos, x, s)
+        Row(r.getString(0), pos, x, s)
       }
     }
   }
@@ -183,9 +155,9 @@ object TrajectoryOps {
     * to ±eps. Output keeps EVERY row with a `kept` flag so the caller
     * chooses between filtering and auditing the reduction rate.
     *
-    * Same single-shuffle secondary-sort recurrence as [[rateClamp]]: the
-    * state is one double per sequence (the last kept value), not the
-    * clamped accumulator — O(1) task state at any trajectory length.
+    * Runs on [[graft.operators.KeyedScan]] like [[rateClamp]]: the state
+    * is one double per sequence (the last kept value), not the clamped
+    * accumulator — O(1) task state at any trajectory length.
     * Output idx is the 1-based position within the sequence under
     * `orderCols`.
     */
@@ -195,28 +167,17 @@ object TrajectoryOps {
     // Funnel.deepestStage): Row.getDouble would silently read a null as
     // 0.0, diverging from SQL NULL propagation — a null position is a
     // missing sample, not a sample at the origin.
-    val prepared = df
-      .filter(col(seqCol).isNotNull && col(valCol).isNotNull)
-      .repartition(col(seqCol))
-      .sortWithinPartitions((seqCol +: orderCols).map(col): _*)
-      .select(
-        col(seqCol).cast("string").as("seq"),
-        col(valCol).cast("double").as("value"))
-    implicit val enc = Encoders.row(StructType(Seq(
+    val schema = StructType(Seq(
       StructField("seq", StringType), StructField("idx", LongType),
-      StructField("value", DoubleType), StructField("kept", BooleanType))))
-    prepared.mapPartitions { rows =>
-      var cur: String = null
+      StructField("value", DoubleType), StructField("kept", BooleanType)))
+    KeyedScan(df.filter(col(seqCol).isNotNull && col(valCol).isNotNull),
+        seqCol, orderCols.map(col), Seq(col(valCol).cast("double")), schema) { () =>
       var lastKept = Double.NaN
-      var pos = 0L
-      rows.map { r =>
-        val seq = r.getString(0)
-        if (seq != cur) { cur = seq; lastKept = Double.NaN; pos = 0L }
-        pos += 1
+      (pos, r) => {
         val v = r.getDouble(1)
         val keep = lastKept.isNaN || math.abs(v - lastKept) >= eps
         if (keep) lastKept = v
-        Row(seq, pos, v, keep)
+        Row(r.getString(0), pos, v, keep)
       }
     }
   }

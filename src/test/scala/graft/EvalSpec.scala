@@ -110,18 +110,6 @@ class EvalSpec extends SparkSpec {
       (8.0, true), (0.0, false)))
   }
 
-  test("CUSUM: series isolated across keys and invariant to input partitioning") {
-    import graft.streaming.ChangePoint
-    val rnd = new scala.util.Random(11)
-    val rows = for (u <- 1L to 20L; i <- 1L to 50L)
-      yield (u, i, rnd.nextInt(1000) / 100.0)
-    def run(parts: Int) =
-      ChangePoint.cusum(rows.toDF("u", "i", "x").repartition(parts),
-          "u", Seq("i"), "x", k = 5.0, h = 8.0)
-        .orderBy("seq", "idx").collect().toSeq
-    assert(run(1) == run(17))
-  }
-
   test("keySkew: null keys excluded") {
     val df = Seq(("g", Some(1L)), ("g", Some(1L)), ("g", None)).toDF("g", "k")
     assert(Eval.keySkew(df, Seq("g"), "k")

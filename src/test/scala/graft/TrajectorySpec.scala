@@ -37,6 +37,14 @@ class TrajectorySpec extends SparkSpec {
     assert(so.toSeq == Seq(0.0, 5.0, 9.0, 12.0))
   }
 
+  test("rateClamp drops a null-index row instead of failing the task") {
+    val df = Seq(("s", Some(0L), 0.0), ("s", None, 50.0), ("s", Some(1L), 100.0),
+        ("s", Some(2L), 5.0)).toDF("seq", "idx", "target")
+    val out = TrajectoryOps.rateClamp(df, "seq", "idx", "target", maxDelta = 10.0)
+      .orderBy("idx").select("idx", "clamped").as[(Long, Double)].collect().toSeq
+    assert(out == Seq((0L, 0.0), (1L, 10.0), (2L, 5.0)))
+  }
+
   test("ewmaOrdered: hand recurrence, per-sequence reset, alpha=1 is identity") {
     val df = Seq(
       ("a", 1L, 8.0), ("a", 2L, 4.0), ("a", 3L, 4.0),
