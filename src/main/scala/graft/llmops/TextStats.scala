@@ -634,47 +634,75 @@ object TextStats {
     * few rounds is only that the clamped surplus is not redistributed,
     * never an unrealizable plan.
     *
+    * Budget, weights and `rounds` must be non-negative; the domain column
+    * must be a string and the token column integral (its sum a long). Any
+    * 64-bit overflow in the arithmetic throws, never wraps.
+    *
     * Scale shape: one corpus aggregate (map-side combined sum per
-    * domain), then every round operates on the |domains|-row state table
-    * with broadcast one-row totals — nothing corpus-sized moves after
-    * the first shuffle, and there is no driver-side state at all.
+    * domain), collected when `recipePlan` is called; the water-filling
+    * then runs on the driver over those |domains| rows, O(|domains| ·
+    * rounds), and the plan comes back as a local DataFrame (one row per
+    * domain in the weights or the corpus, sorted by domain, nulls first)
+    * — nothing corpus-sized ever reaches the driver.
     */
   def recipePlan(df: DataFrame, domainCol: String, tokenCol: String,
       weights: Map[String, Long], budgetTokens: Long,
       rounds: Int = 3): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    val spark = df.sparkSession
-    import spark.implicits._
-    val w = weights.toSeq.toDF(domainCol, "w")
-    val avail = df.groupBy(col(domainCol))
-      .agg(sum(col(tokenCol)).as("avail"))
-    var state = w.join(avail, Seq(domainCol), "full")
-      .select(col(domainCol),
-        coalesce(col("avail"), lit(0L)).as("avail"),
-        coalesce(col("w"), lit(0L)).as("w"),
-        lit(false).as("sat"))
-    val quotaExpr = s"CASE WHEN coalesce(wAct, CAST(0 AS BIGINT)) = 0 " +
-      s"THEN CAST(0 AS BIGINT) ELSE " +
-      s"((CAST($budgetTokens AS BIGINT) - coalesce(satSum, CAST(0 AS BIGINT))) * w) div wAct END"
-    def withTotals(s: DataFrame): DataFrame = {
-      val tot = s.agg(
-        sum(when(col("sat"), col("avail"))).as("satSum"),
-        sum(when(!col("sat"), col("w"))).as("wAct"))
-      s.crossJoin(broadcast(tot))
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    require(budgetTokens >= 0, s"budgetTokens must be >= 0, got $budgetTokens")
+    require(weights.values.forall(_ >= 0), s"weights must be >= 0, got $weights")
+    require(rounds >= 0, s"rounds must be >= 0, got $rounds")
+    val sums = df.groupBy(col(domainCol)).agg(sum(col(tokenCol)).as("avail"))
+    require(sums.schema(0).dataType == StringType && sums.schema(1).dataType == LongType,
+      s"need a string domain and an integral token column, got ${sums.schema.simpleString}")
+    val corpus = sums.collect()
+      .map(r => (r.getString(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
+    val corpusAvail = corpus.filter(_._1 != null).toMap
+    // the full join of weights × corpus sums: a null domain matches nothing
+    val (domain, avail, w) = (weights.toSeq.map { case (d, wt) =>
+        (d, corpusAvail.getOrElse(d, 0L), wt) } ++
+      corpus.collect { case (d, a) if d == null || !weights.contains(d) => (d, a, 0L) })
+      .sortBy(t => Option(t._1)).toArray.unzip3
+    val sat = new Array[Boolean](domain.length)
+    // quota of each unsaturated domain under the current saturation:
+    // ((budget − Σ saturated avail) · w) div Σ active w, 0 with no active weight
+    def quota(): Int => Long = {
+      var satSum, wAct = 0L
+      for (i <- sat.indices)
+        if (sat(i)) satSum = Math.addExact(satSum, avail(i))
+        else wAct = Math.addExact(wAct, w(i))
+      if (wAct == 0) _ => 0L
+      else {
+        val rest = Math.subtractExact(budgetTokens, satSum)
+        i => Math.multiplyExact(rest, w(i)) / wAct
+      }
     }
-    for (_ <- 1 to rounds)
-      state = withTotals(state)
-        .withColumn("sat",
-          col("sat") || col("avail") <= expr(quotaExpr))
-        .select(col(domainCol), col("avail"), col("w"), col("sat"))
-    withTotals(state)
-      .withColumn("assigned",
-        when(col("sat"), col("avail"))
-          .otherwise(least(expr(quotaExpr), col("avail"))))
-      .select(col(domainCol), col("avail"), col("w"), col("assigned"),
-        when(col("avail") === 0, lit(0.0))
-          .otherwise(col("assigned").cast("double") / col("avail").cast("double"))
-          .as("rate"))
+    // a round that saturates nothing is the fixed point: later rounds repeat it
+    var round = 0
+    var changed = true
+    while (changed && round < rounds) {
+      val q = quota()
+      changed = false
+      for (i <- sat.indices if !sat(i) && avail(i) <= q(i)) {
+        sat(i) = true
+        changed = true
+      }
+      round += 1
+    }
+    val q = quota()
+    val rows = sat.indices.map { i =>
+      val assigned = if (sat(i)) avail(i) else math.min(q(i), avail(i))
+      Row(domain(i), avail(i), w(i), assigned,
+        if (avail(i) == 0) 0.0 else assigned.toDouble / avail(i).toDouble)
+    }
+    df.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      StructField(domainCol, StringType),
+      StructField("avail", LongType, nullable = false),
+      StructField("w", LongType, nullable = false),
+      StructField("assigned", LongType, nullable = false),
+      StructField("rate", DoubleType))))
   }
 
   // ---- Binned-CDF quantiles (the histogram scale path) ----------------

@@ -1522,6 +1522,126 @@ class LlmOpsSpec extends SparkSpec {
     assert(full == 1250000L)
   }
 
+  test("recipe plan rejects a negative budget, weight or round count; overflow throws") {
+    val docs = Seq(("A", 10000L), ("B", 1000L)).toDF("dom", "toks")
+    val w = Map("A" -> 1L, "B" -> 1L)
+    intercept[IllegalArgumentException](
+      TextStats.recipePlan(docs, "dom", "toks", w, budgetTokens = -8000L))
+    intercept[IllegalArgumentException](
+      TextStats.recipePlan(docs, "dom", "toks", Map("A" -> 2L, "B" -> -1L), 8000L))
+    intercept[IllegalArgumentException](
+      TextStats.recipePlan(docs, "dom", "toks", w, 8000L, rounds = -1))
+    // (budget · w) past 2^63 must fail, not wrap into a bogus quota
+    intercept[ArithmeticException](
+      TextStats.recipePlan(docs, "dom", "toks",
+        Map("A" -> Long.MaxValue / 2, "B" -> 1L), 8000L))
+  }
+
+  /** recipePlan's former DataFrame water-filling, kept as the reference:
+    * element r is its result with `rounds` = r. Each round used to read
+    * the state twice (the rows and their one-row totals), doubling the
+    * plan per round; the state is localCheckpoint'ed between rounds here
+    * only to cut that lineage — the values are unchanged. */
+  private def dataFrameRecipePlans(df: org.apache.spark.sql.DataFrame,
+      domainCol: String, tokenCol: String, weights: Map[String, Long],
+      budgetTokens: Long, maxRounds: Int): IndexedSeq[org.apache.spark.sql.DataFrame] = {
+    val w = weights.toSeq.toDF(domainCol, "w")
+    val avail = df.groupBy(col(domainCol))
+      .agg(sum(col(tokenCol)).as("avail"))
+    var state = w.join(avail, Seq(domainCol), "full")
+      .select(col(domainCol),
+        coalesce(col("avail"), lit(0L)).as("avail"),
+        coalesce(col("w"), lit(0L)).as("w"),
+        lit(false).as("sat"))
+    val quotaExpr = s"CASE WHEN coalesce(wAct, CAST(0 AS BIGINT)) = 0 " +
+      s"THEN CAST(0 AS BIGINT) ELSE " +
+      s"((CAST($budgetTokens AS BIGINT) - coalesce(satSum, CAST(0 AS BIGINT))) * w) div wAct END"
+    def withTotals(s: org.apache.spark.sql.DataFrame) = {
+      val tot = s.agg(
+        sum(when(col("sat"), col("avail"))).as("satSum"),
+        sum(when(!col("sat"), col("w"))).as("wAct"))
+      s.crossJoin(broadcast(tot))
+    }
+    (0 to maxRounds).map { r =>
+      if (r > 0)
+        state = withTotals(state)
+          .withColumn("sat",
+            col("sat") || col("avail") <= expr(quotaExpr))
+          .select(col(domainCol), col("avail"), col("w"), col("sat"))
+          .localCheckpoint()
+      withTotals(state)
+        .withColumn("assigned",
+          when(col("sat"), col("avail"))
+            .otherwise(least(expr(quotaExpr), col("avail"))))
+        .select(col(domainCol), col("avail"), col("w"), col("assigned"),
+          when(col("avail") === 0, lit(0.0))
+            .otherwise(col("assigned").cast("double") / col("avail").cast("double"))
+            .as("rate"))
+    }
+  }
+
+  test("recipe plan equals the DataFrame water-filling row for row on seeded mixes") {
+    // Random mixes over d0..d5 with a null-domain group, unweighted corpus
+    // domains, weighted domains absent from the corpus, zero weights,
+    // zero-token domains and null token counts; every third seed plants a
+    // one-domain-per-round saturation cascade as long as the mix. Each mix
+    // is planned at rounds 0 .. |domains|+1.
+    def mix(seed: Int): (Seq[(String, Option[Long])], Map[String, Long], Long) = {
+      val rnd = new scala.util.Random(seed)
+      if (seed % 3 == 0) {
+        // domain i saturates in round i+1: its avail sits in the lower
+        // half of (quota of round i, quota of round i+1]; d9 absorbs the rest
+        val n = 4 + rnd.nextInt(2)
+        val budget = 1000000L + rnd.nextInt(1000000)
+        var rest = budget
+        var prev = 0L
+        val docs = (0 until n).map { i =>
+          val q = rest / (n + 1 - i)
+          val a = prev + 1 + rnd.nextLong((q - prev) / 2)
+          rest -= a
+          prev = q
+          (s"d$i", Some(a))
+        } :+ (("d9", Some(budget * 10)))
+        (docs, docs.map(_._1 -> 1L).toMap, budget)
+      } else {
+        val corpus = rnd.shuffle((0 to 3).map(i => s"d$i")).take(1 + rnd.nextInt(4)) ++
+          (if (rnd.nextBoolean()) Seq(null) else Nil)
+        val docs = corpus.flatMap { d =>
+          val zero = rnd.nextInt(5) == 0
+          Seq.fill(1 + rnd.nextInt(3))(d ->
+            (if (rnd.nextInt(8) == 0) None
+             else Some(if (zero) 0L else rnd.nextLong(3000L))))
+        }
+        val weights = rnd.shuffle((0 to 5).map(i => s"d$i")).take(rnd.nextInt(5))
+          .map(_ -> rnd.nextLong(6L)).toMap
+        val total = docs.flatMap(_._2).sum
+        (docs, weights, if (rnd.nextInt(6) == 0) 0L else rnd.nextLong(total * 3 / 2 + 1))
+      }
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2), r.getLong(3),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(4))))
+      .sortBy(t => (t._1, t._2, t._3, t._4, t._5))
+    var cutShort = 0
+    for (seed <- 1 to 6) {
+      val (docs, weights, budget) = mix(seed)
+      val df = docs.toDF("dom", "toks")
+      val nDomains = (docs.map(_._1) ++ weights.keys).distinct.size
+      val reference = dataFrameRecipePlans(df, "dom", "toks", weights, budget,
+        nDomains + 1)
+      val plans = reference.indices.map { r =>
+        val got = TextStats.recipePlan(df, "dom", "toks", weights, budget, r)
+        assert(got.schema == reference(r).schema)
+        val expected = rows(reference(r))
+        assert(rows(got) == expected, s"seed $seed rounds $r")
+        expected
+      }
+      cutShort += plans.indices.count(r => r >= 3 && plans(r) != plans.last)
+    }
+    // some mix is still saturating past the default 3 rounds
+    assert(cutShort > 0)
+  }
+
   test("curate pipeline: every stage fires on its planted case, shards are dense") {
     // one planted victim per stage; distinct vocab elsewhere so stages
     // can't cross-trigger

@@ -480,6 +480,20 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
+  test("plan: recipe plan is a local relation — no join or aggregate left per round") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LocalRelation}
+    import graft.llmops.TextStats
+    val docs = Seq(("A", 10000L), ("B", 1000L), ("C", 50L)).toDF("dom", "toks")
+    val qe = TextStats.recipePlan(docs, "dom", "toks",
+      weights = Map("A" -> 1L, "B" -> 1L, "D" -> 2L), budgetTokens = 8000L,
+      rounds = 6).queryExecution
+    Seq(qe.analyzed, qe.optimizedPlan).foreach { p =>
+      assert(p.isInstanceOf[LocalRelation], p)
+      assert(p.collect { case n @ (_: Join | _: Aggregate) => n }.isEmpty, p)
+    }
+  }
+
   test("plan: quantized top-k runs the pair loop on the native dot kernel") {
     val p = plan(SparkEntry.queries("q_quantized_topk")(spark, sf))
     assert(p.contains("graft_dot"), p)
