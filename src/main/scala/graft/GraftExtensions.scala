@@ -12,6 +12,13 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
   * [[graft.operators.BloomPrune]] can apply semi-join reduction when the
   * built-in runtime filter's thresholds don't trigger.
   *
+  * Required, not optional: every native kernel the library calls
+  * (`graft_dot`, `graft_dist_sq`, `graft_minhash_sig`, `graft_simhash64`,
+  * `graft_jl_project`, `graft_pq_code`, the text kernels and
+  * `graft_bloom_contains`) resolves only through these registrations, and
+  * none has a fallback. On a session built without the extension,
+  * analysis fails naming the missing `graft_*` function.
+  *
   * Apply at session build (`SparkSession.builder.withExtensions(new
   * GraftExtensions)`), or on a cluster via
   * `spark.sql.extensions=graft.GraftExtensions`.

@@ -27,8 +27,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   * types are implicitly cast, as built-ins do). Null ARRAYS null out via
   * `nullSafeEval`/`nullSafeCodeGen`; length-mismatched pairs and pairs
   * with any null ELEMENT return NULL — the same results the `zip_with`
-  * null-padding fold produces, so the tiers stay interchangeable
-  * regardless of which one a session resolves to.
+  * null-padding fold produces.
   */
 abstract class PairwiseFold extends BinaryExpression with ImplicitCastInputTypes {
   // (type inferred — AbstractDataType is private[sql])
@@ -122,10 +121,9 @@ case class SquaredDistance(left: Expression, right: Expression) extends Pairwise
   * the corresponding bits (the HOF's `when(...).otherwise(-1)` takes the
   * otherwise branch on null input), and a NULL INPUT ARRAY (null text)
   * yields signature 0L — the fold's `when(null > 0, ...).otherwise(0L)`
-  * lands every bit in the otherwise branch. Keeping the tiers
-  * bit-identical here matters: a null-text doc must land in the same
-  * banded-join buckets as a zero-signature doc in BOTH tiers, or pairs
-  * silently differ by which implementation is registered.
+  * lands every bit in the otherwise branch. So a null-text doc lands in
+  * the same banded-join buckets as a zero-signature doc, as it does
+  * under the fold reference.
   */
 case class SimHash64(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
   override def inputTypes = Seq(ArrayType(StructType(Seq(
@@ -234,7 +232,7 @@ case class SimHash64(child: Expression) extends UnaryExpression with ImplicitCas
   * every slot (an upper bound for all permutation values — the same
   * identity the HOF fold uses).
   *
-  * The HOF form (`Dedup.minhashSignatureArray`'s `aggregate` +
+  * The HOF form (`Dedup.minhashSignatureArrayFold`'s `aggregate` +
   * `zip_with`) allocates a numHashes-element array and dispatches 3·k
   * interpreted lambdas PER SHINGLE; this expression keeps the running
   * minima in one primitive long[] inside whole-stage codegen. Integer
@@ -497,7 +495,9 @@ case class PqNearestCode(left: Expression, right: Expression)
   * registered through the public `SparkSessionExtensions.injectFunction`
   * hook (see [[graft.GraftExtensions]]) and invoked via `call_function` —
   * which also makes them first-class SQL functions
-  * (`SELECT graft_dot(a, b)`).
+  * (`SELECT graft_dot(a, b)`). Registration is therefore the only way
+  * these kernels run: on a session built without the extension, analysis
+  * fails naming the unresolved `graft_*` routine.
   */
 object VectorExpressions {
   import org.apache.spark.sql.functions.call_function

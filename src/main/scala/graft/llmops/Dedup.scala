@@ -189,41 +189,26 @@ object Dedup {
   def minhashBase(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long") % MinhashPrime
 
-  /** Signature as ONE array column: a single fold over the shingle hashes
-    * that maintains all `numHashes` running minima at once
-    * (`aggregate` + `zip_with` against literal coefficient arrays).
-    * Component j is the min over the document's shingles of
-    * `(base * minhashA(j) + minhashB(j)) % p` — identical to the fold
-    * [[minhashSignatureArrayFold]] and to the DuckDB oracle's `mh_j`
-    * columns. The expression tree is O(1) in numHashes instead of one
-    * min() aggregate per hash — an order of magnitude less generated
-    * code to JIT, and one pass over the hashes instead of numHashes
-    * passes. The md5 base array sits in the aggregate's *input* argument
-    * slot, which is evaluated once per row even when projection collapse
-    * inlines it (lambda bodies re-evaluate per element; arguments don't).
+  /** Signature as ONE array column, computed by the native codegen'd
+    * [[graft.functions.MinHashSig]] kernel: one primitive `long[]` loop
+    * over the shingle hashes that maintains all `numHashes` running
+    * minima at once. Component j is the min over the document's
+    * shingles of `(base * minhashA(j) + minhashB(j)) % p` — identical to
+    * the fold [[minhashSignatureArrayFold]] and to the DuckDB oracle's
+    * `mh_j` columns. Requires a [[graft.GraftExtensions]] session.
     */
   def minhashSignatureArray(sets: DataFrame, idCol: String,
       numHashes: Int): DataFrame = {
     val hb = transform(col("shingles"), s => minhashBase(s))
-    // Dispatch to the native codegen'd [[graft.functions.MinHashSig]]
-    // when the session registers it — one primitive long[] loop instead
-    // of 3·numHashes interpreted lambda dispatches (and a fresh
-    // numHashes-element array) per shingle. The HOF fold below is the
-    // registration-free fallback; integer arithmetic both ways, results
-    // exactly identical.
-    val nativeAvailable = org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists("graft_minhash_sig"))
-    if (nativeAvailable) {
-      val as = (0 until numHashes).map(minhashA)
-      val bs = (0 until numHashes).map(minhashB)
-      sets.select(col(idCol),
-        graft.functions.VectorExpressions.minhashSig(hb, as, bs, MinhashPrime).as("sig"))
-    } else minhashSignatureArrayFold(sets, idCol, numHashes)
+    val as = (0 until numHashes).map(minhashA)
+    val bs = (0 until numHashes).map(minhashB)
+    sets.select(col(idCol),
+      graft.functions.VectorExpressions.minhashSig(hb, as, bs, MinhashPrime).as("sig"))
   }
 
-  /** The HOF-fold form regardless of session registrations — the
-    * registration-free fallback and the bit-identity test anchor for the
-    * native expression. */
+  /** The HOF-fold form (`aggregate` + `zip_with` against literal
+    * coefficient arrays) — the reference the native kernel is tested
+    * against. Integer arithmetic both ways, results exactly identical. */
   private[graft] def minhashSignatureArrayFold(sets: DataFrame, idCol: String,
       numHashes: Int): DataFrame = {
     val coeffs = array((0 until numHashes).map { j =>
@@ -1095,7 +1080,9 @@ object Dedup {
         conv(substring(h, 9, 8), 16, 10).cast("long").as("hi"))
     })
 
-  /** Signature from a (preferably hoisted) [[tokenHashHalves]] column. */
+  /** Signature as 64 interpreted bit-vote folds over a [[tokenHashHalves]]
+    * column — the reference the native [[graft.functions.SimHash64]]
+    * kernel is tested against. */
   def simhash64FromHalves(halves: Column): Column = {
     val bits = (0 until 64).map { b =>
       val (field, shift) = if (b < 32) ("lo", b) else ("hi", b - 32)
@@ -1108,24 +1095,17 @@ object Dedup {
   }
 
   /** Per-document signatures with the token-hash column hoisted so it is
-    * evaluated once per row, not once per bit. Dispatches to the native
-    * codegen'd [[graft.functions.SimHash64]] when the session registers it
-    * (one primitive pass instead of 64 interpreted folds — the dominant
-    * cost of the corpus-scale pair search); the HOF fold is the
-    * registration-free fallback. Integer arithmetic both ways: results
-    * are exactly identical. */
-  def simhashSignatures(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val nativeAvailable = org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists("graft_simhash64"))
-    val sig =
-      if (nativeAvailable) graft.functions.VectorExpressions.simhash64(col("_th"))
-      else simhash64FromHalves(col("_th"))
+    * evaluated once per row, not once per bit, then signed by the native
+    * codegen'd [[graft.functions.SimHash64]] (one primitive pass instead
+    * of 64 interpreted folds — the dominant cost of the corpus-scale pair
+    * search). Requires a [[graft.GraftExtensions]] session. */
+  def simhashSignatures(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.withColumn("_th", tokenHashHalves(col(textCol)))
-      .select(col(idCol), sig.as("sig"))
-  }
+      .select(col(idCol), graft.functions.VectorExpressions.simhash64(col("_th")).as("sig"))
 
   /** Single-column convenience form (inline, no hoist). */
-  def simhash64(text: Column): Column = simhash64FromHalves(tokenHashHalves(text))
+  def simhash64(text: Column): Column =
+    graft.functions.VectorExpressions.simhash64(tokenHashHalves(text))
 
   def hammingDistance64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 

@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   *  - [[pqEncode]]: one map-side pass over the corpus (broadcast
   *    codebook row, argmin per subspace in place) — NO shuffle, no
   *    per-code row explosion; the argmin runs as the native codegen'd
-  *    `graft_pq_code` kernel when registered (HOF-fold fallback,
-  *    bit-identical).
+  *    `graft_pq_code` kernel (requires a [[graft.GraftExtensions]]
+  *    session).
   *  - [[adcTopK]]: queries broadcast with their LUTs; the corpus-sized
   *    encoded side streams m ints per row; per-pair work is codegen'd
   *    `element_at` lookups, and the top-k is the bounded-heap partial
@@ -53,12 +53,6 @@ object ProductQuantization {
       s"dim must divide into m subspaces, got dim=$dim m=$m")
     dim / m
   }
-
-  private def dotFold(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  private def distSqFold(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
 
   /** Per-subspace codebooks cut from `ks` sample vectors: row (sub,
     * code_id, centroid) where `centroid` is the sample's sub-th
@@ -91,18 +85,11 @@ object ProductQuantization {
       .select(struct(col("sub"), col("_cents")).as("_b"))
       .agg(sort_array(collect_list(col("_b"))).as("_books"))
 
-  /** True when the active session registered the native PQ kernel (see
-    * [[graft.GraftExtensions]]); the HOF fold is the registration-free
-    * fallback, bit-identical for well-formed codebooks. */
-  private def nativeAvailable: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists("graft_pq_code"))
-
   /** HOF argmin over a position-ordered centroid array — the reference
     * formulation the native kernel is bit-identity-tested against. */
   private def hofArgmin(sv: Column, cents: Column): Column =
     array_min(transform(cents, (c, i) =>
-      struct(distSqFold(sv, c).as("d"), i.cast("int").as("pos"))))
+      struct(VectorMath.distSqPrecast(sv, c).as("d"), i.cast("int").as("pos"))))
       .getField("pos")
 
   /** Encode every vector as `m` dense code positions: codes[s] = 0-based
@@ -114,26 +101,25 @@ object ProductQuantization {
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, m: Int, dim: Int,
       carryCols: Seq[String] = Nil): DataFrame =
-    encodeImpl(df, idCol, vecCol, codebooks, m, dim, carryCols, nativeAvailable)
+    encodeImpl(df, idCol, vecCol, codebooks, m, dim, carryCols,
+      graft.functions.VectorExpressions.pqCode)
 
-  /** [[pqEncode]] forced onto the HOF fold — the bit-identity reference
-    * for the native kernel (same pattern as minhashSignatureArrayFold). */
+  /** [[pqEncode]] on the HOF fold — the reference the native kernel is
+    * tested against (same pattern as minhashSignatureArrayFold). */
   private[graft] def pqEncodeFold(df: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, m: Int, dim: Int): DataFrame =
-    encodeImpl(df, idCol, vecCol, codebooks, m, dim, Nil, native = false)
+    encodeImpl(df, idCol, vecCol, codebooks, m, dim, Nil, hofArgmin)
 
   private def encodeImpl(df: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, m: Int, dim: Int, carryCols: Seq[String],
-      native: Boolean): DataFrame = {
+      argmin: (Column, Column) => Column): DataFrame = {
     val sd = subDim(m, dim)
     // the per-subspace loop is UNROLLED (m is a plan-time constant), so
-    // the whole codes array is built from plain expressions — with the
-    // native kernel registered nothing in the encode pass is interpreted
+    // the whole codes array is built from plain expressions — on the
+    // native kernel nothing in the encode pass is interpreted
     val codeAt = (s: Int) => {
       val sv = slice(col("_v"), s * sd + 1, sd)
-      val cents = element_at(col("_books"), s + 1).getField("_cents")
-      if (native) graft.functions.VectorExpressions.pqCode(sv, cents)
-      else hofArgmin(sv, cents)
+      argmin(sv, element_at(col("_books"), s + 1).getField("_cents"))
     }
     df.select(col(idCol) +: carryCols.map(col) :+
         VectorMath.precast(col(vecCol)).as("_v"): _*)
@@ -149,7 +135,7 @@ object ProductQuantization {
     q.crossJoin(broadcast(packedBooks(codebooks)))
       .withColumn("_lut", transform(col("_books"), b => {
         val qs = slice(col("_qv"), b.getField("sub") * sd + 1, lit(sd))
-        transform(b.getField("_cents"), c => dotFold(qs, c))
+        transform(b.getField("_cents"), c => VectorMath.dotPrecast(qs, c))
       }))
       .drop("_books")
   }
@@ -331,7 +317,7 @@ object ProductQuantization {
     val q = Similarity.probeCells(withLut(qPrep, codebooks, m, dim),
         centroids, nProbe, dim)
       .join(broadcast(centroidVecs(centroids)), Seq("cell_id"))
-      .withColumn("_qc", dotFold(col("_qv"), col("_c")))
+      .withColumn("_qc", VectorMath.dotPrecast(col("_qv"), col("_c")))
       .select("query_id", "_lut", "cell_id", "_qc")
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("cand_id").asc)
     broadcast(q).join(encoded, Seq("cell_id"))

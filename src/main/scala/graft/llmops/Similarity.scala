@@ -627,39 +627,24 @@ object Similarity {
     * without a division whose rounding could drift.
     *
     * Scale shape: entirely map-side — the sign matrix rides in the plan
-    * (outDim·dim doubles, a few KB); on a [[graft.GraftExtensions]]
-    * session the whole projection is ONE fused native loop
-    * ([[graft.functions.VectorExpressions.JlProject]] — the composed
-    * array-of-dots form inlines outDim loop bodies into a generated
-    * method past the JIT's HugeMethodLimit and drops the stage to
-    * interpreted bytecode, measured 38× slower at the 64× stress
+    * (outDim·dim doubles, a few KB) and the whole projection is ONE
+    * fused native loop ([[graft.functions.VectorExpressions.JlProject]] —
+    * the composed array-of-dots form inlines outDim loop bodies into a
+    * generated method past the JIT's HugeMethodLimit and drops the stage
+    * to interpreted bytecode, measured 38× slower at the 64× stress
     * fixture); no shuffle, no state, no UDF. At 100 TB this runs at scan
     * speed and is the step that makes the downstream pairwise search
-    * `dim/outDim`× cheaper.
+    * `dim/outDim`× cheaper. Requires a [[graft.GraftExtensions]] session.
     *
-    * Both tiers share one null contract: NULL vector → NULL projection;
-    * a null ELEMENT or a width ≠ `dim` → an all-null component array
-    * (the fallback's per-component dots NULL out individually, and the
-    * wrapper below pins the NULL-row case to match the native kernel). */
+    * Null contract: NULL vector → NULL projection; a null ELEMENT or a
+    * width ≠ `dim` → an all-null component array (what the composed
+    * per-component dots produce, each NULLing out individually). */
   def randomProject(df: DataFrame, vecCol: String, outCol: String,
       outDim: Int, seed: String, dim: Int): DataFrame = {
     require(outDim >= 1 && dim >= 1,
       s"randomProject needs positive dims, got outDim=$outDim dim=$dim")
-    // tier choice must follow the session that will ANALYZE this plan,
-    // not thread-local active-session state (a pool thread created
-    // before the session was set would silently take the 38×-slower
-    // composed form; a second extension-less session would fail analysis)
-    val native = df.sparkSession.catalog.functionExists("graft_jl_project")
-    if (native)
-      df.withColumn(outCol,
-        graft.functions.VectorExpressions.jlProject(col(vecCol), seed, outDim, dim))
-    else {
-      val signs = projectionSigns(seed, outDim, dim)
-      val v = VectorMath.precast(col(vecCol))
-      df.withColumn(outCol,
-        when(v.isNull, lit(null).cast("array<double>"))
-          .otherwise(array(signs.map(row => VectorMath.dotAuto(v, lit(row), dim)): _*)))
-    }
+    df.withColumn(outCol,
+      graft.functions.VectorExpressions.jlProject(col(vecCol), seed, outDim, dim))
   }
 
   /** Two-stage retrieval over a JL-projected coarse index: search the
@@ -832,8 +817,9 @@ object Similarity {
     * doctrine — each component is cast to an exact decimal before the
     * sum, so the centroid is bit-reproducible regardless of row order,
     * and the final mean is one identical double division per component.
-    * The distance fold then runs left-to-right over the paired arrays
-    * ([[VectorMath.distSqPrecast]]), matching the oracle's list_reduce.
+    * The distance then folds left-to-right over the paired arrays (the
+    * native [[graft.functions.VectorExpressions.distSq]]), matching the
+    * oracle's list_reduce.
     *
     * Scale shape: one posexplode + (label, position) count shuffle —
     * dim·labels cells of combiner state, same as a Lloyd step — then the
@@ -853,7 +839,8 @@ object Similarity {
         s => s.getField("_m")).as("_c"))
     df.join(broadcast(centArr), col(labelCol) === col("_l"))
       .withColumn("dist2",
-        VectorMath.distSqPrecast(VectorMath.precast(col(vecCol)), col("_c")))
+        graft.functions.VectorExpressions.distSq(
+          VectorMath.precast(col(vecCol)), col("_c")))
       .withColumn("rank", row_number().over(Window.partitionBy(col(labelCol))
         .orderBy(col("dist2").desc, col(idCol))).cast("int"))
       .filter(col("rank") <= topK)

@@ -5,20 +5,21 @@ import org.apache.spark.sql.functions._
 
 /** Vector math over `array<float>` embedding columns.
   *
-  * Three implementation tiers, fastest applicable chosen by the `*Auto`
-  * forms:
-  *  1. native Catalyst expressions with `doGenCode`
+  * Two implementation tiers, chosen from `dim` by the `*Auto` forms:
+  *  1. unrolled `element_at` sums — beats everything for small known dims
+  *     (3-D nav points), but generated methods outgrow the JIT above
+  *     [[unrollLimit]].
+  *  2. native Catalyst expressions with `doGenCode`
   *     ([[graft.functions.VectorExpressions]]) — a primitive double loop
   *     inside whole-stage codegen; used for wide/unknown dims. Requires
   *     the session to be built with [[graft.GraftExtensions]].
-  *  2. unrolled `element_at` sums — beats everything for small known dims
-  *     (3-D nav points), but generated methods outgrow the JIT above
-  *     [[unrollLimit]].
-  *  3. higher-order-function folds (`aggregate` + `zip_with`) — the
-  *     registration-free fallback; semantically identical but runs as
-  *     CodegenFallback (interpreted lambda per element).
   *
-  * All tiers are sequential left-folds over the array in index order with
+  * The higher-order-function folds (`aggregate` + `zip_with`: [[dot]],
+  * [[dotPrecast]], [[distSqPrecast]]) are the reference the native
+  * kernel is tested against; they run as CodegenFallback (interpreted
+  * lambda per element).
+  *
+  * All forms are sequential left-folds over the array in index order with
   * double-precision accumulation: deterministic, bit-identical to each
   * other and to any engine that folds the same way (the DuckDB oracles
   * use `list_reduce(list_transform(...))`, which matches).
@@ -72,13 +73,13 @@ object VectorMath {
   // generates methods past the JIT's HugeMethodLimit, so the "optimized"
   // code runs in the bytecode interpreter (measured 6-10× SLOWER than the
   // fold at dim=64 on the all-pairs cosine path). `dotAuto` therefore
-  // unrolls only up to `unrollLimit` and uses the fold above it. The seed
-  // term and left-to-right association replicate the fold exactly
-  // (((0.0+x1)+x2)+…), so both forms stay bit-identical to each other
-  // and the DuckDB list_reduce oracles.
+  // unrolls only up to `unrollLimit` and uses the native loop above it.
+  // The seed term and left-to-right association replicate the fold
+  // exactly (((0.0+x1)+x2)+…), so every form stays bit-identical to the
+  // others and the DuckDB list_reduce oracles.
 
   /** Widest dimension worth unrolling; above this the generated method
-    * outgrows JIT compilation and the fold form wins. */
+    * outgrows JIT compilation and the native loop wins. */
   val unrollLimit = 8
 
   /** Unrolled dot over precast arrays; `dim` must equal the array length. */
@@ -92,28 +93,15 @@ object VectorMath {
       val d = element_at(a, i) - element_at(b, i); d * d
     }.toSeq).reduce(_ + _)
 
-  /** True when the active session has the GraftExtensions-injected
-    * functions — the *Auto forms degrade to the registration-free HOF
-    * fold on sessions built without them, instead of failing analysis.
-    * Thread-local: columns must be built on a thread with an active
-    * session (standard driver-side usage) to get the native tier; a
-    * bare thread silently falls back to the (slower, still correct)
-    * fold. */
-  private def nativeAvailable: Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.catalog.functionExists("graft_dot"))
-
-  /** Unrolled dot for small known dims; native codegen'd loop for wide
-    * dims when registered (same result bit-for-bit); HOF fold otherwise. */
+  /** Unrolled dot for small known dims; the native codegen'd loop
+    * otherwise (same result bit-for-bit). */
   def dotAuto(a: Column, b: Column, dim: Int): Column =
     if (dim > 0 && dim <= unrollLimit) dotUnrolled(a, b, dim)
-    else if (nativeAvailable) graft.functions.VectorExpressions.dot(a, b)
-    else dotPrecast(a, b)
+    else graft.functions.VectorExpressions.dot(a, b)
 
   def normAuto(a: Column, dim: Int): Column = sqrt(dotAuto(a, a, dim))
 
   def distSqAuto(a: Column, b: Column, dim: Int): Column =
     if (dim > 0 && dim <= unrollLimit) distSqUnrolled(a, b, dim)
-    else if (nativeAvailable) graft.functions.VectorExpressions.distSq(a, b)
-    else distSqPrecast(a, b)
+    else graft.functions.VectorExpressions.distSq(a, b)
 }

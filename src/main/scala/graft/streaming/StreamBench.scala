@@ -184,6 +184,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val seconds = if (args.length > 0) args(0).toInt else 12
     val spark = SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions)
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")

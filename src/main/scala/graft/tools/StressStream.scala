@@ -32,6 +32,7 @@ object StressStream {
     val seconds = if (args.length > 0) args(0).toInt else 45
     val nKeys = if (args.length > 1) args(1).toInt else 6400000
     val spark = SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions)
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")

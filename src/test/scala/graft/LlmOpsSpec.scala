@@ -404,7 +404,7 @@ class LlmOpsSpec extends SparkSpec {
         s"doc ${r.get(0)} produced a null signature (tiers must yield 0L)")
       assert(r.getLong(1) == r.getLong(2), s"doc ${r.get(0)} sig mismatch") }
     // null text signs as 0L in both tiers — it must bucket with
-    // zero-signature docs identically regardless of registered tier
+    // zero-signature docs identically in the kernel and its reference
     val nullRow = both.find(_.getLong(0) == 9003L).get
     assert(nullRow.getLong(1) == 0L && nullRow.getLong(2) == 0L)
   }
@@ -1938,7 +1938,7 @@ class LlmOpsSpec extends SparkSpec {
     // null element and width-mismatch degrade exactly like the composed
     // per-component dots: an all-null component array, not a null row;
     // a NULL vector row yields a NULL projection (the native kernel's
-    // null propagation — the fallback wrapper pins the same contract)
+    // null propagation)
     val weird = Seq(
       (0L, Array[java.lang.Float](1.0f, null, 1.0f, 1.0f)),
       (1L, Array[java.lang.Float](1.0f, 1.0f)),

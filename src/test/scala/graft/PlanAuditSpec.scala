@@ -511,6 +511,18 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("graft_dot("), p)
   }
 
+  test("plan: simhash signs on the native kernel — both the table and the column form") {
+    import spark.implicits._
+    val texts = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
+    // local-relation inputs constant-fold, so check the ANALYZED plan
+    val sigs = graft.llmops.Dedup.simhashSignatures(texts, "doc_id", "text")
+    val col1 = texts.select(graft.llmops.Dedup.simhash64(col("text")).as("sig"))
+    Seq(sigs, col1).foreach { df =>
+      val p = df.queryExecution.analyzed.toString
+      assert(p.contains("graft_simhash64"), p)
+    }
+  }
+
   test("plan: two-stage retrieval re-rank broadcasts survivors — corpus never shuffles") {
     val p = plan(SparkEntry.queries("q_projected_topk")(spark, sf))
     assert(!p.contains("CartesianProduct"), p)
