@@ -180,31 +180,6 @@ object ProductQuantization {
         col("_s.score").as("score"), (col("_pos") + 1).cast("int").as("rank"))
   }
 
-  /** Profiling hook: the scored pair table exactly as [[adcTopK]] builds
-    * it, before any top-k — lets a stage-timing harness separate join+
-    * score cost from top-k cost. Expects (`query_id`, `_qv`) queries and
-    * (`cand_id`, `codes`) candidates. */
-  private[graft] def debugScored(q: DataFrame, encoded: DataFrame,
-      codebooks: DataFrame, m: Int, dim: Int): DataFrame =
-    broadcast(withLut(q, codebooks, m, dim).select(col("query_id"), col("_lut")))
-      .join(encoded, col("query_id") =!= col("cand_id"))
-      .withColumn("score", adcScore(m))
-      .select("query_id", "cand_id", "score")
-
-  /** Experimental variant of [[debugScored]]: same pairs via a
-    * constant-key BroadcastHashJoin with the self-match exclusion as a
-    * residual condition, instead of a conditioned nested-loop join. */
-  private[graft] def debugScoredEqui(q: DataFrame, encoded: DataFrame,
-      codebooks: DataFrame, m: Int, dim: Int): DataFrame = {
-    val qq = withLut(q, codebooks, m, dim)
-      .select(col("query_id"), col("_lut")).withColumn("_oneq", lit(1))
-    broadcast(qq)
-      .join(encoded.withColumn("_onec", lit(1)),
-        col("_oneq") === col("_onec") && col("query_id") =!= col("cand_id"))
-      .withColumn("score", adcScore(m))
-      .select("query_id", "cand_id", "score")
-  }
-
   /** IVFADC — the production ANN composition (Jégou et al. 2011, minus
     * residual encoding — see [[ivfPqResidualTopK]] for the full
     * construction): candidates are

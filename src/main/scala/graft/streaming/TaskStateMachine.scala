@@ -28,13 +28,28 @@ object TaskStateMachine {
     * seed+1000 convention — structure.md §Step3). */
   final val MaxRetries = 5
 
-  /** Pure state-transition function — unit-testable without a stream. */
+  /** Position in the lifecycle; unknown statuses rank after all of these. */
+  private val lifecycleRank =
+    Map("queued" -> 0, "assigned" -> 1, "rendering" -> 2, "completed" -> 3, "failed" -> 3)
+
+  /** Pure state-transition function — unit-testable without a stream.
+    *
+    * A batch's events apply in (timestamp, lifecycle rank, status) order:
+    * a `completed` that shares its millisecond with `rendering` applies
+    * last, so the task ends terminal and frees its state slot. The rank
+    * knows no attempts: a `failed` and the retry's `assigned`/`rendering`
+    * in one millisecond apply as assigned, rendering, failed, so the task
+    * ends `queued` with the failure counted and the retry's progress lost.
+    * Ordering is per batch only: an event older than the stored state that
+    * arrives in a LATER batch is applied on top of it and overwrites the
+    * newer status and `updatedAtMillis`. */
   def updateTaskState(
       taskId: String,
       events: Iterator[TaskEvent],
       state: GroupState[TaskState]): Iterator[TaskState] = {
     var cur = state.getOption.orNull
-    val sorted = events.toSeq.sortBy(e => (e.tsMillis, e.status))
+    val sorted = events.toSeq.sortBy(e =>
+      (e.tsMillis, lifecycleRank.getOrElse(e.status, 4), e.status))
     for (e <- sorted) {
       cur =
         if (cur == null)

@@ -1,18 +1,32 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, Timebox}
 
-/** Scale-stress runner: executes the expensive scale-path queries against
-  * a [[ScaleFixture]] directory, times each, and dumps the FINAL (post-AQE)
-  * executed plan per query so plan-shape claims can be audited at real
-  * shuffle sizes. Results feed STRESS.md.
+/** Scale-stress runner and the repo's one profiling harness: executes the
+  * expensive scale-path queries against a [[ScaleFixture]] directory (or
+  * any sf dir), times each, and writes `$outDir/$name.plan.txt` so
+  * plan-shape claims can be audited at real shuffle sizes. Results feed
+  * STRESS.md. Each plan file holds, for that query:
+  *   - the AQE-final operator tree with each operator's non-zero SQL
+  *     metrics (codegen time, exchange bytes, build time, spill);
+  *   - the formatted plan (final plan, then the initial plan with its
+  *     PushedFilters/ReadSchema scan detail);
+  *   - at the end, the stage table: every Spark stage its job group ran
+  *     (wall ms, executor run ms, tasks, RDD-scope chain), from one
+  *     session-wide [[StageTap]] — it sees the eager-checkpoint work done
+  *     while the DataFrame is built, which no plan shows.
   *
-  * The list is the top of the per-round bench by cost, restricted to
+  * The default list is the top of the per-round bench by cost, restricted to
   * UNBOUNDED scale paths — bounded correctness baselines (q_knn's
   * vec_id<40 broadcast form, q_ngram_jaccard's doc_id<300 all-pairs) are
   * excluded because at a replicated fixture they only measure the scan of
@@ -20,9 +34,14 @@ import graft.{SparkEntry, Timebox}
   * must cover the k-th-neighbor radius, which shrinks ~n^(-1/3).
   *
   * Usage: runMain graft.tools.Stress [sfDir] [outDir]
-  *   SPARK_GRAFT_STRESS_ONLY=a,b to subset.
+  *   SPARK_GRAFT_STRESS_ONLY=a,b runs only the named entries; a name may
+  *   be any stress pipeline or any SparkEntry query (so one query can be
+  *   profiled at sf0.1 without a fixture). Unknown names fail the run
+  *   before any query starts.
   */
 object Stress {
+
+  type Pipeline = (SparkSession, String) => DataFrame
 
   /** Density-scaled grid kNN over the 3-D embedding projection (the
     * stress analog of q_knn_grid). */
@@ -205,10 +224,10 @@ object Stress {
       .select("doc_id")
   }
 
-  // Unbounded scale paths only: q_tfidf_topk (doc_id<100) and q_knn
-  // (vec_id<40) are bounded correctness baselines and would only measure
-  // the replica-0 scan here.
-  private val names = Seq(
+  // The SparkEntry queries of the default run. Unbounded scale paths
+  // only: q_tfidf_topk (doc_id<100) and q_knn (vec_id<40) are bounded
+  // correctness baselines and would only measure the replica-0 scan here.
+  private[graft] val names = Seq(
     "q_salted_join", "q_skew_join_hot", "q_simhash_banded", "q_minhash_lsh",
     "q_dedup_cluster", "q_span_dedup", "q_repetition_stats",
     "q_cumsum_arclength", "q_kmeans_refine", "q_lsh_multiprobe",
@@ -749,9 +768,134 @@ object Stress {
     graft.graph.ShortestPaths.bounded(edges, seeds, maxHops = 4)
   }
 
+
+  private val pipelines: Seq[(String, Pipeline)] = Seq(
+    "stress_interval_overlap" -> (stressIntervalOverlap _),
+    "stress_knn_grid" -> (stressKnnGrid _),
+    "stress_lsh_multiprobe14" -> (stressLshMultiprobe _),
+    "stress_dedup_sized" -> (stressDedupSized _),
+    "stress_pq" -> (stressPq _),
+    "stress_hh_naive" -> (stressHhNaive _),
+    "stress_decon_big" -> (stressDeconBig _),
+    "stress_decon_big_bloom" -> (stressDeconBigBloom _),
+    "stress_fuzzy_unblocked" -> (stressFuzzyUnblocked _),
+    "stress_linkage_scaled" -> (stressLinkageScaled _),
+    "stress_ppjoin_tau06" -> (stressPpjoinTau06 _),
+    "stress_bfs_hops" -> (stressBfsHops _),
+    "stress_rendezvous_flat64" -> (stressRendezvousFlat64 _),
+    "stress_rendezvous_hier64" -> (stressRendezvousHier64 _),
+    "stress_rrf_arms" -> (stressRrfArms _),
+    "stress_rrf_fusion_only" -> (stressRrfFusionOnly _),
+    "stress_bm25_index_build" -> (stressBm25IndexBuild _),
+    "stress_bm25_query_only" -> (stressBm25QueryOnly _),
+    "stress_bm25_delta_update" -> (stressBm25DeltaUpdate _),
+    "stress_sparse_query_only" -> (stressSparseQueryOnly _),
+    "stress_curate_registry_build" -> (stressCurateRegistryBuild _),
+    "stress_curate_delta" -> (stressCurateDelta _),
+    "stress_curate_delta_persist" -> (stressCurateDeltaPersist _),
+    "stress_curate_segment_write" -> (stressCurateSegmentWrite _),
+    "stress_curate_registry_rewrite" -> (stressCurateRegistryRewrite _),
+    "stress_ivf_index_build" -> (stressIvfIndexBuild _),
+    "stress_hybrid_indexed" -> (stressHybridIndexed _),
+    "stress_bm25_segments_build8" -> (stressBm25SegmentsBuild(8) _),
+    "stress_bm25_segments_build32" -> (stressBm25SegmentsBuild(32) _),
+    "stress_bm25_query_seg8" -> (stressBm25QuerySeg(8) _),
+    "stress_bm25_query_seg32" -> (stressBm25QuerySeg(32) _),
+    "stress_bm25_compact32" -> (stressBm25Compact(32) _))
+
+  /** The run list for a `SPARK_GRAFT_STRESS_ONLY` value (None = the
+    * default list). Selected default-list entries keep the default order
+    * (the registry builders precede their readers); other SparkEntry
+    * queries follow in the order named. Throws before anything runs if a
+    * name is neither a stress pipeline nor a SparkEntry query. */
+  private[graft] def select(only: Option[String]): Seq[(String, Pipeline)] = {
+    val all = names.map(n => n -> SparkEntry.queries(n)) ++ pipelines
+    only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq) match {
+      case None => all
+      case Some(wanted) =>
+        val listed = all.map(_._1).toSet
+        val unknown = wanted.filterNot(n => listed(n) || SparkEntry.queries.contains(n))
+        require(unknown.isEmpty, "SPARK_GRAFT_STRESS_ONLY names neither a " +
+          s"stress pipeline nor a SparkEntry query: ${unknown.mkString(", ")}")
+        all.filter { case (n, _) => wanted.contains(n) } ++
+          wanted.filterNot(listed).distinct.map(n => n -> SparkEntry.queries(n))
+    }
+  }
+
+  /** One row per completed stage: the job group that ran it (Timebox sets
+    * it to the query name), wall ms, Σ executor run ms, task count, and
+    * the RDD-scope chain — the operators the stage executes, readable even
+    * inside broadcast futures where the callsite name is not. */
+  private final case class StageRow(group: String, stageId: Int, wallMs: Long,
+      execMs: Long, tasks: Int, scopes: String)
+
+  /** Session-wide stage tap, registered once. A stage is billed to the job
+    * group of the first job that submitted it, so stages of successive
+    * queries never mix and no listener is added or removed per query. */
+  private final class StageTap extends org.apache.spark.scheduler.SparkListener {
+    private val groupOf = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]
+    override def onJobStart(
+        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .foreach(g => js.stageIds.foreach(groupOf.putIfAbsent(_, g)))
+    override def onStageCompleted(
+        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+      val i = sc.stageInfo
+      Option(groupOf.get(i.stageId)).foreach { g =>
+        val wall = (for (a <- i.completionTime; b <- i.submissionTime)
+          yield a - b).getOrElse(0L)
+        val scopes = i.rddInfos.sortBy(_.id)
+          .flatMap(_.scope.map(_.name)).distinct.mkString(">")
+        rows.add(StageRow(g, i.stageId, wall, i.taskMetrics.executorRunTime,
+          i.numTasks, scopes))
+      }
+    }
+  }
+
+  private def stageTable(name: String, rows: Seq[StageRow]): String = {
+    val sb = new StringBuilder(
+      s"== $name  stages, all reps (stage | wall ms | exec ms | tasks | rdd scopes) ==\n")
+    rows.sortBy(_.stageId).foreach { r =>
+      sb.append(f"${r.stageId}%5d | ${r.wallMs}%7d | ${r.execMs}%8d | ${r.tasks}%5d | ${r.scopes}%s\n")
+    }
+    sb.append(f"total | ${rows.map(_.wallMs).sum}%7d | ${rows.map(_.execMs).sum}%8d | " +
+      f"${rows.map(_.tasks).sum}%5d | ${rows.size} stages\n\n").result()
+  }
+
+  private def fmtMetric(v: Long, tpe: String): String = tpe match {
+    case "timing" => f"${v / 1e3}%.2f s"
+    case "nsTiming" => f"${v / 1e9}%.2f s"
+    case "size" => f"${v / 1e6}%.1f MB"
+    case _ => v.toString
+  }
+
+  /** The executed operator tree, one operator per line with its non-zero
+    * SQL metrics, descending through AQE query stages and subqueries. */
+  private def walk(p: SparkPlan, depth: Int, sb: StringBuilder): Unit = {
+    val ms = p.metrics.toSeq
+      .filter { case (_, m) => m.value > 0 }
+      .sortBy(_._1)
+      .map { case (k, m) => s"$k=${fmtMetric(m.value, m.metricType)}" }
+      .mkString(", ")
+    sb.append("  " * depth).append(p match {
+      case a: AdaptiveSparkPlanExec => s"${a.nodeName} isFinalPlan=${a.isFinalPlan}"
+      case _ => p.nodeName
+    })
+    if (ms.nonEmpty) sb.append("  [").append(ms).append("]")
+    sb.append('\n')
+    p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, depth + 1, sb)
+      case q: QueryStageExec => walk(q.plan, depth + 1, sb)
+      case _ => p.children.foreach(walk(_, depth + 1, sb))
+    }
+    p.subqueries.foreach(walk(_, depth + 1, sb))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/tmp/stress_sf"
     val outDir = if (args.length > 1) args(1) else "/tmp/stress_out"
+    val selected = select(sys.env.get("SPARK_GRAFT_STRESS_ONLY"))
     new java.io.File(outDir).mkdirs()
     val spark = SparkSession.builder()
       .withExtensions(new graft.GraftExtensions)
@@ -762,46 +906,11 @@ object Stress {
       .config("spark.ui.enabled", "false")
       .appName("graft-stress").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val tap = new StageTap
+    spark.sparkContext.addSparkListener(tap)
 
-    val all: Seq[(String, (SparkSession, String) => DataFrame)] =
-      names.map(n => n -> SparkEntry.queries(n)) ++ Seq(
-        "stress_interval_overlap" -> (stressIntervalOverlap _),
-        "stress_knn_grid" -> (stressKnnGrid _),
-        "stress_lsh_multiprobe14" -> (stressLshMultiprobe _),
-        "stress_dedup_sized" -> (stressDedupSized _),
-        "stress_pq" -> (stressPq _),
-        "stress_hh_naive" -> (stressHhNaive _),
-        "stress_decon_big" -> (stressDeconBig _),
-        "stress_decon_big_bloom" -> (stressDeconBigBloom _),
-        "stress_fuzzy_unblocked" -> (stressFuzzyUnblocked _),
-        "stress_linkage_scaled" -> (stressLinkageScaled _),
-        "stress_ppjoin_tau06" -> (stressPpjoinTau06 _),
-        "stress_bfs_hops" -> (stressBfsHops _),
-        "stress_rendezvous_flat64" -> (stressRendezvousFlat64 _),
-        "stress_rendezvous_hier64" -> (stressRendezvousHier64 _),
-        "stress_rrf_arms" -> (stressRrfArms _),
-        "stress_rrf_fusion_only" -> (stressRrfFusionOnly _),
-        "stress_bm25_index_build" -> (stressBm25IndexBuild _),
-        "stress_bm25_query_only" -> (stressBm25QueryOnly _),
-        "stress_bm25_delta_update" -> (stressBm25DeltaUpdate _),
-        "stress_sparse_query_only" -> (stressSparseQueryOnly _),
-        "stress_curate_registry_build" -> (stressCurateRegistryBuild _),
-        "stress_curate_delta" -> (stressCurateDelta _),
-        "stress_curate_delta_persist" -> (stressCurateDeltaPersist _),
-        "stress_curate_segment_write" -> (stressCurateSegmentWrite _),
-        "stress_curate_registry_rewrite" -> (stressCurateRegistryRewrite _),
-        "stress_ivf_index_build" -> (stressIvfIndexBuild _),
-        "stress_hybrid_indexed" -> (stressHybridIndexed _),
-        "stress_bm25_segments_build8" -> (stressBm25SegmentsBuild(8) _),
-        "stress_bm25_segments_build32" -> (stressBm25SegmentsBuild(32) _),
-        "stress_bm25_query_seg8" -> (stressBm25QuerySeg(8) _),
-        "stress_bm25_query_seg32" -> (stressBm25QuerySeg(32) _),
-        "stress_bm25_compact32" -> (stressBm25Compact(32) _))
-    val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = all.filter { case (n, _) => only.forall(_.contains(n)) }
-
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val results = scala.collection.mutable.LinkedHashMap.empty[String, Option[Double]]
+    def planPath(name: String) = Paths.get(s"$outDir/$name.plan.txt")
     selected.foreach { case (name, fn) =>
       // free prior queries' localCheckpoint blocks (see Bench.scala —
       // unevictable blocks otherwise inflate later queries)
@@ -816,38 +925,56 @@ object Stress {
       System.gc()
       try {
         // 2 timed reps: rep1 includes scan-cache warmup, rep2 is the
-        // steady-state number; report the min. foreachPartition drives the
-        // DataFrame's OWN QueryExecution, so after the action its
-        // executedPlan is the AQE-final plan (a writer would execute a
+        // steady-state number; report the min. The action runs the
+        // DataFrame's OWN QueryExecution through toRdd, so afterwards its
+        // executedPlan is the AQE-final plan with populated metrics
+        // (Dataset.foreachPartition and a noop write each execute a
         // separate QueryExecution and leave this one isFinalPlan=false).
+        // foreach reads every InternalRow, so the result stage's operators
+        // run too; no Row conversion is timed.
+        var df: DataFrame = null
         val times = (1 to 2).map { _ =>
           // fn() runs INSIDE the timer: some pipelines (dedup clusters'
           // eager pair-table checkpoint, CC's size probe) do real work at
           // DataFrame-construction time, and timing only the final action
           // would under-report them
-          var df: DataFrame = null
           val t0 = System.nanoTime()
           Timebox.run(spark, name, Timebox.defaultSeconds) {
             df = fn(spark, sfDir)
-            df.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
+            df.queryExecution.toRdd.foreach(_ => ())
           }
-          val sec = (System.nanoTime() - t0) / 1e9
-          Files.writeString(Paths.get(s"$outDir/$name.plan.txt"),
-            df.queryExecution.executedPlan.toString)
-          sec
+          (System.nanoTime() - t0) / 1e9
         }
-        results(name) = times.min
+        val sb = new StringBuilder(
+          s"== $name  AQE-final operators (non-zero SQL metrics) ==\n")
+        walk(df.queryExecution.executedPlan, 0, sb)
+        sb.append(s"\n== $name  formatted plan (final, then initial: " +
+          "PushedFilters/ReadSchema) ==\n")
+        sb.append(df.queryExecution.explainString(FormattedMode))
+        // written now so a run killed mid-list keeps its plans; the stage
+        // table is appended once the session stops
+        Files.writeString(planPath(name), sb.result())
+        results(name) = Some(times.min)
         println(f"[stress] $name: ${times.map(t => f"$t%.1f").mkString(", ")} s")
       } catch {
-        case e: Throwable =>
-          results(name) = -1.0
+        case NonFatal(e) =>
+          results(name) = None
           println(s"[stress] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
-    val json = results.map { case (k, v) => s""""$k": $v""" }
-      .mkString(s"""{"sf_dir": "$sfDir", "queries": {""", ", ", "}}")
+    // stop() drains the listener bus, so the tap holds every stage of
+    // every query by now; append each query's stage table to its plan file
+    spark.stop()
+    val stages = tap.rows.asScala.toSeq.groupBy(_.group)
+    for ((name, Some(_)) <- results)
+      Files.writeString(planPath(name),
+        "\n" + stageTable(name, stages.getOrElse(name, Seq.empty)),
+        StandardOpenOption.APPEND)
+    val qs = results.map { case (k, v) => s""""$k": ${v.fold("null")(_.toString)}""" }
+    val errs = results.collect { case (k, None) => s""""$k"""" }
+    val json = qs.mkString(s"""{"sf_dir": "$sfDir", "queries": {""", ", ",
+      s"""}, "errors": ${errs.mkString("[", ", ", "]")}}""")
     Files.writeString(Paths.get(s"$outDir/stress_times.json"), json)
     println(json)
-    spark.stop()
   }
 }

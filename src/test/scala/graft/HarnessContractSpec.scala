@@ -58,4 +58,17 @@ class HarnessContractSpec extends AnyFunSuite {
     }
     assert(missing.isEmpty, s"oracles referencing no fixture table: $missing")
   }
+
+  test("Stress selection: default queries resolve, unknown ONLY names are rejected") {
+    // a renamed gate query must fail here, not at the start of a stress run
+    val unresolved = tools.Stress.names.filterNot(SparkEntry.queries.contains)
+    assert(unresolved.isEmpty, s"Stress default list names no SparkEntry query: $unresolved")
+    val all = tools.Stress.select(None).map(_._1)
+    assert(all.distinct == all && all.contains("stress_pq"))
+    assert(tools.Stress.select(Some("q_pq_topk, stress_pq")).map(_._1).toSet ==
+      Set("q_pq_topk", "stress_pq"))
+    val e = intercept[IllegalArgumentException](
+      tools.Stress.select(Some("stress_pq,q_nope")))
+    assert(e.getMessage.contains("q_nope") && !e.getMessage.contains("stress_pq"))
+  }
 }

@@ -60,6 +60,30 @@ class StreamingSpec extends SparkSpec {
     assert(out.head.createdAtMillis == 100L)
   }
 
+  test("same-millisecond events apply in lifecycle order, not alphabetically") {
+    val s = state(None)
+    val out = updateTaskState("t1", Iterator(
+      TaskEvent("t1", "rendering", "w1", 100L, null),
+      TaskEvent("t1", "completed", "w1", 100L, null),
+      TaskEvent("t1", "assigned", "w1", 100L, null),
+      TaskEvent("t1", "queued", null, 100L, null)), s).toSeq
+    assert(out.head.status == "completed")
+    assert(!s.exists) // terminal → state freed
+    val s2 = state(None)
+    val out2 = updateTaskState("t1", Iterator(
+      TaskEvent("t1", "assigned", "w1", 100L, null),
+      TaskEvent("t1", "queued", null, 100L, null)), s2).toSeq
+    assert(out2.head.status == "assigned" && s2.exists)
+    // documented trade-off: a retry landing in the failure's millisecond
+    // ranks below it, so the task ends requeued
+    val s3 = state(Some(out.head.copy(status = "rendering")))
+    val out3 = updateTaskState("t1", Iterator(
+      TaskEvent("t1", "failed", "w1", 300L, "err"),
+      TaskEvent("t1", "assigned", "w2", 300L, null),
+      TaskEvent("t1", "rendering", "w2", 300L, null)), s3).toSeq
+    assert(out3.head.status == "queued" && out3.head.attempts == 1 && s3.exists)
+  }
+
   test("worker heartbeat timeout emits dead-worker event") {
     val alive = TestGroupState.create[WorkerStatus](
       org.apache.spark.api.java.Optional.of(WorkerStatus("w1", alive = true, 500L)),
