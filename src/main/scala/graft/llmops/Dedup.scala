@@ -435,7 +435,7 @@ object Dedup {
       n: Int, threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val eligible = df.filter(size(split(col(textCol), " ")) >= n)
+    val eligible = df.filter(shingleEligible(col(textCol), n))
     val inst = withToks(eligible, textCol)
       .select(col(idCol).as("_id"),
         explode(array_distinct(shingleArray(col("_toks"), n))).as("shingle"))
@@ -539,38 +539,52 @@ object Dedup {
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, rowsPerBand: Int,
       threshold: Double): DataFrame = {
-    // docs shorter than the shingle size have empty shingle sets: they can
-    // never verify (inter = 0), but they would all share the identity
-    // signature and pile into ONE band bucket — k short docs expand
-    // k(k-1)/2 guaranteed-dead candidate pairs. Dropped before signing.
-    // The eligibility test is the CHEAP precondition on the token count,
-    // NOT `size(shingles) > 0`: a filter on the shingle column gets
-    // pushed below the projection with the whole shingle transform
-    // substituted inline (re-tokenizing per element reference inside the
-    // scan); `size(split(text)) >= n` is equivalent (the shingle set of
-    // an eligible doc is never empty) and pushes down as one split.
-    val eligible0 = df.filter(size(split(col(textCol), " ")) >= shingleSize)
-    // FanOut AFTER the eligibility filter (the filter stays pushed into
-    // the scan; fanning first would let it push through the exchange and
-    // re-run the split serially anyway): a corpus arriving as one small
-    // parquet file otherwise runs the whole shingle-explode + partial
-    // min-hash aggregation as ONE task (measured 0.8–2.0 s serial in
-    // q_dedup_cluster / q_leak_safe_split). All three `sets` consumers
-    // (signature chain + both verify sides) reuse the one exchange;
-    // no-op for corpora already wider than the session.
-    val eligible = graft.operators.FanOut(eligible0)
+    val (sets, sigs) = signEligible(df, idCol, textCol, shingleSize, numHashes)
+    verifyPairs(lshCandidates(sigs, idCol, numHashes, rowsPerBand),
+      sets, sets, idCol, "id_a", "id_b", threshold)
+  }
+
+  /** Docs shorter than `n` tokens have empty shingle sets: they never
+    * verify (inter = 0), yet would all share the identity signature and
+    * pile into ONE band bucket (k(k-1)/2 dead pairs), so they are dropped
+    * before signing. The token-count test, NOT `size(shingles) > 0`: a
+    * filter on the shingle column is pushed below the projection with
+    * the shingle transform inlined (re-tokenizing per element reference
+    * in the scan); this equivalent form pushes down as one split. */
+  private[llmops] def shingleEligible(text: Column, n: Int): Column =
+    size(split(text, " ")) >= n
+
+  /** The MinHash sign step: eligible docs → (shingle sets, signatures).
+    * FanOut AFTER the eligibility filter (fanning first lets the filter
+    * push through the exchange and re-run the split serially): a one-
+    * file corpus otherwise shingles and signs in ONE task (measured
+    * 0.8–2.0 s serial in q_dedup_cluster / q_leak_safe_split). Every
+    * consumer of the sets reuses the one exchange; no-op for corpora
+    * already wider than the session. */
+  private def signEligible(df: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int, numHashes: Int): (DataFrame, DataFrame) = {
+    val eligible = graft.operators.FanOut(
+      df.filter(shingleEligible(col(textCol), shingleSize)))
     val sets = shingleSets(eligible, idCol, textCol, shingleSize)
-    val sigs = minhashSignatureArray(sets, idCol, numHashes)
-    val cands = lshCandidates(sigs, idCol, numHashes, rowsPerBand)
-    // merge-hint both shingle sides: the two joins then require the SAME
-    // exchange — hashpartition(sets, id) — which canonicalizes equal and
-    // is planned once (ReusedExchange), so verification tokenizes the
-    // corpus ONCE, not once per side (and never broadcasts a corpus-
-    // sized relation, which is also the only viable shape at 100 TB).
-    val setsA = sets.select(col(idCol).as("id_a"), col("shingles").as("_sh_a"))
-    val setsB = sets.select(col(idCol).as("id_b"), col("shingles").as("_sh_b"))
-    cands.join(setsA.hint("merge"), Seq("id_a"))
-      .join(setsB.hint("merge"), Seq("id_b"))
+    (sets, minhashSignatureArray(sets, idCol, numHashes))
+  }
+
+  /** The MinHash verify step: attach each candidate side's shingle set
+    * (from `setsA`/`setsB`, keyed by `aCol`/`bCol`), score by per-pair
+    * `array_intersect`, keep Jaccard ≥ threshold. Output: (aCol, bCol,
+    * inter, sz_a, sz_b, jaccard). Both set joins are merge-hinted: with
+    * one sets subplan on both sides ([[minhashNearDups]]) they require
+    * the SAME hashpartition(sets, id) exchange, planned once
+    * (ReusedExchange), so the corpus is tokenized ONCE; and nothing
+    * corpus-sized ever broadcasts — the only viable shape at 100 TB. */
+  private def verifyPairs(cands: DataFrame, setsA: DataFrame,
+      setsB: DataFrame, idCol: String, aCol: String, bCol: String,
+      threshold: Double): DataFrame =
+    cands
+      .join(setsA.select(col(idCol).as(aCol), col("shingles").as("_sh_a"))
+        .hint("merge"), Seq(aCol))
+      .join(setsB.select(col(idCol).as(bCol), col("shingles").as("_sh_b"))
+        .hint("merge"), Seq(bCol))
       .withColumn("inter",
         size(array_intersect(col("_sh_a"), col("_sh_b"))).cast("long"))
       .withColumn("sz_a", size(col("_sh_a")).cast("long"))
@@ -578,8 +592,7 @@ object Dedup {
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "inter", "sz_a", "sz_b", "jaccard")
-  }
+      .select(aCol, bCol, "inter", "sz_a", "sz_b", "jaccard")
 
   /** [[minhashNearDups]] with the banding sized to the corpus by
     * [[minhashParamsForCorpus]] — the entry point for corpora with real
@@ -609,9 +622,8 @@ object Dedup {
     * search is one (band, band_sig) equi-join between the two band
     * tables (each numBands rows/doc); the registry-side degenerate-
     * bucket guard is a window count on the SAME key, so it shares the
-    * join's exchange. Verification is the [[minhashNearDups]] chain —
-    * merge-hinted set joins, per-pair array_intersect — over the batch
-    * sets and the candidate-pruned registry sets. At 100 TB of history
+    * join's exchange. Verification is [[minhashNearDups]]' step over the
+    * batch sets and the candidate-pruned registry sets. At 100 TB of history
     * + a day's crawl: every registry-sized relation touched is either
     * the stored signature table (numHashes longs/doc) or the pruned
     * candidate fetch.
@@ -624,15 +636,8 @@ object Dedup {
       registryText: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int, rowsPerBand: Int, threshold: Double,
       maxBucket: Int = 100000): DataFrame = {
-    // same eligibility precondition (and same pushdown-safe form) as
-    // minhashNearDups: short docs have empty shingle sets and pile into
-    // one dead band bucket. Same FanOut-after-the-filter device too: the
-    // batch-side shingle/sign passes (sets for verify + the signature
-    // chain) otherwise run serial on a one-file batch.
-    val eligible = graft.operators.FanOut(
-      batch.filter(size(split(col(textCol), " ")) >= shingleSize))
-    val sets = shingleSets(eligible, idCol, textCol, shingleSize)
-    val sigs = minhashSignatureArray(sets, idCol, numHashes)
+    val (sets, sigs) = signEligible(batch, idCol, textCol, shingleSize,
+      numHashes)
     val bb = bandRows(sigs, idCol, numHashes, rowsPerBand)
       .select(col("band"), col("band_sig"), col(idCol).as("batch_id"))
     val rb = bandRows(registrySigs, idCol, numHashes, rowsPerBand)
@@ -655,20 +660,9 @@ object Dedup {
     // duplicate right-side keys (incrementalDedup's documented rule)
     val regCand = registryText.join(
       cands.select(col("reg_id").as(idCol)), Seq(idCol), "left_semi")
-    val regSets = shingleSets(regCand, idCol, textCol, shingleSize)
-    cands
-      .join(sets.select(col(idCol).as("batch_id"), col("shingles").as("_sh_a"))
-        .hint("merge"), Seq("batch_id"))
-      .join(regSets.select(col(idCol).as("reg_id"), col("shingles").as("_sh_b"))
-        .hint("merge"), Seq("reg_id"))
-      .withColumn("inter",
-        size(array_intersect(col("_sh_a"), col("_sh_b"))).cast("long"))
-      .withColumn("sz_a", size(col("_sh_a")).cast("long"))
-      .withColumn("sz_b", size(col("_sh_b")).cast("long"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("batch_id", "reg_id", "inter", "sz_a", "sz_b", "jaccard")
+    verifyPairs(cands, sets,
+      shingleSets(regCand, idCol, textCol, shingleSize),
+      idCol, "batch_id", "reg_id", threshold)
   }
 
   /** Dedup-cluster canonicalization — the endgame of any near-dup

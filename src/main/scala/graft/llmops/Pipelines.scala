@@ -30,6 +30,10 @@ import org.apache.spark.sql.functions._
   * is computed ONCE and reused by the gate (stage 1) and the fill
   * (stage 6), so the two stages can't disagree.
   *
+  * Stages 1–4 are one chain: [[curate]] and [[curateFilterStages]] run
+  * it with different pair searches (sized vs explicit banding);
+  * [[curateIngest]] shares its gate and near-dup drop.
+  *
   * Scale: every stage is one of the audited operators; nothing here adds
   * a shuffle beyond theirs. Stage outputs that feed multiple consumers
   * (the exact-dedup survivors feed decontaminate's shingle pass and its
@@ -50,30 +54,13 @@ object Pipelines {
       shingleSize: Int, nearDupThreshold: Double,
       decontamN: Int, weights: Map[String, Long], budgetTokens: Long,
       numShards: Int, shardSeed: String): DataFrame = {
-    // 1. quality gate (score kept for stage 6)
-    val scored = docs.select(col(idCol), col(domainCol), col(textCol),
-        TextStats.tokenCount(col(textCol)).cast("long").as("n_tokens"),
-        TextStats.qualityScore(col(textCol), stopwords).as("quality"))
-      .filter(col("quality") >= minQuality)
-    // 2. exact dedup (checkpointed: feeds decontaminate's shingle pass
-    // AND its anti-join, each replaying the gate + dedup window otherwise)
-    val exact = Dedup.exactDedup(scored, idCol,
-        TextStats.fingerprint(col(textCol)))
-      .drop("dedup_key", "group_size")
-      .localCheckpoint()
-    // 3. decontamination — before near-dup dedup, so a clean near-dup of
-    // a contaminated canonical survives (see the ordering rationale).
-    // Checkpointed: the sizing count, the shingle/sign chain, and the
-    // canonical anti-join all read it.
-    val clean = Dedup.decontaminate(exact, idCol, textCol,
-        benchmark, benchTextCol, decontamN)
-      .localCheckpoint()
-    // 4. near-dup dedup: drop every doc with a near-dup of smaller id
-    // (lshCandidates emits each pair once, id_a < id_b)
-    val pairs = Dedup.minhashNearDupsSized(clean, idCol, textCol,
-      shingleSize, nearDupThreshold)
-    val nearDeduped = clean
-      .join(pairs.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
+    // stages 1–4 (checkpointed: the near-dup survivors feed both the
+    // quota plan and the fill)
+    val nearDeduped = filterChain(docs.select(col(idCol), col(domainCol),
+        col(textCol)), idCol, textCol, benchmark, benchTextCol, stopwords,
+        minQuality, decontamN)(
+        Dedup.minhashNearDupsSized(_, idCol, textCol, shingleSize,
+          nearDupThreshold))
       .localCheckpoint()
     // 5 + 6. water-filled quotas over the SURVIVING corpus, then the
     // quality-ordered fill (recipePlan emits the quota as "assigned")
@@ -145,8 +132,10 @@ object Pipelines {
     * smaller-id near-dup exists in the union's stage-4 population, and
     * that population splits exactly into the registry's stored
     * signatures (all smaller ids) plus the batch's own (the within-batch
-    * pair search). Every stage is one of the independently-oracled
-    * operators; nothing here adds a shuffle beyond theirs.
+    * pair search). Stages 1, 3 and the stage-4 drop are the same code
+    * [[curateFilterStages]] runs, not parallel copies, so only stage 2
+    * and the split pair search carry the argument. Nothing here adds a
+    * shuffle beyond the operators'.
     *
     * Banding is EXPLICIT (numHashes/rowsPerBand), not corpus-sized: the
     * candidate S-curve must be the same function at every ingest or
@@ -186,17 +175,14 @@ object Pipelines {
       shingleSize: Int, numHashes: Int, rowsPerBand: Int,
       nearDupThreshold: Double, decontamN: Int,
       registry: CurationRegistry): (DataFrame, CurationRegistry) = {
-    // (FanOut(batch) before the quality gate was measured and REJECTED
+    SegmentIO.requireIntegralIds(batch, idCol, "curateIngest")
+    // 1. quality gate (FanOut(batch) before it was measured and REJECTED
     // here, r12: wall-flat — the quality filter predicate-pushes through
     // the fan-out exchange, re-running the tokenizer serially in the scan
     // task anyway, and the fanned side re-evaluates it — ~16× executor
     // CPU for nothing. The serial gate is ~0.5 s on the fixture and
     // already parallel for any real multi-file crawl batch.)
-    // 1. quality gate (all input columns pass through)
-    val scored = batch
-      .withColumn("n_tokens", TextStats.tokenCount(col(textCol)).cast("long"))
-      .withColumn("quality", TextStats.qualityScore(col(textCol), stopwords))
-      .filter(col("quality") >= minQuality)
+    val scored = qualityGate(batch, textCol, stopwords, minQuality)
     // 2. exact dedup vs the key registry, then within the batch.
     // Checkpointed (the curate() rationale): decontaminate reads it for
     // both its shingle pass and its anti-join.
@@ -219,14 +205,11 @@ object Pipelines {
     val regPairs = Dedup.minhashIncrementalNearDups(clean, registry.sigs,
       registry.texts, idCol, textCol, shingleSize, numHashes, rowsPerBand,
       nearDupThreshold)
-    val dropIds = batchPairs.select(col("id_b").as(idCol))
-      .unionAll(regPairs.select(col("batch_id").as(idCol)))
-      .distinct()
-    val kept = clean.join(dropIds, Seq(idCol), "left_anti")
+    val kept = dropNearDups(clean, idCol, batchPairs.select(col("id_b").as(idCol))
+      .unionAll(regPairs.select(col("batch_id").as(idCol))))
     // registry growth: every stage-4 PARTICIPANT's signature and text
     // (kept or near-dup-dropped — see CurationRegistry), new keys.
-    val eligible = clean.filter(
-      size(split(col(textCol), " ")) >= shingleSize)
+    val eligible = clean.filter(Dedup.shingleEligible(col(textCol), shingleSize))
     val deltaSigs = Dedup.minhashSignatureArray(
       Dedup.shingleSets(eligible, idCol, textCol, shingleSize),
       idCol, numHashes)
@@ -299,31 +282,14 @@ object Pipelines {
 
   /** Open a segmented curation registry: per-table unions across the
     * segment dirs (no shuffle — unions of scans). The open REJECTS
-    * overlapping ingest-id watermarks: a retried ingest whose segment
-    * write already succeeded would otherwise duplicate every stored
+    * overlapping ingest-id watermarks ([[SegmentIO]]'s open guard): a
+    * double-ingested segment would otherwise duplicate every stored
     * signature and text row SILENTLY — each batch doc then near-dup-
-    * matches the duplicate registry rows, and candidate volume doubles.
-    * Disjoint [min_id, max_id] ranges are sufficient under the
-    * monotonic-ingest-id contract curateIncremental's equivalence
-    * already assumes; a sig-less segment (every doc shorter than the
-    * shingle size) has null marks and cannot overlap. */
+    * matches the duplicate registry rows, and candidate volume doubles. */
   def readRegistrySegments(spark: org.apache.spark.sql.SparkSession,
       dirs: Seq[String]): CurationRegistry = {
-    require(dirs.nonEmpty,
-      "readRegistrySegments needs at least one segment dir")
-    val marks = dirs.flatMap { d =>
-      val r = spark.read.parquet(s"$d/stats")
-        .select(col("min_id").cast("long"), col("max_id").cast("long"))
-        .head()
-      if (r.isNullAt(0)) None else Some((d, r.getLong(0), r.getLong(1)))
-    }.sortBy(_._2)
-    marks.sliding(2).foreach {
-      case Seq((d1, _, hi1), (d2, lo2, _)) if lo2 <= hi1 =>
-        sys.error(s"readRegistrySegments: ingest-id watermarks overlap " +
-          s"between $d1 (max_id $hi1) and $d2 (min_id $lo2) - same batch " +
-          "ingested twice, or non-monotonic ingest ids")
-      case _ => ()
-    }
+    SegmentIO.requireDisjointWatermarks(spark, dirs, "stats",
+      "readRegistrySegments")
     dirs.map(readRegistry(spark, _)).reduce(mergeRegistry)
   }
 
@@ -334,38 +300,65 @@ object Pipelines {
     * trade [[SparseSim.compactSegments]] documents with measurements. */
   def compactRegistrySegments(spark: org.apache.spark.sql.SparkSession,
       dirs: Seq[String], outDir: String): Unit = {
-    require(!dirs.map(SegmentIO.canonicalPath)
-        .contains(SegmentIO.canonicalPath(outDir)),
-      "compactRegistrySegments: outDir must be a NEW dir, not an input " +
-        "segment")
+    SegmentIO.requireNewDir(dirs, outDir, "compactRegistrySegments")
     writeRegistry(readRegistrySegments(spark, dirs), outDir)
   }
 
-  /** [[curate]]'s stages 1–4 with EXPLICIT banding — the full-corpus
+  /** [[curate]]'s stages 1–4 — the same chain — with EXPLICIT banding
+    * (at the sized banding the two keep the same docs): the full-corpus
     * form [[curateIncremental]] is equivalent to (restricted to the
-    * batch ids), kept as a public entry point both for that equivalence
-    * check and for one-shot corpora where the sized banding of
-    * [[curate]] isn't wanted. Returns the surviving docs with
-    * `n_tokens`/`quality` appended. */
+    * batch ids), public for that equivalence check and for one-shot
+    * corpora where the sized banding isn't wanted. Returns the surviving
+    * docs with `n_tokens`/`quality` appended. */
   def curateFilterStages(docs: DataFrame, idCol: String, textCol: String,
       benchmark: DataFrame, benchTextCol: String,
       stopwords: Seq[String], minQuality: Double,
       shingleSize: Int, numHashes: Int, rowsPerBand: Int,
-      nearDupThreshold: Double, decontamN: Int): DataFrame = {
-    val scored = docs
+      nearDupThreshold: Double, decontamN: Int): DataFrame =
+    filterChain(docs, idCol, textCol, benchmark, benchTextCol, stopwords,
+        minQuality, decontamN)(
+      Dedup.minhashNearDups(_, idCol, textCol, shingleSize, numHashes,
+        rowsPerBand, nearDupThreshold))
+
+  /** Stage 1, the quality gate: appends `n_tokens` and `quality` (the
+    * score stage 6's fill reuses, so gate and fill can't disagree) to
+    * every input column and keeps `quality >= minQuality`. */
+  private def qualityGate(docs: DataFrame, textCol: String,
+      stopwords: Seq[String], minQuality: Double): DataFrame =
+    docs
       .withColumn("n_tokens", TextStats.tokenCount(col(textCol)).cast("long"))
       .withColumn("quality", TextStats.qualityScore(col(textCol), stopwords))
       .filter(col("quality") >= minQuality)
+
+  /** Stages 1–4 over a full corpus, the one chain [[curate]] and
+    * [[curateFilterStages]] run; `nearDupPairs` maps the decontaminated
+    * corpus to its (id_a < id_b) near-dup pairs. */
+  private def filterChain(docs: DataFrame, idCol: String, textCol: String,
+      benchmark: DataFrame, benchTextCol: String, stopwords: Seq[String],
+      minQuality: Double, decontamN: Int)(
+      nearDupPairs: DataFrame => DataFrame): DataFrame = {
+    // 1. quality gate
+    val scored = qualityGate(docs, textCol, stopwords, minQuality)
+    // 2. exact dedup (checkpointed: feeds decontaminate's shingle pass
+    // AND its anti-join, each replaying the gate + dedup window otherwise)
     val exact = Dedup.exactDedup(scored, idCol,
         TextStats.fingerprint(col(textCol)))
       .drop("dedup_key", "group_size")
       .localCheckpoint()
+    // 3. decontamination — before near-dup dedup, so a clean near-dup of
+    // a contaminated canonical survives (see the ordering rationale).
+    // Checkpointed: the pair search (its sizing count, sign chain and
+    // verify) and the near-dup drop all read it.
     val clean = Dedup.decontaminate(exact, idCol, textCol,
         benchmark, benchTextCol, decontamN)
       .localCheckpoint()
-    val pairs = Dedup.minhashNearDups(clean, idCol, textCol,
-      shingleSize, numHashes, rowsPerBand, nearDupThreshold)
-    clean.join(pairs.select(col("id_b").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
+    // 4. near-dup dedup: drop every doc with a near-dup of smaller id
+    dropNearDups(clean, idCol, nearDupPairs(clean).select(col("id_b").as(idCol)))
   }
+
+  /** Stage 4's drop: `clean` minus the ids in `dropIds` (one column named
+    * `idCol`; the larger id of each near-dup pair). */
+  private def dropNearDups(clean: DataFrame, idCol: String,
+      dropIds: DataFrame): DataFrame =
+    clean.join(dropIds.distinct(), Seq(idCol), "left_anti")
 }

@@ -1,6 +1,8 @@
 package graft.llmops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 
 /** Atomic segment publication for the registry family
   * ([[SparseSim.Bm25Index]], [[Similarity.IvfIndex]],
@@ -15,6 +17,11 @@ import org.apache.spark.sql.SparkSession
   * The rename is atomic on local filesystems and HDFS; on object stores
   * it degrades to copy, where the temp dir still confines a partial
   * write to a non-served path.
+  *
+  * The family's guards live here too, one copy each: integral ids at
+  * build ([[requireIntegralIds]]), disjoint id watermarks at open
+  * ([[requireDisjointWatermarks]]), and a compaction target that is not
+  * an input ([[requireNewDir]]).
   */
 private[graft] object SegmentIO {
 
@@ -62,6 +69,49 @@ private[graft] object SegmentIO {
       catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
     }
   }
+
+  /** Builder guard: segment ids must be integral (the builders
+    * normalize them to long). The watermarks order ids as longs — over
+    * strings min/max compares text ("10" < "5") and stores the wrong
+    * marks, and the open guard then passes overlapping segments. */
+  def requireIntegralIds(df: DataFrame, idCol: String, caller: String): Unit = {
+    val idType = df.schema(idCol).dataType
+    require(Seq[DataType](LongType, IntegerType, ShortType, ByteType)
+        .contains(idType),
+      s"$caller: id column '$idCol' must be integral (got $idType)" +
+        " - the segment watermark convention orders ids as longs")
+  }
+
+  /** Open guard: REJECT segments whose [min_id, max_id] watermarks (the
+    * one-row `statsTable` of each dir) overlap — a retried ingest whose
+    * write already succeeded would otherwise duplicate its rows SILENTLY.
+    * Sufficient under monotonic ingest ids; interleaved-but-disjoint
+    * schemes must open segments one by one. An empty segment has null
+    * marks; older builds stored int marks, hence the long cast. */
+  def requireDisjointWatermarks(spark: SparkSession, dirs: Seq[String],
+      statsTable: String, caller: String): Unit = {
+    require(dirs.nonEmpty, s"$caller needs at least one segment dir")
+    val marks = dirs.flatMap { d =>
+      val r = spark.read.parquet(s"$d/$statsTable")
+        .select(col("min_id").cast("long"), col("max_id").cast("long"))
+        .head()
+      if (r.isNullAt(0)) None else Some((d, r.getLong(0), r.getLong(1)))
+    }.sortBy(_._2)
+    marks.sliding(2).foreach {
+      case Seq((d1, _, hi1), (d2, lo2, _)) if lo2 <= hi1 =>
+        sys.error(s"$caller: id watermarks overlap between $d1 " +
+          s"(max_id $hi1) and $d2 (min_id $lo2) - same batch ingested " +
+          "twice, or non-monotonic ingest ids")
+      case _ => ()
+    }
+  }
+
+  /** Compaction guard: `outDir` must not alias an input segment (by
+    * [[canonicalPath]]: a trailing slash, './seg' or a symlink too) —
+    * the lazy input scan would read the dir the write truncates. */
+  def requireNewDir(dirs: Seq[String], outDir: String, caller: String): Unit =
+    require(!dirs.map(canonicalPath).contains(canonicalPath(outDir)),
+      s"$caller: outDir must be a NEW dir, not an input segment")
 
   /** Best-effort canonical form for self-overwrite guards: resolves
     * '.'/'..'/symlinks for local paths, falls back to the raw string for

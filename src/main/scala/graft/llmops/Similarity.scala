@@ -382,17 +382,11 @@ object Similarity {
       assigned: DataFrame)  // (cand_id, vec, norm, cell_id)
 
   /** Index a corpus (also the delta builder) against FROZEN centroids.
-    * Vector ids must be integral (normalized to long) — the stored-
-    * segment watermark guard ([[ivfReadSegments]]) orders them, the
-    * same convention as [[SparseSim.buildIndex]]. */
+    * Vector ids must be integral ([[SegmentIO.requireIntegralIds]]) and
+    * are normalized to long, the [[SparseSim.buildIndex]] convention. */
   def ivfBuildIndex(candidates: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, dim: Int): IvfIndex = {
-    import org.apache.spark.sql.types._
-    val idType = candidates.schema(idCol).dataType
-    require(Seq[DataType](LongType, IntegerType, ShortType, ByteType)
-        .contains(idType),
-      s"ivfBuildIndex: id column '$idCol' must be integral (got $idType)" +
-        " - the segment watermark convention orders ids as longs")
+    SegmentIO.requireIntegralIds(candidates, idCol, "ivfBuildIndex")
     IvfIndex(centroids,
       ivfAssignments(candidates, idCol, vecCol, centroids, dim)
         .select(col(idCol).cast("long").as("cand_id"), col("_v").as("vec"),
@@ -504,38 +498,21 @@ object Similarity {
     *    against different centroid generations, their cell ids don't
     *    mean the same geometry and a merged open would silently
     *    mis-place every vector of the minority generation;
-    *  - overlapping vector-id watermarks — a retried ingest whose write
-    *    already succeeded would double-count its vectors (each appears
-    *    twice in every probed cell, k slots burn on duplicates).
-    *
-    * Disjoint [min_id, max_id] ranges are sufficient under monotonic
-    * ingest ids; interleaved-but-disjoint schemes must open segments
-    * individually and merge in memory. */
+    *  - overlapping vector-id watermarks
+    *    ([[SegmentIO.requireDisjointWatermarks]]) — a double-ingested
+    *    segment would double-count its vectors (each appears twice in
+    *    every probed cell, k slots burn on duplicates). */
   def ivfReadSegments(spark: org.apache.spark.sql.SparkSession,
       dirs: Seq[String]): IvfIndex = {
-    require(dirs.nonEmpty, "ivfReadSegments needs at least one segment dir")
-    val metas = dirs.map { d =>
-      val r = spark.read.parquet(s"$d/stats")
-        .select(col("centroid_fp"), col("min_id").cast("long"),
-          col("max_id").cast("long")).head()
-      (d, r.getString(0),
-        if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2))))
-    }
-    metas.foreach { case (d, fp, _) =>
-      require(fp == metas.head._2,
+    val fps = dirs.map(d =>
+      d -> spark.read.parquet(s"$d/stats").select("centroid_fp").head().getString(0))
+    fps.foreach { case (d, fp) =>
+      require(fp == fps.head._2,
         s"ivfReadSegments: centroid generations differ between " +
-          s"${metas.head._1} (${metas.head._2}) and $d ($fp) - segments " +
+          s"${fps.head._1} (${fps.head._2}) and $d ($fp) - segments " +
           "from different generations cannot serve one probe geometry")
     }
-    val marks = metas.collect { case (d, _, Some((lo, hi))) => (d, lo, hi) }
-      .sortBy(_._2)
-    marks.sliding(2).foreach {
-      case Seq((d1, _, hi1), (d2, lo2, _)) if lo2 <= hi1 =>
-        sys.error(s"ivfReadSegments: vector-id watermarks overlap between " +
-          s"$d1 (max_id $hi1) and $d2 (min_id $lo2) - same batch " +
-          "ingested twice, or non-monotonic ingest ids")
-      case _ => ()
-    }
+    SegmentIO.requireDisjointWatermarks(spark, dirs, "stats", "ivfReadSegments")
     // fingerprints verified equal above, so the fold's own guard passes
     // on the first segment's centroid table without re-collecting per
     // pair (centroids is the same object through every merge)

@@ -240,19 +240,12 @@ object SparseSim {
   /** Index a corpus from scratch (also the delta builder: index the new
     * batch alone, then [[mergeIndex]] it into the registry).
     *
-    * Doc ids must be an integral type — the watermark convention
-    * ([min_id, max_id] ordering, [[readSegments]]' overlap guard) is
-    * meaningless over strings, and the guard reads the stored marks as
-    * longs; ids are normalized to LONG here so an int-id corpus can't
-    * surface later as an opaque ClassCastException at segment open. */
+    * Doc ids must be an integral type ([[SegmentIO.requireIntegralIds]]);
+    * they are normalized to LONG here so an int-id corpus can't surface
+    * later as an opaque ClassCastException at segment open. */
   def buildIndex(corpus: DataFrame, idCol: String, textCol: String,
       ngram: Int = 1): Bm25Index = {
-    import org.apache.spark.sql.types._
-    val idType = corpus.schema(idCol).dataType
-    require(Seq[DataType](LongType, IntegerType, ShortType, ByteType)
-        .contains(idType),
-      s"buildIndex: doc-id column '$idCol' must be integral (got $idType)" +
-        " - the segment watermark convention orders ids as longs")
+    SegmentIO.requireIntegralIds(corpus, idCol, "buildIndex")
     // FanOut before the two tokenizer passes (postings + lens): see
     // bm25Retrieve — the fixture's one-file corpus otherwise serializes
     // the whole explode/tf pipeline onto a single task; no-op at scale.
@@ -477,32 +470,14 @@ object SparseSim {
     * term-df/corpus-stats re-merge through a vocabulary-sized (never
     * corpus-sized) aggregation at open time.
     *
-    * The open REJECTS overlapping doc-id watermarks: a retried ingest
-    * whose segment write already succeeded would otherwise double-count
-    * df/n_docs and duplicate postings SILENTLY (scores inflate, nothing
-    * errors). Disjoint [min_id, max_id] ranges are sufficient under the
-    * monotonic-ingest convention; interleaved-but-disjoint id schemes
-    * must open segments individually and merge in memory. */
+    * The open REJECTS overlapping doc-id watermarks
+    * ([[SegmentIO.requireDisjointWatermarks]]): a double-ingested segment
+    * would otherwise double-count df/n_docs and duplicate postings
+    * SILENTLY (scores inflate, nothing errors). */
   def readSegments(spark: org.apache.spark.sql.SparkSession,
       dirs: Seq[String]): Bm25Index = {
-    require(dirs.nonEmpty, "readSegments needs at least one segment dir")
-    val marks = dirs.flatMap { d =>
-      // explicit long cast: buildIndex normalizes ids to long and
-      // writeIndex pins the stored marks, but a segment written by an
-      // older build may still carry int marks — read both shapes
-      val r = spark.read.parquet(s"$d/corpus_stats")
-        .select(col("min_id").cast("long"), col("max_id").cast("long"))
-        .head()
-      // an empty segment (0 docs) has null watermarks and can't overlap
-      if (r.isNullAt(0)) None else Some((d, r.getLong(0), r.getLong(1)))
-    }.sortBy(_._2)
-    marks.sliding(2).foreach {
-      case Seq((d1, _, hi1), (d2, lo2, _)) if lo2 <= hi1 =>
-        sys.error(s"readSegments: doc-id watermarks overlap between " +
-          s"$d1 (max_id $hi1) and $d2 (min_id $lo2) - same batch " +
-          "ingested twice, or non-monotonic ingest ids")
-      case _ => ()
-    }
+    SegmentIO.requireDisjointWatermarks(spark, dirs, "corpus_stats",
+      "readSegments")
     dirs.map(readIndex(spark, _)).reduce(mergeIndex)
   }
 
@@ -516,12 +491,7 @@ object SparseSim {
     * stats are pure functions of them. */
   def compactSegments(spark: org.apache.spark.sql.SparkSession,
       dirs: Seq[String], outDir: String): Unit = {
-    // canonical-path compare: a trailing slash, './seg', or symlink alias
-    // of an input would pass a literal string check and the lazy
-    // postings scan would then read the segment the write is truncating
-    require(!dirs.map(SegmentIO.canonicalPath)
-        .contains(SegmentIO.canonicalPath(outDir)),
-      "compactSegments: outDir must be a NEW dir, not an input segment")
+    SegmentIO.requireNewDir(dirs, outDir, "compactSegments")
     writeIndex(readSegments(spark, dirs), outDir)
   }
 }

@@ -1783,6 +1783,70 @@ class LlmOpsSpec extends SparkSpec {
       reg2.texts.select("doc_id").as[Long].collect().toSet)
   }
 
+  test("curate keeps exactly curateFilterStages' survivors at the sized banding") {
+    // seeded corpus: random 25-34 token docs from a wide vocabulary, plus
+    // planted exact clones, near-dups (last token replaced) and
+    // contaminated copies of them, plus stopword-only docs the gate drops
+    val rnd = new scala.util.Random(11)
+    def words(k: Int) = Seq.fill(k)(s"w${rnd.nextInt(500)}")
+    val base = (1 to 120).map(i =>
+      (i.toLong, Seq("x", "y", "z")(rnd.nextInt(3)), words(25 + rnd.nextInt(10))))
+    val leaks = Seq.fill(3)(Seq.fill(6)(s"b${rnd.nextInt(1000)}"))
+    val planted = (121 to 150).map { i =>
+      val (_, dom, src) = base(rnd.nextInt(base.size))
+      (i.toLong, dom, i % 3 match {
+        case 0 => src
+        case 1 => src.updated(src.size - 1, s"fresh$i")
+        case _ => src.take(10) ++ leaks(i % leaks.size) ++ src.drop(10)
+      })
+    }
+    val lowQuality = (151 to 155).map(i => (i.toLong, "x", Seq.fill(30)("the")))
+    val all = base ++ planted ++ lowQuality
+    val docs = all.map { case (i, d, t) => (i, d, t.mkString(" ")) }
+      .toDF("doc_id", "domain", "text")
+    val bench = leaks.map(_.mkString(" ")).toDF("text")
+    val stop = Seq("the", "a")
+    // every domain weighted and a budget >= the total token count: the
+    // planning stages keep every stage-4 survivor
+    val budget = all.map(_._3.size.toLong).sum
+    val curated = Pipelines.curate(docs, "doc_id", "text", "domain", bench,
+        "text", stop, minQuality = 0.5, shingleSize = 3,
+        nearDupThreshold = 0.7, decontamN = 5,
+        weights = Map("x" -> 1L, "y" -> 1L, "z" -> 1L), budgetTokens = budget,
+        numShards = 3, shardSeed = "s")
+      .select("doc_id").as[Long].collect()
+    // the banding minhashNearDupsSized picks for curate's stage-4 input
+    val clean = Dedup.decontaminate(
+      Dedup.exactDedup(docs.filter(TextStats.qualityScore(col("text"), stop) >= 0.5),
+        "doc_id", TextStats.fingerprint(col("text"))).drop("dedup_key", "group_size"),
+      "doc_id", "text", bench, "text", 5)
+    val n = clean.count()
+    val (h, r) = Dedup.minhashParamsForCorpus(n, 0.7)
+    val filtered = Pipelines.curateFilterStages(docs, "doc_id", "text", bench,
+        "text", stop, minQuality = 0.5, shingleSize = 3, numHashes = h,
+        rowsPerBand = r, nearDupThreshold = 0.7, decontamN = 5)
+      .select("doc_id").as[Long].collect()
+    assert(curated.length == curated.distinct.length)
+    assert(curated.toSet == filtered.toSet)
+    // every stage fired: the gate, exact dedup and decontamination cut the
+    // 155 docs to n, and near-dup dedup cut n further
+    assert(n < 155 - lowQuality.size - 10)
+    assert(filtered.length < n)
+  }
+
+  test("curateIngest rejects non-integral ids (the registry watermarks order ids as longs)") {
+    val batch = Seq(("5", "alpha beta gamma delta epsilon zeta eta theta"),
+      ("10", "one two three four five six seven eight nine ten"))
+      .toDF("doc_id", "text")
+    intercept[IllegalArgumentException] {
+      Pipelines.curateIngest(batch, "doc_id", "text", Seq("leak").toDF("text"),
+        "text", Seq("the"), minQuality = 0.0, shingleSize = 3,
+        numHashes = 16, rowsPerBand = 4, nearDupThreshold = 0.5,
+        decontamN = 3,
+        registry = Pipelines.CurationRegistry.empty(spark, "doc_id", "text"))
+    }
+  }
+
   test("shard manifest flips on any edit, reorder, or loss") {
     val base = TextStats.trainingShards(
       (0 until 40).map(i => (i.toLong, s"doc number $i body", 3L))
