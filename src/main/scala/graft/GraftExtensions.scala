@@ -14,7 +14,10 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
   *
   * Required, not optional: every native kernel the library calls
   * (`graft_dot`, `graft_dist_sq`, `graft_minhash_sig`, `graft_simhash64`,
-  * `graft_jl_project`, `graft_pq_code`, the text kernels and
+  * `graft_jl_project`, `graft_pq_code`; the text kernels
+  * `graft_quality_score`, `graft_ngrams`, `graft_shingle_minhash`,
+  * `graft_jaro_winkler`, `graft_rolling_min_hash`, `graft_token_diversity`,
+  * `graft_repetition_stats`, `graft_cdc_boundaries`; and
   * `graft_bloom_contains`) resolves only through these registrations, and
   * none has a fallback. On a session built without the extension,
   * analysis fails naming the missing `graft_*` function.

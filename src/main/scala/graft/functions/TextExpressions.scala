@@ -2,9 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Rolling polynomial hash (Rabin–Karp) document fingerprint: the MINIMUM
@@ -397,6 +399,210 @@ case class CdcBoundaries(child: Expression, w: Int, base: Long, mask: Long)
   override def prettyName: String = "graft_cdc_boundaries"
 }
 
+/** The per-document text work of the curation chain, one compiled pass
+  * each: the quality score, the word n-grams, and the n-gram → MinHash
+  * base hashes. All three tokenize with Spark's own `split(text, " ", -1)`
+  * (the [[RepetitionKernel]] convention), so tokens — leading, trailing
+  * and doubled spaces included — are exactly the composed forms' tokens.
+  *
+  * The composed forms they replace ran per document as chains of
+  * interpreted expressions: the quality score split the text once per
+  * feature and ran one `array_remove` per stopword, and the sign step
+  * built every shingle as a string (`transform` + `concat_ws`) before an
+  * md5 → hex → `conv` → mod lambda per shingle. Results are bit-identical
+  * (KernelEquivalenceSpec runs both under codegen and interpreted
+  * evaluation against the composed references). */
+object CurationKernels {
+  private val Space = UTF8String.fromString(" ")
+  private val EmptyArray = new GenericArrayData(Array.empty[Any])
+  private val EmptyLongs = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
+  private val Md5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  /** min(1, n/100)·0.4 + (1 − sw/n)·0.3 + d/n·0.3 over the n tokens, sw
+    * of them stopword occurrences and d distinct — evaluated in exactly
+    * that double order (the composed `TextStats` form's). n ≥ 1 always:
+    * `split` yields [""] for "". */
+  def qualityScore(s: UTF8String, stopwords: java.util.Set[UTF8String]): Double = {
+    val toks = s.split(Space, -1)
+    val n = toks.length
+    val seen = new java.util.HashSet[UTF8String](n * 2)
+    var sw = 0
+    var i = 0
+    while (i < n) {
+      if (stopwords.contains(toks(i))) sw += 1
+      seen.add(toks(i))
+      i += 1
+    }
+    math.min(1.0, n.toDouble / 100.0) * 0.4 +
+      (1.0 - sw.toDouble / n) * 0.3 +
+      seen.size.toDouble / n * 0.3
+  }
+
+  /** The word n-grams of `s` in order, duplicates kept, each its tokens
+    * joined by one space. Null text, or fewer than `n` tokens, gives no
+    * n-grams. */
+  def ngrams(s: UTF8String, n: Int): ArrayData = {
+    if (s == null) return EmptyArray
+    val toks = s.split(Space, -1).map(_.getBytes)
+    val m = toks.length - n + 1
+    if (m <= 0) return EmptyArray
+    val out = new Array[Any](m)
+    var i = 0
+    while (i < m) {
+      var len = n - 1
+      var k = 0
+      while (k < n) { len += toks(i + k).length; k += 1 }
+      val buf = new Array[Byte](len)
+      var off = 0
+      k = 0
+      while (k < n) {
+        if (k > 0) { buf(off) = ' '; off += 1 }
+        System.arraycopy(toks(i + k), 0, buf, off, toks(i + k).length)
+        off += toks(i + k).length
+        k += 1
+      }
+      out(i) = UTF8String.fromBytes(buf)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** The MinHash base hash of each word n-gram of `s` (in order,
+    * duplicates kept): the first 60 bits of the n-gram's md5 digest,
+    * mod p — the value `conv(substring(md5(g), 1, 15), 16, 10) % p`
+    * computes from the hex string. Null or short text gives none. */
+  def ngramBases(s: UTF8String, n: Int, p: Long): ArrayData = {
+    if (s == null) return EmptyLongs
+    val toks = s.split(Space, -1).map(_.getBytes)
+    val m = toks.length - n + 1
+    if (m <= 0) return EmptyLongs
+    val md = Md5.get()
+    val out = new Array[Long](m)
+    var i = 0
+    while (i < m) {
+      var k = 0
+      while (k < n) {
+        if (k > 0) md.update(' '.toByte)
+        md.update(toks(i + k))
+        k += 1
+      }
+      val d = md.digest()
+      var x = 0L
+      var b = 0
+      while (b < 8) { x = (x << 8) | (d(b) & 0xffL); b += 1 }
+      out(i) = (x >>> 4) % p
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
+
+/** `graft_quality_score(text, stopwords)` → double via
+  * [[CurationKernels.qualityScore]]; the stopword list is a literal,
+  * baked into the node as a hash set. Null text → NULL. */
+case class QualityScore(child: Expression, stopwords: Seq[String])
+    extends UnaryExpression with ImplicitCastInputTypes {
+  require(!stopwords.contains(null), "stopwords must not contain NULL")
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+
+  @transient private lazy val stopSet: java.util.Set[UTF8String] = {
+    val set = new java.util.HashSet[UTF8String]()
+    stopwords.foreach(w => set.add(UTF8String.fromString(w)))
+    set
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    CurationKernels.qualityScore(input.asInstanceOf[UTF8String], stopSet)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val set = ctx.addReferenceObj("stopwords", stopSet, "java.util.Set")
+    defineCodeGen(ctx, ev, s =>
+      s"graft.functions.CurationKernels.qualityScore($s, $set)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+  override def prettyName: String = "graft_quality_score"
+}
+
+/** `graft_ngrams(text, n)` → array<string> via [[CurationKernels.ngrams]].
+  * Never NULL: null or short text gives an empty array, as the composed
+  * `when(size(toks) >= n, ...).otherwise(array())` form did. */
+case class Ngrams(child: Expression, n: Int)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  require(n >= 1, s"n-gram size must be >= 1, got $n")
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any =
+    CurationKernels.ngrams(child.eval(input).asInstanceOf[UTF8String], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+      |  graft.functions.CurationKernels.ngrams(${c.isNull} ? null : ${c.value}, $n);
+    """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+  override def prettyName: String = "graft_ngrams"
+}
+
+/** The MinHash base hash of each word n-gram of the text, as an
+  * `array<long>` ([[CurationKernels.ngramBases]]); never NULL. The input
+  * half of [[ShingleMinHash]]. */
+case class NgramBases(child: Expression, n: Int, prime: Long)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  require(n >= 1, s"n-gram size must be >= 1, got $n")
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = CurationKernels.ngramBases(
+    child.eval(input).asInstanceOf[UTF8String], n, prime)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+      |  graft.functions.CurationKernels.ngramBases(
+      |    ${c.isNull} ? null : ${c.value}, $n, ${prime}L);
+    """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+  override def prettyName: String = "graft_ngram_bases"
+}
+
+/** `graft_shingle_minhash(text, n, as, bs, p)` → the MinHash signature of
+  * the text's word n-grams, replaced at optimization by
+  * [[MinHashSig]] over [[NgramBases]]: component j is the min over n-gram
+  * base hashes h of (h·a_j + b_j) mod p. No distinct: the minimum is the
+  * same with or without duplicate n-grams. Null or short text has no
+  * n-grams and gets the identity signature (p in every slot), as the
+  * composed shingle-set → `graft_minhash_sig` chain gives; the result is
+  * never NULL. */
+case class ShingleMinHash(child: Expression, n: Int, as: Seq[Long],
+    bs: Seq[Long], prime: Long)
+    extends UnaryExpression with RuntimeReplaceable with ImplicitCastInputTypes {
+  override lazy val replacement: Expression =
+    MinHashSig(NgramBases(child, n, prime), as, bs, prime)
+  override def inputTypes = Seq(StringType)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+  override def prettyName: String = "graft_shingle_minhash"
+}
+
 object TextExpressions {
   val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("graft_jaro_winkler"),
@@ -439,6 +645,35 @@ object TextExpressions {
           "graft_cdc_boundaries window, base, and mask must be literal")
         CdcBoundaries(es(0), es(1).eval().toString.toInt,
           es(2).eval().toString.toLong, es(3).eval().toString.toLong)
+      }),
+    (FunctionIdentifier("graft_quality_score"),
+      new ExpressionInfo(classOf[QualityScore].getName, "graft_quality_score"),
+      (es: Seq[Expression]) => {
+        require(es.length == 2,
+          s"graft_quality_score(text, stopwords) takes 2 arguments, got ${es.length}")
+        require(es(1).foldable, "graft_quality_score stopwords must be literal")
+        QualityScore(es(0), es(1).eval().asInstanceOf[ArrayData]
+          .toArray[UTF8String](StringType).toSeq.map(w => if (w == null) null else w.toString))
+      }),
+    (FunctionIdentifier("graft_ngrams"),
+      new ExpressionInfo(classOf[Ngrams].getName, "graft_ngrams"),
+      (es: Seq[Expression]) => {
+        require(es.length == 2,
+          s"graft_ngrams(text, n) takes 2 arguments, got ${es.length}")
+        require(es(1).foldable, "graft_ngrams n must be literal")
+        Ngrams(es(0), es(1).eval().toString.toInt)
+      }),
+    (FunctionIdentifier("graft_shingle_minhash"),
+      new ExpressionInfo(classOf[ShingleMinHash].getName, "graft_shingle_minhash"),
+      (es: Seq[Expression]) => {
+        require(es.length == 5,
+          s"graft_shingle_minhash(text, n, as, bs, p) takes 5 arguments, got ${es.length}")
+        require(es.drop(1).forall(_.foldable),
+          "graft_shingle_minhash n, coefficients and prime must be literal")
+        def longs(e: Expression): Seq[Long] =
+          e.eval().asInstanceOf[ArrayData].toLongArray().toSeq
+        ShingleMinHash(es(0), es(1).eval().toString.toInt, longs(es(2)),
+          longs(es(3)), es(4).eval().toString.toLong)
       }))
 
   /** Requires a session built with [[graft.GraftExtensions]]. */
@@ -472,6 +707,27 @@ object TextExpressions {
       mask: Long): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{call_function, lit}
     call_function("graft_cdc_boundaries", text, lit(w), lit(base), lit(mask))
+  }
+
+  /** Requires a session built with [[graft.GraftExtensions]]. */
+  def qualityScore(text: org.apache.spark.sql.Column,
+      stopwords: Seq[String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{call_function, lit}
+    call_function("graft_quality_score", text, lit(stopwords.toArray))
+  }
+
+  /** Requires a session built with [[graft.GraftExtensions]]. */
+  def ngrams(text: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{call_function, lit}
+    call_function("graft_ngrams", text, lit(n))
+  }
+
+  /** Requires a session built with [[graft.GraftExtensions]]. */
+  def shingleMinhash(text: org.apache.spark.sql.Column, n: Int, as: Seq[Long],
+      bs: Seq[Long], prime: Long): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{call_function, lit}
+    call_function("graft_shingle_minhash", text, lit(n), lit(as.toArray),
+      lit(bs.toArray), lit(prime))
   }
 
   /** The identical per-window polynomial-and-mask cut rule as ANSI SQL

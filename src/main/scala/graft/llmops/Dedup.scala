@@ -16,55 +16,34 @@ import org.apache.spark.sql.functions._
   *    candidates only.
   *  - All hashes are md5-based (standard, engine-portable), so every stage
   *    is oracle-checkable; no reliance on engine-private hash functions.
-  *    PRODUCTION SWITCH: at 100 TB the crypto hash is measurable CPU —
-  *    swap [[minhashBase]] (and [[tokenHashHalves]]) to
-  *    `xxhash64(s) & ((1L << 60) - 1)` behind the same interface for a
-  *    several-× cheaper signature stage; every downstream stage (affine
-  *    permutations, banding, verification) is hash-family-agnostic. The
-  *    md5 family stays the default because cross-engine verification
-  *    (the DuckDB oracle) is part of this library's contract.
+  *    The MinHash base hash is computed natively: the
+  *    `graft_shingle_minhash` kernel
+  *    ([[graft.functions.CurationKernels.ngramBases]]) takes the first 60
+  *    bits of each n-gram's md5 digest mod p, the value
+  *    [[minhashBase]]'s hex-string chain computes. PRODUCTION SWITCH: at
+  *    100 TB the crypto hash is measurable CPU — swap that base hash (and
+  *    [[tokenHashHalves]]) to a 64-bit xxhash truncated to 60 bits behind
+  *    the same interface; every downstream stage (affine permutations,
+  *    banding, verification) is hash-family-agnostic. The md5 family
+  *    stays the default because cross-engine verification (the DuckDB
+  *    oracle) is part of this library's contract.
   */
 object Dedup {
 
-  /** Word n-gram shingles over an ALREADY-MATERIALIZED token array
-    * column. `toks` must be a plain attribute, not an inline
-    * `split(...)` — an inline expression is substituted into the lambda
-    * body and re-tokenizes the whole document once per shingle (measured
-    * ~4× the whole stage). Each shingle is built by direct element
-    * access + concat, no intermediate slice array. */
-  private def shingleArray(toks: Column, n: Int): Column =
-    // guarded: sequence(0, size-n) with size < n would generate a
-    // DESCENDING sequence down to -1 and evaluate element_at(toks, 0),
-    // which throws. Short documents get an EMPTY shingle set — matching
-    // the oracle convention (DuckDB range(1, len-1) is empty for them).
-    when(size(toks) >= n,
-      transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", (0 until n).map(k => element_at(toks, i + k + 1)): _*)))
-      .otherwise(array().cast("array<string>"))
-
-  private def withToks(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("_toks", split(col(textCol), " "))
-
-  /** All word n-gram INSTANCES of a text column, non-distinct — the
-    * occurrence stream (for frequency statistics like
+  /** All word n-gram INSTANCES of a text column, non-distinct, in order —
+    * the occurrence stream (for frequency statistics like
     * [[HeavyHitters.heavyHitters]]), as opposed to the per-document SET
-    * forms below (for containment/Jaccard semantics).
-    *
-    * The token array is bound through a one-element transform lambda so
-    * `split` runs ONCE per row. Substituting `split(text)` directly into
-    * [[shingleArray]] re-inlines it at every `element_at` — three
-    * re-tokenizations of the whole document per gram, which measured
-    * ~10× on the whole stage at the 64× stress fixture (same
-    * common-subexpression hazard as the PQ quantize re-inlining; the
-    * column-bound `_toks` of [[withToks]] is the other safe form). */
+    * forms below (for containment/Jaccard semantics). One native
+    * `graft_ngrams` pass per row: null text, or fewer than `n` tokens,
+    * gives an empty array (the oracle convention — DuckDB
+    * range(1, len-1) is empty for them). Requires a
+    * [[graft.GraftExtensions]] session. */
   def ngramArray(text: Column, n: Int): Column =
-    element_at(transform(array(split(text, " ")), toks => shingleArray(toks, n)), 1)
+    graft.functions.TextExpressions.ngrams(text, n)
 
   /** Word n-gram shingle set: one (id, shingle) row per distinct shingle. */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    withToks(df, textCol)
-      .select(col(idCol), explode(shingleArray(col("_toks"), n)).as("shingle"))
+    df.select(col(idCol), explode(ngramArray(col(textCol), n)).as("shingle"))
       .distinct()
 
   /** Per-document distinct shingle set as an array column — built entirely
@@ -73,8 +52,7 @@ object Dedup {
     * document length; use the row form ([[shingles]]) if documents are
     * unbounded. */
   def shingleSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    withToks(df, textCol)
-      .select(col(idCol), array_distinct(shingleArray(col("_toks"), n)).as("shingles"))
+    df.select(col(idCol), array_distinct(ngramArray(col(textCol), n)).as("shingles"))
 
   /** Incremental batch dedup against a fingerprint registry: the daily
     * ingest pattern — drop new documents whose dedup key already exists
@@ -358,9 +336,8 @@ object Dedup {
     // inside this plan at sf0.1). No-op for inputs already wider than
     // the session, so a corpus-sized table never pays the exchange.
     val df = graft.operators.FanOut(df0)
-    def inst = withToks(df, textCol)
-      .select(col(idCol),
-        explode(array_distinct(shingleArray(col("_toks"), n))).as("shingle"))
+    def inst = df.select(col(idCol),
+      explode(array_distinct(ngramArray(col(textCol), n))).as("shingle"))
     val dfc = inst.groupBy("shingle").agg(count(lit(1)).as("_dfc"))
       .filter(col("_dfc") >= 2 && col("_dfc") <= maxDf)
       .select("shingle")
@@ -436,9 +413,8 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val eligible = df.filter(shingleEligible(col(textCol), n))
-    val inst = withToks(eligible, textCol)
-      .select(col(idCol).as("_id"),
-        explode(array_distinct(shingleArray(col("_toks"), n))).as("shingle"))
+    val inst = eligible.select(col(idCol).as("_id"),
+      explode(array_distinct(ngramArray(col(textCol), n))).as("shingle"))
     val dfc = inst.groupBy("shingle").agg(count(lit(1)).as("_dfc"))
     // per-doc ascending (df, shingle) order, sorted and sliced map-side
     // after one id-keyed groupBy; prefix keeps the rarest
@@ -518,13 +494,14 @@ object Dedup {
   /** Full MinHash+LSH near-dup pipeline: shingle → sign → band → candidate
     * → verify ≥ threshold.
     *
-    * Layout: shingle sets stay as per-doc arrays through the signature
-    * stage, so signing is a map-side projection with no shuffle; the only
-    * shuffles are the band-bucket groupBy (numBands rows/doc) and the two
-    * verification joins that attach each candidate id's shingle array.
-    * Verification is a per-pair `array_intersect` over those arrays —
-    * values identical to the explode-join [[jaccardForPairs]] form (both
-    * sides are distinct shingle sets), with no per-pair groupBy.
+    * Layout: signing is a map-side projection straight from the text
+    * (the native `graft_shingle_minhash` kernel) with no shuffle; shingle
+    * sets stay per-doc arrays for verification. The only shuffles are the
+    * band-bucket groupBy (numBands rows/doc) and the two verification
+    * joins that attach each candidate id's shingle array. Verification is
+    * a per-pair `array_intersect` over those arrays — values identical to
+    * the explode-join [[jaccardForPairs]] form (both sides are distinct
+    * shingle sets), with no per-pair groupBy.
     *
     * EVERY subtree is consumed exactly once, so nothing is persisted,
     * checkpointed, collected, or broadcast by hand: the corpus-wide
@@ -540,33 +517,44 @@ object Dedup {
       shingleSize: Int, numHashes: Int, rowsPerBand: Int,
       threshold: Double): DataFrame = {
     val (sets, sigs) = signEligible(df, idCol, textCol, shingleSize, numHashes)
+    signedNearDups(sets, sigs, idCol, numHashes, rowsPerBand, threshold)
+  }
+
+  /** [[minhashNearDups]] over an already-signed corpus ([[signEligible]]'s
+    * output), for callers that share one signing among several searches. */
+  private[llmops] def signedNearDups(sets: DataFrame, sigs: DataFrame,
+      idCol: String, numHashes: Int, rowsPerBand: Int,
+      threshold: Double): DataFrame =
     verifyPairs(lshCandidates(sigs, idCol, numHashes, rowsPerBand),
       sets, sets, idCol, "id_a", "id_b", threshold)
-  }
 
   /** Docs shorter than `n` tokens have empty shingle sets: they never
     * verify (inter = 0), yet would all share the identity signature and
     * pile into ONE band bucket (k(k-1)/2 dead pairs), so they are dropped
-    * before signing. The token-count test, NOT `size(shingles) > 0`: a
-    * filter on the shingle column is pushed below the projection with
-    * the shingle transform inlined (re-tokenizing per element reference
-    * in the scan); this equivalent form pushes down as one split. */
+    * before signing. A token count, not `size(shingles) > 0`: it decides
+    * eligibility without building the n-grams. */
   private[llmops] def shingleEligible(text: Column, n: Int): Column =
     size(split(text, " ")) >= n
 
-  /** The MinHash sign step: eligible docs → (shingle sets, signatures).
-    * FanOut AFTER the eligibility filter (fanning first lets the filter
-    * push through the exchange and re-run the split serially): a one-
-    * file corpus otherwise shingles and signs in ONE task (measured
-    * 0.8–2.0 s serial in q_dedup_cluster / q_leak_safe_split). Every
-    * consumer of the sets reuses the one exchange; no-op for corpora
-    * already wider than the session. */
-  private def signEligible(df: DataFrame, idCol: String, textCol: String,
+  /** The MinHash sign step: eligible docs → (shingle sets, signatures),
+    * the signatures straight from the text by the native
+    * `graft_shingle_minhash` kernel (bit-identical to
+    * [[minhashSignatureArray]] over [[shingleSets]]). FanOut AFTER the
+    * eligibility filter (fanning first lets the filter push through the
+    * exchange and re-run the split serially): a one-file corpus
+    * otherwise shingles and signs in ONE task (measured 0.8–2.0 s serial
+    * in q_dedup_cluster / q_leak_safe_split). Sets and signatures read
+    * the one exchange; no-op for corpora already wider than the
+    * session. Requires a [[graft.GraftExtensions]] session. */
+  private[llmops] def signEligible(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, numHashes: Int): (DataFrame, DataFrame) = {
     val eligible = graft.operators.FanOut(
       df.filter(shingleEligible(col(textCol), shingleSize)))
-    val sets = shingleSets(eligible, idCol, textCol, shingleSize)
-    (sets, minhashSignatureArray(sets, idCol, numHashes))
+    val sigs = eligible.select(col(idCol),
+      graft.functions.TextExpressions.shingleMinhash(col(textCol), shingleSize,
+        (0 until numHashes).map(minhashA), (0 until numHashes).map(minhashB),
+        MinhashPrime).as("sig"))
+    (shingleSets(eligible, idCol, textCol, shingleSize), sigs)
   }
 
   /** The MinHash verify step: attach each candidate side's shingle set
@@ -638,6 +626,17 @@ object Dedup {
       maxBucket: Int = 100000): DataFrame = {
     val (sets, sigs) = signEligible(batch, idCol, textCol, shingleSize,
       numHashes)
+    signedIncrementalNearDups(sets, sigs, registrySigs, registryText, idCol,
+      textCol, shingleSize, numHashes, rowsPerBand, threshold, maxBucket)
+  }
+
+  /** [[minhashIncrementalNearDups]] over an already-signed batch
+    * ([[signEligible]]'s output). */
+  private[llmops] def signedIncrementalNearDups(sets: DataFrame,
+      sigs: DataFrame, registrySigs: DataFrame, registryText: DataFrame,
+      idCol: String, textCol: String, shingleSize: Int, numHashes: Int,
+      rowsPerBand: Int, threshold: Double,
+      maxBucket: Int = 100000): DataFrame = {
     val bb = bandRows(sigs, idCol, numHashes, rowsPerBand)
       .select(col("band"), col("band_sig"), col(idCol).as("batch_id"))
     val rb = bandRows(registrySigs, idCol, numHashes, rowsPerBand)
@@ -872,8 +871,7 @@ object Dedup {
     // instance and the rank shuffle is the operator's dominant exchange
     // (md5 keys are the library-wide engine-portable convention, see
     // [[TextStats.fingerprint]]; same digest in the DuckDB oracle).
-    val inst = withToks(d, textCol)
-      .select(col(idCol), posexplode(shingleArray(col("_toks"), L)))
+    val inst = d.select(col(idCol), posexplode(ngramArray(col(textCol), L)))
       .toDF(idCol, "pos", "sh")
       .select(col(idCol), col("pos"), md5(col("sh")).as("sh"))
     val dup = inst
@@ -895,7 +893,7 @@ object Dedup {
       .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("_ivs"))
     val covered = (i: Column, iv: Column) =>
       i >= iv.getField("s") && i <= iv.getField("e")
-    withToks(d, textCol).join(ivs, Seq(idCol), "left")
+    d.withColumn("_toks", split(col(textCol), " ")).join(ivs, Seq(idCol), "left")
       .withColumn("_ivs", coalesce(col("_ivs"),
         array().cast("array<struct<s:int,e:int>>")))
       .select(col(idCol),
@@ -930,23 +928,25 @@ object Dedup {
     * tokenize + explode + distinct; every caller joins against it. */
   private def benchShingleSet(benchmark: DataFrame, benchTextCol: String,
       n: Int): DataFrame =
-    withToks(benchmark, benchTextCol)
-      .select(explode(shingleArray(col("_toks"), n)).as("shingle")).distinct()
+    benchmark.select(explode(ngramArray(col(benchTextCol), n)).as("shingle"))
+      .distinct()
 
   /** Benchmark decontamination: drop corpus documents that share ANY word
     * n-gram with the benchmark set (the standard test-set-leakage guard in
-    * training-data pipelines). One distinct-shingle explosion per side, an
-    * equi-join on the shingle, and a left-anti join back to the corpus —
-    * the benchmark side is tiny, so its shingle set broadcasts and the
-    * corpus is scanned once. Returns the clean corpus unchanged in schema.
+    * training-data pipelines). The benchmark side is tiny, so its distinct
+    * shingle set broadcasts; the corpus's n-gram instances probe it
+    * map-side with NO distinct (the semi-join and the anti-join back to
+    * the corpus both ignore duplicates — a distinct would only add a
+    * shuffle stage), so the corpus is scanned once. Returns the clean
+    * corpus unchanged in schema.
     */
   def decontaminate(corpus: DataFrame, idCol: String, textCol: String,
       benchmark: DataFrame, benchTextCol: String, n: Int): DataFrame = {
-    val corpusShingles = shingles(corpus, idCol, textCol, n)
     val benchShingles = benchShingleSet(benchmark, benchTextCol, n)
-    val contaminated = corpusShingles
+    val contaminated = corpus
+      .select(col(idCol), explode(ngramArray(col(textCol), n)).as("shingle"))
       .join(broadcast(benchShingles), Seq("shingle"), "left_semi")
-      .select(idCol).distinct()
+      .select(idCol)
     corpus.join(contaminated, Seq(idCol), "left_anti")
   }
 

@@ -192,29 +192,32 @@ object Pipelines {
     val deltaKeys = exact.select(col("dedup_key"))
     val exactDocs = exact.drop("dedup_key", "group_size")
     // 3. decontamination (static benchmark; per-doc, so registry-free).
-    // Checkpointed: feeds the within-batch pair search, the cross-
-    // registry pair search, the signature build, and the final anti-join.
+    // Checkpointed: feeds the sign step, both pair searches' verify
+    // sets, the registry texts, and the final anti-join.
     val clean = Dedup.decontaminate(exactDocs, idCol, textCol,
         benchmark, benchTextCol, decontamN)
       .localCheckpoint()
+    // 4. sign the batch ONCE (checkpointed): both pair searches band it
+    // and it is the registry's signature delta — every stage-4
+    // PARTICIPANT's signature, kept or near-dup-dropped (see
+    // CurationRegistry).
+    val (sets, signed) = Dedup.signEligible(clean, idCol, textCol,
+      shingleSize, numHashes)
+    val sigs = signed.localCheckpoint()
     // 4a. near-dups WITHIN the batch (id_a < id_b → id_b drops)…
-    val batchPairs = Dedup.minhashNearDups(clean, idCol, textCol,
-      shingleSize, numHashes, rowsPerBand, nearDupThreshold)
+    val batchPairs = Dedup.signedNearDups(sets, sigs, idCol, numHashes,
+      rowsPerBand, nearDupThreshold)
     // 4b. …and vs the REGISTRY's stored signatures (registry ids are all
     // smaller under monotonic ingest, so any hit drops the batch doc)
-    val regPairs = Dedup.minhashIncrementalNearDups(clean, registry.sigs,
+    val regPairs = Dedup.signedIncrementalNearDups(sets, sigs, registry.sigs,
       registry.texts, idCol, textCol, shingleSize, numHashes, rowsPerBand,
       nearDupThreshold)
     val kept = dropNearDups(clean, idCol, batchPairs.select(col("id_b").as(idCol))
       .unionAll(regPairs.select(col("batch_id").as(idCol))))
-    // registry growth: every stage-4 PARTICIPANT's signature and text
-    // (kept or near-dup-dropped — see CurationRegistry), new keys.
-    val eligible = clean.filter(Dedup.shingleEligible(col(textCol), shingleSize))
-    val deltaSigs = Dedup.minhashSignatureArray(
-      Dedup.shingleSets(eligible, idCol, textCol, shingleSize),
-      idCol, numHashes)
-    val deltaTexts = eligible.select(col(idCol), col(textCol))
-    (kept, CurationRegistry(deltaKeys, deltaSigs, deltaTexts))
+    // registry growth: the participants' signatures and texts, new keys
+    val deltaTexts = clean.filter(Dedup.shingleEligible(col(textCol), shingleSize))
+      .select(col(idCol), col(textCol))
+    (kept, CurationRegistry(deltaKeys, sigs, deltaTexts))
   }
 
   /** Union a registry delta (one ingest's contributions, as returned by
@@ -237,8 +240,11 @@ object Pipelines {
     * registry through here is compaction, legal at compaction's full-
     * rewrite cost (see [[compactRegistrySegments]]). Publishes
     * atomically (temp dir + rename, [[SegmentIO.publish]]). */
-  def writeRegistry(reg: CurationRegistry, dir: String): Unit =
+  def writeRegistry(reg: CurationRegistry, dir: String): Unit = {
+    // the stats watermarks order ids as longs (SegmentIO's rule)
+    SegmentIO.requireIntegralIds(reg.sigs, reg.sigs.columns.head, "writeRegistry")
     SegmentIO.publish(reg.keys.sparkSession, dir)(writeRegistryTables(reg, _))
+  }
 
   private def writeRegistryTables(reg: CurationRegistry, dir: String): Unit = {
     // the three tables are mutually independent writes into the publish
@@ -340,10 +346,14 @@ object Pipelines {
     // 1. quality gate
     val scored = qualityGate(docs, textCol, stopwords, minQuality)
     // 2. exact dedup (checkpointed: feeds decontaminate's shingle pass
-    // AND its anti-join, each replaying the gate + dedup window otherwise)
-    val exact = Dedup.exactDedup(scored, idCol,
+    // AND its anti-join, each replaying the gate + dedup window otherwise).
+    // FanOut before the checkpoint: AQE coalesces the dedup window's
+    // small shuffle into one partition and the checkpoint freezes that
+    // layout, so every decontamination stage downstream would run as ONE
+    // task; no-op for corpora already wider than the session.
+    val exact = graft.operators.FanOut(Dedup.exactDedup(scored, idCol,
         TextStats.fingerprint(col(textCol)))
-      .drop("dedup_key", "group_size")
+      .drop("dedup_key", "group_size"))
       .localCheckpoint()
     // 3. decontamination — before near-dup dedup, so a clean near-dup of
     // a contaminated canonical survives (see the ordering rationale).

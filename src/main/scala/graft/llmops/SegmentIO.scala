@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * write to a non-served path.
   *
   * The family's guards live here too, one copy each: integral ids at
-  * build ([[requireIntegralIds]]), disjoint id watermarks at open
+  * build and write ([[requireIntegralIds]]), disjoint id watermarks at open
   * ([[requireDisjointWatermarks]]), and a compaction target that is not
   * an input ([[requireNewDir]]).
   */

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * scoring, language-ID heuristic, canonical fingerprinting (builder
   * prompt "text analysis" extensions; operates on the `documents` table).
   *
-  * Everything is built from codegen'd built-ins over the token array — one
-  * narrow projection per document, no shuffle, no UDF. At 100 TB these are
+  * Everything is built from codegen'd built-ins over the token array, or
+  * from the native `graft_*` text kernels — one narrow projection per
+  * document, no shuffle, no UDF. At 100 TB these are
   * pure map-side operators that scale linearly with input splits.
   */
 object TextStats {
@@ -49,12 +50,13 @@ object TextStats {
     size(array_distinct(tokens(text))).cast("double") / size(tokens(text))
 
   /** Composite quality score ∈ [0,1]:
-    * length (cap 100 tokens) 40% + non-stopword share 30% + uniqueness 30%.
-    */
+    * length (cap 100 tokens) 40% + non-stopword share ([[stopwordRatio]])
+    * 30% + uniqueness ([[uniqueTokenRatio]]) 30%, in one tokenize-once
+    * pass of the native `graft_quality_score` kernel
+    * ([[graft.functions.CurationKernels.qualityScore]]). Null text → NULL.
+    * Requires a [[graft.GraftExtensions]] session. */
   def qualityScore(text: Column, stopwords: Seq[String]): Column =
-    least(lit(1.0), tokenCount(text).cast("double") / 100.0) * 0.4 +
-      (lit(1.0) - stopwordRatio(text, stopwords)) * 0.3 +
-      uniqueTokenRatio(text) * 0.3
+    graft.functions.TextExpressions.qualityScore(text, stopwords)
 
   def qualityBucket(score: Column): Column =
     when(score >= 0.7, "high").when(score >= 0.5, "medium").otherwise("low")

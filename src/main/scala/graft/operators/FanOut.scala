@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Parallelism floor for pairwise (nested-loop / theta-join) operators.
   *
@@ -29,20 +31,36 @@ object FanOut {
     * (Long.MaxValue) — i.e. "unknown", not "huge". Treating that as
     * already-wide would skip the fan-out exactly when it knows nothing
     * (e.g. an RDD-backed input that really is 1 partition), so unknown
-    * stats fall back to the partition-count probe. */
+    * stats fall back to the partition-count probe.
+    *
+    * A checkpoint (or any RDD-backed frame) seen through projections and
+    * filters has its width at hand — the RDD's partition count, no
+    * planning needed — and that decides: a small checkpoint already laid
+    * out across the session is not re-spread (a byte estimate would
+    * round-robin it again, sort included). */
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
-    val maxPartitionBytes = org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    val defaultSize = BigInt(org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(spark.conf.get(
-        "spark.sql.defaultSizeInBytes", Long.MaxValue.toString)))
-    val estBytes = df.queryExecution.analyzed.stats.sizeInBytes
-    if (estBytes >= defaultSize) {
-      // stats unknown — pay the physical probe rather than guess serial
-      if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-    } else if (estBytes >= BigInt(target) * maxPartitionBytes) df
-    else df.repartition(target)
+    val wide = rddWidth(df.queryExecution.analyzed) match {
+      case Some(w) => w >= target
+      case None =>
+        val maxPartitionBytes = org.apache.spark.network.util.JavaUtils
+          .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
+        val defaultSize = BigInt(org.apache.spark.network.util.JavaUtils
+          .byteStringAsBytes(spark.conf.get(
+            "spark.sql.defaultSizeInBytes", Long.MaxValue.toString)))
+        val estBytes = df.queryExecution.analyzed.stats.sizeInBytes
+        // stats unknown — pay the physical probe rather than guess serial
+        if (estBytes >= defaultSize) df.rdd.getNumPartitions >= target
+        else estBytes >= BigInt(target) * maxPartitionBytes
+    }
+    if (wide) df else df.repartition(target)
+  }
+
+  private def rddWidth(plan: LogicalPlan): Option[Int] = plan match {
+    case r: LogicalRDD => Some(r.rdd.getNumPartitions)
+    case Project(_, child) => rddWidth(child)
+    case Filter(_, child) => rddWidth(child)
+    case _ => None
   }
 }

@@ -1847,6 +1847,21 @@ class LlmOpsSpec extends SparkSpec {
     }
   }
 
+  test("writeRegistry rejects a hand-built registry with string ids") {
+    // the stats watermarks are min/max over the stored id column: over
+    // strings they order as text ("10" < "9") and the segmented open's
+    // overlap guard would then pass double-ingested segments
+    val reg = Pipelines.CurationRegistry(Seq("k").toDF("dedup_key"),
+      Seq(("9", Seq(1L, 2L)), ("10", Seq(3L, 4L))).toDF("doc_id", "sig"),
+      Seq(("9", "nine"), ("10", "ten")).toDF("doc_id", "text"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-reg").toString
+    val e = intercept[IllegalArgumentException] {
+      Pipelines.writeRegistry(reg, s"$dir/reg")
+    }
+    assert(e.getMessage.contains("writeRegistry"), e.getMessage)
+    assert(!new java.io.File(s"$dir/reg").exists())
+  }
+
   test("shard manifest flips on any edit, reorder, or loss") {
     val base = TextStats.trainingShards(
       (0 until 40).map(i => (i.toLong, s"doc number $i body", 3L))

@@ -278,6 +278,63 @@ class PlanAuditSpec extends SparkSpec {
     assert(fin.contains("ReusedExchange"), fin)
   }
 
+  test("plan: curate runs its text work on native kernels; decontamination spans every core") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.llmops.Pipelines
+    // curate checkpoints stages 2, 3 and 4, so the final plan hides them
+    // behind Scan ExistingRDD: audit every query the call executes
+    val runs = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = runs.add(f -> qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("lang").as("domain"), col("text"))
+    val bench = docs.orderBy("doc_id").limit(3).select("text")
+    spark.listenerManager.register(listener)
+    try {
+      val out = Pipelines.curate(docs, "doc_id", "text", "domain", bench, "text",
+        Seq("the", "a"), minQuality = 0.4, shingleSize = 3, nearDupThreshold = 0.7,
+        decontamN = 8, weights = Map("en" -> 1L), budgetTokens = 1000000L,
+        numShards = 2, shardSeed = "s")
+      out.collect()
+      // listener events arrive in order on the bus: the final collect's
+      // event means every checkpoint before it has been delivered too
+      val deadline = System.nanoTime() + 30000000000L
+      while (!runs.toArray.exists(_.asInstanceOf[(String, QueryExecution)]._1 == "collect") &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val qes = runs.toArray.toSeq.map(_.asInstanceOf[(String, QueryExecution)])
+    val analyzed = qes.map(_._2.analyzed.toString).mkString("\n")
+    Seq("graft_quality_score", "graft_ngrams", "graft_shingle_minhash")
+      .foreach(k => assert(analyzed.contains(k), s"$k missing:\n$analyzed"))
+    // the quality gate and the sign step run no interpreted text chain
+    val textWork = analyzed.split("\n").filter(l =>
+      l.contains("graft_quality_score") || l.contains("graft_shingle_minhash"))
+    assert(textWork.nonEmpty)
+    for (l <- textWork; bad <- Seq("md5(", "conv(", "array_remove(", "lambdafunction("))
+      assert(!l.contains(bad), s"$bad in: $l")
+    // stage 3's output (the second of curate's checkpoints: exact dedup,
+    // then decontamination) must not be frozen into one partition
+    val checkpoints = qes.filter(_._1 == "localCheckpoint")
+    assert(checkpoints.size >= 2, qes.map(_._1))
+    val decontaminated = checkpoints(1)._2.executedPlan.execute().getNumPartitions
+    assert(decontaminated >= spark.sparkContext.defaultParallelism,
+      s"decontaminated corpus has $decontaminated partition(s)")
+  }
+
+  test("FanOut reads a checkpoint's width: spread ones pass through, narrow ones fan out") {
+    import graft.operators.FanOut
+    val target = spark.sparkContext.defaultParallelism
+    // a small checkpoint already laid out across the session: a byte
+    // estimate alone would round-robin it again
+    val spread = spark.range(0, 1000, 1, target).toDF("id").localCheckpoint()
+    assert(!plan(FanOut(spread.filter(col("id") > 3))).contains("RoundRobinPartitioning"))
+    val narrow = spark.range(0, 1000, 1, 1).toDF("id").localCheckpoint()
+    assert(FanOut(narrow.filter(col("id") > 3)).rdd.getNumPartitions >= target)
+  }
+
   test("plan: banded simhash pair search is bucketed, never all-pairs") {
     val df = SparkEntry.queries("q_simhash_banded")(spark, sf)
     val p = plan(df)
