@@ -506,7 +506,6 @@ case class QualityScore(child: Expression, stopwords: Seq[String])
   require(!stopwords.contains(null), "stopwords must not contain NULL")
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
 
   @transient private lazy val stopSet: java.util.Set[UTF8String] = {
     val set = new java.util.HashSet[UTF8String]()

@@ -281,6 +281,7 @@ class PlanAuditSpec extends SparkSpec {
   test("plan: curate runs its text work on native kernels; decontamination spans every core") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
     import graft.llmops.Pipelines
     // curate checkpoints stages 2, 3 and 4, so the final plan hides them
     // behind Scan ExistingRDD: audit every query the call executes
@@ -302,10 +303,10 @@ class PlanAuditSpec extends SparkSpec {
       // listener events arrive in order on the bus: the final collect's
       // event means every checkpoint before it has been delivered too
       val deadline = System.nanoTime() + 30000000000L
-      while (!runs.toArray.exists(_.asInstanceOf[(String, QueryExecution)]._1 == "collect") &&
-          System.nanoTime() < deadline) Thread.sleep(50)
+      while (!runs.asScala.exists(_._1 == "collect") && System.nanoTime() < deadline)
+        Thread.sleep(50)
     } finally spark.listenerManager.unregister(listener)
-    val qes = runs.toArray.toSeq.map(_.asInstanceOf[(String, QueryExecution)])
+    val qes = runs.asScala.toSeq
     val analyzed = qes.map(_._2.analyzed.toString).mkString("\n")
     Seq("graft_quality_score", "graft_ngrams", "graft_shingle_minhash")
       .foreach(k => assert(analyzed.contains(k), s"$k missing:\n$analyzed"))
