@@ -205,55 +205,70 @@ object Dedup {
         .as("sig"))
   }
 
-  /** LSH candidate pairs: documents sharing any band (bands of `rowsPerBand`
-    * consecutive signature components). Returns distinct (id_a < id_b).
-    *
-    * One row per (doc, band) is emitted map-side (explode of a band-struct
-    * array — no union, the signature aggregation runs once), then a single
-    * groupBy(band, band_sig) collects each bucket and expands in-bucket
-    * pairs. A self-join formulation would re-aggregate the signatures on
-    * both join sides and shuffle the full band table twice; buckets are
-    * tiny by construction (that is the point of banding), so
-    * collect_list + pair expansion is both the fast and the safe plan.
-    *
-    * `maxBucket` guards the degenerate case at scale: a band signature
-    * shared by k docs yields k(k-1)/2 pairs, so one pathological bucket
-    * (e.g. empty/boilerplate documents all hashing alike) can dominate the
-    * job. Buckets above the cap are dropped — standard LSH practice: a
-    * signature that common carries no near-dup signal. */
   /** (band, band_sig, id) rows from an array-signature table — the
     * banding half of [[lshCandidates]], shared with the cross-corpus
-    * [[minhashIncrementalNearDups]]. The per-band loop is deliberately
-    * UNROLLED into array(...) so that `sig` is referenced numBands
-    * times: a single-reference form lets CollapseProject inline the
-    * whole signature aggregate into this projection and re-evaluate it
-    * once per band (measured ~0.7s/band at sf0.1); multiple references
-    * keep the signature stage materialized. band_sig joins the slice
-    * with "|" (long→string cast matches concat_ws's rendering). */
+    * [[minhashIncrementalNearDups]]. `band_sig` is the band's slice of
+    * the signature, an `array<long>` compared as a value. The per-band
+    * loop is deliberately UNROLLED into array(...) so that `sig` is
+    * referenced numBands times: a single-reference form lets
+    * CollapseProject inline the whole signature aggregate into this
+    * projection and re-evaluate it once per band (measured ~0.7s/band
+    * at sf0.1); multiple references keep the signature stage
+    * materialized. */
   private def bandRows(sigs: DataFrame, idCol: String, numHashes: Int,
       rowsPerBand: Int): DataFrame = {
     val numBands = numHashes / rowsPerBand
     val bandStructs = array((0 until numBands).map { b =>
       struct(lit(b).as("band"),
-        array_join(transform(
-          slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
-          v => v.cast("string")), "|").as("band_sig"))
+        slice(col("sig"), b * rowsPerBand + 1, rowsPerBand).as("band_sig"))
     }: _*)
     sigs.select(col(idCol), explode(bandStructs).as("bs"))
       .select(col(idCol), col("bs.band").as("band"), col("bs.band_sig").as("band_sig"))
   }
 
+  /** In-bucket pairs, the one bucket → pairs step of the banded searches
+    * ([[lshCandidates]], [[simhashBandedPairs]], [[containmentNearDups]]):
+    * `rows` grouped on `keys`, each bucket's non-null `member` values
+    * sorted, and one (a, b) row for every two positions i < j of that
+    * list. Buckets outside 2..maxBucket members give none: k members
+    * cost k(k-1)/2 pairs, and a key that common carries no near-dup
+    * signal. The pairs expand map-side from the sorted array
+    * (`posexplode`, then an `explode` of the array's tail), with no
+    * lambda and no self-join of the bucket rows. No pair rule of its
+    * own: equal members pair with each other, so each caller applies
+    * its own filter and distinct. */
+  private def bucketPairs(rows: DataFrame, keys: Seq[Column], member: Column,
+      maxBucket: Int): DataFrame =
+    rows.groupBy(keys: _*)
+      .agg(sort_array(collect_list(member)).as("_m"))
+      .filter(size(col("_m")).between(2, maxBucket))
+      .select(col("_m"), posexplode(col("_m")).as(Seq("_i", "a")))
+      .select(col("a"),
+        explode(slice(col("_m"), col("_i") + 2, size(col("_m")))).as("b"))
+
+  /** LSH candidate pairs: documents sharing any band (bands of `rowsPerBand`
+    * consecutive signature components). Returns distinct (id_a < id_b).
+    *
+    * One row per (doc, band) is emitted map-side ([[bandRows]]: one
+    * explode, the signature aggregation runs once), then [[bucketPairs]]
+    * groups on (band, band_sig) and expands each bucket's sorted ids. A
+    * self-join formulation would re-aggregate the signatures on both
+    * join sides and shuffle the full band table twice; buckets are tiny
+    * by construction (that is the point of banding).
+    *
+    * `maxBucket` guards the degenerate case at scale: a band signature
+    * shared by k docs yields k(k-1)/2 pairs, so one pathological bucket
+    * (e.g. empty/boilerplate documents all hashing alike) can dominate the
+    * job. Buckets above the cap are dropped — standard LSH practice: a
+    * signature that common carries no near-dup signal. Null ids are not
+    * bucket members and do not count toward the cap. */
   def lshCandidates(sigs: DataFrame, idCol: String, numHashes: Int,
-      rowsPerBand: Int, maxBucket: Int = 100000): DataFrame = {
-    bandRows(sigs, idCol, numHashes, rowsPerBand)
-      .groupBy("band", "band_sig")
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(explode(col("ids")).as("id_a"), col("ids"))
-      .select(col("id_a"),
-        explode(filter(col("ids"), x => x > col("id_a"))).as("id_b"))
+      rowsPerBand: Int, maxBucket: Int = 100000): DataFrame =
+    bucketPairs(bandRows(sigs, idCol, numHashes, rowsPerBand),
+        Seq(col("band"), col("band_sig")), col(idCol), maxBucket)
+      .filter(col("a") < col("b"))
+      .select(col("a").as("id_a"), col("b").as("id_b"))
       .distinct()
-  }
 
   /** Exact Jaccard for given candidate pairs from their shingle sets. */
   def jaccardForPairs(pairs: DataFrame, shingleDf: DataFrame, idCol: String): DataFrame = {
@@ -312,10 +327,10 @@ object Dedup {
     * count (most shingles are df-1 singletons; an object aggregator here
     * was measured slower than the count+join it replaced), and only the
     * df∈[2,maxDf] survivors — already a small fraction of the stream —
-    * reach the `collect_list` bucket build, whose state the preceding
+    * reach the [[bucketPairs]] bucket build, whose state the preceding
     * filter bounds at maxDf. Candidate pairs then EXPLODE map-side from
-    * each bucket's sorted ≤maxDf id array (no self-join of the index at
-    * all), meet the minShared groupBy, and verification joins the
+    * each bucket's sorted ≤maxDf id array (no self-join of the index and
+    * no lambda), meet the minShared groupBy, and verification joins the
     * per-doc shingle-set ARRAYS ([[shingleSets]], also map-side) to each
     * pair side with one `array_intersect` per pair (values identical to
     * the explode-join form — both sides are distinct sets; the
@@ -342,19 +357,13 @@ object Dedup {
       .filter(col("_dfc") >= 2 && col("_dfc") <= maxDf)
       .select("shingle")
     // the join re-explodes inst map-side (cheap; no materialization), and
-    // its shingle partitioning carries straight into the bucket groupBy
-    val buckets = inst.join(dfc, Seq("shingle"))
-      .groupBy("shingle")
-      .agg(sort_array(collect_list(col(idCol))).as("_ids"))
-    // all C(df,2) ordered pairs, map-side from the sorted ≤maxDf array
-    val cand = buckets
-      .select(explode(flatten(transform(col("_ids"), (a, i) =>
-        transform(slice(col("_ids"), i + 2, lit(maxDf)),
-          b => struct(a.as("id_a"), b.as("id_b")))))).as("_p"))
-      .select(col("_p.id_a").as("id_a"), col("_p.id_b").as("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("_shared"))
+    // its shingle partitioning carries straight into the bucket groupBy;
+    // all C(df,2) sorted pairs of each ≤maxDf bucket, counted per pair
+    val cand = bucketPairs(inst.join(dfc, Seq("shingle")), Seq(col("shingle")),
+        col(idCol), maxDf)
+      .groupBy("a", "b").agg(count(lit(1)).as("_shared"))
       .filter(col("_shared") >= minShared)
-      .select("id_a", "id_b")
+      .select(col("a").as("id_a"), col("b").as("id_b"))
     val sets = shingleSets(df, idCol, textCol, n)
     cand
       .join(sets.select(col(idCol).as("id_a"), col("shingles").as("_sa")), Seq("id_a"))
@@ -1107,17 +1116,21 @@ object Dedup {
     * WWW'07 style): the 64-bit signature is cut into `numChunks`
     * contiguous chunks; any pair within `maxHamming` differing bits has at
     * least one chunk with ZERO differing bits when `numChunks > maxHamming`
-    * (pigeonhole), so an equi-join on (chunk index, chunk value) finds
-    * every qualifying pair with no false negatives. Candidates sharing a
-    * chunk are then verified with the exact popcount — identical output to
-    * the all-pairs theta join, at bucket-join cost.
+    * (pigeonhole), so bucketing on (chunk index, chunk value) finds
+    * every qualifying pair with no false negatives, for any chunk split.
+    * Candidates sharing a chunk are then verified with the exact popcount
+    * — identical output to the all-pairs theta join, at bucket cost.
     *
     * Same shuffle shape as [[lshCandidates]]: chunk rows are emitted
-    * map-side (one explode, `numChunks` rows/doc), one groupBy builds the
-    * buckets, in-bucket pairs expand locally. `maxBucket` drops degenerate
-    * buckets (a chunk value shared by k docs yields k(k-1)/2 candidates;
-    * e.g. near-empty docs whose signature chunks are all zeros) — standard
-    * LSH practice, a chunk value that common carries no near-dup signal.
+    * map-side (one explode, `numChunks` rows/doc), and [[bucketPairs]]
+    * builds the buckets of (id, sig) members and expands their pairs
+    * locally; the popcount verify runs on the expanded pairs, before the
+    * pair-level distinct, so the distinct shuffles only true pairs
+    * (×chunk multiplicity). `maxBucket` drops degenerate buckets (a chunk
+    * value shared by k docs yields k(k-1)/2 candidates; e.g. near-empty
+    * docs whose signature chunks are all zeros) — standard LSH practice,
+    * a chunk value that common carries no near-dup signal. Every row,
+    * null id included, counts toward a bucket's size.
     */
   def simhashBandedPairs(sigs: DataFrame, idCol: String, maxHamming: Int,
       numChunks: Int = 7, maxBucket: Int = 100000): DataFrame = {
@@ -1130,49 +1143,13 @@ object Dedup {
       struct(lit(c).as("chunk"),
         shiftrightunsigned(col("sig"), lo).bitwiseAND(lit(mask)).as("chunk_val"))
     }: _*)
-    // In-bucket pairs come from a SELF-JOIN on (chunk, chunk_val) rather
-    // than collect_list + explode-the-array: the join path is whole-stage
-    // codegen end to end, while the array form pays an interpreted
-    // `filter` lambda per (row × bucket member) — measured ~6× slower on
-    // a dense corpus. Both join sides are the same subplan, so the single
-    // hash exchange (shared with the bucket-size window) is planned once
-    // and reused, not shuffled twice. Verification (one popcount) runs
-    // inside the join projection, BEFORE the pair-level distinct, so the
-    // distinct shuffles only true pairs (×chunk multiplicity) as 3 narrow
-    // columns.
-    import org.apache.spark.sql.expressions.Window
-    // Pin the (chunk, chunk_val) exchange at the session's parallelism:
-    // the bucket-size window's shuffle is byte-light (a few MB of ids +
-    // sigs) so AQE coalesces it to ONE partition, and the window + the
-    // merge-join pair loop + the hamming verify below all fuse into that
-    // single task (measured: a 1.3 s serial stage carrying the query's
-    // whole verify CPU). REPARTITION_BY_NUM is exempt from AQE
-    // coalescing, keys match the window AND the self-join so no second
-    // exchange appears, and the target derives from defaultParallelism —
-    // scale-adaptive, not a tuned constant.
-    val chunkRows = sigs
-      .select(col(idCol).as("_id"), col("sig"), explode(chunkStructs).as("ch"))
-      .select(col("_id"), col("sig"),
-        col("ch.chunk").as("chunk"), col("ch.chunk_val").as("chunk_val"))
-      .repartition(sigs.sparkSession.sparkContext.defaultParallelism,
-        col("chunk"), col("chunk_val"))
-    val bucketed = chunkRows
-      .withColumn("_bn", count(lit(1)).over(Window.partitionBy("chunk", "chunk_val")))
-      .filter(col("_bn") > 1 && col("_bn") <= maxBucket)
-      .drop("_bn")
-    val a = bucketed.select(col("_id").as("id_a"), col("sig").as("sig_a"),
-      col("chunk"), col("chunk_val"))
-    val b = bucketed.select(col("_id").as("id_b"), col("sig").as("sig_b"),
-      col("chunk"), col("chunk_val"))
-    // Force a shuffle merge join: the planner's broadcast pick (small
-    // inputs) would COMPUTE THE SIGNATURE SUBPLAN TWICE (once per side);
-    // with SMJ both sides reuse the single (chunk, chunk_val) exchange
-    // already paid for by the bucket-size window, so signatures are
-    // computed exactly once regardless of corpus size.
-    a.join(b.hint("merge"), Seq("chunk", "chunk_val"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        hammingDistance64(col("sig_a"), col("sig_b")).as("hamming"))
+    val chunkRows = sigs.select(struct(col(idCol).as("id"), col("sig")).as("_doc"),
+      explode(chunkStructs).as("ch"))
+    bucketPairs(chunkRows, Seq(col("ch.chunk"), col("ch.chunk_val")),
+        col("_doc"), maxBucket)
+      .filter(col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        hammingDistance64(col("a.sig"), col("b.sig")).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       // the same pair can share several chunks — distinct AFTER the
       // verify filter (hamming is functionally dependent on the pair, so

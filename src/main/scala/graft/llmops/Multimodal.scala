@@ -247,34 +247,21 @@ object Multimodal {
       .select(col("media_id"), col("env").as("vals")))
 
   /** Hamming-banded near-duplicate pairs over 64-bit perceptual codes:
-    * maxDist+1 pigeonhole bands (m flips across m+1 bands always leave
-    * one band CLEAN — the [[Dedup.simhashNearDups]] `numChunks >
-    * maxHamming` contract, which a fixed 4-band split violates for any
-    * maxDist > 3), band equi-join on the band's bit-slice, popcount
-    * verify. NO false negatives at ≤ maxDist by construction. Scale
-    * caveat, same as simhash: higher maxDist ⇒ more and NARROWER bands
-    * (width 64/(m+1)) ⇒ coarser buckets ⇒ more chance candidates; at
-    * corpus scale keep maxDist modest or pre-partition by a cheap exact
-    * key. maxDist ≤ 15 keeps every band ≥ 4 bits. */
+    * [[Dedup.simhashBandedPairs]] with maxDist+1 pigeonhole bands (m
+    * flips across m+1 bands always leave one band CLEAN — its
+    * `numChunks > maxHamming` contract, which a fixed 4-band split
+    * violates for any maxDist > 3) and no bucket cap, popcount verify.
+    * NO false negatives at ≤ maxDist by construction. Scale caveat, same
+    * as simhash: higher maxDist ⇒ more and NARROWER bands (width
+    * 64/(m+1)) ⇒ coarser buckets ⇒ more chance candidates; at corpus
+    * scale keep maxDist modest or pre-partition by a cheap exact key.
+    * maxDist ≤ 15 keeps every band ≥ 4 bits. Output: (id_a, id_b,
+    * hamming). */
   def phashNearDups(hashes: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist >= 0 && maxDist <= 15, "pigeonhole banding needs maxDist <= 15")
-    val nBands = maxDist + 1
-    val w = 64 / nBands // base width; the last band absorbs the slack
-    def widthOf(b: Int) = if (b == nBands - 1) 64 - b * w else w
-    def maskOf(b: Int) =
-      if (widthOf(b) == 64) -1L else (1L << widthOf(b)) - 1L
-    def banded(tag: String) = hashes
-      .select(col("media_id").as(s"id_$tag"), col("phash").as(s"ph_$tag"))
-      .withColumn("_band", explode(lit((0 until nBands).toArray)))
-      .withColumn("_key",
-        call_function("shiftright", col(s"ph_$tag"), col("_band") * w)
-          .bitwiseAND(element_at(
-            lit((0 until nBands).map(maskOf).toArray), col("_band") + 1)))
-    banded("a").join(banded("b"), Seq("_band", "_key"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("ph_a").bitwiseXOR(col("ph_b"))))
-      .filter(col("hamming") <= maxDist)
-      .select("id_a", "id_b", "hamming").distinct()
+    Dedup.simhashBandedPairs(
+      hashes.select(col("media_id"), col("phash").as("sig")), "media_id",
+      maxHamming = maxDist, numChunks = maxDist + 1, maxBucket = Int.MaxValue)
   }
 
   private def y4mHeaderLen(w: Column, h: Column): Column =

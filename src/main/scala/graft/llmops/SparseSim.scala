@@ -44,15 +44,13 @@ object SparseSim {
 
   /** The term array (unigram tokens or space-joined n-grams) as a pure
     * column — shared by the postings build and the map-side length
-    * computation so both count the same terms. */
+    * computation so both count the same terms. Unigrams drop empty
+    * tokens; n-grams are [[Dedup.ngramArray]]'s (empty tokens kept, null
+    * or short text gives none). */
   private def termsExpr(text: Column, ngram: Int): Column = {
     require(ngram >= 1)
-    val toks = split(text, " ")
-    if (ngram == 1) filter(toks, t => t =!= "")
-    else when(size(toks) >= ngram,
-      transform(sequence(lit(1), size(toks) - (ngram - 1)),
-        i => array_join(slice(toks, i, lit(ngram)), " ")))
-      .otherwise(array().cast("array<string>"))
+    if (ngram == 1) filter(split(text, " "), t => t =!= "")
+    else Dedup.ngramArray(text, ngram)
   }
 
   /** The map-side (id, len) doc-length pass over a fanned-out corpus,

@@ -10,6 +10,12 @@ import graft.llmops.Multimodal
   * multimodal extension). */
 object SourceQueries extends QueryFamily {
 
+  /** The committed job-manifest fixtures (three JSON files), resolved
+    * against the working directory (the repository root). Absolute, so
+    * Spark's listing and DuckDB's read_blob() report the same paths. */
+  private val ManifestDir =
+    new java.io.File("src/test/resources/manifests").getAbsolutePath
+
   /** Shared body of the media near-dup queries: hash codes + per-id
     * banded-near-neighbor count — one place so the pair/count/fill
     * semantics can't drift between the image and audio forms. */
@@ -65,17 +71,19 @@ object SourceQueries extends QueryFamily {
              |WHERE key <> '' ORDER BY key""".stripMargin)),
 
     // S5 — recursive FS inventory via binaryFile listing (metadata-only
-    // scan). Hash-verified: DuckDB's read_blob() lists the same tree, so
-    // path+size compare exactly (the "file:" URI scheme is stripped to
-    // match plain paths; mtimes stay excluded — not oracle-stable).
+    // scan) of the committed manifest fixtures, so the listing is the same
+    // in every checkout. Hash-verified: DuckDB's read_blob() lists the
+    // same files, so path+size compare exactly (the "file:" URI scheme is
+    // stripped to match plain paths; mtimes stay excluded — not
+    // oracle-stable).
     ("q_fs_inventory",
       (s: SparkSession, d: String) => {
-        Sources.fsInventory(s, "/root/repo/src", "*.scala")
+        Sources.fsInventory(s, ManifestDir, "*.json")
           .select(regexp_replace(col("path"), "^file:", "").as("path"), col("size"))
           .orderBy("path")
       },
-      Some("""SELECT filename AS path, CAST(size AS BIGINT) AS size
-             |FROM read_blob('/root/repo/src/**/*.scala')
+      Some(s"""SELECT filename AS path, CAST(size AS BIGINT) AS size
+             |FROM read_blob('$ManifestDir/*.json')
              |ORDER BY filename""".stripMargin)),
 
     // S15 — manifest-collection source: a directory of job-manifest JSON
@@ -88,7 +96,7 @@ object SourceQueries extends QueryFamily {
     ("q_manifest_source",
       (s: SparkSession, d: String) => {
         val m = Manifests.resolveDatedDirs(
-          Manifests.loadCollection(s, "/root/repo/src/test/resources/manifests"),
+          Manifests.loadCollection(s, ManifestDir),
           date = "2026_08_13")
         m.select(col("job_id"), col("job_type"), col("map"),
             col("output_dir"),
@@ -96,12 +104,12 @@ object SourceQueries extends QueryFamily {
             col("sequence_config.nav_roam.behavior_weights.roam").as("w_roam"))
           .orderBy("job_id")
       },
-      Some("""SELECT job_id, job_type, map,
+      Some(s"""SELECT job_id, job_type, map,
              |  CASE WHEN output_dir IS NOT NULL
              |       THEN output_dir || '/2026_08_13' END AS output_dir,
              |  CAST(sequence_config.nav_roam.num_sequences AS BIGINT) AS num_sequences,
              |  CAST(sequence_config.nav_roam.behavior_weights.roam AS DOUBLE) AS w_roam
-             |FROM read_json_auto('/root/repo/src/test/resources/manifests/*.json')
+             |FROM read_json_auto('$ManifestDir/*.json')
              |ORDER BY job_id""".stripMargin)),
 
     // S2/S3 — scenes.json document build: rows → the catalog doc envelope

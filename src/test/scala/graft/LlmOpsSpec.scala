@@ -2164,6 +2164,116 @@ class LlmOpsSpec extends SparkSpec {
     assert(j < 0.25)
   }
 
+  test("banded searches equal a brute-force bucket reference: cap, nulls, duplicates, minShared") {
+    // Each search's buckets restated in plain Scala: a bucket of 2..cap
+    // counted members pairs every two of its members; the searches differ
+    // only in what a member is, what counts toward the cap, and the pair
+    // rule after it.
+    def bucketPairsRef[K](rows: Seq[(K, Option[Long])], counted: Option[Long] => Boolean,
+        cap: Int): Seq[(Option[Long], Option[Long])] =
+      rows.groupBy(_._1).values.toSeq.flatMap { b =>
+        val m = b.map(_._2).filter(counted)
+        if (m.size < 2 || m.size > cap) Nil
+        else for (i <- m.indices; j <- m.indices if i < j) yield (m(i), m(j))
+      }
+    def ordered(p: (Option[Long], Option[Long])): Option[(Long, Long)] = p match {
+      case (Some(a), Some(b)) if a != b => Some((a min b, a max b))
+      case _ => None
+    }
+
+    // LSH, 2 bands of 2 rows, cap 3. Band 1 is unique per row except for
+    // the duplicated id, so band 0 decides: [1,1] holds exactly 3 ids
+    // (kept), [2,2] holds 4 (dropped), [3,3] holds 2 ids and 3 nulls (nulls
+    // are not members: kept), [4,4] holds id 10 twice and id 11.
+    val lshRows: Seq[(Option[Long], Long)] = Seq(1L, 2L, 3L).map(i => (Some(i), 1L)) ++
+      Seq(4L, 5L, 6L, 7L).map(i => (Some(i), 2L)) ++
+      Seq(Some(8L), Some(9L), None, None, None).map(i => (i, 3L)) ++
+      Seq(Some(10L), Some(10L), Some(11L)).map(i => (i, 4L))
+    val lshSigs = lshRows.zipWithIndex.map { case ((id, b0), k) =>
+      (id, Seq(b0, b0, if (id.contains(10L)) 1000L else 100L + k, 7L)) }
+    val lshWant = (for {
+      band <- 0 until 2
+      p <- bucketPairsRef(
+        lshSigs.map { case (id, sig) => ((band, sig.slice(2 * band, 2 * band + 2)), id) },
+        _.isDefined, cap = 3)
+      ab <- ordered(p)
+    } yield Seq(ab._1, ab._2)).toSet
+    val lshGot = Dedup.lshCandidates(lshSigs.toDF("doc_id", "sig"), "doc_id",
+        numHashes = 4, rowsPerBand = 2, maxBucket = 3)
+      .as[(Long, Long)].collect().map(p => Seq(p._1, p._2)).toSet
+
+    // SimHash, maxHamming 1 over 2 chunks (low and high 32 bits), cap 3.
+    // The high halves differ per row except for the duplicated id, so the
+    // low half decides: 1 holds 3 rows (kept; ids 2-3 are 2 bits apart),
+    // 2 holds 4 (dropped, though ids 4-5 are 1 bit apart), 3 holds 2 ids
+    // and a null (kept), 5 holds 2 ids and 2 nulls (every row counts:
+    // dropped), 4 holds id 10 twice and id 11.
+    val shRows: Seq[(Option[Long], Long, Long)] = Seq(
+      (Some(1L), 1L, 16L), (Some(2L), 1L, 17L), (Some(3L), 1L, 18L),
+      (Some(4L), 2L, 32L), (Some(5L), 2L, 33L), (Some(6L), 2L, 34L), (Some(7L), 2L, 36L),
+      (Some(8L), 3L, 64L), (Some(9L), 3L, 65L), (None, 3L, 66L),
+      (Some(12L), 5L, 256L), (Some(13L), 5L, 257L), (None, 5L, 258L), (None, 5L, 260L),
+      (Some(10L), 4L, 128L), (Some(10L), 4L, 128L), (Some(11L), 4L, 129L))
+    val shSigs = shRows.map { case (id, lo, hi) => (id, (hi << 32) | lo) }
+    val sig = shSigs.collect { case (Some(id), s) => id -> s }.toMap
+    val shWant = (for {
+      half <- Seq(0, 32)
+      p <- bucketPairsRef(shSigs.map { case (id, s) => ((half, (s >>> half) & 0xffffffffL), id) },
+        _ => true, cap = 3)
+      (a, b) <- ordered(p)
+      h = java.lang.Long.bitCount(sig(a) ^ sig(b)) if h <= 1
+    } yield Seq(a, b, h.toLong)).toSet
+    val shGot = Dedup.simhashBandedPairs(shSigs.toDF("doc_id", "sig"), "doc_id",
+        maxHamming = 1, numChunks = 2, maxBucket = 3)
+      .as[(Long, Long, Int)].collect().map(p => Seq(p._1, p._2, p._3.toLong)).toSet
+
+    // Containment over word 1-grams, maxDf 3, minShared 2, threshold 0.5.
+    // "a b" is in exactly 3 docs (kept), "p q" in 4 (pruned), docs 8-9
+    // share one rare word (containment 0.5, under the minShared floor),
+    // docs 10-11 share two. A null-id doc is no bucket member but counts
+    // toward a shingle's df: "v w" (2 ids + 1 null) is kept, "g h" (3 ids
+    // + 1 null) is pruned.
+    val docs: Seq[(Option[Long], String)] = Seq(
+      (Some(1L), "a b c"), (Some(2L), "a b d"), (Some(3L), "a b e"),
+      (Some(4L), "p q r"), (Some(5L), "p q s"), (Some(6L), "p q t"), (Some(7L), "p q u"),
+      (Some(8L), "x y1"), (Some(9L), "x y2"), (Some(10L), "m n"), (Some(11L), "m n o"),
+      (None, "v w"), (Some(15L), "v w z"), (Some(16L), "v w zz"),
+      (None, "g h"), (Some(12L), "g h i"), (Some(13L), "g h j"), (Some(14L), "g h k"))
+    val sets = docs.map { case (id, t) => (id, t.split(" ", -1).toSet) }
+    val df = sets.flatMap(_._2).groupBy(identity).map { case (w, o) => w -> o.size }
+    val shared = bucketPairsRef(
+        sets.flatMap { case (id, ws) =>
+          ws.filter(w => df(w) >= 2 && df(w) <= 3).map(w => (w, id)) },
+        _.isDefined, cap = 3)
+      .flatMap(ordered).groupBy(identity).map { case (p, o) => p -> o.size }
+    val set = sets.collect { case (Some(id), ws) => id -> ws }.toMap
+    val ctWant = (for {
+      ((a, b), k) <- shared if k >= 2
+      inter = (set(a) & set(b)).size
+      if inter.toDouble / math.min(set(a).size, set(b).size) >= 0.5
+    } yield Seq(a, b, inter.toLong)).toSet
+    val ctGot = Dedup.containmentNearDups(docs.toDF("doc_id", "text"), "doc_id", "text",
+        n = 1, maxDf = 3, threshold = 0.5, minShared = 2)
+      .select("id_a", "id_b", "inter").as[(Long, Long, Long)].collect()
+      .map(p => Seq(p._1, p._2, p._3)).toSet
+
+    // (search, got, want, planted pairs that must surface, pairs that must not)
+    val cases = Seq(
+      ("lsh", lshGot, lshWant, Set((1L, 2L), (1L, 3L), (2L, 3L), (8L, 9L), (10L, 11L)),
+        Set((4L, 5L), (10L, 10L))),
+      ("simhash", shGot, shWant, Set((1L, 2L), (1L, 3L), (8L, 9L), (10L, 11L)),
+        Set((2L, 3L), (4L, 5L), (12L, 13L), (10L, 10L))),
+      ("containment", ctGot, ctWant, Set((1L, 2L), (1L, 3L), (2L, 3L), (10L, 11L), (15L, 16L)),
+        Set((4L, 5L), (8L, 9L), (12L, 13L))))
+    for ((name, got, want, has, hasNot) <- cases) {
+      assert(got == want, s"$name: got ${got -- want}, missed ${want -- got}")
+      val pairs = want.map(r => (r(0), r(1)))
+      assert(has.subsetOf(pairs), s"$name: reference lacks ${has -- pairs}")
+      assert((hasNot & pairs).isEmpty, s"$name: reference has ${hasNot & pairs}")
+      assert(want.size == pairs.size, s"$name: a pair repeats")
+    }
+  }
+
   test("lloyd training converges to cluster means and is a fixed point") {
     import graft.llmops.KMeansOps
     val pts = Seq(

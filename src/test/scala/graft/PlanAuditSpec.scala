@@ -340,14 +340,39 @@ class PlanAuditSpec extends SparkSpec {
     val df = SparkEntry.queries("q_simhash_banded")(spark, sf)
     val p = plan(df)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
-    // the self-join's two sides are the same subplan: the signature/chunk
-    // exchange must be planned once and REUSED, not computed twice. AQE
-    // only performs stage reuse at materialization, so run the query and
-    // assert on the FINAL adaptive plan (collect() executes THIS
-    // QueryExecution; a noop write would build a fresh one).
+    // the buckets carry each document's signature to its pairs, so the
+    // corpus is signed exactly once. Run the query and assert on the
+    // FINAL adaptive plan alone, without the initial plan AQE prints
+    // under it (collect() executes THIS QueryExecution; a noop write
+    // would build a fresh one).
     df.collect()
-    val fin = df.queryExecution.executedPlan.toString
-    assert(fin.contains("ReusedExchange"), fin)
+    val fin = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan.toString
+      case other => other.toString
+    }
+    assert("graft_simhash64".r.findAllIn(fin).length == 1, fin)
+  }
+
+  test("plan: the banded pair searches expand their buckets without a lambda") {
+    import spark.implicits._
+    import graft.llmops.{Dedup, Multimodal}
+    val sigs = Seq((1L, Seq(1L, 2L, 3L, 4L)), (2L, Seq(1L, 2L, 5L, 6L)))
+      .toDF("doc_id", "sig")
+    val codes = Seq((1L, 3L), (2L, 7L)).toDF("doc_id", "sig")
+    val searches = Seq(
+      "lshCandidates" -> Dedup.lshCandidates(sigs, "doc_id", 4, 2),
+      "simhashBandedPairs" -> Dedup.simhashBandedPairs(codes, "doc_id", 6),
+      "containmentNearDups" -> Dedup.containmentNearDups(
+        Tables.documents(spark, sf), "doc_id", "text", n = 3, maxDf = 10,
+        threshold = 0.5),
+      "phashNearDups" -> Multimodal.phashNearDups(
+        codes.withColumnRenamed("doc_id", "media_id")
+          .withColumnRenamed("sig", "phash"), maxDist = 6))
+    for ((name, df) <- searches) {
+      val p = df.queryExecution.optimizedPlan.toString
+      assert(!p.contains("lambdafunction("), s"$name:\n$p")
+    }
   }
 
   test("plan: dedup clusters never broadcast or cartesian the corpus") {
