@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import graft.functions.{TextExpressions, VectorExpressions}
-import graft.llmops.{Dedup, TextStats}
+import graft.llmops.{Dedup, TextStats, VectorMath}
 
 /** The composed higher-order-function forms the curation kernels
   * replaced, kept only as references: every `graft_*` text kernel must
@@ -46,6 +47,111 @@ object KernelEquivalenceSpec {
     * `conv` → mod p per n-gram, then the fold. */
   def shingleMinhash(text: Column, n: Int, numHashes: Int): Column =
     minhashFold(transform(ngrams(text, n), s => Dedup.minhashBase(s)), numHashes)
+
+  /** `graft_simhash64`'s reference: 64 bit-vote `aggregate` folds over a
+    * `Dedup.tokenHashHalves` column. A null element or half votes −1 (the
+    * `otherwise` branch); a null array signs as 0L. */
+  def simhash64Fold(halves: Column): Column = {
+    val bits = (0 until 64).map { b =>
+      val (field, shift) = if (b < 32) ("lo", b) else ("hi", b - 32)
+      val votes = aggregate(halves, lit(0), (acc, s) =>
+        acc + when(shiftright(s.getField(field), shift)
+          .bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
+      when(votes > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
+    }
+    bits.reduce(_ bitwiseOR _)
+  }
+
+  /** `graft_jl_project`'s reference: one `VectorMath.dot` fold per sign
+    * row; a null vector gives NULL, not an array of NULLs. */
+  def jlProjectFold(v: Column, signs: Array[Array[Double]]): Column =
+    when(v.isNotNull, array(signs.toSeq.map(row => VectorMath.dot(v, lit(row))): _*))
+
+  /** `graft_token_diversity`'s reference: split, `array_distinct`, and
+    * the sorted run-length fold `TextStats.repeatPairsOfSorted`. */
+  def tokenDiversityFold(text: Column): Column = {
+    val toks = TextStats.tokens(text)
+    when(text.isNotNull, struct(size(toks).cast("long").as("n_tokens"),
+      size(array_distinct(toks)).cast("long").as("n_types"),
+      TextStats.repeatPairsOfSorted(array_sort(toks)).as("pairs")))
+  }
+
+  /** `graft_repetition_stats`' reference: the duplicate-token share and
+    * the longest run of the sorted bigrams. */
+  def repetitionFold(text: Column): Column = {
+    val toks = TextStats.tokens(text)
+    when(text.isNotNull, struct(
+      TextStats.duplicateTokenFractionOfTokens(toks).as("dup_token_frac"),
+      TextStats.topRunFraction(TextStats.sortedBigrams(toks)).as("top_bigram_frac")))
+  }
+
+  /** Σ_{k<w} byte(i+k)·base^k for every w-byte window i of `s`'s UTF-8
+    * bytes, each window from scratch (no rolling update). */
+  def windowPolys(s: String, w: Int, base: Long): Seq[Long] = {
+    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    (0 to b.length - w).map(i =>
+      (0 until w).map(k => (b(i + k) & 0xffL) * BigInt(base).pow(k).toLong).sum)
+  }
+
+  /** `graft_rolling_min_hash`'s reference: the minimum window polynomial;
+    * NULL below `w` bytes. */
+  def rollingMinHashRef(w: Int, base: Long): UserDefinedFunction =
+    udf((s: String) => Option(s).flatMap(t => windowPolys(t, w, base).minOption))
+
+  /** `graft_cdc_boundaries`' reference: i + w for every window whose
+    * polynomial has no bit of `mask` set. */
+  def cdcBoundariesRef(w: Int, base: Long, mask: Long): UserDefinedFunction =
+    udf((s: String) => Option(s).map(t => windowPolys(t, w, base).zipWithIndex
+      .collect { case (h, i) if (h & mask) == 0L => i + w }))
+
+  /** `graft_jaro_winkler`'s reference over UTF-8 bytes: greedy in-window
+    * matching, half the misaligned matches (integer division) as
+    * transpositions, and the prefix bonus only above 0.7. */
+  def jaroWinklerRef: UserDefinedFunction = udf { (x: String, y: String) =>
+    if (x == null || y == null) None
+    else {
+      val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val b = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      if (a.isEmpty || b.isEmpty) Some(0.0)
+      else if (a.sameElements(b)) Some(1.0)
+      else {
+        val window = math.max(math.max(a.length, b.length) / 2 - 1, 0)
+        val used = scala.collection.mutable.Set.empty[Int]
+        val matchedA = a.indices.filter { i =>
+          val j = (math.max(0, i - window) until math.min(b.length, i + window + 1))
+            .find(j => !used(j) && a(i) == b(j))
+          j.foreach(used += _)
+          j.isDefined
+        }
+        val m = matchedA.size
+        if (m == 0) Some(0.0)
+        else {
+          val t = matchedA.map(a(_)).zip(used.toSeq.sorted.map(b(_))).count { case (p, q) => p != q }
+          val md = m.toDouble
+          val j0 = (md / a.length + md / b.length + (m - t / 2).toDouble / md) / 3.0
+          val prefix = a.zip(b).take(4).takeWhile { case (p, q) => p == q }.length
+          Some(if (j0 > 0.7) j0 + prefix * 0.1 * (1.0 - j0) else j0)
+        }
+      }
+    }
+  }
+
+  /** `graft_pq_code`'s reference: the lowest-index nearest entry among
+    * those of the vector's length with no null element, by a left-fold
+    * squared distance; an entry at NaN or +∞ distance never wins; NULL
+    * when the vector has a null element or no entry qualifies. */
+  def pqCodeRef: UserDefinedFunction = udf {
+    (v: Seq[java.lang.Double], books: Seq[Seq[java.lang.Double]]) =>
+      if (v == null || books == null || v.contains(null)) None
+      else {
+        val dists = books.zipWithIndex.collect {
+          case (c, p) if c != null && c.length == v.length && !c.contains(null) =>
+            (v.zip(c).foldLeft(0.0) { case (d, (x, y)) =>
+              val t = x.doubleValue - y.doubleValue; d + t * t }, p)
+        }.filter(_._1 < Double.PositiveInfinity)
+        if (dists.isEmpty) None else Some(dists.minBy(_._1)._2)
+      }
+  }
 }
 
 /** Codegen ≡ interpreted ≡ composed reference, table-driven: each
@@ -77,12 +183,94 @@ class KernelEquivalenceSpec extends SparkSpec {
     }
   }
 
+  private val texts = edgeTexts ++ randomTexts
+
+  /** A second text per row for `graft_jaro_winkler`: the same text, one
+    * with two neighbouring characters swapped, one with a character
+    * dropped or the first replaced, another row's text, or null. */
+  private val otherTexts: Seq[String] = {
+    val rnd = new scala.util.Random(20261019L)
+    texts.zipWithIndex.map { case (t, i) =>
+      val pos = if (t == null || t.length < 2) 0 else rnd.nextInt(t.length - 1)
+      (i % 6, t) match {
+        case (_, null) | (5, _) => if (rnd.nextBoolean()) null else texts(rnd.nextInt(texts.size))
+        case (0, _) => t
+        case (1, _) if t.length >= 2 =>
+          t.substring(0, pos) + t(pos + 1) + t(pos) + t.substring(pos + 2)
+        case (2, _) if t.nonEmpty => t.substring(0, pos) + t.substring(pos + 1)
+        case (3, _) if t.nonEmpty => "Z" + t.substring(1)
+        case _ => texts((i * 7 + 3) % texts.size)
+      }
+    }
+  }
+
+  private type Vec = Seq[java.lang.Double]
+
+  private def vec(xs: Double*): Vec = xs.map(Double.box)
+
+  /** (a, b) vector pairs: the IEEE specials, null arrays, null elements,
+    * length mismatches and empty arrays, then seeded random pairs whose
+    * elements are sometimes special or null. */
+  private val vecPairs: Seq[(Vec, Vec)] = {
+    val nul: Vec = Seq[java.lang.Double](1.0, null, 3.0)
+    val inf = Double.PositiveInfinity
+    val edges = Seq[(Vec, Vec)](
+      (null, null), (null, vec(1.0)), (vec(1.0), null), (vec(), vec()),
+      (vec(), vec(1.0)), (vec(1.0, 2.0, 3.0), vec(1.0, 2.0)), (nul, vec(1.0, 2.0, 3.0)),
+      (vec(1.0, 2.0, 3.0), nul), (vec(Double.NaN, 1.0, 2.0), vec(1.0, 1.0, 1.0)),
+      (vec(inf, 1.0, 2.0), vec(inf, 1.0, 2.0)), (vec(-inf, 0.0, 1.0), vec(inf, 0.0, 1.0)),
+      (vec(-0.0, -0.0, -0.0), vec(0.0, 0.0, 0.0)), (vec(-0.0), vec(-0.0)),
+      (vec(1e308, 1e308, 1e308), vec(1e308, -1e308, 1e308)),
+      (vec(0.1, 0.2, 0.3), vec(0.3, 0.2, 0.1)))
+    val rnd = new scala.util.Random(20261020L)
+    val specials = Vector[java.lang.Double](Double.NaN, inf, -inf, -0.0, 0.0, 1e308, null)
+    def elem(): java.lang.Double =
+      if (rnd.nextInt(12) == 0) specials(rnd.nextInt(specials.size))
+      else rnd.nextGaussian()
+    val lengths = Vector(0, 1, 2, 3, 3, 3, 3, 5, 9)
+    val random = Seq.fill(texts.size - edges.size) {
+      val n = lengths(rnd.nextInt(lengths.size))
+      val m = if (rnd.nextInt(8) == 0) lengths(rnd.nextInt(lengths.size)) else n
+      (Seq.fill(n)(elem()), Seq.fill(m)(elem()))
+    }
+    edges ++ random
+  }
+
+  /** A PQ codebook per row for `graft_pq_code`: null, or up to five
+    * entries, each null, a vector of the row's `a` length, one of the
+    * wrong length, one with a null element, or a repeat of the previous
+    * entry (a tie). */
+  private val codebooks: Seq[Seq[Vec]] = {
+    val rnd = new scala.util.Random(20261021L)
+    vecPairs.map { case (a, _) =>
+      val n = if (a == null) 3 else a.length
+      def entry(len: Int): Vec = Seq.fill(len)(
+        if (rnd.nextInt(15) == 0) Double.box(Double.NaN) else Double.box(rnd.nextGaussian()))
+      if (rnd.nextInt(12) == 0) null
+      else {
+        val out = scala.collection.mutable.ArrayBuffer.empty[Vec]
+        for (_ <- 0 until rnd.nextInt(6)) out += (rnd.nextInt(10) match {
+          case 0 => null
+          case 1 => entry(n + 1)
+          case 2 if n > 0 => entry(n).updated(0, null)
+          case 3 if out.nonEmpty => out.last
+          case _ => entry(n)
+        })
+        out.toSeq
+      }
+    }
+  }
+
   private def input: DataFrame = {
     import org.apache.spark.sql.types._
-    val rows = (edgeTexts ++ randomTexts).zipWithIndex
-      .map { case (t, i) => Row(i.toLong, t) }
+    val rows = texts.indices.map { i =>
+      Row(i.toLong, texts(i), otherTexts(i), vecPairs(i)._1, vecPairs(i)._2, codebooks(i))
+    }
+    val vecType = ArrayType(DoubleType)
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
-      StructType(Seq(StructField("id", LongType), StructField("text", StringType))))
+      StructType(Seq(StructField("id", LongType), StructField("text", StringType),
+        StructField("text2", StringType), StructField("a", vecType),
+        StructField("b", vecType), StructField("books", ArrayType(vecType)))))
   }
 
   private val numHashes = 16
@@ -94,7 +282,21 @@ class KernelEquivalenceSpec extends SparkSpec {
     transform(transform(ngrams(col("text"), 1), s => Dedup.minhashBase(s)),
       h => when(h % 5 === 0, lit(null).cast("long")).otherwise(h)))
 
-  /** (case, kernel, composed reference). */
+  /** Token hash halves for `graft_simhash64`: null for null text, with a
+    * null element, a null `lo` or a null `hi` at every few positions. */
+  private val halves: Column = {
+    val halfType = "struct<lo:bigint,hi:bigint>"
+    transform(Dedup.tokenHashHalves(col("text")), (s, i) =>
+      when(i % 7 === 3, lit(null).cast(halfType))
+        .when(i % 5 === 2, struct(lit(null).cast("long").as("lo"), s.getField("hi").as("hi")))
+        .when(i % 5 === 4, struct(s.getField("lo").as("lo"), lit(null).cast("long").as("hi")))
+        .otherwise(s))
+  }
+
+  private val jlSigns = VectorExpressions.jlSigns("kernel-spec", 5, 3)
+
+  /** (case, kernel, composed reference); a case's name starts with the
+    * `graft_*` function it covers. */
   private val cases: Seq[(String, Column, Column)] =
     Seq(("graft_quality_score", TextStats.qualityScore(col("text"), stop),
       qualityScore(col("text"), stop))) ++
@@ -105,7 +307,31 @@ class KernelEquivalenceSpec extends SparkSpec {
       shingleMinhash(col("text"), n, numHashes))) ++
     Seq(("graft_minhash_sig",
       VectorExpressions.minhashSig(bases, as, bs, Dedup.MinhashPrime),
-      minhashFold(bases, numHashes)))
+      minhashFold(bases, numHashes)),
+    ("graft_dot", VectorExpressions.dot(col("a"), col("b")), VectorMath.dot(col("a"), col("b"))),
+    ("graft_dist_sq", VectorExpressions.distSq(col("a"), col("b")),
+      VectorMath.distSq(col("a"), col("b"))),
+    ("graft_simhash64", VectorExpressions.simhash64(halves), simhash64Fold(halves)),
+    ("graft_jl_project", VectorExpressions.jlProject(col("a"), "kernel-spec", 5, 3),
+      jlProjectFold(col("a"), jlSigns)),
+    ("graft_pq_code", VectorExpressions.pqCode(col("a"), col("books")),
+      pqCodeRef(col("a"), col("books"))),
+    ("graft_token_diversity", TextExpressions.tokenDiversity(col("text")),
+      tokenDiversityFold(col("text"))),
+    ("graft_repetition_stats", TextExpressions.repetitionStats(col("text")),
+      repetitionFold(col("text"))),
+    ("graft_jaro_winkler", TextExpressions.jaroWinkler(col("text"), col("text2")),
+      jaroWinklerRef(col("text"), col("text2")))) ++
+    Seq((4, 31L), (5, 257L)).map { case (w, base) =>
+      (s"graft_rolling_min_hash w=$w base=$base",
+        TextExpressions.rollingMinHash(col("text"), w, base),
+        rollingMinHashRef(w, base)(col("text")))
+    } ++
+    Seq((4, 31L, 3L), (3, 257L, 7L)).map { case (w, base, mask) =>
+      (s"graft_cdc_boundaries w=$w base=$base mask=$mask",
+        TextExpressions.cdcBoundaries(col("text"), w, base, mask),
+        cdcBoundariesRef(w, base, mask)(col("text")))
+    }
 
   /** A cell as comparable bits: doubles by `doubleToLongBits`, arrays
     * element-wise, nulls as None. */
@@ -113,6 +339,7 @@ class KernelEquivalenceSpec extends SparkSpec {
     case null => None
     case d: Double => java.lang.Double.doubleToLongBits(d)
     case s: scala.collection.Seq[_] => s.map(bits).toList
+    case r: Row => r.toSeq.map(bits).toList
     case other => other
   }
 
@@ -149,6 +376,14 @@ class KernelEquivalenceSpec extends SparkSpec {
       }.toMap
       assert(results("CODEGEN_ONLY") == results("NO_CODEGEN"))
     }
+  }
+
+  test("every registered graft_* kernel has a row in the table") {
+    val covered = cases.map(_._1.takeWhile(_ != ' ')).toSet
+    val registered = (VectorExpressions.registrations ++ TextExpressions.registrations)
+      .map(_._1.funcName)
+    val missing = registered.filterNot(covered)
+    assert(missing.isEmpty, s"kernels without an equivalence row: ${missing.mkString(", ")}")
   }
 
   test("graft_quality_score and graft_ngrams: null and short-text conventions") {
