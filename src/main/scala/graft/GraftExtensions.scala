@@ -1,11 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 
 /** Session extensions: registers the native Catalyst expressions
-  * ([[graft.functions.VectorExpressions]]) as SQL functions, plus
+  * ([[graft.functions.VectorExpressions]] and
+  * [[graft.functions.TextExpressions]]) as SQL functions, plus
   * `graft_bloom_contains` — Spark's internal codegen'd bloom probe
   * (`BloomFilterMightContain`, the expression `InjectRuntimeFilter`
   * plants), surfaced as a SQL function so
@@ -30,12 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     graft.functions.VectorExpressions.registrations.foreach(ext.injectFunction)
     graft.functions.TextExpressions.registrations.foreach(ext.injectFunction)
-    ext.injectFunction((FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_bloom_contains"),
-      (es: Seq[Expression]) => {
-        require(es.length == 2,
-          s"graft_bloom_contains(bloom, value) takes 2 arguments, got ${es.length}")
-        BloomFilterMightContain(es(0), es(1))
-      }))
+    ext.injectFunction(graft.functions.KernelArgs.register("graft_bloom_contains",
+      classOf[BloomFilterMightContain], "bloom, value", 2)(a => BloomFilterMightContain(a(0), a(1))))
   }
 }

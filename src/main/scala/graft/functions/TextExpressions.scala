@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression, UnsafeArrayData}
@@ -9,19 +10,17 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Rolling polynomial hash (Rabin–Karp) document fingerprint: the MINIMUM
-  * over all `w`-byte windows of h(i) = Σ_{k<w} byte(i+k)·31^k — the
-  * winnowing-style fingerprint (min-of-window-hashes) that is robust to
-  * content shifts, unlike a whole-document hash where one inserted byte
-  * changes everything.
+/** `graft_rolling_min_hash(text, w, base)`: the rolling polynomial hash
+  * (Rabin–Karp) document fingerprint [[CurationKernels.rollingMinHash]],
+  * the MINIMUM over all `w`-byte windows of h(i) = Σ_{k<w}
+  * byte(i+k)·base^k — the winnowing-style fingerprint
+  * (min-of-window-hashes) that is robust to content shifts, unlike a
+  * whole-document hash where one inserted byte changes everything.
   *
   * Why a native expression: the HOF form recomputes each window from
-  * scratch (O(n·w) interpreted lambda dispatches per document); this is
-  * the actual ROLLING form — O(n) with the exact integer update
-  * h' = (h − incoming_low_byte)/31 + outgoing_byte·31^(w−1), where the
-  * subtraction leaves a multiple of 31 so the division is exact. No
-  * modulus: 255·31^7·8 < 2^53, so every value is exact in a long AND in
-  * the oracle's arithmetic — fingerprints are engine-reproducible.
+  * scratch (O(n·w) interpreted lambda dispatches per document); the
+  * kernel is the actual ROLLING form, O(n), and the generated code is one
+  * static call to it.
   *
   * Byte-level (UTF-8): identical to per-character arithmetic on ASCII
   * corpora, which is what the DuckDB `ascii(substr(...))` oracle computes.
@@ -29,67 +28,21 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class RollingMinHash(child: Expression, w: Int, base: Long)
     extends UnaryExpression with ImplicitCastInputTypes {
-  require(w >= 2 && w <= 16, s"window must be 2..16 bytes, got $w")
-  require(base > 1, s"base must be > 1, got $base")
-  require(255.0 * math.pow(base.toDouble, (w - 1).toDouble) * w < math.pow(2.0, 53.0),
-    s"w=$w base=$base overflows exact-integer range")
+  CurationKernels.requireWindow(w, base)
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
-  private lazy val topPow: Long = {
-    var p = 1L; var k = 0
-    while (k < w - 1) { p *= base; k += 1 }
-    p
-  }
-
   override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[UTF8String].getBytes
-    val n = b.length
-    if (n < w) null
-    else {
-      var h = 0L
-      var p = 1L
-      var k = 0
-      while (k < w) { h += (b(k) & 0xffL) * p; p *= base; k += 1 }
-      var min = h
-      var i = 1
-      while (i <= n - w) {
-        h = (h - (b(i - 1) & 0xffL)) / base + (b(i + w - 1) & 0xffL) * topPow
-        if (h < min) min = h
-        i += 1
-      }
-      min
-    }
+    val h = CurationKernels.rollingMinHash(input.asInstanceOf[UTF8String], w, base)
+    if (h < 0) null else h
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val b = ctx.freshName("b")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val p = ctx.freshName("p")
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val min = ctx.freshName("min")
-      s"""
-        |byte[] $b = $s.getBytes();
-        |int $n = $b.length;
-        |if ($n < $w) {
-        |  ${ev.isNull} = true;
-        |} else {
-        |  long $h = 0L;
-        |  long $p = 1L;
-        |  for (int $k = 0; $k < $w; $k++) { $h += ($b[$k] & 0xffL) * $p; $p *= ${base}L; }
-        |  long $min = $h;
-        |  for (int $i = 1; $i <= $n - $w; $i++) {
-        |    $h = ($h - ($b[$i - 1] & 0xffL)) / ${base}L + ($b[$i + $w - 1] & 0xffL) * ${topPow}L;
-        |    if ($h < $min) $min = $h;
-        |  }
-        |  ${ev.value} = $min;
-        |}
-      """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, s =>
+      s"""${ev.value} = graft.functions.CurationKernels.rollingMinHash($s, $w, ${base}L);
+         |${ev.isNull} = ${ev.value} < 0;
+       """.stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -306,104 +259,48 @@ case class RepetitionStats(child: Expression)
   override def prettyName: String = "graft_repetition_stats"
 }
 
-/** Content-defined chunk boundaries (FastCDC/rsync-style): cut offsets
-  * c = i + w for every w-byte window position i whose rolling polynomial
-  * hash h(i) = Σ_{k<w} byte(i+k)·base^k has (h & mask) == 0. Cutting on
-  * CONTENT instead of fixed offsets makes chunk identity shift-robust:
-  * inserting one byte re-chunks only the window it lands in, so chunk-
-  * level dedup still matches everything downstream of the edit (the same
-  * shift-robustness argument as [[RollingMinHash]], applied to dedup of
-  * large/binary payloads rather than fingerprinting). Same exact-integer
-  * rolling update, same < 2^53 bound, engine-reproducible. Average chunk
-  * length ≈ 1/(P(h & mask == 0)) ≈ mask+1 bytes for mixing hashes.
-  * Returns an ascending int array of 0-based cut offsets (possibly
-  * empty — a document shorter than w, or with no qualifying window, is
-  * one whole chunk).
+/** `graft_cdc_boundaries(text, w, base, mask)`: content-defined chunk
+  * boundaries (FastCDC/rsync-style, [[CurationKernels.cdcBoundaries]]).
+  * Cutting on CONTENT instead of fixed offsets makes chunk identity
+  * shift-robust: inserting one byte re-chunks only the window it lands
+  * in, so chunk-level dedup still matches everything downstream of the
+  * edit (the same shift-robustness argument as [[RollingMinHash]],
+  * applied to dedup of large/binary payloads rather than fingerprinting).
+  * Average chunk length ≈ 1/(P(h & mask == 0)) ≈ mask+1 bytes for mixing
+  * hashes. Returns an ascending int array of 0-based cut offsets
+  * (possibly empty — a document shorter than w, or with no qualifying
+  * window, is one whole chunk).
   */
 case class CdcBoundaries(child: Expression, w: Int, base: Long, mask: Long)
     extends UnaryExpression with ImplicitCastInputTypes {
-  require(w >= 2 && w <= 16, s"window must be 2..16 bytes, got $w")
-  require(base > 1, s"base must be > 1, got $base")
+  CurationKernels.requireWindow(w, base)
   require(mask > 0, s"mask must be positive, got $mask")
-  require(255.0 * math.pow(base.toDouble, (w - 1).toDouble) * w < math.pow(2.0, 53.0),
-    s"w=$w base=$base overflows exact-integer range")
   override def inputTypes = Seq(StringType)
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.types.IntegerType, containsNull = false)
   override def nullable: Boolean = true
 
-  private lazy val topPow: Long = {
-    var p = 1L; var k = 0
-    while (k < w - 1) { p *= base; k += 1 }
-    p
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = input.asInstanceOf[UTF8String].getBytes
-    val n = b.length
-    if (n < w) new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Int])
-    else {
-      val cuts = new Array[Int](n - w + 1)
-      var cnt = 0
-      var h = 0L
-      var p = 1L
-      var k = 0
-      while (k < w) { h += (b(k) & 0xffL) * p; p *= base; k += 1 }
-      if ((h & mask) == 0L) { cuts(cnt) = w; cnt += 1 }
-      var i = 1
-      while (i <= n - w) {
-        h = (h - (b(i - 1) & 0xffL)) / base + (b(i + w - 1) & 0xffL) * topPow
-        if ((h & mask) == 0L) { cuts(cnt) = i + w; cnt += 1 }
-        i += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        java.util.Arrays.copyOf(cuts, cnt))
-    }
-  }
+  override def nullSafeEval(input: Any): Any =
+    CurationKernels.cdcBoundaries(input.asInstanceOf[UTF8String], w, base, mask)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val b = ctx.freshName("b")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val p = ctx.freshName("p")
-      val k = ctx.freshName("k")
-      val i = ctx.freshName("i")
-      val cuts = ctx.freshName("cuts")
-      val cnt = ctx.freshName("cnt")
-      s"""
-        |byte[] $b = $s.getBytes();
-        |int $n = $b.length;
-        |if ($n < $w) {
-        |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new int[0]);
-        |} else {
-        |  int[] $cuts = new int[$n - $w + 1];
-        |  int $cnt = 0;
-        |  long $h = 0L;
-        |  long $p = 1L;
-        |  for (int $k = 0; $k < $w; $k++) { $h += ($b[$k] & 0xffL) * $p; $p *= ${base}L; }
-        |  if (($h & ${mask}L) == 0L) { $cuts[$cnt++] = $w; }
-        |  for (int $i = 1; $i <= $n - $w; $i++) {
-        |    $h = ($h - ($b[$i - 1] & 0xffL)) / ${base}L + ($b[$i + $w - 1] & 0xffL) * ${topPow}L;
-        |    if (($h & ${mask}L) == 0L) { $cuts[$cnt++] = $i + $w; }
-        |  }
-        |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        |    java.util.Arrays.copyOf($cuts, $cnt));
-        |}
-      """.stripMargin
-    })
+    defineCodeGen(ctx, ev, s =>
+      s"graft.functions.CurationKernels.cdcBoundaries($s, $w, ${base}L, ${mask}L)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
   override def prettyName: String = "graft_cdc_boundaries"
 }
 
-/** The per-document text work of the curation chain, one compiled pass
-  * each: the quality score, the word n-grams, and the n-gram → MinHash
-  * base hashes. All three tokenize with Spark's own `split(text, " ", -1)`
-  * (the [[RepetitionKernel]] convention), so tokens — leading, trailing
-  * and doubled spaces included — are exactly the composed forms' tokens.
+/** The per-document text work of the curation and dedup chains, one
+  * compiled pass each: the quality score, the word n-grams, the n-gram →
+  * MinHash base hashes, and the rolling-window fingerprint and chunk
+  * cuts. Each expression's interpreted `eval` and its generated code call
+  * the same method here. The token kernels tokenize with Spark's own
+  * `split(text, " ", -1)` (the [[RepetitionKernel]] convention), so
+  * tokens — leading, trailing and doubled spaces included — are exactly
+  * the composed forms' tokens.
   *
   * The composed forms they replace ran per document as chains of
   * interpreted expressions: the quality score split the text once per
@@ -416,6 +313,7 @@ object CurationKernels {
   private val Space = UTF8String.fromString(" ")
   private val EmptyArray = new GenericArrayData(Array.empty[Any])
   private val EmptyLongs = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
+  private val EmptyInts = UnsafeArrayData.fromPrimitiveArray(Array.emptyIntArray)
   private val Md5 = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
 
@@ -496,6 +394,78 @@ object CurationKernels {
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
+
+  /** A rolling window of `w` bytes and polynomial base `base`: no modulus,
+    * so every window value must stay exact below 2^53 (255·base^(w−1)·w),
+    * in a long AND in the oracle's arithmetic. */
+  def requireWindow(w: Int, base: Long): Unit = {
+    require(w >= 2 && w <= 16, s"window must be 2..16 bytes, got $w")
+    require(base > 1, s"base must be > 1, got $base")
+    require(255.0 * math.pow(base.toDouble, (w - 1).toDouble) * w < math.pow(2.0, 53.0),
+      s"w=$w base=$base overflows exact-integer range")
+  }
+
+  /** Σ_{k<w} byte(k)·base^k, the first window of `b` (by Horner). */
+  private def firstWindow(b: Array[Byte], w: Int, base: Long): Long = {
+    var h = 0L
+    var k = w - 1
+    while (k >= 0) { h = h * base + (b(k) & 0xffL); k -= 1 }
+    h
+  }
+
+  /** base^(w−1), the weight of a window's last byte. */
+  private def topPow(w: Int, base: Long): Long = {
+    var p = 1L
+    var k = 1
+    while (k < w) { p *= base; k += 1 }
+    p
+  }
+
+  /** Window i from window i−1 by the exact integer update
+    * h' = (h − outgoing byte)/base + incoming byte·base^(w−1): the
+    * subtraction leaves a multiple of base, so the division is exact. */
+  @inline private def roll(b: Array[Byte], i: Int, w: Int, base: Long, top: Long,
+      h: Long): Long =
+    (h - (b(i - 1) & 0xffL)) / base + (b(i + w - 1) & 0xffL) * top
+
+  /** The minimum over the `w`-byte windows of `s`'s UTF-8 bytes of
+    * Σ_{k<w} byte(i+k)·base^k, O(n) by the rolling update; −1 (never a
+    * window value) when `s` is shorter than `w` bytes. */
+  def rollingMinHash(s: UTF8String, w: Int, base: Long): Long = {
+    val b = s.getBytes
+    val n = b.length
+    if (n < w) return -1L
+    val top = topPow(w, base)
+    var h = firstWindow(b, w, base)
+    var min = h
+    var i = 1
+    while (i <= n - w) {
+      h = roll(b, i, w, base, top, h)
+      if (h < min) min = h
+      i += 1
+    }
+    min
+  }
+
+  /** Ascending cut offsets i + w for every `w`-byte window i of `s` whose
+    * window value has no bit of `mask` set; none when `s` is shorter than
+    * `w` bytes. */
+  def cdcBoundaries(s: UTF8String, w: Int, base: Long, mask: Long): ArrayData = {
+    val b = s.getBytes
+    val n = b.length
+    if (n < w) return EmptyInts
+    val top = topPow(w, base)
+    val cuts = new Array[Int](n - w + 1)
+    var cnt = 0
+    var h = firstWindow(b, w, base)
+    var i = 0
+    while (i <= n - w) {
+      if (i > 0) h = roll(b, i, w, base, top, h)
+      if ((h & mask) == 0L) { cuts(cnt) = i + w; cnt += 1 }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(cuts, cnt))
+  }
 }
 
 /** `graft_quality_score(text, stopwords)` → double via
@@ -503,7 +473,6 @@ object CurationKernels {
   * baked into the node as a hash set. Null text → NULL. */
 case class QualityScore(child: Expression, stopwords: Seq[String])
     extends UnaryExpression with ImplicitCastInputTypes {
-  require(!stopwords.contains(null), "stopwords must not contain NULL")
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = DoubleType
 
@@ -603,131 +572,50 @@ case class ShingleMinHash(child: Expression, n: Int, as: Seq[Long],
 }
 
 object TextExpressions {
+  import org.apache.spark.sql.functions.{call_function, lit}
+  import KernelArgs.register
+
   val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinklerSimilarity].getName, "graft_jaro_winkler"),
-      (es: Seq[Expression]) => {
-        require(es.length == 2,
-          s"graft_jaro_winkler(a, b) takes 2 arguments, got ${es.length}")
-        JaroWinklerSimilarity(es(0), es(1))
-      }),
-    (FunctionIdentifier("graft_rolling_min_hash"),
-      new ExpressionInfo(classOf[RollingMinHash].getName, "graft_rolling_min_hash"),
-      (es: Seq[Expression]) => {
-        require(es.length == 3,
-          s"graft_rolling_min_hash(text, window, base) takes 3 arguments, got ${es.length}")
-        require(es(1).foldable && es(2).foldable,
-          "graft_rolling_min_hash window and base must be literal")
-        RollingMinHash(es(0),
-          es(1).eval().toString.toInt, es(2).eval().toString.toLong)
-      }),
-    (FunctionIdentifier("graft_token_diversity"),
-      new ExpressionInfo(classOf[TokenDiversity].getName, "graft_token_diversity"),
-      (es: Seq[Expression]) => {
-        require(es.length == 1,
-          s"graft_token_diversity(text) takes 1 argument, got ${es.length}")
-        TokenDiversity(es(0))
-      }),
-    (FunctionIdentifier("graft_repetition_stats"),
-      new ExpressionInfo(classOf[RepetitionStats].getName, "graft_repetition_stats"),
-      (es: Seq[Expression]) => {
-        require(es.length == 1,
-          s"graft_repetition_stats(text) takes 1 argument, got ${es.length}")
-        RepetitionStats(es(0))
-      }),
-    (FunctionIdentifier("graft_cdc_boundaries"),
-      new ExpressionInfo(classOf[CdcBoundaries].getName, "graft_cdc_boundaries"),
-      (es: Seq[Expression]) => {
-        require(es.length == 4,
-          s"graft_cdc_boundaries(text, window, base, mask) takes 4 arguments, got ${es.length}")
-        require(es(1).foldable && es(2).foldable && es(3).foldable,
-          "graft_cdc_boundaries window, base, and mask must be literal")
-        CdcBoundaries(es(0), es(1).eval().toString.toInt,
-          es(2).eval().toString.toLong, es(3).eval().toString.toLong)
-      }),
-    (FunctionIdentifier("graft_quality_score"),
-      new ExpressionInfo(classOf[QualityScore].getName, "graft_quality_score"),
-      (es: Seq[Expression]) => {
-        require(es.length == 2,
-          s"graft_quality_score(text, stopwords) takes 2 arguments, got ${es.length}")
-        require(es(1).foldable, "graft_quality_score stopwords must be literal")
-        QualityScore(es(0), es(1).eval().asInstanceOf[ArrayData]
-          .toArray[UTF8String](StringType).toSeq.map(w => if (w == null) null else w.toString))
-      }),
-    (FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[Ngrams].getName, "graft_ngrams"),
-      (es: Seq[Expression]) => {
-        require(es.length == 2,
-          s"graft_ngrams(text, n) takes 2 arguments, got ${es.length}")
-        require(es(1).foldable, "graft_ngrams n must be literal")
-        Ngrams(es(0), es(1).eval().toString.toInt)
-      }),
-    (FunctionIdentifier("graft_shingle_minhash"),
-      new ExpressionInfo(classOf[ShingleMinHash].getName, "graft_shingle_minhash"),
-      (es: Seq[Expression]) => {
-        require(es.length == 5,
-          s"graft_shingle_minhash(text, n, as, bs, p) takes 5 arguments, got ${es.length}")
-        require(es.drop(1).forall(_.foldable),
-          "graft_shingle_minhash n, coefficients and prime must be literal")
-        def longs(e: Expression): Seq[Long] =
-          e.eval().asInstanceOf[ArrayData].toLongArray().toSeq
-        ShingleMinHash(es(0), es(1).eval().toString.toInt, longs(es(2)),
-          longs(es(3)), es(4).eval().toString.toLong)
-      }))
+    register("graft_jaro_winkler", classOf[JaroWinklerSimilarity], "a, b", 2)(a =>
+      JaroWinklerSimilarity(a(0), a(1))),
+    register("graft_rolling_min_hash", classOf[RollingMinHash], "text, window, base", 3)(a =>
+      RollingMinHash(a(0), a.int(1, "window"), a.long(2, "base"))),
+    register("graft_token_diversity", classOf[TokenDiversity], "text", 1)(a =>
+      TokenDiversity(a(0))),
+    register("graft_repetition_stats", classOf[RepetitionStats], "text", 1)(a =>
+      RepetitionStats(a(0))),
+    register("graft_cdc_boundaries", classOf[CdcBoundaries], "text, window, base, mask", 4)(a =>
+      CdcBoundaries(a(0), a.int(1, "window"), a.long(2, "base"), a.long(3, "mask"))),
+    register("graft_quality_score", classOf[QualityScore], "text, stopwords", 2)(a =>
+      QualityScore(a(0), a.strings(1, "stopwords"))),
+    register("graft_ngrams", classOf[Ngrams], "text, n", 2)(a => Ngrams(a(0), a.int(1, "n"))),
+    register("graft_shingle_minhash", classOf[ShingleMinHash], "text, n, as, bs, p", 5) { a =>
+      val (as, bs, p) = a.affineFamily(2)
+      ShingleMinHash(a(0), a.int(1, "n"), as, bs, p)
+    })
 
-  /** Requires a session built with [[graft.GraftExtensions]]. */
-  def rollingMinHash(text: org.apache.spark.sql.Column, w: Int,
-      base: Long): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{call_function, lit}
+  // The Column forms below require a session built with `graft.GraftExtensions`.
+
+  def rollingMinHash(text: Column, w: Int, base: Long): Column =
     call_function("graft_rolling_min_hash", text, lit(w), lit(base))
-  }
 
-  /** Requires a session built with [[graft.GraftExtensions]]. */
-  def tokenDiversity(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("graft_token_diversity", text)
-  }
+  def tokenDiversity(text: Column): Column = call_function("graft_token_diversity", text)
 
-  /** Requires a session built with [[graft.GraftExtensions]]. */
-  def jaroWinkler(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("graft_jaro_winkler", a, b)
-  }
+  def jaroWinkler(a: Column, b: Column): Column = call_function("graft_jaro_winkler", a, b)
 
-  /** Requires a session built with [[graft.GraftExtensions]]. */
-  def repetitionStats(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("graft_repetition_stats", text)
-  }
+  def repetitionStats(text: Column): Column = call_function("graft_repetition_stats", text)
 
-  /** Requires a session built with [[graft.GraftExtensions]]. */
-  def cdcBoundaries(text: org.apache.spark.sql.Column, w: Int, base: Long,
-      mask: Long): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{call_function, lit}
+  def cdcBoundaries(text: Column, w: Int, base: Long, mask: Long): Column =
     call_function("graft_cdc_boundaries", text, lit(w), lit(base), lit(mask))
-  }
 
-  /** Requires a session built with [[graft.GraftExtensions]]. */
-  def qualityScore(text: org.apache.spark.sql.Column,
-      stopwords: Seq[String]): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{call_function, lit}
+  def qualityScore(text: Column, stopwords: Seq[String]): Column =
     call_function("graft_quality_score", text, lit(stopwords.toArray))
-  }
 
-  /** Requires a session built with [[graft.GraftExtensions]]. */
-  def ngrams(text: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{call_function, lit}
-    call_function("graft_ngrams", text, lit(n))
-  }
+  def ngrams(text: Column, n: Int): Column = call_function("graft_ngrams", text, lit(n))
 
-  /** Requires a session built with [[graft.GraftExtensions]]. */
-  def shingleMinhash(text: org.apache.spark.sql.Column, n: Int, as: Seq[Long],
-      bs: Seq[Long], prime: Long): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{call_function, lit}
-    call_function("graft_shingle_minhash", text, lit(n), lit(as.toArray),
-      lit(bs.toArray), lit(prime))
-  }
+  def shingleMinhash(text: Column, n: Int, as: Seq[Long], bs: Seq[Long], prime: Long): Column =
+    call_function("graft_shingle_minhash", text, lit(n), lit(as.toArray), lit(bs.toArray),
+      lit(prime))
 
   /** The identical per-window polynomial-and-mask cut rule as ANSI SQL
     * (1-based positions; equals the expression's byte arithmetic on

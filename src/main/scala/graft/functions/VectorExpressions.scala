@@ -2,165 +2,89 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 
-/** Native Catalyst expressions for the hot vector kernels.
+/** The vector kernels behind the `graft_*` vector expressions, one
+  * method per algorithm. Each expression's interpreted `eval` and its
+  * generated code call the same method here (the generated code as a
+  * static call from inside whole-stage codegen), so the two evaluation
+  * paths run one body and cannot diverge.
   *
   * The higher-order-function forms in `llmops/VectorMath` (`aggregate` +
-  * `zip_with`) are semantically right but run as CodegenFallback — every
-  * element costs an interpreted lambda dispatch plus an intermediate
-  * product array. On all-pairs/bucketed similarity joins that cost is per
-  * PAIR, which makes it the dominant CPU of the whole job. These
-  * expressions generate a primitive `double` loop directly over the two
-  * `ArrayData` (no boxing, no intermediate array) inside whole-stage
-  * codegen.
-  *
-  * Accumulation order is the same sequential left fold, so results are
-  * bit-identical to the HOF forms and to the DuckDB
-  * `list_reduce(list_transform(...))` oracles.
-  *
-  * Inputs are `array<double>` (embedding vectors; other numeric array
-  * types are implicitly cast, as built-ins do). Null ARRAYS null out via
-  * `nullSafeEval`/`nullSafeCodeGen`; length-mismatched pairs and pairs
-  * with any null ELEMENT return NULL — the same results the `zip_with`
-  * null-padding fold produces.
+  * `zip_with`) run as CodegenFallback: every element costs an interpreted
+  * lambda dispatch plus an intermediate product array, and on
+  * all-pairs/bucketed similarity joins that cost is per PAIR. These
+  * kernels are primitive loops over `ArrayData` (no boxing, no
+  * intermediate array). Accumulation order is the folds' sequential left
+  * fold, so results are bit-identical to the HOF forms and to the DuckDB
+  * `list_reduce(list_transform(...))` oracles (KernelEquivalenceSpec runs
+  * each expression under codegen and interpreted evaluation against
+  * them).
   */
-abstract class PairwiseFold extends BinaryExpression with ImplicitCastInputTypes {
-  // (type inferred — AbstractDataType is private[sql])
-  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  // nullable even for non-null children: length-mismatched pairs → NULL
-  // (and nullSafeCodeGen only emits a writable isNull slot when nullable)
-  override def nullable: Boolean = true
+object VectorKernels {
 
-  /** Java source for one step given element vars `x`/`y`, accumulating into `s`. */
-  protected def stepCode(x: String, y: String): String
-  protected def step(x: Double, y: Double): Double
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
-    if (xs.numElements() != ys.numElements()) null
-    else {
-      val n = xs.numElements()
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        // a null element would read as garbage through getDouble; the HOF
-        // fold yields NULL for it, so this tier must too
-        if (xs.isNullAt(i) || ys.isNullAt(i)) return null
-        s += step(xs.getDouble(i), ys.getDouble(i))
-        i += 1
-      }
-      s
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-        |if ($a.numElements() != $b.numElements()) {
-        |  ${ev.isNull} = true;
-        |} else {
-        |  int $n = $a.numElements();
-        |  double $s = 0.0;
-        |  for (int $i = 0; $i < $n; $i++) {
-        |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-        |    double $x = $a.getDouble($i);
-        |    double $y = $b.getDouble($i);
-        |    $s += ${stepCode(x, y)};
-        |  }
-        |  if (!${ev.isNull}) { ${ev.value} = $s; }
-        |}
-      """.stripMargin
-    })
-}
-
-/** Σ aᵢ·bᵢ — sequential left fold, bit-identical to the HOF/oracle form. */
-case class DotProduct(left: Expression, right: Expression) extends PairwiseFold {
-  override protected def stepCode(x: String, y: String): String = s"$x * $y"
-  override protected def step(x: Double, y: Double): Double = x * y
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_dot"
-}
-
-/** Σ (aᵢ−bᵢ)² — squared Euclidean distance. */
-case class SquaredDistance(left: Expression, right: Expression) extends PairwiseFold {
-  override protected def stepCode(x: String, y: String): String = s"($x - $y) * ($x - $y)"
-  override protected def step(x: Double, y: Double): Double = (x - y) * (x - y)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_dist_sq"
-}
-
-/** 64-bit SimHash signature from an `array<struct<lo:long,hi:long>>` of
-  * per-token md5 halves (see `graft.llmops.Dedup.tokenHashHalves`): bit b
-  * of the result is set iff Σ_tokens (±1 by bit b of the token hash) > 0.
-  *
-  * The HOF form (`Dedup.simhash64FromHalves`) runs 64 interpreted
-  * `aggregate` folds per document — measured as the dominant cost of the
-  * corpus-scale banded pair search. This expression makes ONE primitive
-  * pass per document inside whole-stage codegen, maintaining all 64 vote
-  * counters in a local int[]. Integer arithmetic only, so results are
-  * exactly identical to the HOF form (and to the DuckDB vote-sign
-  * oracle).
-  *
-  * Null handling matches the fold: a null element / null half votes −1 on
-  * the corresponding bits (the HOF's `when(...).otherwise(-1)` takes the
-  * otherwise branch on null input), and a NULL INPUT ARRAY (null text)
-  * yields signature 0L — the fold's `when(null > 0, ...).otherwise(0L)`
-  * lands every bit in the otherwise branch. So a null-text doc lands in
-  * the same banded-join buckets as a zero-signature doc, as it does
-  * under the fold reference.
-  */
-case class SimHash64(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(ArrayType(StructType(Seq(
-    StructField("lo", LongType), StructField("hi", LongType)))))
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val value = child.eval(input)
-    if (value == null) 0L else nullSafeEval(value)
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val votes = new Array[Int](64)
+  /** True when `xs` and `ys` have one length and no null element: the
+    * pairs [[dot]] and [[distSq]] are defined on. The `zip_with` fold
+    * gives NULL for the rest (null padding, or a null element). */
+  def pairable(xs: ArrayData, ys: ArrayData): Boolean = {
+    val n = xs.numElements()
+    if (n != ys.numElements()) return false
     var i = 0
     while (i < n) {
-      if (arr.isNullAt(i)) {
-        var b = 0; while (b < 64) { votes(b) -= 1; b += 1 }
+      if (xs.isNullAt(i) || ys.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** Σ xᵢ·yᵢ over [[pairable]] arrays, a left fold from 0.0. */
+  def dot(xs: ArrayData, ys: ArrayData): Double = {
+    val n = xs.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += xs.getDouble(i) * ys.getDouble(i); i += 1 }
+    s
+  }
+
+  /** Σ (xᵢ−yᵢ)² over [[pairable]] arrays, a left fold from 0.0. */
+  def distSq(xs: ArrayData, ys: ArrayData): Double = {
+    val n = xs.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      val d = xs.getDouble(i) - ys.getDouble(i)
+      s += d * d
+      i += 1
+    }
+    s
+  }
+
+  /** 64-bit SimHash of per-token md5 halves (`struct<lo, hi>`): bit b is
+    * set iff Σ_tokens (±1 by bit b of the token hash) > 0, all 64 vote
+    * counters kept in one int[]. A null element, or a null half, votes −1
+    * on its bits. */
+  def simhash64(arr: ArrayData): Long = {
+    val n = arr.numElements()
+    val votes = new Array[Int](64)
+    def vote(half: org.apache.spark.sql.catalyst.InternalRow, field: Int): Unit = {
+      val off = field * 32
+      if (half == null || half.isNullAt(field)) {
+        var b = 0; while (b < 32) { votes(off + b) -= 1; b += 1 }
       } else {
-        val s = arr.getStruct(i, 2)
-        if (s.isNullAt(0)) {
-          var b = 0; while (b < 32) { votes(b) -= 1; b += 1 }
-        } else {
-          val lo = s.getLong(0)
-          var b = 0
-          while (b < 32) { votes(b) += (if (((lo >> b) & 1L) == 1L) 1 else -1); b += 1 }
-        }
-        if (s.isNullAt(1)) {
-          var b = 32; while (b < 64) { votes(b) -= 1; b += 1 }
-        } else {
-          val hi = s.getLong(1)
-          var b = 32
-          while (b < 64) { votes(b) += (if (((hi >> (b - 32)) & 1L) == 1L) 1 else -1); b += 1 }
-        }
+        val x = half.getLong(field)
+        var b = 0
+        while (b < 32) { votes(off + b) += (if (((x >> b) & 1L) == 1L) 1 else -1); b += 1 }
       }
+    }
+    var i = 0
+    while (i < n) {
+      val s = if (arr.isNullAt(i)) null else arr.getStruct(i, 2)
+      vote(s, 0)
+      vote(s, 1)
       i += 1
     }
     var sig = 0L
@@ -169,95 +93,11 @@ case class SimHash64(child: Expression) extends UnaryExpression with ImplicitCas
     sig
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // hand-rolled null guard (not nullSafeCodeGen): a null input array
-    // must produce 0L, not a null result, to stay bit-identical with the
-    // HOF fold
-    val childGen = child.genCode(ctx)
-    val arr = childGen.value
-    val i = ctx.freshName("i")
-    val n = ctx.freshName("n")
-    val b = ctx.freshName("b")
-    val votes = ctx.freshName("votes")
-    val s = ctx.freshName("s")
-    val lo = ctx.freshName("lo")
-    val hi = ctx.freshName("hi")
-    val row = "org.apache.spark.sql.catalyst.InternalRow"
-    val compute =
-      s"""
-        |int $n = $arr.numElements();
-        |int[] $votes = new int[64];
-        |for (int $i = 0; $i < $n; $i++) {
-        |  if ($arr.isNullAt($i)) {
-        |    for (int $b = 0; $b < 64; $b++) $votes[$b]--;
-        |    continue;
-        |  }
-        |  $row $s = $arr.getStruct($i, 2);
-        |  if ($s.isNullAt(0)) {
-        |    for (int $b = 0; $b < 32; $b++) $votes[$b]--;
-        |  } else {
-        |    long $lo = $s.getLong(0);
-        |    for (int $b = 0; $b < 32; $b++)
-        |      $votes[$b] += ((($lo >> $b) & 1L) == 1L) ? 1 : -1;
-        |  }
-        |  if ($s.isNullAt(1)) {
-        |    for (int $b = 32; $b < 64; $b++) $votes[$b]--;
-        |  } else {
-        |    long $hi = $s.getLong(1);
-        |    for (int $b = 32; $b < 64; $b++)
-        |      $votes[$b] += ((($hi >> ($b - 32)) & 1L) == 1L) ? 1 : -1;
-        |  }
-        |}
-        |for (int $b = 0; $b < 64; $b++) if ($votes[$b] > 0) ${ev.value} |= (1L << $b);
-      """.stripMargin
-    val guarded =
-      if (child.nullable) s"if (!${childGen.isNull}) {\n$compute\n}" else compute
-    ev.copy(
-      code = code"""
-        |${childGen.code}
-        |long ${ev.value} = 0L;
-        |$guarded
-      """.stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_simhash64"
-}
-
-/** MinHash signature from an `array<long>` of per-shingle base hash
-  * values: component j of the output is min over elements h of
-  * (h·a_j + b_j) mod prime, with the empty-array identity `prime` in
-  * every slot (an upper bound for all permutation values — the same
-  * identity the HOF fold uses).
-  *
-  * The HOF form (`Dedup.minhashSignatureArrayFold`'s `aggregate` +
-  * `zip_with`) allocates a numHashes-element array and dispatches 3·k
-  * interpreted lambdas PER SHINGLE; this expression keeps the running
-  * minima in one primitive long[] inside whole-stage codegen. Integer
-  * arithmetic only — results are exactly identical to the fold (and to
-  * the DuckDB affine-family oracle).
-  *
-  * Coefficients are baked into the node (extracted from foldable literal
-  * arguments at resolution), so two scans with the same family
-  * canonicalize equal and exchange reuse still applies. Null ELEMENTS
-  * are skipped — `least(m, null)` keeps m in the fold — and a null input
-  * array yields NULL.
-  */
-case class MinHashSig(child: Expression, as: Seq[Long], bs: Seq[Long], prime: Long)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(as.nonEmpty && as.length == bs.length,
-    s"need matching non-empty coefficient vectors (got ${as.length}, ${bs.length})")
-  override def inputTypes = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  private lazy val aArr: Array[Long] = as.toArray
-  private lazy val bArr: Array[Long] = bs.toArray
-
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
-    val k = aArr.length
+  /** MinHash signature of base hashes `hs`: component j is the min over
+    * non-null h of (h·as(j) + bs(j)) mod prime, `prime` where there is
+    * none (the fold's identity). The running minima live in one long[]. */
+  def minhashSig(hs: ArrayData, as: Array[Long], bs: Array[Long], prime: Long): ArrayData = {
+    val k = as.length
     val acc = Array.fill(k)(prime)
     val n = hs.numElements()
     var i = 0
@@ -266,165 +106,51 @@ case class MinHashSig(child: Expression, as: Seq[Long], bs: Seq[Long], prime: Lo
         val h = hs.getLong(i)
         var j = 0
         while (j < k) {
-          val v = (h * aArr(j) + bArr(j)) % prime
+          val v = (h * as(j) + bs(j)) % prime
           if (v < acc(j)) acc(j) = v
           j += 1
         }
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(acc)
+    UnsafeArrayData.fromPrimitiveArray(acc)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, hs => {
-      val aRef = ctx.addReferenceObj("minhashA", aArr, "long[]")
-      val bRef = ctx.addReferenceObj("minhashB", bArr, "long[]")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val acc = ctx.freshName("acc")
-      val k = aArr.length
-      s"""
-        |long[] $acc = new long[$k];
-        |java.util.Arrays.fill($acc, ${prime}L);
-        |int $n = $hs.numElements();
-        |for (int $i = 0; $i < $n; $i++) {
-        |  if ($hs.isNullAt($i)) continue;
-        |  long $h = $hs.getLong($i);
-        |  for (int $j = 0; $j < $k; $j++) {
-        |    long $v = ($h * $aRef[$j] + $bRef[$j]) % ${prime}L;
-        |    if ($v < $acc[$j]) $acc[$j] = $v;
-        |  }
-        |}
-        |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($acc);
-      """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_minhash_sig"
-}
-
-/** All `outDim` components of a ±1-sign Johnson–Lindenstrauss projection
-  * in ONE fused loop. The composed form — an `array(...)` of `outDim`
-  * separate dot calls — recomputes the float→double cast per component
-  * and, worse, inlines outDim loop bodies (twice, once more inside the
-  * `size(...) > 0` filter a downstream explode infers) into a single
-  * generated method that blows past the JIT's HugeMethodLimit, dropping
-  * the whole stage to interpreted bytecode (measured 38× slower at the
-  * 64× stress fixture). This node is one modest method: cast once, read
-  * each input element once, accumulate all components in a primitive
-  * `double[]`.
-  *
-  * Per-component accumulation order is ascending element index from a
-  * 0.0 seed — bit-identical to the `dot` fold and the DuckDB
-  * `list_reduce` oracle. Null input array → NULL; a null ELEMENT or a
-  * length ≠ the sign rows' width → an all-null component array, exactly
-  * what the composed per-component dots produce (each dot NULLs out).
-  */
-case class JlProject(child: Expression, signs: Seq[Seq[Double]])
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(signs.nonEmpty && signs.forall(_.length == signs.head.length),
-    "need a non-empty rectangular sign matrix")
-  override def inputTypes = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def nullable: Boolean = true
-
-  private lazy val sArr: Array[Array[Double]] = signs.map(_.toArray).toArray
-  private def k = signs.length
-  private def dim = signs.head.length
-
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
+  /** The ±1-sign projection of `a` onto every row of `signs` in one pass:
+    * component j is Σᵢ aᵢ·signs(j)(i), a left fold from 0.0. A null
+    * element, or a length other than the rows' width, gives an array of
+    * NULLs (what one `dot` per row gives). */
+  def jlProject(a: ArrayData, signs: Array[Array[Double]]): ArrayData = {
     val n = a.numElements()
-    var bad = n != dim
+    val k = signs.length
+    var bad = n != signs(0).length
     var i = 0
-    while (!bad && i < n) { if (a.isNullAt(i)) bad = true; i += 1 }
-    if (bad)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        new Array[Any](k))
+    while (!bad && i < n) { bad = a.isNullAt(i); i += 1 }
+    if (bad) return new GenericArrayData(new Array[Any](k))
     val acc = new Array[Double](k)
     i = 0
     while (i < n) {
       val v = a.getDouble(i)
       var j = 0
-      while (j < k) { acc(j) += v * sArr(j)(i); j += 1 }
+      while (j < k) { acc(j) += v * signs(j)(i); j += 1 }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(acc)
+    UnsafeArrayData.fromPrimitiveArray(acc)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val sRef = ctx.addReferenceObj("jlSigns", sArr, "double[][]")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val v = ctx.freshName("v")
-      val acc = ctx.freshName("acc")
-      val bad = ctx.freshName("bad")
-      s"""
-        |int $n = $in.numElements();
-        |boolean $bad = ($n != $dim);
-        |for (int $i = 0; !$bad && $i < $n; $i++) {
-        |  if ($in.isNullAt($i)) $bad = true;
-        |}
-        |if ($bad) {
-        |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        |    new Object[$k]);
-        |} else {
-        |  double[] $acc = new double[$k];
-        |  for (int $i = 0; $i < $n; $i++) {
-        |    double $v = $in.getDouble($i);
-        |    for (int $j = 0; $j < $k; $j++) {
-        |      $acc[$j] += $v * $sRef[$j][$i];
-        |    }
-        |  }
-        |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($acc);
-        |}
-      """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_jl_project"
-}
-
-/** argmin-L2 code position of a (sub)vector against a position-ordered
-  * codebook (`array<array<double>>`): returns the 0-based index of the
-  * nearest centroid, ties broken toward the lowest index — exactly the
-  * `array_min(transform(codes, (c, i) => struct(distSq, i)))` HOF form
-  * PQ encoding uses, which runs every distance as an interpreted
-  * `aggregate`+`zip_with` fold (measured as the dominant cost of the
-  * corpus-scale index build: the encode pass evaluates ks·dim lambda
-  * steps per subspace per vector). This expression runs the whole argmin
-  * as one primitive nested loop inside whole-stage codegen.
-  *
-  * Null/degenerate handling: NULL vector or a vector with a null element
-  * → NULL; a codebook ENTRY that is null, length-mismatched, or has a
-  * null element is skipped (never the argmin); no valid entry → NULL.
-  * For well-formed codebooks (what [[graft.llmops.ProductQuantization]]
-  * builds) results are identical to the HOF form — pinned by a
-  * bit-identity spec. */
-case class PqNearestCode(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(ArrayType(DoubleType)))
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(v: Any, cs: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val books = cs.asInstanceOf[ArrayData]
+  /** 0-based position of the codebook entry nearest `a` in squared L2,
+    * ties to the lowest position. An entry that is null, of another
+    * length, or has a null element is skipped, and one at NaN or +∞
+    * distance never wins. −1 when `a` has a null element or no entry
+    * qualifies. */
+  def pqCode(a: ArrayData, books: ArrayData): Int = {
     val n = a.numElements()
     var i = 0
-    while (i < n) { if (a.isNullAt(i)) return null; i += 1 }
+    while (i < n) { if (a.isNullAt(i)) return -1; i += 1 }
     var best = Double.PositiveInfinity
     var bestP = -1
-    var p = 0
     val k = books.numElements()
+    var p = 0
     while (p < k) {
       if (!books.isNullAt(p)) {
         val c = books.getArray(p)
@@ -441,48 +167,207 @@ case class PqNearestCode(left: Expression, right: Expression)
       }
       p += 1
     }
-    if (bestP < 0) null else bestP
+    bestP
+  }
+}
+
+/** [[VectorKernels.dot]] / [[VectorKernels.distSq]] on two `array<double>`
+  * (other numeric array types are implicitly cast, as built-ins do).
+  * Null arrays null out via `nullSafeEval`/`nullSafeCodeGen`;
+  * length-mismatched pairs and pairs with any null ELEMENT return NULL,
+  * as the `zip_with` null-padding fold does. */
+abstract class PairwiseFold extends BinaryExpression with ImplicitCastInputTypes {
+  // (type inferred — AbstractDataType is private[sql])
+  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
+  override def dataType: DataType = DoubleType
+  // nullable even for non-null children: length-mismatched pairs → NULL
+  // (and nullSafeCodeGen only emits a writable isNull slot when nullable)
+  override def nullable: Boolean = true
+
+  /** The [[VectorKernels]] fold this node runs, by name and as a call. */
+  protected def kernel: String
+  protected def fold(xs: ArrayData, ys: ArrayData): Double
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val xs = a.asInstanceOf[ArrayData]
+    val ys = b.asInstanceOf[ArrayData]
+    if (VectorKernels.pairable(xs, ys)) fold(xs, ys) else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, bs) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      val ok = ctx.freshName("ok")
-      val best = ctx.freshName("best")
-      val bestP = ctx.freshName("bestP")
-      val c = ctx.freshName("c")
-      s"""
-        |int $n = $a.numElements();
-        |for (int $i = 0; $i < $n; $i++) {
-        |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-        |}
-        |if (!${ev.isNull}) {
-        |  double $best = Double.POSITIVE_INFINITY;
-        |  int $bestP = -1;
-        |  int $k = $bs.numElements();
-        |  for (int $p = 0; $p < $k; $p++) {
-        |    if ($bs.isNullAt($p)) continue;
-        |    org.apache.spark.sql.catalyst.util.ArrayData $c = $bs.getArray($p);
-        |    if ($c.numElements() != $n) continue;
-        |    double $d = 0.0;
-        |    boolean $ok = true;
-        |    for (int $j = 0; $j < $n; $j++) {
-        |      if ($c.isNullAt($j)) { $ok = false; break; }
-        |      double $t = $a.getDouble($j) - $c.getDouble($j);
-        |      $d += $t * $t;
-        |    }
-        |    if ($ok && $d < $best) { $best = $d; $bestP = $p; }
-        |  }
-        |  if ($bestP < 0) { ${ev.isNull} = true; } else { ${ev.value} = $bestP; }
-        |}
-      """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.isNull} = !graft.functions.VectorKernels.pairable($a, $b);
+         |if (!${ev.isNull}) ${ev.value} = graft.functions.VectorKernels.$kernel($a, $b);
+       """.stripMargin)
+}
+
+/** Σ aᵢ·bᵢ — sequential left fold, bit-identical to the HOF/oracle form. */
+case class DotProduct(left: Expression, right: Expression) extends PairwiseFold {
+  override protected def kernel: String = "dot"
+  override protected def fold(xs: ArrayData, ys: ArrayData): Double = VectorKernels.dot(xs, ys)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+  override def prettyName: String = "graft_dot"
+}
+
+/** Σ (aᵢ−bᵢ)² — squared Euclidean distance. */
+case class SquaredDistance(left: Expression, right: Expression) extends PairwiseFold {
+  override protected def kernel: String = "distSq"
+  override protected def fold(xs: ArrayData, ys: ArrayData): Double = VectorKernels.distSq(xs, ys)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+  override def prettyName: String = "graft_dist_sq"
+}
+
+/** `graft_simhash64(halves)`: the 64-bit SimHash signature
+  * ([[VectorKernels.simhash64]]) of an `array<struct<lo:long,hi:long>>`
+  * of per-token md5 halves (see `graft.llmops.Dedup.tokenHashHalves`).
+  *
+  * The HOF form runs 64 interpreted `aggregate` folds per document,
+  * measured as the dominant cost of the corpus-scale banded pair search;
+  * the kernel makes ONE primitive pass. Integer arithmetic only, so
+  * results are exactly the fold's (and the DuckDB vote-sign oracle's).
+  *
+  * A NULL INPUT ARRAY (null text) yields signature 0L, as the fold's
+  * `when(null > 0, ...).otherwise(0L)` does for every bit, so a null-text
+  * doc lands in the same banded-join buckets as a zero-signature doc.
+  */
+case class SimHash64(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
+  override def inputTypes = Seq(ArrayType(StructType(Seq(
+    StructField("lo", LongType), StructField("hi", LongType)))))
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val value = child.eval(input)
+    if (value == null) 0L else VectorKernels.simhash64(value.asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |long ${ev.value} = ${c.isNull} ? 0L : graft.functions.VectorKernels.simhash64(${c.value});
+    """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+  override def prettyName: String = "graft_simhash64"
+}
+
+/** `graft_minhash_sig(hashes, as, bs, prime)`: the MinHash signature
+  * ([[VectorKernels.minhashSig]]) of an `array<long>` of per-shingle base
+  * hashes, with the empty-array identity `prime` in every slot.
+  *
+  * The HOF form (the `aggregate` + `zip_with` fold) allocates a
+  * numHashes-element array and dispatches 3·k interpreted lambdas PER
+  * SHINGLE; the kernel keeps the running minima in one primitive long[].
+  * Integer arithmetic only: results are exactly the fold's (and the
+  * DuckDB affine-family oracle's).
+  *
+  * Coefficients are baked into the node (read from literal arguments at
+  * resolution) and reach the generated code as reference objects, so two
+  * scans with the same family canonicalize equal and exchange reuse still
+  * applies. Null ELEMENTS are skipped — `least(m, null)` keeps m in the
+  * fold — and a null input array yields NULL.
+  */
+case class MinHashSig(child: Expression, as: Seq[Long], bs: Seq[Long], prime: Long)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  require(as.nonEmpty && as.length == bs.length,
+    s"need matching non-empty coefficient vectors (got ${as.length}, ${bs.length})")
+  override def inputTypes = Seq(ArrayType(LongType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  private lazy val aArr: Array[Long] = as.toArray
+  private lazy val bArr: Array[Long] = bs.toArray
+
+  override def nullSafeEval(input: Any): Any =
+    VectorKernels.minhashSig(input.asInstanceOf[ArrayData], aArr, bArr, prime)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val a = ctx.addReferenceObj("minhashA", aArr, "long[]")
+    val b = ctx.addReferenceObj("minhashB", bArr, "long[]")
+    defineCodeGen(ctx, ev, hs =>
+      s"graft.functions.VectorKernels.minhashSig($hs, $a, $b, ${prime}L)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+  override def prettyName: String = "graft_minhash_sig"
+}
+
+/** `graft_jl_project(vec, seed, outDim, dim)`: all `outDim` components of
+  * a ±1-sign Johnson–Lindenstrauss projection in ONE fused loop
+  * ([[VectorKernels.jlProject]]). The composed form — an `array(...)` of
+  * `outDim` separate dot calls — recomputes the float→double cast per
+  * component and, worse, inlines outDim loop bodies (twice, once more
+  * inside the `size(...) > 0` filter a downstream explode infers) into a
+  * single generated method that blows past the JIT's HugeMethodLimit,
+  * dropping the whole stage to interpreted bytecode (measured 38× slower
+  * at the 64× stress fixture). Here the generated code is one static call
+  * with the sign matrix passed as a reference object.
+  *
+  * Per-component accumulation order is ascending element index from a
+  * 0.0 seed — bit-identical to the `dot` fold and the DuckDB
+  * `list_reduce` oracle. Null input array → NULL; a null ELEMENT or a
+  * length ≠ the sign rows' width → an all-null component array, exactly
+  * what the composed per-component dots produce (each dot NULLs out).
+  */
+case class JlProject(child: Expression, signs: Seq[Seq[Double]])
+    extends UnaryExpression with ImplicitCastInputTypes {
+  require(signs.nonEmpty && signs.forall(_.length == signs.head.length),
+    "need a non-empty rectangular sign matrix")
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def nullable: Boolean = true
+
+  private lazy val sArr: Array[Array[Double]] = signs.map(_.toArray).toArray
+
+  override def nullSafeEval(input: Any): Any =
+    VectorKernels.jlProject(input.asInstanceOf[ArrayData], sArr)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val signsRef = ctx.addReferenceObj("jlSigns", sArr, "double[][]")
+    defineCodeGen(ctx, ev, v => s"graft.functions.VectorKernels.jlProject($v, $signsRef)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+  override def prettyName: String = "graft_jl_project"
+}
+
+/** `graft_pq_code(vec, codebook)`: argmin-L2 code position of a
+  * (sub)vector against a position-ordered codebook
+  * (`array<array<double>>`), ties to the lowest index
+  * ([[VectorKernels.pqCode]]) — the
+  * `array_min(transform(codes, (c, i) => struct(distSq, i)))` HOF form PQ
+  * encoding uses, which runs every distance as an interpreted
+  * `aggregate`+`zip_with` fold (measured as the dominant cost of the
+  * corpus-scale index build).
+  *
+  * NULL vector, a vector with a null element, or no valid codebook entry
+  * → NULL. For well-formed codebooks (what
+  * [[graft.llmops.ProductQuantization]] builds) results are identical to
+  * the HOF form — pinned by a bit-identity spec. */
+case class PqNearestCode(left: Expression, right: Expression)
+    extends BinaryExpression with ImplicitCastInputTypes {
+  override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(ArrayType(DoubleType)))
+  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(v: Any, cs: Any): Any = {
+    val p = VectorKernels.pqCode(v.asInstanceOf[ArrayData], cs.asInstanceOf[ArrayData])
+    if (p < 0) null else p
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (v, cs) =>
+      s"""${ev.value} = graft.functions.VectorKernels.pqCode($v, $cs);
+         |${ev.isNull} = ${ev.value} < 0;
+       """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -500,61 +385,23 @@ case class PqNearestCode(left: Expression, right: Expression)
   * fails naming the unresolved `graft_*` routine.
   */
 object VectorExpressions {
-  import org.apache.spark.sql.functions.call_function
-
-  // Every builder checks arity first: without it a wrong argument count
-  // surfaces as IndexOutOfBoundsException instead of an analysis error
-  // naming the signature.
-  private def arity(name: String, sig: String, n: Int)(es: Seq[Expression]): Unit =
-    require(es.length == n, s"$name($sig) takes $n arguments, got ${es.length}")
+  import org.apache.spark.sql.functions.{call_function, lit}
+  import KernelArgs.register
 
   val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (es: Seq[Expression]) => {
-        arity("graft_dot", "a, b", 2)(es)
-        DotProduct(es(0), es(1))
-      }),
-    (FunctionIdentifier("graft_dist_sq"),
-      new ExpressionInfo(classOf[SquaredDistance].getName, "graft_dist_sq"),
-      (es: Seq[Expression]) => {
-        arity("graft_dist_sq", "a, b", 2)(es)
-        SquaredDistance(es(0), es(1))
-      }),
-    (FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (es: Seq[Expression]) => {
-        arity("graft_simhash64", "halves", 1)(es)
-        SimHash64(es(0))
-      }),
-    (FunctionIdentifier("graft_pq_code"),
-      new ExpressionInfo(classOf[PqNearestCode].getName, "graft_pq_code"),
-      (es: Seq[Expression]) => {
-        arity("graft_pq_code", "vec, centroids", 2)(es)
-        PqNearestCode(es(0), es(1))
-      }),
-    (FunctionIdentifier("graft_jl_project"),
-      new ExpressionInfo(classOf[JlProject].getName, "graft_jl_project"),
-      (es: Seq[Expression]) => {
-        arity("graft_jl_project", "vec, seed, outDim, dim", 4)(es)
-        require(es.drop(1).forall(_.foldable),
-          "graft_jl_project seed/outDim/dim must be literal")
-        JlProject(es(0), jlSigns(es(1).eval().toString,
-          es(2).eval().asInstanceOf[Int],
-          es(3).eval().asInstanceOf[Int]).map(_.toSeq).toSeq)
-      }),
-    (FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      (es: Seq[Expression]) => {
-        arity("graft_minhash_sig", "hashes, as, bs, prime", 4)(es)
-        def longs(e: Expression): Seq[Long] = {
-          require(e.foldable, "graft_minhash_sig coefficients must be literal")
-          e.eval().asInstanceOf[ArrayData].toLongArray().toSeq
-        }
-        require(es(3).foldable, "graft_minhash_sig prime must be literal")
-        MinHashSig(es(0), longs(es(1)), longs(es(2)),
-          es(3).eval().asInstanceOf[Long])
-      }))
+    register("graft_dot", classOf[DotProduct], "a, b", 2)(a => DotProduct(a(0), a(1))),
+    register("graft_dist_sq", classOf[SquaredDistance], "a, b", 2)(a =>
+      SquaredDistance(a(0), a(1))),
+    register("graft_simhash64", classOf[SimHash64], "halves", 1)(a => SimHash64(a(0))),
+    register("graft_pq_code", classOf[PqNearestCode], "vec, centroids", 2)(a =>
+      PqNearestCode(a(0), a(1))),
+    register("graft_jl_project", classOf[JlProject], "vec, seed, outDim, dim", 4)(a =>
+      JlProject(a(0), jlSigns(a.string(1, "seed"), a.int(2, "outDim"), a.int(3, "dim"))
+        .map(_.toSeq).toSeq)),
+    register("graft_minhash_sig", classOf[MinHashSig], "hashes, as, bs, prime", 4) { a =>
+      val (as, bs, p) = a.affineFamily(1)
+      MinHashSig(a(0), as, bs, p)
+    })
 
   /** ±1 sign matrix for [[JlProject]]: signs(j)(i) = +1 when the first
     * hex nibble of md5("seed:j:i") is odd, else −1 — regenerable from the
@@ -582,14 +429,9 @@ object VectorExpressions {
   def pqCode(vec: Column, centroids: Column): Column =
     call_function("graft_pq_code", vec, centroids)
 
-  def minhashSig(hashes: Column, as: Seq[Long], bs: Seq[Long], prime: Long): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function("graft_minhash_sig", hashes,
-      lit(as.toArray), lit(bs.toArray), lit(prime))
-  }
+  def minhashSig(hashes: Column, as: Seq[Long], bs: Seq[Long], prime: Long): Column =
+    call_function("graft_minhash_sig", hashes, lit(as.toArray), lit(bs.toArray), lit(prime))
 
-  def jlProject(vec: Column, seed: String, outDim: Int, dim: Int): Column = {
-    import org.apache.spark.sql.functions.lit
+  def jlProject(vec: Column, seed: String, outDim: Int, dim: Int): Column =
     call_function("graft_jl_project", vec, lit(seed), lit(outDim), lit(dim))
-  }
 }

@@ -172,8 +172,11 @@ object Dedup {
     * over the shingle hashes that maintains all `numHashes` running
     * minima at once. Component j is the min over the document's
     * shingles of `(base * minhashA(j) + minhashB(j)) % p` — identical to
-    * the fold [[minhashSignatureArrayFold]] and to the DuckDB oracle's
-    * `mh_j` columns. Requires a [[graft.GraftExtensions]] session.
+    * the `aggregate` + `zip_with` fold (`KernelEquivalenceSpec.minhashFold`)
+    * and to the DuckDB oracle's `mh_j` columns. An empty shingle set keeps
+    * the identity signature (p in every slot), so callers drop empty sets
+    * first (see [[minhashNearDups]]). Requires a [[graft.GraftExtensions]]
+    * session.
     */
   def minhashSignatureArray(sets: DataFrame, idCol: String,
       numHashes: Int): DataFrame = {
@@ -182,27 +185,6 @@ object Dedup {
     val bs = (0 until numHashes).map(minhashB)
     sets.select(col(idCol),
       graft.functions.VectorExpressions.minhashSig(hb, as, bs, MinhashPrime).as("sig"))
-  }
-
-  /** The HOF-fold form (`aggregate` + `zip_with` against literal
-    * coefficient arrays) — the reference the native kernel is tested
-    * against. Integer arithmetic both ways, results exactly identical. */
-  private[graft] def minhashSignatureArrayFold(sets: DataFrame, idCol: String,
-      numHashes: Int): DataFrame = {
-    val coeffs = array((0 until numHashes).map { j =>
-      struct(lit(minhashA(j)).as("a"), lit(minhashB(j)).as("b"))
-    }: _*)
-    // p is an upper bound for every permutation value, so it is the
-    // fold's identity. Callers must drop empty shingle sets first (see
-    // minhashNearDups) — an empty set keeps the identity signature, and a
-    // population of them would share one band bucket.
-    val zero = array(Seq.fill(numHashes)(lit(MinhashPrime)): _*)
-    val hb = transform(col("shingles"), s => minhashBase(s))
-    sets.select(col(idCol),
-      aggregate(hb, zero, (acc, h) =>
-        zip_with(acc, coeffs, (m, ab) =>
-          least(m, (h * ab.getField("a") + ab.getField("b")) % MinhashPrime)))
-        .as("sig"))
   }
 
   /** (band, band_sig, id) rows from an array-signature table — the
@@ -1082,20 +1064,6 @@ object Dedup {
       struct(conv(substring(h, 1, 8), 16, 10).cast("long").as("lo"),
         conv(substring(h, 9, 8), 16, 10).cast("long").as("hi"))
     })
-
-  /** Signature as 64 interpreted bit-vote folds over a [[tokenHashHalves]]
-    * column — the reference the native [[graft.functions.SimHash64]]
-    * kernel is tested against. */
-  def simhash64FromHalves(halves: Column): Column = {
-    val bits = (0 until 64).map { b =>
-      val (field, shift) = if (b < 32) ("lo", b) else ("hi", b - 32)
-      val votes = aggregate(halves, lit(0), (acc, s) =>
-        acc + when(shiftright(s.getField(field), shift)
-          .bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
-      when(votes > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    bits.reduce(_ bitwiseOR _)
-  }
 
   /** Per-document signatures with the token-hash column hoisted so it is
     * evaluated once per row, not once per bit, then signed by the native

@@ -105,7 +105,8 @@ object ProductQuantization {
       graft.functions.VectorExpressions.pqCode)
 
   /** [[pqEncode]] on the HOF fold — the reference the native kernel is
-    * tested against (same pattern as minhashSignatureArrayFold). */
+    * tested against. It stays here rather than in the tests because it
+    * runs the private [[encodeImpl]]. */
   private[graft] def pqEncodeFold(df: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, m: Int, dim: Int): DataFrame =
     encodeImpl(df, idCol, vecCol, codebooks, m, dim, Nil, hofArgmin)

@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   *  1. unrolled `element_at` sums — beats everything for small known dims
   *     (3-D nav points), but generated methods outgrow the JIT above
   *     [[unrollLimit]].
-  *  2. native Catalyst expressions with `doGenCode`
-  *     ([[graft.functions.VectorExpressions]]) — a primitive double loop
-  *     inside whole-stage codegen; used for wide/unknown dims. Requires
+  *  2. native Catalyst expressions ([[graft.functions.VectorExpressions]])
+  *     — one primitive double loop in [[graft.functions.VectorKernels]],
+  *     which the generated code (inside whole-stage codegen) and the
+  *     interpreted `eval` both call; used for wide/unknown dims. Requires
   *     the session to be built with [[graft.GraftExtensions]].
   *
   * The higher-order-function folds (`aggregate` + `zip_with`: [[dot]],

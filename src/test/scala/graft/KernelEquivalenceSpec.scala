@@ -386,6 +386,33 @@ class KernelEquivalenceSpec extends SparkSpec {
     assert(missing.isEmpty, s"kernels without an equivalence row: ${missing.mkString(", ")}")
   }
 
+  test("SQL surface: literals are cast to the kernel's types; a bad affine family fails analysis") {
+    val r = spark.sql("""SELECT
+      graft_minhash_sig(array(3L), array(3L), array(1L), 2147483647) AS int_prime,
+      graft_minhash_sig(array(3L), array(3), array(1), 2147483647L) AS int_coeffs,
+      graft_shingle_minhash('a b', 1, array(3), array(1), 2147483647) AS shingle,
+      graft_jl_project(array(1.0D, 2.0D), 's', 2L, 2L) AS jl,
+      graft_rolling_min_hash('abcd', 2L, 31) AS rolling""").collect()(0)
+    assert(r.getSeq[Long](0) == Seq(10L) && r.getSeq[Long](1) == Seq(10L))
+    assert(r.getSeq[Long](2).length == 1)
+    val signs = VectorExpressions.jlSigns("s", 2, 2)
+    assert(r.getSeq[Double](3) == signs.toSeq.map(row => 0.0 + 1.0 * row(0) + 2.0 * row(1)))
+    assert(r.getLong(4) == 'a' + 31L * 'b')
+    // outside 0 < p < 2^31 or 0 <= a_j, b_j < p: rejected when the query
+    // is analysed, before any task runs
+    Seq("graft_minhash_sig(array(3L), array(3L), array(1L), 0)",
+      "graft_minhash_sig(array(3L), array(3L), array(1L), 2147483648)",
+      "graft_minhash_sig(array(3L), array(-3L), array(1L), 7)",
+      "graft_minhash_sig(array(3L), array(3L), array(7L), 7)",
+      "graft_shingle_minhash('a b', 1, array(3), array(1), 0)").foreach { call =>
+      val e = intercept[Exception](spark.sql(s"SELECT $call"))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msgs.contains("prime must be in") || msgs.contains("coefficients must be in"),
+        s"$call: $msgs")
+    }
+  }
+
   test("graft_quality_score and graft_ngrams: null and short-text conventions") {
     val row = input.filter(col("id") <= 1L).orderBy("id")
       .select(TextStats.qualityScore(col("text"), stop).as("q"),

@@ -397,7 +397,7 @@ class LlmOpsSpec extends SparkSpec {
       .withColumn("_th", Dedup.tokenHashHalves(col("text")))
       .select(col("doc_id"),
         graft.functions.VectorExpressions.simhash64(col("_th")).as("native"),
-        Dedup.simhash64FromHalves(col("_th")).as("fold"))
+        KernelEquivalenceSpec.simhash64Fold(col("_th")).as("fold"))
       .collect()
     both.foreach { r =>
       assert(!r.isNullAt(1) && !r.isNullAt(2),
@@ -414,7 +414,8 @@ class LlmOpsSpec extends SparkSpec {
       .union(Seq((9001L, ""), (9002L, "a b")).toDF("doc_id", "text"))
     val sets = Dedup.shingleSets(texts, "doc_id", "text", n = 3)
     val native = Dedup.minhashSignatureArray(sets, "doc_id", numHashes = 16)
-    val fold = Dedup.minhashSignatureArrayFold(sets, "doc_id", numHashes = 16)
+    val fold = sets.select(col("doc_id"), KernelEquivalenceSpec.minhashFold(
+      transform(col("shingles"), s => Dedup.minhashBase(s)), numHashes = 16).as("sig"))
     // local-relation inputs constant-fold through ConvertToLocalRelation,
     // so the native expression only survives in the ANALYZED plan here
     assert(native.queryExecution.analyzed.toString.contains("graft_minhash_sig"))
