@@ -24,11 +24,11 @@ private[graft] object KernelArgs {
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
     (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), (es: Seq[Expression]) => {
       require(es.length == n, s"$name($sig) takes $n arguments, got ${es.length}")
-      build(Args(name, es))
+      build(new Args(name, es))
     })
 
   /** The arguments of one call of `name`. */
-  case class Args(name: String, es: Seq[Expression]) {
+  final class Args(name: String, es: Seq[Expression]) {
     def apply(i: Int): Expression = es(i)
 
     private def literal(i: Int, what: String, dt: DataType): Any = {

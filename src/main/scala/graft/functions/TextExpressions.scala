@@ -398,7 +398,7 @@ object CurationKernels {
   /** A rolling window of `w` bytes and polynomial base `base`: no modulus,
     * so every window value must stay exact below 2^53 (255·base^(w−1)·w),
     * in a long AND in the oracle's arithmetic. */
-  def requireWindow(w: Int, base: Long): Unit = {
+  private[functions] def requireWindow(w: Int, base: Long): Unit = {
     require(w >= 2 && w <= 16, s"window must be 2..16 bytes, got $w")
     require(base > 1, s"base must be > 1, got $base")
     require(255.0 * math.pow(base.toDouble, (w - 1).toDouble) * w < math.pow(2.0, 53.0),

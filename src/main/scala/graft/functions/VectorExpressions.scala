@@ -98,7 +98,8 @@ object VectorKernels {
     * none (the fold's identity). The running minima live in one long[]. */
   def minhashSig(hs: ArrayData, as: Array[Long], bs: Array[Long], prime: Long): ArrayData = {
     val k = as.length
-    val acc = Array.fill(k)(prime)
+    val acc = new Array[Long](k)
+    java.util.Arrays.fill(acc, prime)
     val n = hs.numElements()
     var i = 0
     while (i < n) {
