@@ -26,11 +26,6 @@ object PathFunctions {
   def stripTrailingIndex(name: Column): Column =
     regexp_replace(name, "[_-]?\\d+$", "")
 
-  /** `/Game/<launch>` asset path from a Content-relative file path
-    * (reference: scene_scanner.py:66-81). */
-  def buildUeAssetPath(relPath: Column): Column =
-    concat(lit("/Game/"), regexp_replace(relPath, "\\.umap$", ""))
-
   /** Space→underscore safe name (reference: scene_copy.py:317-318). */
   def safeName(name: Column): Column = regexp_replace(name, " ", "_")
 

@@ -271,32 +271,28 @@ object Pipelines {
       .write.mode("overwrite").parquet(s"$dir/stats")
   }
 
-  def readRegistry(spark: org.apache.spark.sql.SparkSession,
-      dir: String): CurationRegistry =
-    CurationRegistry(
-      spark.read.parquet(s"$dir/keys"),
-      spark.read.parquet(s"$dir/sigs"),
-      spark.read.parquet(s"$dir/texts"))
-
   /** Persist one ingest's registry DELTA (as returned by
     * [[curateIngest]]) as a segment dir — O(batch) I/O, history
-    * untouched; the registry is the segment LIST, re-merged at open by
+    * untouched; the registry is the segment LIST, opened by
     * [[readRegistrySegments]]. Same layout as [[writeRegistry]] (a
     * segment IS a registry dir), so the name only marks intent. */
   def writeRegistrySegment(delta: CurationRegistry, dir: String): Unit =
     writeRegistry(delta, dir)
 
-  /** Open a segmented curation registry: per-table unions across the
-    * segment dirs (no shuffle — unions of scans). The open REJECTS
-    * overlapping ingest-id watermarks ([[SegmentIO]]'s open guard): a
-    * double-ingested segment would otherwise duplicate every stored
-    * signature and text row SILENTLY — each batch doc then near-dup-
-    * matches the duplicate registry rows, and candidate volume doubles. */
+  /** Open a segmented curation registry: each table is ONE multi-path
+    * scan across the segment dirs, so the job count does not grow with
+    * the list. The open REJECTS overlapping ingest-id watermarks
+    * ([[SegmentIO]]'s open guard): a double-ingested segment would
+    * otherwise duplicate every stored signature and text row SILENTLY —
+    * each batch doc then near-dup-matches the duplicate registry rows,
+    * and candidate volume doubles. */
   def readRegistrySegments(spark: org.apache.spark.sql.SparkSession,
       dirs: Seq[String]): CurationRegistry = {
-    SegmentIO.requireDisjointWatermarks(spark, dirs, "stats",
-      "readRegistrySegments")
-    dirs.map(readRegistry(spark, _)).reduce(mergeRegistry)
+    val stats = SegmentIO.readStats(spark, dirs, "stats",
+      "n_sigs BIGINT, min_id BIGINT, max_id BIGINT", "readRegistrySegments")
+    SegmentIO.requireDisjointWatermarks(dirs, stats, "readRegistrySegments")
+    def scan(table: String) = SegmentIO.scan(spark.read, dirs, table)
+    CurationRegistry(scan("keys"), scan("sigs"), scan("texts"))
   }
 
   /** Compact a segment list into one segment at `outDir` (which must not

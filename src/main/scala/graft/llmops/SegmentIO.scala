@@ -1,25 +1,29 @@
 package graft.llmops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-/** Atomic segment publication for the registry family
+/** The registry family's segment format, publication and open
   * ([[SparseSim.Bm25Index]], [[Similarity.IvfIndex]],
   * [[Pipelines.CurationRegistry]]): every stored segment is a multi-table
-  * parquet dir (data tables, then stats derived from the written data —
-  * independent tables may write concurrently via [[runConcurrently]]), so
-  * a crash or retried ingest mid-write would otherwise leave new data
-  * beside stale stats — a segment the watermark guards can still pass and
-  * the open paths would serve with silently wrong statistics. Publication
-  * is therefore all-or-nothing at the dir level:
-  * the tables land in a temp sibling and ONE rename publishes them.
-  * The rename is atomic on local filesystems and HDFS; on object stores
-  * it degrades to copy, where the temp dir still confines a partial
-  * write to a non-served path.
+  * parquet dir (data tables, then a one-row stats table derived from the
+  * written data — independent tables may write concurrently via
+  * [[runConcurrently]]), and a registry is the segment LIST. A crash or
+  * retried ingest mid-write would otherwise leave new data beside stale
+  * stats — a segment the watermark guards can still pass and the open
+  * paths would serve with silently wrong statistics — so publication is
+  * all-or-nothing at the dir level: the tables land in a temp sibling and
+  * ONE rename publishes them. The rename is atomic on local filesystems
+  * and HDFS; on object stores it degrades to copy, where the temp dir
+  * still confines a partial write to a non-served path.
   *
-  * The family's guards live here too, one copy each: integral ids at
-  * build and write ([[requireIntegralIds]]), disjoint id watermarks at open
+  * A segment list opens in a job count that does not grow with the list:
+  * [[readStats]] reads every stats row in ONE multi-path scan, the guards
+  * check those rows on the driver, and each data table is ONE multi-path
+  * [[scan]]. The guards live here, one copy each: integral ids at build
+  * and write ([[requireIntegralIds]]), disjoint id watermarks at open
   * ([[requireDisjointWatermarks]]), and a compaction target that is not
   * an input ([[requireNewDir]]).
   */
@@ -28,9 +32,9 @@ private[graft] object SegmentIO {
   /** Run `write` against a temp sibling of `dir`, then publish it as
     * `dir` via delete + rename. */
   def publish(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
-    val target = new org.apache.hadoop.fs.Path(dir)
+    val target = new Path(dir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "._tmp_write")
+    val tmp = new Path(dir + "._tmp_write")
     fs.delete(tmp, true)
     write(tmp.toString)
     fs.delete(target, true)
@@ -82,20 +86,41 @@ private[graft] object SegmentIO {
         " - the segment watermark convention orders ids as longs")
   }
 
-  /** Open guard: REJECT segments whose [min_id, max_id] watermarks (the
-    * one-row `statsTable` of each dir) overlap — a retried ingest whose
-    * write already succeeded would otherwise duplicate its rows SILENTLY.
+  /** Every segment's one-row `statsTable` in `dirs` order: ONE scan
+    * under the declared `ddl` schema (no schema-inference job), collected
+    * once; rows map back to their dir by `_metadata.file_path`. */
+  def readStats(spark: SparkSession, dirs: Seq[String], statsTable: String,
+      ddl: String, caller: String): Seq[Row] = {
+    require(dirs.nonEmpty, s"$caller needs at least one segment dir")
+    val conf = spark.sparkContext.hadoopConfiguration
+    def qualified(p: Path) = p.getFileSystem(conf).makeQualified(p)
+    val bySegment = scan(spark.read.schema(ddl), dirs, statsTable)
+      .select(col("*"), col("_metadata.file_path"))
+      .collect()
+      .map { r =>
+        val file = new Path(new java.net.URI(r.getAs[String]("file_path")))
+        qualified(file.getParent.getParent) -> r
+      }.toMap
+    dirs.map(d => bySegment.getOrElse(qualified(new Path(d)),
+      sys.error(s"$caller: segment $d has no $statsTable row")))
+  }
+
+  /** One table of every segment as ONE multi-path parquet scan; a reader
+    * with a declared schema skips the schema-inference job. */
+  def scan(reader: DataFrameReader, dirs: Seq[String], table: String): DataFrame =
+    reader.parquet(dirs.map(d => s"$d/$table"): _*)
+
+  /** Open guard: REJECT segments whose [min_id, max_id] watermarks (in
+    * each dir's [[readStats]] row) overlap — a retried ingest whose write
+    * already succeeded would otherwise duplicate its rows SILENTLY.
     * Sufficient under monotonic ingest ids; interleaved-but-disjoint
     * schemes must open segments one by one. An empty segment has null
-    * marks; older builds stored int marks, hence the long cast. */
-  def requireDisjointWatermarks(spark: SparkSession, dirs: Seq[String],
-      statsTable: String, caller: String): Unit = {
-    require(dirs.nonEmpty, s"$caller needs at least one segment dir")
-    val marks = dirs.flatMap { d =>
-      val r = spark.read.parquet(s"$d/$statsTable")
-        .select(col("min_id").cast("long"), col("max_id").cast("long"))
-        .head()
-      if (r.isNullAt(0)) None else Some((d, r.getLong(0), r.getLong(1)))
+    * marks. */
+  def requireDisjointWatermarks(dirs: Seq[String], stats: Seq[Row],
+      caller: String): Unit = {
+    val marks = dirs.zip(stats).collect {
+      case (d, r) if !r.isNullAt(r.fieldIndex("min_id")) =>
+        (d, r.getAs[Long]("min_id"), r.getAs[Long]("max_id"))
     }.sortBy(_._2)
     marks.sliding(2).foreach {
       case Seq((d1, _, hi1), (d2, lo2, _)) if lo2 <= hi1 =>

@@ -485,14 +485,10 @@ object Similarity {
     }
   }
 
-  def ivfReadIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): IvfIndex =
-    IvfIndex(
-      spark.read.parquet(s"$dir/centroids"),
-      spark.read.parquet(s"$dir/assigned"))
-
   /** Open a segmented IVF registry (one segment dir per ingest — the
-    * [[SparseSim.readSegments]] convention). The open REJECTS, loudly:
+    * [[SparseSim.readSegments]] convention): `assigned` is ONE multi-path
+    * scan and `centroids` the first dir's (the guard below makes every
+    * segment's generation equal). The open REJECTS, loudly:
     *
     *  - segments whose stored centroid fingerprints differ — built
     *    against different centroid generations, their cell ids don't
@@ -504,20 +500,19 @@ object Similarity {
     *    every probed cell, k slots burn on duplicates). */
   def ivfReadSegments(spark: org.apache.spark.sql.SparkSession,
       dirs: Seq[String]): IvfIndex = {
-    val fps = dirs.map(d =>
-      d -> spark.read.parquet(s"$d/stats").select("centroid_fp").head().getString(0))
+    val stats = SegmentIO.readStats(spark, dirs, "stats",
+      "n_vectors BIGINT, min_id BIGINT, max_id BIGINT, centroid_fp STRING",
+      "ivfReadSegments")
+    val fps = dirs.zip(stats.map(_.getAs[String]("centroid_fp")))
     fps.foreach { case (d, fp) =>
       require(fp == fps.head._2,
         s"ivfReadSegments: centroid generations differ between " +
           s"${fps.head._1} (${fps.head._2}) and $d ($fp) - segments " +
           "from different generations cannot serve one probe geometry")
     }
-    SegmentIO.requireDisjointWatermarks(spark, dirs, "stats", "ivfReadSegments")
-    // fingerprints verified equal above, so the fold's own guard passes
-    // on the first segment's centroid table without re-collecting per
-    // pair (centroids is the same object through every merge)
-    dirs.map(ivfReadIndex(spark, _))
-      .reduce((a, b) => IvfIndex(a.centroids, a.assigned.unionAll(b.assigned)))
+    SegmentIO.requireDisjointWatermarks(dirs, stats, "ivfReadSegments")
+    IvfIndex(spark.read.parquet(s"${dirs.head}/centroids"),
+      SegmentIO.scan(spark.read, dirs, "assigned"))
   }
 
   /** Registry-served hybrid retrieval — the production composition the

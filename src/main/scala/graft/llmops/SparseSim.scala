@@ -1,8 +1,9 @@
 package graft.llmops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Sparse lexical similarity search — IDF-weighted cosine over term
   * frequency vectors via an inverted index, the retrieval complement to
@@ -29,24 +30,12 @@ import org.apache.spark.sql.functions._
   */
 object SparseSim {
 
-  /** (id, term, tf) postings from whitespace-tokenized text; `ngram > 1`
-    * makes the terms space-joined word n-grams — on a small-vocabulary
-    * corpus unigram dfs saturate (every word is a stopword) and the df
-    * window prunes everything, while n-grams restore a long-tailed df
-    * profile (the same reason the dedup family shingles). The
-    * descending-`sequence` guard matters: a doc shorter than `ngram`
-    * must yield no terms, not a backwards index range. */
-  def tfPostings(docs: DataFrame, idCol: String, textCol: String,
-      ngram: Int = 1): DataFrame =
-    docs.select(col(idCol).as("id"),
-        explode(termsExpr(col(textCol), ngram)).as("term"))
-      .groupBy("id", "term").agg(count(lit(1)).as("tf"))
-
   /** The term array (unigram tokens or space-joined n-grams) as a pure
     * column — shared by the postings build and the map-side length
     * computation so both count the same terms. Unigrams drop empty
     * tokens; n-grams are [[Dedup.ngramArray]]'s (empty tokens kept, null
-    * or short text gives none). */
+    * or short text gives none). `ngram > 1` restores a long-tailed df
+    * profile where a small vocabulary saturates every unigram's df. */
   private def termsExpr(text: Column, ngram: Int): Column = {
     require(ngram >= 1)
     if (ngram == 1) filter(split(text, " "), t => t =!= "")
@@ -213,7 +202,7 @@ object SparseSim {
     * query time against the merged df.
     *
     * All four tables are plain DataFrames: persist them as parquet
-    * ([[writeIndex]]/[[readIndex]]) and the index survives sessions —
+    * ([[writeIndex]]/[[readSegments]]) and the index survives sessions —
     * `postings` and `docLens` are append-only under merge (no shuffle:
     * union of scans), `termDf`/`corpusStats` merge through a
     * vocabulary-sized (never corpus-sized) aggregation.
@@ -405,17 +394,16 @@ object SparseSim {
     *
     * Registry layout is SEGMENTED, Lucene-style: each ingest writes its
     * own segment dir and the registry is the segment LIST
-    * ([[readSegments]] re-merges at open time) — a delta update is
-    * O(batch) I/O, never a rewrite of accumulated history. Writing a
-    * MERGED index through here is compaction: legal, costs the full
-    * rewrite compaction costs.
+    * ([[readSegments]] opens it) — a delta update is O(batch) I/O, never
+    * a rewrite of accumulated history. Writing a MERGED index through
+    * here is compaction: legal, costs the full rewrite compaction costs.
     *
     * The write publishes via [[SegmentIO.publish]] (temp dir + one
     * rename): the four tables are written sequentially with stats
     * derived from the postings, so a crash or retried ingest mid-write
     * would otherwise leave NEW postings beside STALE stats from a
     * previous attempt — a segment the watermark guard can still pass
-    * and [[readIndex]] would serve with silently wrong df/scores. */
+    * and [[readSegments]] would serve with silently wrong df/scores. */
   def writeIndex(index: Bm25Index, dir: String): Unit = {
     val spark = index.postings.sparkSession
     SegmentIO.publish(spark, dir)(writeIndexTables(index, _, spark))
@@ -434,7 +422,7 @@ object SparseSim {
       () => post.groupBy("term").agg(count(lit(1)).as("df"))
         .write.mode("overwrite").parquet(s"$dir/term_df")))
     // the one-row stats table carries the index metadata too: the
-    // build-time ngram (so readIndex restores the term space) and the
+    // build-time ngram (so readSegments restores the term space) and the
     // doc-id watermark (so readSegments can reject overlapping segments;
     // cast pins the stored marks to LONG — the type the guard reads)
     spark.read.parquet(s"$dir/doc_lens")
@@ -445,38 +433,48 @@ object SparseSim {
       .write.mode("overwrite").parquet(s"$dir/corpus_stats")
   }
 
-  def readIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Bm25Index = {
-    val stats = spark.read.parquet(s"$dir/corpus_stats")
-    // one-row parquet — collecting the metadata at open time is free
-    val ngram = stats.select("ngram").head().getInt(0)
-    val post0 = spark.read.parquet(s"$dir/postings")
-    val lens = spark.read.parquet(s"$dir/doc_lens")
-    // a segment written before len was denormalized onto postings rows
-    // re-attaches it here via the join the denormalization deletes —
-    // paid once per OLD segment, never on the current write path
-    val post = if (post0.columns.contains("len")) post0
-      else post0.join(lens, "id").select("id", "term", "tf", "len")
-    Bm25Index(post, lens,
-      spark.read.parquet(s"$dir/term_df"),
-      stats.drop("ngram"),
-      ngram)
-  }
-
-  /** Open a segmented registry: fold [[mergeIndex]] over the segment
-    * dirs. Postings/doc-lens merge as unions of scans (no shuffle);
-    * term-df/corpus-stats re-merge through a vocabulary-sized (never
-    * corpus-sized) aggregation at open time.
+  /** Open a segmented registry (one [[writeIndex]] dir per ingest) in
+    * one Spark job, the [[SegmentIO.readStats]] scan, at any segment
+    * count: `postings`, `doc_lens` and `term_df` are each ONE multi-path
+    * scan under a declared schema, term df over several segments
+    * re-sums through one vocabulary-sized aggregation, and corpus stats
+    * sum on the driver into a one-row local relation.
     *
     * The open REJECTS overlapping doc-id watermarks
-    * ([[SegmentIO.requireDisjointWatermarks]]): a double-ingested segment
-    * would otherwise double-count df/n_docs and duplicate postings
-    * SILENTLY (scores inflate, nothing errors). */
+    * ([[SegmentIO.requireDisjointWatermarks]]) — a double-ingested
+    * segment would otherwise double-count df/n_docs and duplicate
+    * postings SILENTLY — and segments of different `ngram`s, which
+    * tokenize different term spaces. */
   def readSegments(spark: org.apache.spark.sql.SparkSession,
       dirs: Seq[String]): Bm25Index = {
-    SegmentIO.requireDisjointWatermarks(spark, dirs, "corpus_stats",
-      "readSegments")
-    dirs.map(readIndex(spark, _)).reduce(mergeIndex)
+    val statsDdl = "n_docs BIGINT, total_tokens BIGINT, min_id BIGINT, max_id BIGINT"
+    val stats = SegmentIO.readStats(spark, dirs, "corpus_stats",
+      s"$statsDdl, ngram INT", "readSegments")
+    SegmentIO.requireDisjointWatermarks(dirs, stats, "readSegments")
+    val ngrams = dirs.zip(stats.map(_.getAs[Int]("ngram")))
+    ngrams.foreach { case (d, n) =>
+      require(n == ngrams.head._2,
+        s"readSegments: ngram mismatch (${ngrams.head._1} ${ngrams.head._2}" +
+          s", $d $n) - the segments tokenize different term spaces")
+    }
+    // SQL's aggregate null rules: nulls (an empty segment's marks and
+    // total_tokens) drop out, and all-null gives null
+    def agg(c: String)(f: Seq[Long] => Long): Any = {
+      val xs = stats.flatMap(r => Option(r.getAs[java.lang.Long](c)))
+      if (xs.isEmpty) null else f(xs.map(_.longValue))
+    }
+    def scan(table: String, ddl: String) =
+      SegmentIO.scan(spark.read.schema(ddl), dirs, table)
+    val termDf = scan("term_df", "term STRING, df BIGINT")
+    Bm25Index(scan("postings", "id BIGINT, term STRING, tf BIGINT, len BIGINT"),
+      scan("doc_lens", "id BIGINT, len BIGINT"),
+      if (dirs.size == 1) termDf
+      else termDf.groupBy("term").agg(sum("df").as("df")),
+      spark.createDataFrame(java.util.List.of(Row(
+          agg("n_docs")(_.sum), agg("total_tokens")(_.sum),
+          agg("min_id")(_.min), agg("max_id")(_.max))),
+        StructType.fromDDL(statsDdl)),
+      ngrams.head._2)
   }
 
   /** Compact a segment list into one segment at `outDir` (which must not

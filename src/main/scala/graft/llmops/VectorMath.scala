@@ -59,9 +59,6 @@ object VectorMath {
   def dotPrecast(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  /** Norm over an array already cast to array<double>. */
-  def normPrecast(a: Column): Column = sqrt(dotPrecast(a, a))
-
   /** Squared distance over arrays already cast to array<double>. */
   def distSqPrecast(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)

@@ -32,17 +32,4 @@ object Det {
   /** SQL text of moneySum for the DuckDB oracle. */
   def moneySumSql(x: String): String =
     s"CAST(SUM(CAST($x AS DECIMAL(18,2))) AS DOUBLE)"
-
-  /** Exact mean built from an exact sum: identical double division in both
-    * engines. */
-  def moneyAvg(c: Column): Column =
-    (sum(c.cast(DecimalType(18, 2))).cast("double") / count(lit(1)))
-  def moneyAvgSql(x: String): String =
-    s"(CAST(SUM(CAST($x AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*))"
-
-  /** Exact ratio of conditional count to total (int/int → same double). */
-  def condRatio(pred: Column): Column =
-    sum(when(pred, 1L).otherwise(0L)).cast("double") / count(lit(1))
-  def condRatioSql(pred: String): String =
-    s"(CAST(SUM(CASE WHEN $pred THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*))"
 }

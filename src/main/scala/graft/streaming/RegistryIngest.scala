@@ -11,8 +11,9 @@ import graft.llmops.{Pipelines, SparseSim}
   * each micro-batch persists exactly two O(batch) artifacts — its
   * curation-registry delta segment and a BM25 index segment over its
   * surviving docs. History is never rescanned and never rewritten: the
-  * registries are the segment lists, re-merged at open
-  * ([[Pipelines.readRegistrySegments]], [[SparseSim.readSegments]]).
+  * registries are the segment lists, reopened every micro-batch in a job
+  * count that does not grow with them ([[Pipelines.readRegistrySegments]],
+  * [[SparseSim.readSegments]]: one stats scan, one scan per table).
   *
   * Delivery semantics: segment dirs are keyed by the micro-batch id, so
   * a batch REPLAYED after a failure (foreachBatch's at-least-once
@@ -29,8 +30,8 @@ import graft.llmops.{Pipelines, SparseSim}
   * same N batches through [[Pipelines.curateIngest]] in batch mode.
   *
   * Scale: per micro-batch cost is the batch's own stage-1–4 work plus
-  * one segment-list open (vocabulary/signature-sized merges, no corpus
-  * rescan) — the streaming form of the measured 64× delta-ingest rows
+  * the two opens (unions of scans, one vocabulary-sized df re-sum, no
+  * corpus rescan) — the streaming form of the measured 64× delta-ingest rows
   * (STRESS.md); compaction ([[Pipelines.compactRegistrySegments]],
   * [[SparseSim.compactSegments]]) bounds the segment-list fan on
   * whatever cadence the measured trade suggests.

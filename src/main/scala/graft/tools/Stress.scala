@@ -478,7 +478,7 @@ object Stress {
     import graft.llmops.SparseSim
     requireBm25Index(d)
     val docs = graft.model.Tables.documents(s, d)
-    SparseSim.queryIndex(SparseSim.readIndex(s, bm25IndexDir(d)),
+    SparseSim.queryIndex(SparseSim.readSegments(s, Seq(bm25IndexDir(d))),
       docs.filter(col("doc_id") < 10), "doc_id", "text",
       k = 5, maxDf = 50L)
   }
@@ -576,7 +576,7 @@ object Stress {
       bench, "text", stopwords = Seq("the", "a", "of", "and", "in", "to"),
       minQuality = 0.5, shingleSize = 3, numHashes = h, rowsPerBand = r,
       nearDupThreshold = 0.8, decontamN = 3,
-      registry = Pipelines.readRegistry(s, curateRegDir(d)))
+      registry = Pipelines.readRegistrySegments(s, Seq(curateRegDir(d))))
     kept.groupBy().agg(count(lit(1)).as("n_kept"))
   }
 
@@ -609,7 +609,7 @@ object Stress {
       bench, "text", stopwords = Seq("the", "a", "of", "and", "in", "to"),
       minQuality = 0.5, shingleSize = 3, numHashes = h, rowsPerBand = r,
       nearDupThreshold = 0.8, decontamN = 3,
-      registry = Pipelines.readRegistry(s, curateRegDir(d)))
+      registry = Pipelines.readRegistrySegments(s, Seq(curateRegDir(d))))
     Pipelines.writeRegistrySegment(delta, s"${curateRegDir(d)}_seg1")
     kept.groupBy().agg(count(lit(1)).as("n_kept"))
   }
@@ -634,8 +634,7 @@ object Stress {
         s"and delta segment for input $d - run stress_curate_registry_build " +
         "and stress_curate_delta_persist at the SAME scale factor first")
     Pipelines.writeRegistry(
-      Pipelines.mergeRegistry(Pipelines.readRegistry(s, curateRegDir(d)),
-        Pipelines.readRegistrySegments(s, Seq(seg1))),
+      Pipelines.readRegistrySegments(s, Seq(curateRegDir(d), seg1)),
       s"${curateRegDir(d)}_rewrite")
     s.read.parquet(s"${curateRegDir(d)}_rewrite/keys")
   }
@@ -742,8 +741,8 @@ object Stress {
       .join(emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("doc_id"), col("embedding")), "doc_id")
     Similarity.hybridQueryIndex(
-      SparseSim.readIndex(s, bm25IndexDir(d)),
-      Similarity.ivfReadIndex(s, ivfIndexDir(d)),
+      SparseSim.readSegments(s, Seq(bm25IndexDir(d))),
+      Similarity.ivfReadSegments(s, Seq(ivfIndexDir(d))),
       queries, "doc_id", "text", "embedding",
       armK = 20, maxDf = 50L, nProbe = 2, dim = 64)
   }

@@ -48,7 +48,7 @@ class LlmOpsSpec extends SparkSpec {
     // registry round-trip through parquet preserves exact scores
     val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
     SparseSim.writeIndex(merged, dir)
-    val reread = rows(SparseSim.queryIndex(SparseSim.readIndex(spark, dir),
+    val reread = rows(SparseSim.queryIndex(SparseSim.readSegments(spark, Seq(dir)),
       q, "doc_id", "text", k = 10, maxDf = 3L))
     assert(reread == full)
     // segmented registry: base and delta written as SEPARATE segments
@@ -75,7 +75,7 @@ class LlmOpsSpec extends SparkSpec {
     // compaction rewrites the segment list as ONE value-identical segment
     val compacted = java.nio.file.Files.createTempDirectory("bm25cmp").toString
     SparseSim.compactSegments(spark, Seq(segBase, segDelta), compacted)
-    assert(rows(SparseSim.queryIndex(SparseSim.readIndex(spark, compacted),
+    assert(rows(SparseSim.queryIndex(SparseSim.readSegments(spark, Seq(compacted)),
       q, "doc_id", "text", k = 10, maxDf = 3L)) == full)
     // guard rails: an ngram mismatch refuses to merge (the indexes
     // tokenize different term spaces), and a double-ingested segment
@@ -104,10 +104,28 @@ class LlmOpsSpec extends SparkSpec {
     // id-keyed join on doc_lens anywhere (the corpus-sized join the
     // denormalization deletes); doc_lens itself stays a table for the
     // stats derivation
-    val qplan = SparseSim.queryIndex(SparseSim.readIndex(spark, dir),
+    val qplan = SparseSim.queryIndex(SparseSim.readSegments(spark, Seq(dir)),
       q, "doc_id", "text", k = 10, maxDf = 3L)
       .queryExecution.executedPlan.toString
     assert(!qplan.contains("doc_lens"), qplan)
+  }
+
+  test("BM25 segments: a unigram and a bigram segment refuse to open together") {
+    import graft.llmops.SparseSim
+    // disjoint ids, so the watermark guard passes and the ngram check
+    // is what rejects: the two segments tokenize different term spaces
+    val uni = java.nio.file.Files.createTempDirectory("bm25uni").toString
+    val bi = java.nio.file.Files.createTempDirectory("bm25bi").toString
+    SparseSim.writeIndex(SparseSim.buildIndex(
+      Seq((1L, "apple banana cherry")).toDF("doc_id", "text"),
+      "doc_id", "text"), uni)
+    SparseSim.writeIndex(SparseSim.buildIndex(
+      Seq((2L, "apple banana fig")).toDF("doc_id", "text"),
+      "doc_id", "text", ngram = 2), bi)
+    val e = intercept[IllegalArgumentException] {
+      SparseSim.readSegments(spark, Seq(uni, bi))
+    }
+    assert(e.getMessage.contains("ngram mismatch"), e.getMessage)
   }
 
   test("IVF index: delta-merge ≡ one-shot ivfTopK; parquet round-trip") {
@@ -138,7 +156,7 @@ class LlmOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
     Similarity.ivfWriteIndex(merged, dir)
     val reread = rows(Similarity.ivfQueryIndex(
-      Similarity.ivfReadIndex(spark, dir), q,
+      Similarity.ivfReadSegments(spark, Seq(dir)), q,
       "vec_id", "embedding", k = 2, nProbe = 1, dim = 2))
     assert(reread == full)
     // segmented registry: base and delta written as SEPARATE segments
