@@ -185,6 +185,59 @@ class KernelEquivalenceSpec extends SparkSpec {
 
   private val texts = edgeTexts ++ randomTexts
 
+  /** A text as raw bytes: a `String` part as its UTF-8, an `Int` part as
+    * one byte, a byte array as it is. */
+  private def bytes(parts: Any*): Array[Byte] = parts.flatMap {
+    case s: String => s.getBytes(java.nio.charset.StandardCharsets.UTF_8).toSeq
+    case b: Int => Seq(b.toByte)
+    case b: Array[Byte] => b.toSeq
+  }.toArray
+
+  /** Texts the token kernels must split exactly as `split(text, " ")`
+    * does: invalid UTF-8 (a lone FF, a lone continuation byte, an overlong
+    * '/', a UTF-16 surrogate, a code point above U+10FFFF, a 4-byte
+    * sequence cut off at the end), U+FFFD next to bytes that decode to
+    * it, and whitespace other than 0x20 (tab, newline, CR, NBSP, U+3000)
+    * next to real spaces; then seeded word salad over those pieces. */
+  private val oddTexts: Seq[Array[Byte]] = {
+    val ff = bytes(0xFF)
+    val cont = bytes(0x80)
+    val overlong = bytes(0xC0, 0xAF)
+    val surrogate = bytes(0xED, 0xA0, 0x80)
+    val above = bytes(0xF4, 0x90, 0x80, 0x80)
+    val cut = bytes(0xF0, 0x9F, 0x98)
+    val edges = Seq(ff, cont, overlong, surrogate, above, cut,
+      bytes("a ", ff, " b ", ff, " a"), bytes(cont, " ", cont, cont, " x"),
+      bytes("x ", overlong, " y ", overlong), bytes(surrogate, " z ", surrogate, " z"),
+      bytes("q ", above, " q ", above), bytes("end ", cut), bytes("end  ", cut),
+      bytes("\uFFFD ", ff, " \uFFFD ", cont), bytes("a", ff, "b c a", ff, "b"),
+      bytes(ff, " ", ff, " ", ff, " ", ff), bytes("  ", 0xFE, "  "),
+      bytes("a\tb c"), bytes("a\t b \tc a\tb"), bytes("line one\nline two\n"),
+      bytes("a\r\nb c\r\n"), bytes("a\u00A0b a\u00A0b c"),
+      bytes("\u3000 a\u3000b \u3000"), bytes("\t"), bytes("\n \n"),
+      bytes("x \u00A0 x \u00A0 x"), bytes("tab\t", ff, " nbsp\u00A0", cont))
+    val vocab = Vector(ff, cont, overlong, surrogate, above, bytes("\uFFFD"),
+      bytes("the"), bytes("a"), bytes("über"), bytes(""), bytes("x\ty"),
+      bytes("\u00A0"), bytes("\u3000"), bytes("w\n"))
+    val rnd = new scala.util.Random(20261022L)
+    val salad = (0 until 60).map { _ =>
+      val words = Seq.fill(rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size)))
+      val joined = words.flatMap(w => bytes(" ") ++ w).drop(1).toArray
+      if (rnd.nextInt(4) == 0) joined ++ cut else joined
+    }
+    edges ++ salad
+  }
+
+  /** (id, text) over [[oddTexts]], the bytes passed through a binary
+    * column cast to string, which keeps them as they are. */
+  private def oddInput: DataFrame = {
+    import org.apache.spark.sql.types._
+    val rows = oddTexts.indices.map(i => Row(i.toLong, oddTexts(i)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+        StructType(Seq(StructField("id", LongType), StructField("bin", BinaryType))))
+      .select(col("id"), col("bin").cast("string").as("text"))
+  }
+
   /** A second text per row for `graft_jaro_winkler`: the same text, one
     * with two neighbouring characters swapped, one with a character
     * dropped or the first replaced, another row's text, or null. */
@@ -360,22 +413,46 @@ class KernelEquivalenceSpec extends SparkSpec {
     }
   }
 
+  /** `kernel` and `reference` over every row of `rows`, under both
+    * codegen modes: equal bit for bit, and the same in both modes. */
+  private def assertEquivalent(rows: => DataFrame, n: Int, kernel: Column,
+      reference: Column): Unit = {
+    val results = Seq("CODEGEN_ONLY", "NO_CODEGEN").map { mode =>
+      var out: Map[Long, (Any, Any)] = Map.empty
+      underMode(mode) {
+        val df = rows.select(col("id"), kernel.as("k"), reference.as("r"))
+        out = df.collect().map(r => r.getLong(0) -> (bits(r.get(1)), bits(r.get(2)))).toMap
+      }
+      assert(out.size == n)
+      out.foreach { case (id, (k, r)) =>
+        assert(k == r, s"$mode id=$id: kernel $k vs reference $r")
+      }
+      mode -> out
+    }.toMap
+    assert(results("CODEGEN_ONLY") == results("NO_CODEGEN"))
+  }
+
   for ((name, kernel, reference) <- cases) {
     test(s"$name: codegen ≡ interpreted ≡ composed reference, bit for bit") {
-      val results = Seq("CODEGEN_ONLY", "NO_CODEGEN").map { mode =>
-        var out: Map[Long, (Any, Any)] = Map.empty
-        underMode(mode) {
-          val df = input.select(col("id"), kernel.as("k"), reference.as("r"))
-          out = df.collect().map(r => r.getLong(0) -> (bits(r.get(1)), bits(r.get(2)))).toMap
-        }
-        assert(out.size == edgeTexts.size + randomTexts.size)
-        out.foreach { case (id, (k, r)) =>
-          assert(k == r, s"$mode id=$id: kernel $k vs reference $r")
-        }
-        mode -> out
-      }.toMap
-      assert(results("CODEGEN_ONLY") == results("NO_CODEGEN"))
+      assertEquivalent(input, texts.size, kernel, reference)
     }
+  }
+
+  private val tokenKernels = Set("graft_quality_score", "graft_ngrams",
+    "graft_shingle_minhash", "graft_token_diversity", "graft_repetition_stats")
+
+  for ((name, kernel, reference) <- cases if tokenKernels(name.takeWhile(_ != ' '))) {
+    test(s"$name: invalid UTF-8 and non-space whitespace, codegen ≡ interpreted ≡ reference") {
+      assertEquivalent(oddInput, oddTexts.size, kernel, reference)
+    }
+  }
+
+  test("the invalid-UTF-8 rows reach the kernels byte for byte") {
+    val back = oddInput.select(col("id"), col("text").cast("binary")).collect()
+      .map(r => r.getLong(0).toInt -> r.getAs[Array[Byte]](1).toSeq).toMap
+    assert(back == oddTexts.indices.map(i => i -> oddTexts(i).toSeq).toMap)
+    assert(oddTexts.take(6).forall(b =>
+      !org.apache.spark.unsafe.types.UTF8String.fromBytes(b).isValid))
   }
 
   test("every registered graft_* kernel has a row in the table") {
