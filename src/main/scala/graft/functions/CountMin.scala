@@ -31,8 +31,7 @@ object CountMin {
 
   /** 60-bit replayable hash of `item` salted by sketch row `d`. */
   private def hash(item: Column, d: Column): Column =
-    conv(substring(md5(concat(d.cast("string"), lit(":"),
-      item.cast("string"))), 1, 15), 16, 10).cast("long")
+    Md5Hash60(concat(d.cast("string"), lit(":"), item.cast("string")))
 
   /** Register column of `item` in sketch row `d`. */
   def bucket(item: Column, d: Column, width: Int): Column =

@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions._
   *     (register-wise max) across ingest batches.
   *
   * Determinism contract (what makes the estimate hash-comparable):
-  *   - 60-bit hash `h` from the first 15 hex chars of md5 (the repo-wide
-  *     replayable-hash device, [[graft.llmops.Dedup]]).
+  *   - 60-bit hash `h` = [[Md5Hash60]] of the value's string form.
   *   - bucket = h mod m (m = 2^p); rest = h >> p  (w = 60-p bits).
   *   - rho = (w+1) - bitlength(rest), i.e. leading-zero count + 1;
   *     rest = 0 → w+1.
@@ -52,7 +51,7 @@ object Hll {
     * for p ≥ 4). Pure column arithmetic — stays in codegen. */
   def hllInput(value: Column, p: Int): Column = {
     require(p >= 4 && p <= 16, s"p must be in [4,16], got $p")
-    val h = conv(substring(md5(value.cast("string")), 1, 15), 16, 10).cast("long")
+    val h = Md5Hash60(value.cast("string"))
     val bucket = pmod(h, lit(1 << p))
     val rest = shiftright(h, p)
     val rho = when(rest === 0, lit(wMax(p)))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft_rolling_min_hash(text, w, base)`: the rolling polynomial hash
@@ -54,43 +55,28 @@ case class RollingMinHash(child: Expression, w: Int, base: Long)
   *
   * Bit-identical to the Catalyst HOF formulation in
   * `TextStats.duplicateTokenFractionOfTokens` / `topRunFraction`
-  * (LlmOpsSpec asserts it): the split is the same regex split Spark's
-  * `split(text, " ", -1)` performs, the max run of a SORTED bigram array
-  * equals the max bigram multiplicity counted here, and both final
-  * divisions are single exact-int-to-double IEEE ops. The difference is
-  * cost: the HOF chain (transform + array_sort + aggregate with a struct
-  * accumulator) is interpreted per ELEMENT and O(n log n); this is O(n)
-  * compiled JVM — STRESS.md measured the HOF form as the corpus scan's
-  * dominant CPU at 64× scale. */
+  * (LlmOpsSpec asserts it): the tokens are `split(text, " ", -1)`'s
+  * ([[CurationKernels.tokenize]]), a bigram is the byte range of two
+  * adjacent tokens, the max run of a SORTED bigram array equals the max
+  * bigram multiplicity counted here, and both final divisions are single
+  * exact-int-to-double IEEE ops. The difference is cost: the HOF chain
+  * (transform + array_sort + aggregate with a struct accumulator) is
+  * interpreted per ELEMENT and O(n log n); this is O(n) compiled JVM —
+  * STRESS.md measured the HOF form as the corpus scan's dominant CPU at
+  * 64× scale. */
 object RepetitionKernel {
   val schema: StructType = StructType(Seq(
     StructField("dup_token_frac", DoubleType, nullable = false),
     StructField("top_bigram_frac", DoubleType, nullable = false)))
 
-  private val Space = UTF8String.fromString(" ")
-
   def compute(s: UTF8String): InternalRow = {
-    val toks = s.split(Space, -1)
-    val n = toks.length // split(-1) never yields an empty array: "" → [""]
-    val seen = new java.util.HashSet[UTF8String](n * 2)
-    var i = 0
-    while (i < n) { seen.add(toks(i)); i += 1 }
-    val dup = (n - seen.size).toDouble / n
-    var top = 0.0
-    if (n >= 2) {
-      val counts = new java.util.HashMap[UTF8String, Integer](n * 2)
-      var best = 0
-      var j = 0
-      while (j < n - 1) {
-        val bg = UTF8String.concatWs(Space, toks(j), toks(j + 1))
-        val prev = counts.get(bg)
-        val c = if (prev == null) 1 else prev.intValue() + 1
-        counts.put(bg, c)
-        if (c > best) best = c
-        j += 1
-      }
-      top = best.toDouble / (n - 1)
-    }
+    val toks = CurationKernels.tokenize(s)
+    val n = toks.n
+    val dup = (n - toks.counts(1).size).toDouble / n
+    var best = 0
+    val it = toks.counts(2).values.iterator()
+    while (it.hasNext) best = math.max(best, it.next().intValue())
+    val top = if (n >= 2) best.toDouble / (n - 1) else 0.0
     new GenericInternalRow(Array[Any](dup, top))
   }
 }
@@ -177,25 +163,16 @@ object TokenDiversityKernel {
     StructField("n_types", LongType, nullable = false),
     StructField("pairs", LongType, nullable = false)))
 
-  private val Space = UTF8String.fromString(" ")
-
   def compute(s: UTF8String): InternalRow = {
-    val toks = s.split(Space, -1)
-    val n = toks.length // split(-1) never yields an empty array: "" → [""]
-    val counts = new java.util.HashMap[UTF8String, Integer](n * 2)
-    var i = 0
-    while (i < n) {
-      val prev = counts.get(toks(i))
-      counts.put(toks(i), if (prev == null) 1 else prev.intValue() + 1)
-      i += 1
-    }
+    val toks = CurationKernels.tokenize(s)
+    val counts = toks.counts(1)
     var pairs = 0L
     val it = counts.values.iterator()
     while (it.hasNext) {
       val c = it.next().longValue()
       pairs += c * (c - 1)
     }
-    new GenericInternalRow(Array[Any](n.toLong, counts.size.toLong, pairs))
+    new GenericInternalRow(Array[Any](toks.n.toLong, counts.size.toLong, pairs))
   }
 }
 
@@ -297,10 +274,10 @@ case class CdcBoundaries(child: Expression, w: Int, base: Long, mask: Long)
   * compiled pass each: the quality score, the word n-grams, the n-gram →
   * MinHash base hashes, and the rolling-window fingerprint and chunk
   * cuts. Each expression's interpreted `eval` and its generated code call
-  * the same method here. The token kernels tokenize with Spark's own
-  * `split(text, " ", -1)` (the [[RepetitionKernel]] convention), so
-  * tokens — leading, trailing and doubled spaces included — are exactly
-  * the composed forms' tokens.
+  * the same method here. Every token kernel, [[RepetitionKernel]] and
+  * [[TokenDiversityKernel]] too, tokenizes with [[tokenize]]: exactly the
+  * tokens of `split(text, " ", -1)`, leading, trailing and doubled spaces
+  * and invalid UTF-8 included, as byte ranges of the document itself.
   *
   * The composed forms they replace ran per document as chains of
   * interpreted expressions: the quality score split the text once per
@@ -310,31 +287,68 @@ case class CdcBoundaries(child: Expression, w: Int, base: Long, mask: Long)
   * (KernelEquivalenceSpec runs both under codegen and interpreted
   * evaluation against the composed references). */
 object CurationKernels {
-  private val Space = UTF8String.fromString(" ")
   private val EmptyArray = new GenericArrayData(Array.empty[Any])
   private val EmptyLongs = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
   private val EmptyInts = UnsafeArrayData.fromPrimitiveArray(Array.emptyIntArray)
   private val Md5 = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
+  private val Sum: java.util.function.BiFunction[Integer, Integer, Integer] = _ + _
+
+  /** A document's tokens as byte ranges of `bytes`: token k is
+    * `[bounds(k), bounds(k + 1) − 1)`. One space separates two tokens, so
+    * tokens i until j with their spaces are `[bounds(i), bounds(j) − 1)`. */
+  private[functions] final class Tokens(val bytes: Array[Byte], bounds: Array[Int]) {
+    /** The token count, ≥ 1: "" is one empty token. */
+    val n: Int = bounds.length - 1
+    /** Tokens i until j with their spaces: `length(i, j)` bytes from `start(i)`. */
+    def start(i: Int): Int = bounds(i)
+    def length(i: Int, j: Int): Int = bounds(j) - 1 - bounds(i)
+    /** Tokens i until j as a zero-copy slice of the document. */
+    def slice(i: Int, j: Int): UTF8String = UTF8String.fromBytes(bytes, start(i), length(i, j))
+    /** Each distinct run of `w` adjacent tokens, as a slice, → its count. */
+    def counts(w: Int): java.util.HashMap[UTF8String, Integer] = {
+      val m = new java.util.HashMap[UTF8String, Integer](n * 2)
+      var i = 0
+      while (i + w <= n) { m.merge(slice(i, i + w), 1, Sum); i += 1 }
+      m
+    }
+  }
+
+  /** The tokens of `split(s, " ", -1)`, found in one scan for the 0x20
+    * bytes, with no decode and no copy. Invalid UTF-8 is first re-encoded
+    * through a Java `String`, as `split` does, so each bad sequence
+    * becomes the U+FFFD that `split`'s decode gives it. */
+  private[functions] def tokenize(s: UTF8String): Tokens = {
+    val v = if (s.isValid) s else UTF8String.fromString(s.toString)
+    val (bytes, from) = v.getBaseObject match {
+      case b: Array[Byte] => (b, (v.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt)
+      case _ => (v.getBytes, 0) // off-heap: one copy
+    }
+    val to = from + v.numBytes
+    var spaces = 0
+    var i = from
+    while (i < to) { if (bytes(i) == ' ') spaces += 1; i += 1 }
+    val bounds = new Array[Int](spaces + 2)
+    bounds(0) = from
+    bounds(spaces + 1) = to + 1
+    var k = 1
+    i = from
+    while (k <= spaces) { if (bytes(i) == ' ') { bounds(k) = i + 1; k += 1 }; i += 1 }
+    new Tokens(bytes, bounds)
+  }
 
   /** min(1, n/100)·0.4 + (1 − sw/n)·0.3 + d/n·0.3 over the n tokens, sw
     * of them stopword occurrences and d distinct — evaluated in exactly
-    * that double order (the composed `TextStats` form's). n ≥ 1 always:
-    * `split` yields [""] for "". */
+    * that double order (the composed `TextStats` form's). */
   def qualityScore(s: UTF8String, stopwords: java.util.Set[UTF8String]): Double = {
-    val toks = s.split(Space, -1)
-    val n = toks.length
-    val seen = new java.util.HashSet[UTF8String](n * 2)
+    val toks = tokenize(s)
+    val n = toks.n
+    val counts = toks.counts(1)
     var sw = 0
-    var i = 0
-    while (i < n) {
-      if (stopwords.contains(toks(i))) sw += 1
-      seen.add(toks(i))
-      i += 1
-    }
+    stopwords.forEach(w => sw += counts.getOrDefault(w, 0))
     math.min(1.0, n.toDouble / 100.0) * 0.4 +
       (1.0 - sw.toDouble / n) * 0.3 +
-      seen.size.toDouble / n * 0.3
+      counts.size.toDouble / n * 0.3
   }
 
   /** The word n-grams of `s` in order, duplicates kept, each its tokens
@@ -342,54 +356,35 @@ object CurationKernels {
     * n-grams. */
   def ngrams(s: UTF8String, n: Int): ArrayData = {
     if (s == null) return EmptyArray
-    val toks = s.split(Space, -1).map(_.getBytes)
-    val m = toks.length - n + 1
+    val toks = tokenize(s)
+    val m = toks.n - n + 1
     if (m <= 0) return EmptyArray
     val out = new Array[Any](m)
     var i = 0
     while (i < m) {
-      var len = n - 1
-      var k = 0
-      while (k < n) { len += toks(i + k).length; k += 1 }
-      val buf = new Array[Byte](len)
-      var off = 0
-      k = 0
-      while (k < n) {
-        if (k > 0) { buf(off) = ' '; off += 1 }
-        System.arraycopy(toks(i + k), 0, buf, off, toks(i + k).length)
-        off += toks(i + k).length
-        k += 1
-      }
-      out(i) = UTF8String.fromBytes(buf)
+      out(i) = toks.slice(i, i + n).copy()
       i += 1
     }
     new GenericArrayData(out)
   }
 
   /** The MinHash base hash of each word n-gram of `s` (in order,
-    * duplicates kept): the first 60 bits of the n-gram's md5 digest,
-    * mod p — the value `conv(substring(md5(g), 1, 15), 16, 10) % p`
-    * computes from the hex string. Null or short text gives none. */
+    * duplicates kept): `Md5Hash60(g) % p` of each n-gram g, digested
+    * straight from its byte range into one reused buffer. Null or short
+    * text gives none. */
   def ngramBases(s: UTF8String, n: Int, p: Long): ArrayData = {
     if (s == null) return EmptyLongs
-    val toks = s.split(Space, -1).map(_.getBytes)
-    val m = toks.length - n + 1
+    val toks = tokenize(s)
+    val m = toks.n - n + 1
     if (m <= 0) return EmptyLongs
     val md = Md5.get()
+    val digest = new Array[Byte](16)
     val out = new Array[Long](m)
     var i = 0
     while (i < m) {
-      var k = 0
-      while (k < n) {
-        if (k > 0) md.update(' '.toByte)
-        md.update(toks(i + k))
-        k += 1
-      }
-      val d = md.digest()
-      var x = 0L
-      var b = 0
-      while (b < 8) { x = (x << 8) | (d(b) & 0xffL); b += 1 }
-      out(i) = (x >>> 4) % p
+      md.update(toks.bytes, toks.start(i), toks.length(i, i + n))
+      md.digest(digest, 0, 16)
+      out(i) = Md5Hash60.ofDigest(digest) % p
       i += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)

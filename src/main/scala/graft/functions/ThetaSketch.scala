@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions._
   * Construction (Broder's classic k-minimum-values / bottom-k estimator;
   * the theta-sketch framing is Dasgupta et al., "Theta-Sketch Framework:
   * Estimating Set Expressions with Mergeable Sketches"):
-  *   - hash every value with the repo-wide replayable 60-bit md5 device
-  *     ([[Hll.hllInput]]'s hash, exposed here as [[kmvInput]]) — uniform
-  *     on [0, 2^60).
+  *   - hash every value with [[Md5Hash60]] (exposed here as
+  *     [[kmvInput]]) — uniform on [0, 2^60).
   *   - keep the k smallest DISTINCT hashes per group. If fewer than k
   *     distinct values exist the sketch is the exact distinct hash set.
   *   - theta = the k-th smallest hash (the sketch's sampling threshold);
@@ -57,12 +56,10 @@ object ThetaSketch {
     * both engines. */
   val ThetaSpan: Double = math.pow(2.0, 60)
 
-  /** 60-bit replayable hash of a value (same md5 device as
-    * [[Hll.hllInput]]): DuckDB replay is
-    * `CAST(concat('0x', substring(md5(CAST(v AS VARCHAR)),1,15)) AS BIGINT)`.
-    * Filter nulls upstream, as COUNT(DISTINCT) would. */
-  def kmvInput(value: Column): Column =
-    conv(substring(md5(value.cast("string")), 1, 15), 16, 10).cast("long")
+  /** [[Md5Hash60]] of a value's string form (DuckDB:
+    * `CAST(v AS VARCHAR)`). Filter nulls upstream, as COUNT(DISTINCT)
+    * would. */
+  def kmvInput(value: Column): Column = Md5Hash60(value.cast("string"))
 
   /** Buffer/output: ascending sorted distinct hashes, length ≤ k. A
     * product wrapper for the struct encoder, same device as

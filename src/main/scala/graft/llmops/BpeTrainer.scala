@@ -42,7 +42,7 @@ object BpeTrainer {
   /** Corpus word histogram: (word, freq), empty tokens dropped. The one
     * corpus-sized scan+shuffle of the pipeline. */
   def wordHistogram(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(col(textCol), " ")).as("word"))
+    docs.select(explode(TextStats.tokens(col(textCol))).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("freq"))
 

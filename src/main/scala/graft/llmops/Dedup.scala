@@ -3,6 +3,7 @@ package graft.llmops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Hash60
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard (builder-prompt extensions over `documents`).
@@ -18,9 +19,9 @@ import org.apache.spark.sql.functions._
   *    is oracle-checkable; no reliance on engine-private hash functions.
   *    The MinHash base hash is computed natively: the
   *    `graft_shingle_minhash` kernel
-  *    ([[graft.functions.CurationKernels.ngramBases]]) takes the first 60
-  *    bits of each n-gram's md5 digest mod p, the value
-  *    [[minhashBase]]'s hex-string chain computes. PRODUCTION SWITCH: at
+  *    ([[graft.functions.CurationKernels.ngramBases]]) takes each
+  *    n-gram's [[graft.functions.Md5Hash60]] mod p, as [[minhashBase]]
+  *    does. PRODUCTION SWITCH: at
   *    100 TB the crypto hash is measurable CPU — swap that base hash (and
   *    [[tokenHashHalves]]) to a 64-bit xxhash truncated to 60 bits behind
   *    the same interface; every downstream stage (affine permutations,
@@ -96,8 +97,7 @@ object Dedup {
   // shingle — at corpus scale the dominant CPU of the whole dedup job.
   // The affine family is the standard construction (universal hashing
   // over a prime field) and is exactly reproducible in ANSI SQL / DuckDB
-  // (`CAST(concat('0x', substring(md5(s),1,15)) AS BIGINT)` matches
-  // Spark's `conv(substring(md5(s),1,15),16,10)`), keeping the oracle
+  // over [[graft.functions.Md5Hash60]], keeping the oracle
   // hash-comparable. All values stay < 2^31, so a_j·x < 2^62 never
   // overflows BIGINT in either engine.
 
@@ -162,10 +162,8 @@ object Dedup {
   /** Offset for permutation j (0 ≤ b < p). */
   def minhashB(j: Int): Long = (j * 2654435789L + 1) % MinhashPrime
 
-  /** md5-derived base value in [0, p): the first 15 hex digits (60 bits)
-    * as a number, reduced mod p. */
-  def minhashBase(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long") % MinhashPrime
+  /** md5-derived base value in [0, p): [[Md5Hash60]] reduced mod p. */
+  def minhashBase(s: Column): Column = Md5Hash60(s) % MinhashPrime
 
   /** Signature as ONE array column, computed by the native codegen'd
     * [[graft.functions.MinHashSig]] kernel: one primitive `long[]` loop
@@ -525,7 +523,7 @@ object Dedup {
     * before signing. A token count, not `size(shingles) > 0`: it decides
     * eligibility without building the n-grams. */
   private[llmops] def shingleEligible(text: Column, n: Int): Column =
-    size(split(text, " ")) >= n
+    TextStats.tokenCount(text) >= n
 
   /** The MinHash sign step: eligible docs → (shingle sets, signatures),
     * the signatures straight from the text by the native
@@ -734,7 +732,7 @@ object Dedup {
   def spanDedup(df: DataFrame, idCol: String, textCol: String,
       spanWords: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = split(col(textCol), " ")
+    val toks = TextStats.tokens(col(textCol))
     // ceil(nTok / spanWords) spans; guard at 1 so empty text yields one
     // (empty) span instead of a descending sequence() error
     val nSpans = greatest(
@@ -884,7 +882,7 @@ object Dedup {
       .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("_ivs"))
     val covered = (i: Column, iv: Column) =>
       i >= iv.getField("s") && i <= iv.getField("e")
-    d.withColumn("_toks", split(col(textCol), " ")).join(ivs, Seq(idCol), "left")
+    d.withColumn("_toks", TextStats.tokens(col(textCol))).join(ivs, Seq(idCol), "left")
       .withColumn("_ivs", coalesce(col("_ivs"),
         array().cast("array<struct<s:int,e:int>>")))
       .select(col(idCol),
@@ -1059,7 +1057,7 @@ object Dedup {
     * string parsing — costs ~64× the hashing plus string ops per vote.)
     */
   def tokenHashHalves(text: Column): Column =
-    transform(array_distinct(split(text, " ")), { t =>
+    transform(array_distinct(TextStats.tokens(text)), { t =>
       val h = md5(t)
       struct(conv(substring(h, 1, 8), 16, 10).cast("long").as("lo"),
         conv(substring(h, 9, 8), 16, 10).cast("long").as("hi"))

@@ -2,6 +2,7 @@ package graft.llmops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Hash60
 
 /** Group-size privacy operators for corpus release — the structured-data
   * counterpart of [[TextStats]]' PII redaction: token-level redaction
@@ -66,9 +67,7 @@ object Privacy {
       s"truthPermille must be in (500, 1000): >500 keeps the estimator's " +
       s"denominator positive, <1000 keeps the privacy guarantee non-vacuous " +
       s"(got $truthPermille)")
-    val bucket = pmod(
-      conv(substring(md5(col(idCol).cast("string")), 1, 15), 16, 10).cast("long"),
-      lit(1000L))
+    val bucket = pmod(Md5Hash60(col(idCol).cast("string")), lit(1000L))
     df.withColumn("reported",
         when(bucket < truthPermille, col(flagCol)).otherwise(!col(flagCol)))
       .drop(flagCol)

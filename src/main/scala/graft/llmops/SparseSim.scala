@@ -38,7 +38,7 @@ object SparseSim {
     * profile where a small vocabulary saturates every unigram's df. */
   private def termsExpr(text: Column, ngram: Int): Column = {
     require(ngram >= 1)
-    if (ngram == 1) filter(split(text, " "), t => t =!= "")
+    if (ngram == 1) filter(TextStats.tokens(text), t => t =!= "")
     else Dedup.ngramArray(text, ngram)
   }
 

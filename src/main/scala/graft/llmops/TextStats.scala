@@ -2,6 +2,7 @@ package graft.llmops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Md5Hash60
 
 /** Text analysis for training-data pipelines: token counting, quality
   * scoring, language-ID heuristic, canonical fingerprinting (builder
@@ -243,7 +244,7 @@ object TextStats {
     * portable and oracle-checkable.
     */
   def splitBucket(id: Column): Column =
-    pmod(conv(substring(md5(id.cast("string")), 1, 15), 16, 10).cast("long"), lit(100))
+    pmod(Md5Hash60(id.cast("string")), lit(100))
 
   def datasetSplit(id: Column, pctTrain: Int, pctVal: Int): Column = {
     val b = splitBucket(id)
@@ -336,9 +337,7 @@ object TextStats {
       .withColumn("_keep_rate",
         least(lit(1.0), col("_cap").cast("double") / col("_n")))
       .select(col(domainCol), col("_keep_rate"))
-    val bucket = pmod(
-      conv(substring(md5(col(idCol).cast("string")), 1, 15), 16, 10).cast("long"),
-      lit(10000))
+    val bucket = pmod(Md5Hash60(col(idCol).cast("string")), lit(10000))
     df.join(broadcast(rates), Seq(domainCol))
       .filter(bucket.cast("double") < col("_keep_rate") * 10000.0)
       .drop("_keep_rate")
@@ -375,9 +374,7 @@ object TextStats {
     val rates = counts.crossJoin(broadcast(maxN))
       .withColumn("_r", sqrt(col("_max").cast("double") / col("_n")))
       .select(col(domainCol), col("_r"))
-    val bucket = pmod(
-      conv(substring(md5(col(idCol).cast("string")), 1, 15), 16, 10).cast("long"),
-      lit(10000))
+    val bucket = pmod(Md5Hash60(col(idCol).cast("string")), lit(10000))
     df.join(broadcast(rates), Seq(domainCol))
       .withColumn("_copies", floor(col("_r")).cast("long") +
         when(bucket.cast("double") < (col("_r") - floor(col("_r"))) * 10000.0, 1L)
@@ -414,8 +411,7 @@ object TextStats {
   def weightedSample(df: DataFrame, idCol: String, weightCol: String,
       strataCol: String, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    val u = conv(substring(md5(col(idCol).cast("string")), 1, 15), 16, 10)
-      .cast("long")
+    val u = Md5Hash60(col(idCol).cast("string"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(strataCol).orderBy(col("_priority"), col(idCol))
     df.filter(col(weightCol).cast("long") >= 1L)
@@ -449,8 +445,7 @@ object TextStats {
     require(numShards >= 1, "numShards must be positive")
     array_max(transform(sequence(lit(0), lit(numShards - 1)),
       s => struct(
-        conv(substring(md5(concat(id.cast("string"), lit(":"),
-          s.cast("string"))), 1, 15), 16, 10).cast("long").as("h"),
+        Md5Hash60(concat(id.cast("string"), lit(":"), s.cast("string"))).as("h"),
         s.cast("long").as("shard"))))
       .getField("shard")
   }
@@ -486,18 +481,16 @@ object TextStats {
     require(numShards >= 1, "numShards must be positive")
     val nGroups = math.ceil(math.sqrt(numShards.toDouble)).toInt
     val mPerGroup = math.ceil(numShards.toDouble / nGroups).toInt
-    def h60(key: Column) =
-      conv(substring(md5(key), 1, 15), 16, 10).cast("long")
     val id = col(idCol).cast("string")
     val grp = array_max(transform(sequence(lit(0), lit(nGroups - 1)),
       g => struct(
-        h60(concat(id, lit(":g:"), g.cast("string"))).as("h"),
+        Md5Hash60(concat(id, lit(":g:"), g.cast("string"))).as("h"),
         g.cast("long").as("grp")))).getField("grp")
     val member = array_max(transform(sequence(lit(0), lit(mPerGroup - 1)),
       j => {
         val sh = col("_grp") * mPerGroup + j.cast("long")
         struct(
-          when(sh < numShards, h60(concat(id, lit(":s:"), sh.cast("string"))))
+          when(sh < numShards, Md5Hash60(concat(id, lit(":s:"), sh.cast("string"))))
             .otherwise(lit(-1L)).as("h"),
           sh.as("shard"))
       })).getField("shard")
@@ -852,8 +845,7 @@ object TextStats {
       target: DataFrame, targetTextCol: String,
       gramN: Int, buckets: Int): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    val bucket = (g: Column) => pmod(
-      conv(substring(md5(g), 1, 15), 16, 10).cast("long"), lit(buckets.toLong))
+    val bucket = (g: Column) => pmod(Md5Hash60(g), lit(buckets.toLong))
     val docFeat = corpus
       .select(col(idCol),
         explode(Dedup.ngramArray(col(textCol), gramN)).as("g"))

@@ -66,11 +66,7 @@ object BehaviorGenerator {
     md.reset()
     val digest = md.digest(
       (seed.toString + ":" + tag).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // first 15 hex chars = top 60 bits of the first 8 bytes
-    var acc = 0L
-    var i = 0
-    while (i < 8) { acc = (acc << 8) | (digest(i) & 0xffL); i += 1 }
-    (acc >>> 4).toDouble / Pow2_60
+    graft.functions.Md5Hash60.ofDigest(digest).toDouble / Pow2_60
   }
 
   /** Weighted choice via normalized cumulative weights over one uniform
