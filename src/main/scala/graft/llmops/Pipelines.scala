@@ -363,8 +363,11 @@ object Pipelines {
   }
 
   /** Stage 4's drop: `clean` minus the ids in `dropIds` (one column named
-    * `idCol`; the larger id of each near-dup pair). */
+    * `idCol`, the larger id of each near-dup pair; repeats are harmless in
+    * an anti-join). The ids are a shuffled hash join's build side, a task
+    * holding its partition's ids, so `clean` streams through unsorted: a
+    * sort-merge join would hold a sort page per side per task. */
   private def dropNearDups(clean: DataFrame, idCol: String,
       dropIds: DataFrame): DataFrame =
-    clean.join(dropIds.distinct(), Seq(idCol), "left_anti")
+    clean.join(dropIds.hint("shuffle_hash"), Seq(idCol), "left_anti")
 }

@@ -325,6 +325,20 @@ class PlanAuditSpec extends SparkSpec {
       s"decontaminated corpus has $decontaminated partition(s)")
   }
 
+  test("plan: the near-dup drop hashes the dropped ids and sorts neither side") {
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("lang").as("domain"), col("text"))
+    val bench = docs.orderBy("doc_id").limit(3).select("text")
+    // stages 2 and 3 are checkpointed, so the only anti-join left in the
+    // plan is stage 4's drop
+    val kept = graft.llmops.Pipelines.curateFilterStages(docs, "doc_id", "text", bench,
+      "text", Seq("the", "a"), minQuality = 0.4, shingleSize = 3, numHashes = 16,
+      rowsPerBand = 4, nearDupThreshold = 0.7, decontamN = 8)
+    val p = plan(kept)
+    assert(p.contains("LeftAnti, BuildRight") && p.contains("ShuffledHashJoin"), p)
+    assert("SortMergeJoin \\[[^\\]]*\\], \\[[^\\]]*\\], LeftAnti".r.findFirstIn(p).isEmpty, p)
+  }
+
   test("FanOut reads a checkpoint's width: spread ones pass through, narrow ones fan out") {
     import graft.operators.FanOut
     val target = spark.sparkContext.defaultParallelism
