@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.graph.ConnectivityCache
+import org.apache.spark.sql.types._
+import graft.graph.{ConnectedComponents, ConnectivityCache, Knn}
 import graft.model.Tables
 
 class ConnectivityCacheSpec extends SparkSpec {
@@ -228,5 +229,93 @@ class ConnectivityCacheSpec extends SparkSpec {
       "vec_id", "embedding", 64, 3, 0.10, analysisDate = "2026-02-02").head()
     assert(byName(again) == byName(miss))
     assert(files(dir, "m1") == before)
+  }
+
+  /** The analysis as a Spark plan, kept as the reference only: the
+    * broadcast kNN, its edges cast to long, union-find, and the summary
+    * row in document order. */
+  private def sparkAnalysis(points: DataFrame, mapName: String, idCol: String,
+      vecCol: String, dim: Int, k: Int, minRatio: Double, analysisDate: String,
+      fingerprint: Long): Row = {
+    val edges = Knn.bruteForce(points, idCol = idCol, vecCol = vecCol, k = k, dim = dim)
+      .select(col("src_id").cast("long").as("src"), col("dst_id").cast("long").as("dst"))
+    val labels = ConnectedComponents.localUnionFind(edges).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val islands = labels.groupMapReduce(_._2)(_ => 1L)(_ + _)
+      .toSeq.map { case (component, size) => (size, component) }
+      .sorted(Ordering[(Long, Long)].reverse)
+    val ratios = islands.map { case (size, _) => (size, size.toDouble / labels.length) }
+      .filter(_._2 >= minRatio)
+    Row(mapName, analysisDate, points.count(), k, islands.size.toLong,
+      ratios.map { case (size, ratio) => Row(size, ratio) },
+      ratios.headOption.map(r => java.lang.Long.valueOf(r._1)).orNull, fingerprint)
+  }
+
+  private val DocFields = Seq("map_name", "analysis_date", "sample_count", "k_nearest",
+    "num_islands", "island_ratios", "selected_island_size", "input_fingerprint")
+
+  /** Points from (id, vector) pairs; a null id or vector, or a null
+    * element, stays null. */
+  private def pointsOf(rows: (java.lang.Long, Seq[java.lang.Double])*): DataFrame =
+    spark.createDataFrame(
+      rows.map { case (id, v) => Row(id, v) }.asJava,
+      StructType(Seq(StructField("id", LongType), StructField("vec", ArrayType(DoubleType)))))
+
+  private def pt(id: java.lang.Long, xs: Any*): (java.lang.Long, Seq[java.lang.Double]) =
+    (id, xs.map {
+      case null => null
+      case x: Double => java.lang.Double.valueOf(x)
+      case x: Int => java.lang.Double.valueOf(x.toDouble)
+    })
+
+  /** (name, points, id column, vector column, dim, k, minRatio). */
+  private def equivalenceTable: Seq[(String, DataFrame, String, String, Int, Int, Double)] = {
+    // a 4x4 unit grid whose ids run against the layout: every point has
+    // 2-4 neighbours at distance 1, so dst_id alone picks among them
+    val grid = pointsOf((for (x <- 0 until 4; y <- 0 until 4)
+      yield pt((x * 4 + y) * 7L % 16, x, y)): _*)
+    val dupNull = pointsOf(pt(1L, 0, 0), pt(2L, 1, 0), pt(3L, 2, 0), pt(3L, 10, 0),
+      pt(4L, 11, 0), pt(null, 0.5, 0), pt(null, 10.5, 0), pt(5L, 12, 0))
+    val five = pointsOf((0 until 5).map(i => pt(i.toLong, i * i, 0)): _*)
+    val nanNull = pointsOf(pt(1L, 0, 0, 0), pt(2L, 1, 0, 0), pt(3L, Double.NaN, 0, 0),
+      pt(4L, 2, null, 0), pt(5L, 3, 0, 0), pt(6L, 4, 0, 0), (java.lang.Long.valueOf(7L), null), pt(8L, 20, 0, 0))
+    val rnd = new scala.util.Random(11)
+    val spatial = pointsOf((0 until 40).map(i =>
+      pt(i.toLong, rnd.nextDouble() * 100, rnd.nextDouble() * 100, rnd.nextDouble() * 10)): _*)
+    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 40)
+    Seq(
+      ("unit grid, k=1", grid, "id", "vec", 2, 1, 0.05),
+      ("unit grid, k=2", grid, "id", "vec", 2, 2, 0.05),
+      ("unit grid, k=2, native tier", grid, "id", "vec", 0, 2, 0.05),
+      ("duplicate and null ids", dupNull, "id", "vec", 2, 2, 0.1),
+      ("duplicate and null ids, native tier", dupNull, "id", "vec", 0, 1, 0.1),
+      ("single point", clusters(1), "id", "vec", 3, 2, 0.2),
+      ("k = n-1", five, "id", "vec", 2, 4, 0.1),
+      ("k > n-1", five, "id", "vec", 2, 9, 0.1),
+      ("two far clusters", clusters(6, 5), "id", "vec", 3, 2, 0.1),
+      ("NaN coordinate, null element, null vector", nanNull, "id", "vec", 3, 2, 0.1),
+      ("NaN coordinate, null element, null vector, native tier", nanNull, "id", "vec", 0, 1, 0.1),
+      ("3-D double points", spatial, "id", "vec", 3, 3, 0.05),
+      ("64-d float embeddings", emb, "vec_id", "embedding", 64, 3, 0.10))
+  }
+
+  test("analysisDoc and readOrCompute equal the Spark-plan analysis on every table row") {
+    equivalenceTable.foreach { case (name, pts, idCol, vecCol, dim, k, minRatio) =>
+      val fp = ConnectivityCache.inputFingerprint(pts, idCol, vecCol, k, minRatio)
+      val ref = sparkAnalysis(pts, "m", idCol, vecCol, dim, k, minRatio, "2026-01-01", fp)
+      val doc = ConnectivityCache.analysisDoc(pts, "m", idCol, vecCol, dim, k, minRatio,
+        "2026-01-01", fp).collect()
+      assert(doc.length == 1, name)
+      assert(doc.head.schema.fieldNames.toSeq == DocFields, name)
+      assert(Row.fromSeq(doc.head.toSeq) == ref, name)
+      val dir = Files.createTempDirectory("conncache-eq").toFile.getAbsolutePath
+      val refByName = DocFields.zip(ref.toSeq).toMap
+      val miss = ConnectivityCache.readOrCompute(spark, dir, pts, "m", idCol, vecCol, dim, k,
+        minRatio, "2026-01-01").collect()
+      assert(miss.map(byName).toSeq == Seq(refByName), s"$name: miss")
+      val hit = ConnectivityCache.readOrCompute(spark, dir, pts, "m", idCol, vecCol, dim, k,
+        minRatio, "2026-02-02").collect()
+      assert(hit.map(byName).toSeq == Seq(refByName), s"$name: hit")
+    }
   }
 }
