@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions.{conv, md5, substring}
   * `CAST(concat('0x', substring(md5(v), 1, 15)) AS BIGINT)`. */
 object Md5Hash60 {
   /** The hash of `x` (a string hashes its UTF-8 bytes) as a long column. */
-  def apply(x: Column): Column = conv(substring(md5(x), 1, 15), 16, 10).cast("long")
+  def apply(x: Column): Column = ofHex(md5(x))
+
+  /** The hash from an md5 hex column, for a caller that keeps the md5. */
+  def ofHex(hex: Column): Column = conv(substring(hex, 1, 15), 16, 10).cast("long")
 
   /** The hash from an md5 digest. */
   def ofDigest(digest: Array[Byte]): Long = {

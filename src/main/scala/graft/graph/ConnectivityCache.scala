@@ -3,9 +3,13 @@ package graft.graph
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.functions.VectorKernels
+import graft.llmops.VectorMath
 
 /** S14 — per-map connectivity analysis cache (reference:
   * navmesh_connectivity.py:209-231, invalidation :272-290).
@@ -19,16 +23,19 @@ import org.apache.spark.sql.types._
   * set plus the analysis parameters: the cached row is valid iff the
   * exact inputs that produced it are unchanged — stronger than the
   * reference's date/mtime check (robust to rewrites that keep mtime, to
-  * clock skew, and to task retries) and computable in one map-side pass.
+  * clock skew, and to task retries) and computed from the same collect
+  * the analysis reads.
   *
   * Cost posture: a map is ≤ a few hundred samples, so a read-through is
-  * dominated by Spark job launches, not by work. A hit is two jobs (the
-  * fingerprint pass and the cache probe); a miss adds one kNN run, whose
-  * edge list is collected once and summarized on the driver, and one
-  * write. Per-map bound: [[Knn.bruteForce]] broadcasts the whole point
-  * set, so a map must fit in a broadcast, and its edge list (k rows per
-  * point) then fits on the driver. The cache table stays one row per
-  * map — driver-size by construction.
+  * dominated by Spark job launches, not by work, and the map is analysed
+  * on the driver from ONE collect of its points. A hit is two jobs (that
+  * collect, which gives the fingerprint, and the cache probe); a miss is
+  * three (the collect, the probe, the write), and [[analysisDoc]] alone
+  * is one. Per-map bound: a map's points are held on the driver and
+  * scored in n² distance evaluations on one thread, so a map must fit in
+  * driver memory (the Spark kNN this replaced broadcast the same points
+  * unconditionally). The cache table stays one row per map —
+  * driver-size by construction.
   */
 object ConnectivityCache {
 
@@ -53,73 +60,106 @@ object ConnectivityCache {
     * (commutative AND multiplicity-sensitive — unlike XOR, duplicate rows
     * don't cancel, so {A,A,B} and {C,C,B} can't alias), mixed with the
     * row count and the parameters so a k or ratio change also
-    * invalidates.
+    * invalidates. Wrapping addition is exact mod 2^64, so the value
+    * equals a decimal SUM wrapped to a long — the form earlier caches
+    * were stamped with. Collects the points, as an analysis does.
     */
   def inputFingerprint(points: DataFrame, idCol: String, vecCol: String,
       k: Int, minRatio: Double): Long =
-    fingerprintAndCount(points, idCol, vecCol, k, minRatio)._1
+    fingerprint(sample(points, idCol, vecCol), k, minRatio)
 
-  /** The fingerprint and the row count in one map-side pass: each
-    * partition sums its row hashes as a wrapping long, the driver adds
-    * the partition sums. Wrapping addition is exact mod 2^64, so the value
-    * equals a decimal SUM wrapped to a long — the form earlier caches
-    * were stamped with. */
-  private def fingerprintAndCount(points: DataFrame, idCol: String,
-      vecCol: String, k: Int, minRatio: Double): (Long, Long) = {
-    val parts = points
-      .select(xxhash64(col(idCol), col(vecCol).cast("string")))
-      .as(Encoders.scalaLong)
-      .mapPartitions { hashes =>
-        var sum = 0L
-        var n = 0L
-        hashes.foreach { h => sum += h; n += 1 }
-        Iterator.single((sum, n))
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .collect()
-    val dataHash = parts.foldLeft(0L)(_ + _._1)
-    val n = parts.foldLeft(0L)(_ + _._2)
-    val fp = dataHash ^ java.lang.Long.rotateLeft(n, 31) ^
+  /** The map's points in one job: (id, vector as array<double>, row
+    * hash) per row. */
+  private def sample(points: DataFrame, idCol: String, vecCol: String): Array[Row] =
+    points.select(col(idCol), VectorMath.precast(col(vecCol)),
+      xxhash64(col(idCol), col(vecCol).cast("string"))).collect()
+
+  private def fingerprint(sample: Array[Row], k: Int, minRatio: Double): Long =
+    sample.foldLeft(0L)(_ + _.getLong(2)) ^
+      java.lang.Long.rotateLeft(sample.length.toLong, 31) ^
       java.lang.Long.rotateLeft(k.toLong, 17) ^
       java.lang.Double.doubleToLongBits(minRatio)
-    (fp, n)
-  }
 
   /** The analysis document for one map: kNN edges over the sample
     * embedding, connected components, island ratios — one summary row.
     * `analysisDate` is caller-supplied (the reference stamps the run
     * date); keeping it a parameter keeps the document deterministic.
-    * Runs the analysis eagerly and returns a one-row local DataFrame.
+    * Collects the points in one job, analyses them on the driver and
+    * returns a one-row local DataFrame. The id column must be integral.
+    * For `dim` in 1..[[VectorMath.unrollLimit]] every vector of an id'd
+    * point must have `dim` elements, or the analysis fails naming the
+    * map; other `dim` values pair any vectors of one length.
     */
   def analysisDoc(points: DataFrame, mapName: String, idCol: String,
       vecCol: String, dim: Int, k: Int, minRatio: Double,
-      analysisDate: String, fingerprint: Long): DataFrame =
-    local(points.sparkSession, analyse(points, mapName, idCol, vecCol, dim,
-      k, minRatio, analysisDate, fingerprint, points.count()))
+      analysisDate: String, fingerprint: Long): DataFrame = {
+    requireIntegralIds(points, idCol)
+    local(points.sparkSession, analyse(sample(points, idCol, vecCol), mapName,
+      dim, k, minRatio, analysisDate, fingerprint))
+  }
 
-  /** The document row. The kNN edge list is collected once and labelled
-    * by the driver-side union-find; over the nodes that have edges, each
-    * island's ratio is size ÷ node count. Islands go largest first, ties
-    * to the larger component id (component = min node id); those below
-    * `minRatio` leave `island_ratios` but still count in `num_islands`.
-    * With no edges the ratios are empty and the selected size is null. */
-  private def analyse(points: DataFrame, mapName: String, idCol: String,
-      vecCol: String, dim: Int, k: Int, minRatio: Double,
-      analysisDate: String, fingerprint: Long, sampleCount: Long): Row = {
-    val edges = Knn.bruteForce(points, idCol = idCol, vecCol = vecCol,
-        k = k, dim = dim)
-      .select(col("src_id").cast("long"), col("dst_id").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val labels = ConnectedComponents.unionFind(edges)
+  private def requireIntegralIds(points: DataFrame, idCol: String): Unit =
+    points.select(col(idCol)).schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case t => throw new IllegalArgumentException(
+        s"connectivity analysis needs an integral id column; '$idCol' is ${t.simpleString}")
+    }
+
+  /** The document row. Each id's k nearest other ids ([[nearest]]) are
+    * the edges, labelled by the driver-side union-find; over the nodes
+    * that have edges, each island's ratio is size ÷ node count. Islands
+    * go largest first, ties to the larger component id (component = min
+    * node id); those below `minRatio` leave `island_ratios` but still
+    * count in `num_islands`. With no edges the ratios are empty and the
+    * selected size is null. A null-id point has no edges but counts in
+    * `sample_count`. */
+  private def analyse(sample: Array[Row], mapName: String, dim: Int, k: Int,
+      minRatio: Double, analysisDate: String, fingerprint: Long): Row = {
+    val points = sample.filterNot(_.isNullAt(0)).map { r =>
+      (r.getAs[Number](0).longValue, if (r.isNullAt(1)) null: ArrayData
+        else new GenericArrayData(r.getSeq[Any](1).toArray))
+    }
+    if (dim > 0 && dim <= VectorMath.unrollLimit) points.foreach { case (id, v) =>
+      if (v != null && v.numElements() != dim) throw new IllegalArgumentException(
+        s"connectivity analysis of map '$mapName': point $id has " +
+          s"${v.numElements()} coordinates, expected dim = $dim")
+    }
+    val labels = ConnectedComponents.unionFind(nearest(points, k))
     val islands = labels.groupMapReduce(_._2)(_ => 1L)(_ + _)
       .toSeq.map { case (component, size) => (size, component) }
       .sorted(Ordering[(Long, Long)].reverse)
     val total = labels.size.toDouble
     val ratios = islands.map { case (size, _) => (size, size.toDouble / total) }
       .filter(_._2 >= minRatio)
-    Row(mapName, analysisDate, sampleCount, k, islands.size.toLong,
+    Row(mapName, analysisDate, sample.length.toLong, k, islands.size.toLong,
       ratios.map { case (size, ratio) => Row(size, ratio) },
       ratios.headOption.map(r => java.lang.Long.valueOf(r._1)).orNull,
       fingerprint)
+  }
+
+  /** Exact kNN edges (src, dst): for each id, the k nearest points with
+    * another id, in [[Knn.bruteForce]]'s order — distance ascending as
+    * Spark sorts it (null first, NaN last), then dst id ascending. The
+    * distance is `sqrt` of the `graft_dist_sq` kernel body, null where
+    * either vector is null or the pair is not [[VectorKernels.pairable]].
+    * Rows sharing an id pool their candidates under that one source. */
+  private def nearest(points: Array[(Long, ArrayData)], k: Int): Iterable[(Long, Long)] = {
+    val order: Ordering[(java.lang.Double, Long)] = (a, b) => {
+      val c =
+        if (a._1 == null || b._1 == null) java.lang.Boolean.compare(b._1 == null, a._1 == null)
+        else SQLOrderingUtil.compareDoubles(a._1, b._1)
+      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+    }
+    points.groupBy(_._1).toSeq.flatMap { case (src, sources) =>
+      sources.flatMap { case (_, a) =>
+        points.collect { case (dst, b) if dst != src =>
+          val dist: java.lang.Double =
+            if (a == null || b == null || !VectorKernels.pairable(a, b)) null
+            else math.sqrt(VectorKernels.distSq(a, b))
+          (dist, dst)
+        }
+      }.sorted(order).take(k).map(c => (src, c._2))
+    }
   }
 
   private def local(spark: SparkSession, doc: Row): DataFrame =
@@ -164,14 +204,18 @@ object ConnectivityCache {
     * fresh document (reference's load-or-analyze flow,
     * navmesh_connectivity.py:272-290). Either way the result is a
     * one-row local DataFrame in the cache's column order (`map_name`
-    * last, as a partitioned read returns it). */
+    * last, as a partitioned read returns it). One collect of the points
+    * gives the fingerprint and, on a miss, the analysis; the id column
+    * and `dim` are checked as in [[analysisDoc]]. */
   def readOrCompute(spark: SparkSession, path: String, points: DataFrame,
       mapName: String, idCol: String, vecCol: String, dim: Int, k: Int,
       minRatio: Double, analysisDate: String): DataFrame = {
-    val (fp, n) = fingerprintAndCount(points, idCol, vecCol, k, minRatio)
+    requireIntegralIds(points, idCol)
+    val rows = sample(points, idCol, vecCol)
+    val fp = fingerprint(rows, k, minRatio)
     readValid(spark, path, mapName, fp).getOrElse {
-      val doc = local(spark, analyse(points, mapName, idCol, vecCol, dim, k,
-        minRatio, analysisDate, fp, n))
+      val doc = local(spark, analyse(rows, mapName, dim, k, minRatio,
+        analysisDate, fp))
       write(doc, path)
       doc.select((DocSchema.fieldNames.filterNot(_ == "map_name") :+ "map_name")
         .map(col): _*)

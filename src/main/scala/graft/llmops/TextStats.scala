@@ -515,11 +515,8 @@ object TextStats {
   def trainingShards(df: DataFrame, idCol: String, numShards: Int,
       seed: String): DataFrame = {
     require(numShards > 0, "numShards must be positive")
-    val key = md5(concat(lit(seed), lit("-"), col(idCol).cast("string")))
-    val shard = pmod(conv(substring(key, 1, 15), 16, 10).cast("long"),
-      lit(numShards.toLong))
-    df.withColumn("_shuffle_key", key)
-      .withColumn("shard", shard)
+    df.withColumn("_shuffle_key", md5(concat(lit(seed), lit("-"), col(idCol).cast("string"))))
+      .withColumn("shard", pmod(Md5Hash60.ofHex(col("_shuffle_key")), lit(numShards.toLong)))
       .withColumn("pos", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("shard")
           .orderBy(col("_shuffle_key"), col(idCol))) - 1)

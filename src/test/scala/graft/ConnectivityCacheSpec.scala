@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -317,5 +319,64 @@ class ConnectivityCacheSpec extends SparkSpec {
         minRatio, "2026-02-02").collect()
       assert(hit.map(byName).toSeq == Seq(refByName), s"$name: hit")
     }
+  }
+
+  /** The Spark jobs `body` starts. */
+  private def jobCount(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tap = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(tap)
+    try { body; ListenerDrain(sc) } finally sc.removeSparkListener(tap)
+    jobs.get
+  }
+
+  test("a hit runs 2 jobs, a miss 3 and analysisDoc 1, at 30 and 200 points") {
+    Seq(30, 200).foreach { n =>
+      val pts = Tables.embeddings(spark, sf).filter(col("vec_id") < n)
+      val dir = Files.createTempDirectory("conncache-jobs").toFile.getAbsolutePath
+      // a stale row for the map, so the miss probes an existing cache
+      ConnectivityCache.write(ConnectivityCache.analysisDoc(pts, "m1", "vec_id", "embedding",
+        64, 3, 0.10, "2026-01-01", fingerprint = 42L), dir)
+      def readThrough(date: String) = ConnectivityCache.readOrCompute(spark, dir, pts, "m1",
+        "vec_id", "embedding", 64, 3, 0.10, date)
+      assert(jobCount(readThrough("2026-02-02")) == 3, s"miss at $n points")
+      assert(jobCount(readThrough("2026-03-03")) == 2, s"hit at $n points")
+      assert(readThrough("2026-04-04").head().getAs[String]("analysis_date") == "2026-02-02")
+      assert(jobCount(ConnectivityCache.analysisDoc(pts, "m1", "vec_id", "embedding",
+        64, 3, 0.10, "2026-01-01", fingerprint = 0L)) == 1, s"analysisDoc at $n points")
+    }
+  }
+
+  test("a vector whose length is not dim fails the analysis, naming the map") {
+    val pts = pointsOf(pt(1L, 0, 0, 0), pt(2L, 1, 0), pt(3L, 2, 0, 0))
+    val e = intercept[IllegalArgumentException](ConnectivityCache.analysisDoc(pts, "bad_map",
+      "id", "vec", dim = 3, k = 2, minRatio = 0.1, analysisDate = "2026-01-01", fingerprint = 0L))
+    assert(e.getMessage.contains("'bad_map'") && e.getMessage.contains("dim = 3"), e.getMessage)
+    val dir = Files.createTempDirectory("conncache-dim").toFile.getAbsolutePath
+    intercept[IllegalArgumentException](ConnectivityCache.readOrCompute(spark, dir, pts,
+      "bad_map", "id", "vec", 3, 2, 0.1, "2026-01-01"))
+    assert(!Files.exists(Path.of(dir, "map_name=bad_map")))
+    // past the unrolled widths the distance has no dim: a mismatched pair
+    // has a null distance, as graft_dist_sq gives it
+    val doc = ConnectivityCache.analysisDoc(pts, "bad_map", "id", "vec", dim = 0, k = 1,
+      minRatio = 0.1, analysisDate = "2026-01-01", fingerprint = 0L).head()
+    assert(Row.fromSeq(doc.toSeq) ==
+      sparkAnalysis(pts, "bad_map", "id", "vec", 0, 1, 0.1, "2026-01-01", 0L))
+  }
+
+  test("a non-integral id column is rejected before any job runs") {
+    val pts = clusters(3).select(col("id").cast("string").as("id"), col("vec"))
+    val dir = Files.createTempDirectory("conncache-ids").toFile.getAbsolutePath
+    assert(jobCount {
+      val e = intercept[IllegalArgumentException](ConnectivityCache.analysisDoc(pts, "m",
+        "id", "vec", dim = 3, k = 2, minRatio = 0.1, analysisDate = "2026-01-01", fingerprint = 0L))
+      assert(e.getMessage.contains("integral"), e.getMessage)
+      intercept[IllegalArgumentException](ConnectivityCache.readOrCompute(spark, dir, pts,
+        "m", "id", "vec", 3, 2, 0.1, "2026-01-01"))
+    } == 0)
   }
 }
