@@ -276,9 +276,14 @@ class ConnectivityCacheSpec extends SparkSpec {
     // 2-4 neighbours at distance 1, so dst_id alone picks among them
     val grid = pointsOf((for (x <- 0 until 4; y <- 0 until 4)
       yield pt((x * 4 + y) * 7L % 16, x, y)): _*)
-    val dupNull = pointsOf(pt(1L, 0, 0), pt(2L, 1, 0), pt(3L, 2, 0), pt(3L, 10, 0),
-      pt(4L, 11, 0), pt(null, 0.5, 0), pt(null, 10.5, 0), pt(5L, 12, 0))
+    // id 3 twice: at k = 1 its pooled nearest is 2, so {4, 5} stays an
+    // island that a per-row kNN would join through the far copy
+    val dupNull = pointsOf(pt(1L, 0, 0), pt(2L, 1, 0), pt(3L, 2, 0), pt(3L, 50, 0),
+      pt(4L, 47, 0), pt(5L, 46, 0), pt(null, 0.5, 0), pt(null, 46.5, 0))
     val five = pointsOf((0 until 5).map(i => pt(i.toLong, i * i, 0)): _*)
+    // NaN distances rank last: only point 3's own edges reach it
+    val nan = pointsOf(pt(1L, 0, 0), pt(2L, 1, 0), pt(3L, Double.NaN, 0), pt(4L, 30, 0),
+      pt(5L, 31, 0))
     val nanNull = pointsOf(pt(1L, 0, 0, 0), pt(2L, 1, 0, 0), pt(3L, Double.NaN, 0, 0),
       pt(4L, 2, null, 0), pt(5L, 3, 0, 0), pt(6L, 4, 0, 0), (java.lang.Long.valueOf(7L), null), pt(8L, 20, 0, 0))
     val rnd = new scala.util.Random(11)
@@ -289,12 +294,15 @@ class ConnectivityCacheSpec extends SparkSpec {
       ("unit grid, k=1", grid, "id", "vec", 2, 1, 0.05),
       ("unit grid, k=2", grid, "id", "vec", 2, 2, 0.05),
       ("unit grid, k=2, native tier", grid, "id", "vec", 0, 2, 0.05),
-      ("duplicate and null ids", dupNull, "id", "vec", 2, 2, 0.1),
+      ("duplicate and null ids", dupNull, "id", "vec", 2, 1, 0.1),
+      ("duplicate and null ids, k=2", dupNull, "id", "vec", 2, 2, 0.1),
       ("duplicate and null ids, native tier", dupNull, "id", "vec", 0, 1, 0.1),
       ("single point", clusters(1), "id", "vec", 3, 2, 0.2),
       ("k = n-1", five, "id", "vec", 2, 4, 0.1),
       ("k > n-1", five, "id", "vec", 2, 9, 0.1),
       ("two far clusters", clusters(6, 5), "id", "vec", 3, 2, 0.1),
+      ("NaN coordinate", nan, "id", "vec", 2, 1, 0.1),
+      ("NaN coordinate, native tier", nan, "id", "vec", 0, 1, 0.1),
       ("NaN coordinate, null element, null vector", nanNull, "id", "vec", 3, 2, 0.1),
       ("NaN coordinate, null element, null vector, native tier", nanNull, "id", "vec", 0, 1, 0.1),
       ("3-D double points", spatial, "id", "vec", 3, 3, 0.05),
