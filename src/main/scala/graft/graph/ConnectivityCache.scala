@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.VectorKernels
-import graft.llmops.VectorMath
+import graft.llmops.{SegmentIO, VectorMath}
 
 /** S14 — per-map connectivity analysis cache (reference:
   * navmesh_connectivity.py:209-231, invalidation :272-290).
@@ -33,9 +33,8 @@ import graft.llmops.VectorMath
   * three (the collect, the probe, the write), and [[analysisDoc]] alone
   * is one. Per-map bound: a map's points are held on the driver and
   * scored in n² distance evaluations on one thread, so a map must fit in
-  * driver memory (the Spark kNN this replaced broadcast the same points
-  * unconditionally). The cache table stays one row per map —
-  * driver-size by construction.
+  * driver memory. The cache table stays one row per map — driver-size
+  * by construction.
   */
 object ConnectivityCache {
 
@@ -93,17 +92,10 @@ object ConnectivityCache {
   def analysisDoc(points: DataFrame, mapName: String, idCol: String,
       vecCol: String, dim: Int, k: Int, minRatio: Double,
       analysisDate: String, fingerprint: Long): DataFrame = {
-    requireIntegralIds(points, idCol)
+    SegmentIO.requireIntegralIds(points, idCol, "ConnectivityCache.analysisDoc")
     local(points.sparkSession, analyse(sample(points, idCol, vecCol), mapName,
       dim, k, minRatio, analysisDate, fingerprint))
   }
-
-  private def requireIntegralIds(points: DataFrame, idCol: String): Unit =
-    points.select(col(idCol)).schema.head.dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-      case t => throw new IllegalArgumentException(
-        s"connectivity analysis needs an integral id column; '$idCol' is ${t.simpleString}")
-    }
 
   /** The document row. Each id's k nearest other ids ([[nearest]]) are
     * the edges, labelled by the driver-side union-find; over the nodes
@@ -210,7 +202,7 @@ object ConnectivityCache {
   def readOrCompute(spark: SparkSession, path: String, points: DataFrame,
       mapName: String, idCol: String, vecCol: String, dim: Int, k: Int,
       minRatio: Double, analysisDate: String): DataFrame = {
-    requireIntegralIds(points, idCol)
+    SegmentIO.requireIntegralIds(points, idCol, "ConnectivityCache.readOrCompute")
     val rows = sample(points, idCol, vecCol)
     val fp = fingerprint(rows, k, minRatio)
     readValid(spark, path, mapName, fp).getOrElse {

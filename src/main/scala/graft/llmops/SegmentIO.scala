@@ -74,16 +74,16 @@ private[graft] object SegmentIO {
     }
   }
 
-  /** Builder guard: segment ids must be integral (the builders
-    * normalize them to long). The watermarks order ids as longs — over
-    * strings min/max compares text ("10" < "5") and stores the wrong
-    * marks, and the open guard then passes overlapping segments. */
+  /** Builder guard: ids must be integral, because the caller orders
+    * them as longs. Segment builders normalize ids to long and the
+    * watermarks order them so — over strings min/max compares text
+    * ("10" < "5") and stores the wrong marks, and the open guard then
+    * passes overlapping segments. */
   def requireIntegralIds(df: DataFrame, idCol: String, caller: String): Unit = {
     val idType = df.schema(idCol).dataType
     require(Seq[DataType](LongType, IntegerType, ShortType, ByteType)
         .contains(idType),
-      s"$caller: id column '$idCol' must be integral (got $idType)" +
-        " - the segment watermark convention orders ids as longs")
+      s"$caller: id column '$idCol' must be integral (got $idType) - ids are ordered as longs")
   }
 
   /** Every segment's one-row `statsTable` in `dirs` order: ONE scan
