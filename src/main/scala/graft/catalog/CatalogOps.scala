@@ -144,16 +144,6 @@ object CatalogOps {
     df.write.mode("overwrite").format("parquet")
       .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
 
-  /** Hive-style partitioned layout: one directory per `partCol` value.
-    * The 100 TB table convention — a reader filtering on the partition
-    * column (ingest date, scene, language) prunes whole directories at
-    * planning time and never lists, opens, or scans the rest. Choose a
-    * column with bounded cardinality (dates, not doc ids): each value is
-    * a directory, and tiny partitions make small files.
-    */
-  def writePartitioned(df: DataFrame, path: String, partCol: String): Unit =
-    df.write.mode("overwrite").partitionBy(partCol).parquet(path)
-
   /** Small-files compaction: rewrite a directory into files of
     * ~`targetRecordsPerFile` rows. Streaming sinks and per-task writers
     * accrete thousands of KB-sized files; at scale the file COUNT (driver

@@ -1,7 +1,6 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Majority-vote label propagation (Raghavan et al. 2007) — the

@@ -117,8 +117,6 @@ object ConnectedComponents {
     *         distinct node of the input edge list — the same contract as
     *         [[localUnionFind]] / [[labelPropagation]]. */
   def alternatingStar(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-
     // one star step: for every node u with neighbor multiset N(u) (both
     // orientations), m = min(N(u) ∪ {u}); large moves {v ∈ N(u) | v > u}
     // to m, small moves {v ∈ N(u) | v ≤ u, v ≠ m} ∪ {u} to m.

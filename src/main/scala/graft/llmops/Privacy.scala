@@ -1,6 +1,6 @@
 package graft.llmops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Md5Hash60
 

@@ -575,13 +575,6 @@ object Similarity {
       .withColumn("recall",
         col("n_hit").cast("double") / col("n_exact").cast("double"))
 
-  /** ±1 sign matrix for [[randomProject]], derived from md5 parity the
-    * same way [[lshTopK]] derives hyperplanes — see
-    * [[graft.functions.VectorExpressions.jlSigns]] (the single source of
-    * truth; the native kernel's registration derives the same matrix). */
-  def projectionSigns(seed: String, outDim: Int, dim: Int): Array[Array[Double]] =
-    graft.functions.VectorExpressions.jlSigns(seed, outDim, dim)
-
   /** Johnson–Lindenstrauss random projection: compress a `dim`-wide
     * embedding to `outDim` coordinates, each the dot product with a ±1
     * sign row (Achlioptas, "Database-friendly random projections", 2001 —

@@ -128,13 +128,10 @@ object TextStats {
       .otherwise(array().cast("array<string>"))
 
   /** Share of tokens that are repeats of an earlier token:
-    * (n - n_distinct) / n. Prefer the `(toks)` overload on a MATERIALIZED
-    * token-array column when combining with other metrics — higher-order
-    * functions run as CodegenFallback, so a duplicated inline expression
-    * is re-evaluated per reference, not CSE'd. */
-  def duplicateTokenFraction(text: Column): Column =
-    duplicateTokenFractionOfTokens(tokens(text))
-
+    * (n - n_distinct) / n, on a MATERIALIZED token-array column. The
+    * shipped form is the `graft_repetition_stats` kernel
+    * ([[graft.functions.TextExpressions.repetitionStats]]); this and
+    * [[topRunFraction]] over [[sortedBigrams]] are its reference. */
   def duplicateTokenFractionOfTokens(toks: Column): Column =
     (size(toks) - size(array_distinct(toks))).cast("double") / size(toks)
 
@@ -160,9 +157,6 @@ object TextStats {
       acc => acc.getField("best"))
     when(size(sorted) > 0, best.cast("double") / size(sorted)).otherwise(lit(0.0))
   }
-
-  def topBigramFraction(text: Column): Column =
-    topRunFraction(sortedBigrams(tokens(text)))
 
   /** Σ c·(c−1) over the element multiplicities of a SORTED array — the
     * repeated-ordered-pair count behind the Gini–Simpson diversity index

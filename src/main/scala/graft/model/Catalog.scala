@@ -1,11 +1,10 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Reference-shaped catalog entities (SURVEY.md §1.1 E1-E4) as explicit
-  * schemas + case classes. The SQLite registry becomes parquet tables with
-  * temp views `scenes` / `maps` / `sequences` for the SQL surface.
+  * schemas + case classes. The SQLite registry becomes parquet tables
+  * read through [[Tables]].
   */
 object Catalog {
 
@@ -57,16 +56,4 @@ object Catalog {
     StructField("created_at", TimestampType),
     StructField("uploaded_at", TimestampType),
     StructField("metadata", StringType)))
-
-  /** Parquet-backed store with SQL views — the single source of truth
-    * replacing the reference's dual SQLite+JSON writes
-    * (SURVEY.md §4 "materialized-view maintenance"). */
-  def registerViews(spark: SparkSession, dir: String): Unit = {
-    for (t <- Seq("scenes", "maps", "sequences")) {
-      val p = s"$dir/$t.parquet"
-      if (new java.io.File(p.stripPrefix("file:")).exists()) {
-        spark.read.parquet(p).createOrReplaceTempView(t)
-      }
-    }
-  }
 }

@@ -347,14 +347,14 @@ object CatalogQueries extends QueryFamily {
     // (reference: scene_scanner.py:593-614 BOS folder extraction).
     ("q_distinct_folders",
       (s: SparkSession, d: String) => {
-        Tables.lineitem(s, d)
-          .select(concat_ws("/", col("l_returnflag"), col("l_linestatus"),
-            col("l_orderkey").cast("string")).as("key"))
-          .select(element_at(split(col("key"), "/"), 1).as("folder"))
-          .distinct()
+        graft.sources.Sources.topLevelFolders(Tables.lineitem(s, d)
+            .select(concat_ws("/", col("l_returnflag"), col("l_linestatus"),
+              col("l_orderkey").cast("string")).as("key")), "key")
           .orderBy("folder")
       },
-      Some("""SELECT DISTINCT string_split(concat(l_returnflag, '/', l_linestatus, '/', CAST(l_orderkey AS VARCHAR)), '/')[1] AS folder
-             |FROM lineitem ORDER BY folder""".stripMargin))
+      Some("""SELECT DISTINCT folder FROM (
+             |  SELECT string_split(concat(l_returnflag, '/', l_linestatus, '/', CAST(l_orderkey AS VARCHAR)), '/')[1] AS folder
+             |  FROM lineitem)
+             |WHERE folder <> '' ORDER BY folder""".stripMargin))
   )
 }

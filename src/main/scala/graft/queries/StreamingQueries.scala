@@ -236,11 +236,9 @@ object StreamingQueries extends QueryFamily {
     // reference: run_render_job_headless.py:318-325).
     ("q_session_silence",
       (s: SparkSession, d: String) => {
-        Tables.events(s, d)
-          .groupBy(col("user_id"), session_window(col("ts"), "10 minutes"))
-          .agg(count(lit(1)).as("n_frames"),
-            unix_micros(min(col("ts"))).as("session_start_us"))
-          .select("user_id", "session_start_us", "n_frames")
+        graft.streaming.Monitor.silenceSessions(Tables.events(s, d), "ts", "user_id", "10 minutes")
+          .select(col("user_id"),
+            unix_micros(col("session_window.start")).as("session_start_us"), col("n_frames"))
           .orderBy("user_id", "session_start_us")
       },
       Some("""WITH g AS (

@@ -83,10 +83,6 @@ object Sources {
     intrinsic.write.mode("overwrite").options(opts).csv(s"$outDir/intrinsic")
   }
 
-  /** S10 — JSONL append log (reference: export/worker_export.py:83-96). */
-  def appendJobLog(entries: DataFrame, outDir: String): Unit =
-    entries.write.mode("append").json(outDir)
-
   /** S2 — scenes.json catalog read: nested {scenes: {name: {..., maps:
     * [{name, path}]}}} normalized to scene + map rows
     * (reference: scene_scanner.py:204-222). */

@@ -51,9 +51,14 @@ object Monitor {
       sinceMillis: Long)
 
   /** W9/Q5 — stall detection: a job whose frame count has not increased
-    * for `stallTimeoutMillis` emits a stalled event (processing-time
-    * timeout = the "no new frames for N minutes" heuristic,
-    * run_render_job_headless.py:312-325). */
+    * for `stallTimeoutMillis` emits a stalled event and loses its state
+    * (the "no new frames for N minutes" heuristic,
+    * run_render_job_headless.py:312-325; monitor.py's "no increase for N
+    * checks"). A job that keeps reporting the same count stalls on the
+    * first batch at or past its deadline; one that goes silent stalls
+    * through the processing-time timeout, which is always set to the
+    * time left. Time is the batch's processing time, so the function is
+    * deterministic under `TestGroupState`. */
   def updateProgress(stallTimeoutMillis: Long)(
       jobId: String,
       updates: Iterator[Progress],
@@ -63,23 +68,26 @@ object Monitor {
       state.remove()
       Iterator.single(last.copy(stalled = true))
     } else {
+      val now = state.getCurrentProcessingTimeMs()
       val prev = state.getOption
       val maxFrame = updates.foldLeft(prev.map(_.frameCount).getOrElse(-1L))(
         (m, p) => math.max(m, p.frameCount))
-      val progressed = prev.forall(_.frameCount < maxFrame)
-      val since =
-        if (progressed) System.currentTimeMillis()
-        else prev.map(_.sinceMillis).getOrElse(System.currentTimeMillis())
+      val since = prev.filter(_.frameCount >= maxFrame).map(_.sinceMillis).getOrElse(now)
       val st = StallStatus(jobId, stalled = false, maxFrame, since)
-      state.update(st)
-      state.setTimeoutDuration(stallTimeoutMillis)
-      Iterator.single(st)
+      val idle = now - since
+      if (idle >= stallTimeoutMillis) {
+        state.remove()
+        Iterator.single(st.copy(stalled = true))
+      } else {
+        state.update(st)
+        state.setTimeoutDuration(stallTimeoutMillis - idle)
+        Iterator.single(st)
+      }
     }
   }
 
   def stallMonitor(progress: Dataset[Progress],
       stallTimeoutMillis: Long): Dataset[StallStatus] = {
-    implicit val pEnc = Encoders.product[Progress]
     implicit val sEnc = Encoders.product[StallStatus]
     progress.groupByKey(_.jobId)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append(),

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.{SparkSession}
 
 /** Q1-Q3 — distributed render-task lifecycle as Structured Streaming
   * state (reference: structure.md Redis schema: `render_queue` list,
@@ -80,7 +79,6 @@ object TaskStateMachine {
 
   /** Streaming wrapper: task-event stream → task-state change stream. */
   def taskStates(events: Dataset[TaskEvent]): Dataset[TaskState] = {
-    implicit val teEnc = Encoders.product[TaskEvent]
     implicit val tsEnc = Encoders.product[TaskState]
     events.groupByKey(_.taskId)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append(),
@@ -113,7 +111,6 @@ object TaskStateMachine {
   }
 
   def workerLiveness(beats: Dataset[Heartbeat], ttlMillis: Long): Dataset[WorkerStatus] = {
-    implicit val hbEnc = Encoders.product[Heartbeat]
     implicit val wsEnc = Encoders.product[WorkerStatus]
     beats.groupByKey(_.workerId)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append(),

@@ -42,7 +42,12 @@ object TrajectoryOps {
     df.withColumn("yaw", coalesce(yawNext, lag(yawNext, 1).over(w)))
   }
 
-  /** W5 — pitch from slope, clamped (reference: transform_track.py:27-53). */
+  /** W5 — pitch from slope, clamped to [minPitch, maxPitch] (reference:
+    * transform_track.py:27-53). Like [[yawFromPoints]], the last row
+    * reuses the previous pair's pitch, and a one-point sequence has no
+    * pair, so its pitch is NULL. Only a non-null pitch is clamped:
+    * `greatest`/`least` skip nulls, so clamping a NULL would read the
+    * bound. */
   def pitchFromSlope(df: DataFrame, seqCol: String, orderCol: String,
       x: Column, y: Column, z: Column, minPitch: Double, maxPitch: Double): DataFrame = {
     val w = Window.partitionBy(seqCol).orderBy(orderCol)
@@ -50,9 +55,9 @@ object TrajectoryOps {
     val dy = lead(y, 1).over(w) - y
     val dz = lead(z, 1).over(w) - z
     val pitchNext = degrees(atan2(dz, sqrt(dx * dx + dy * dy)))
-    df.withColumn("pitch",
-      greatest(least(coalesce(pitchNext, lag(pitchNext, 1).over(w)),
-        lit(maxPitch)), lit(minPitch)))
+    df.withColumn("pitch", coalesce(pitchNext, lag(pitchNext, 1).over(w)))
+      .withColumn("pitch", when(col("pitch").isNotNull,
+        greatest(least(col("pitch"), lit(maxPitch)), lit(minPitch))))
   }
 
   /** W7 — rate-clamp recurrence: out(i) = out(i-1) + clamp(target(i) −

@@ -101,7 +101,6 @@ class CatalogOpsSpec extends SparkSpec {
   }
 
   test("compactTo rewrites a small-files directory to the target file count") {
-    import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_compact").toFile
     try {
       val in = new java.io.File(tmp, "in").getAbsolutePath

@@ -86,7 +86,7 @@ class CodecsSpec extends AnyFunSuite {
   }
 
   test("property: PPM round-trips for arbitrary geometry and raster bytes") {
-    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Gen
     import org.scalacheck.Prop.forAll
     val gen = for {
       w <- Gen.choose(1, 64); h <- Gen.choose(1, 64)
@@ -104,7 +104,7 @@ class CodecsSpec extends AnyFunSuite {
   }
 
   test("property: WAV round-trips arbitrary PCM16 sample runs") {
-    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Gen
     import org.scalacheck.Prop.forAll
     val gen = for {
       n <- Gen.choose(0, 4096); rate <- Gen.choose(1, 192000)
@@ -122,7 +122,7 @@ class CodecsSpec extends AnyFunSuite {
   }
 
   test("property: Y4M round-trips arbitrary even geometry and frame counts") {
-    import org.scalacheck.{Gen, Prop}
+    import org.scalacheck.Gen
     import org.scalacheck.Prop.forAll
     val gen = for {
       w <- Gen.choose(1, 32).map(_ * 2); h <- Gen.choose(1, 32).map(_ * 2)

@@ -291,7 +291,6 @@ class CurationOpsSpec extends SparkSpec {
 
   test("KMV: intersection is EXACT when sketches are un-full; estimate tracks a planted overlap") {
     import graft.functions.ThetaSketch
-    import org.apache.spark.sql.functions.lit
     val k = 256
     // A = [0, 60), B = [40, 100): both under k ⇒ theta = 2^60 ⇒ the
     // estimator degenerates to the exact |A∩B| = 20

@@ -71,4 +71,39 @@ class HarnessContractSpec extends AnyFunSuite {
       tools.Stress.select(Some("stress_pq,q_nope")))
     assert(e.getMessage.contains("q_nope") && !e.getMessage.contains("stress_pq"))
   }
+
+  test("every function a COVERAGE row names exists and has a caller") {
+    // COVERAGE.md credits checks to code by name; a name nothing calls is
+    // credited with a check that never runs it. Scans the Scala sources
+    // (tests and pipebench included) with comment lines dropped: each
+    // backticked `Object.method` of a project object must be a def, and
+    // it, or a bare backticked name that is a def, must occur somewhere
+    // other than its own def.
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val code = Seq("src", "pipebench/src").flatMap { d =>
+      Files.walk(Paths.get(d)).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+    }.flatMap((p: Path) => Files.readAllLines(p).asScala)
+      .filterNot { l => val t = l.trim
+        t.startsWith("*") || t.startsWith("/*") || t.startsWith("//") }
+      .mkString("\n")
+    def count(re: String) = re.r.findAllMatchIn(code).size
+    val objects = "\\bobject\\s+(\\w+)".r.findAllMatchIn(code).map(_.group(1)).toSet
+    val spans = "`([^`\\n]+)`".r
+      .findAllMatchIn(new String(Files.readAllBytes(Paths.get("COVERAGE.md")), "UTF-8"))
+      .map(_.group(1)).toSeq
+    val qualified = spans.flatMap(
+      "^(?:[\\w.]+/)*([A-Z]\\w*)\\.([a-z]\\w*)(?=$|\\()".r.findFirstMatchIn(_))
+      .map(m => (m.group(1), m.group(2))).filter(om => objects(om._1) && om._2 != "scala")
+      .distinct
+    val bare = spans.flatMap("^([a-z]\\w*)(?=$|\\()".r.findFirstMatchIn(_)).map(_.group(1)).distinct
+    def defs(m: String) = count(s"\\bdef\\s+$m\\b")
+    def uncalled(m: String) = count(s"\\b$m\\b") == defs(m)
+    val stale = qualified.collect { case (o, m) if defs(m) == 0 => s"$o.$m" }
+    val dead = qualified.collect { case (o, m) if defs(m) > 0 && uncalled(m) => s"$o.$m" } ++
+      bare.filter(m => defs(m) > 0 && uncalled(m))
+    assert(stale.isEmpty, s"COVERAGE names functions that do not exist: ${stale.mkString(", ")}")
+    assert(dead.isEmpty, s"COVERAGE names functions nothing calls: ${dead.mkString(", ")}")
+  }
 }

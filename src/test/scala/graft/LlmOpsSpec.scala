@@ -967,8 +967,8 @@ class LlmOpsSpec extends SparkSpec {
       (3L, "solo")           // single token: dup 0, no bigrams → 0.0
     ).toDF("id", "text")
     val out = df.select(col("id"),
-        TextStats.duplicateTokenFraction(col("text")).as("dup"),
-        TextStats.topBigramFraction(col("text")).as("top"))
+        graft.functions.TextExpressions.repetitionStats(col("text")).as("r"))
+      .select(col("id"), col("r.dup_token_frac").as("dup"), col("r.top_bigram_frac").as("top"))
       .orderBy("id").collect()
     assert(math.abs(out(0).getDouble(1) - 4.0 / 6) < 1e-12)
     assert(math.abs(out(0).getDouble(2) - 3.0 / 5) < 1e-12)
@@ -1263,7 +1263,6 @@ class LlmOpsSpec extends SparkSpec {
 
   test("collocation lift: planted phrase dominates and matches hand arithmetic") {
     import graft.llmops.TextStats
-    import org.apache.spark.sql.functions._
     // "new york" always co-occurs; "the cat" / "the dog" split "the"'s mass
     val docs = Seq.fill(4)("new york the cat the dog").toDF("text")
     val out = TextStats.collocationLift(docs, "text", minCount = 1)
@@ -1278,8 +1277,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("lloyd step: centroids move toward their members and iterate cleanly") {
-    import graft.llmops.{KMeansOps, Similarity}
-    import org.apache.spark.sql.functions._
+    import graft.llmops.KMeansOps
     // two well-separated clusters around (10,0) and (0,10); seeds off-center
     val pts = ((0 until 20).map(i => (i.toLong, Array(10.0 + i % 3, (i % 2).toDouble))) ++
       (20 until 40).map(i => (i.toLong, Array((i % 2).toDouble, 10.0 + i % 3))))
@@ -1980,10 +1978,10 @@ class LlmOpsSpec extends SparkSpec {
 
   test("random projection: deterministic signs, cluster structure survives") {
     // sign matrix: ±1 only, deterministic, seed-sensitive
-    val s1 = Similarity.projectionSigns("jl", 4, 8)
+    val s1 = graft.functions.VectorExpressions.jlSigns("jl", 4, 8)
     assert(s1.flatten.forall(v => v == 1.0 || v == -1.0))
-    assert(s1.map(_.toSeq).toSeq == Similarity.projectionSigns("jl", 4, 8).map(_.toSeq).toSeq)
-    assert(s1.map(_.toSeq).toSeq != Similarity.projectionSigns("other", 4, 8).map(_.toSeq).toSeq)
+    assert(s1.map(_.toSeq).toSeq == graft.functions.VectorExpressions.jlSigns("jl", 4, 8).map(_.toSeq).toSeq)
+    assert(s1.map(_.toSeq).toSeq != graft.functions.VectorExpressions.jlSigns("other", 4, 8).map(_.toSeq).toSeq)
     // JL guarantee, checked end-to-end: project 3 tight clusters 16→4 and
     // the projected-space brute-force top-k must recover the exact-space
     // neighbors (clones project to identical vectors, so cluster
@@ -2027,7 +2025,7 @@ class LlmOpsSpec extends SparkSpec {
         outDim = 8, seed = "jl", dim = 16)
       .select("vec_id", "proj").collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val signs = Similarity.projectionSigns("jl", 8, 16)
+    val signs = graft.functions.VectorExpressions.jlSigns("jl", 8, 16)
     val composed = vecs.withColumn("proj", array(signs.map(row =>
         graft.llmops.VectorMath.dot(col("embedding"), lit(row))): _*))
       .select("vec_id", "proj").collect()

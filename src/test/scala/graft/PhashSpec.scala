@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.llmops.{Codecs, Multimodal}
 
 /** Perceptual average-hash image dedup: identity, near-identity under

@@ -131,7 +131,7 @@ class PlanAuditSpec extends SparkSpec {
     try {
       val df = (1 to 300).map(i => (i.toLong, s"2026-08-${i % 3 + 10}", s"payload_$i"))
         .toDF("id", "ingest_date", "payload")
-      graft.catalog.CatalogOps.writePartitioned(df, tmp.getAbsolutePath, "ingest_date")
+      df.write.mode("overwrite").partitionBy("ingest_date").parquet(tmp.getAbsolutePath)
       val read = spark.read.parquet(tmp.getAbsolutePath)
         .filter($"ingest_date" === "2026-08-10").select("id")
       val p = plan(read)

@@ -337,7 +337,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: radial simplify keeps first, bounds dropped drift, matches reference scan") {
-    import org.apache.spark.sql.functions.col
     import graft.trajectory.TrajectoryOps
     val eps = 5.0
     val vals = Gen.chooseNum(2, 50).flatMap(n =>
@@ -416,7 +415,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: bloom prune never drops a true join key") {
-    import org.apache.spark.sql.functions.col
     val keys = Gen.listOfN(300, Gen.chooseNum(0L, 10000L))
     for (seed <- 1 to 5) {
       val factKeys = gen(keys, seed.toLong)

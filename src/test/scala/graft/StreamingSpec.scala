@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.TestGroupState
-import graft.streaming.TaskStateMachine
+import graft.streaming.{Monitor, TaskStateMachine}
+import graft.streaming.Monitor.{Progress, StallStatus, updateProgress}
 import graft.streaming.TaskStateMachine._
 
 class StreamingSpec extends SparkSpec {
@@ -93,6 +94,61 @@ class StreamingSpec extends SparkSpec {
       hasTimedOut = true)
     val out = updateWorker(60000L)("w1", Iterator.empty, alive).toSeq
     assert(out.head.alive == false && !alive.exists)
+  }
+
+  private def stallState(prior: StallStatus, batchTimeMs: Long) =
+    TestGroupState.create[StallStatus](
+      org.apache.spark.api.java.Optional.of(prior),
+      org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout(),
+      batchProcessingTimeMs = batchTimeMs,
+      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
+      hasTimedOut = false)
+
+  test("stall: a job reporting the same frame count stalls once its deadline passes") {
+    val t = 60000L
+    val prior = StallStatus("j1", stalled = false, frameCount = 5L, sinceMillis = 0L)
+    // no increase for 2·T: stalled, state freed, as the timeout branch does
+    val stuck = stallState(prior, 2 * t)
+    val out = updateProgress(t)("j1", Iterator(Progress("j1", 5L, 2 * t)), stuck).toSeq
+    assert(out == Seq(prior.copy(stalled = true)) && !stuck.exists)
+    // no increase, deadline not reached: still waiting, state kept
+    val waiting = stallState(prior, t / 2)
+    val out2 = updateProgress(t)("j1", Iterator(Progress("j1", 5L, t / 2)), waiting).toSeq
+    assert(out2 == Seq(prior) && waiting.exists)
+    // progress restarts the clock at the batch time
+    val moving = stallState(prior, 2 * t)
+    val out3 = updateProgress(t)("j1", Iterator(Progress("j1", 6L, 2 * t)), moving).toSeq
+    assert(out3 == Seq(StallStatus("j1", stalled = false, 6L, 2 * t)) && moving.exists)
+  }
+
+  test("end-to-end: progress events stream through the stall monitor") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sqlCtx = sp.sqlContext
+    val input = MemoryStream[Progress]
+    val query = Monitor.stallMonitor(input.toDS(), stallTimeoutMillis = 600000L)
+      .writeStream.format("memory").queryName("stall_status")
+      .outputMode("append").start()
+    // a processing-time timeout makes every trigger run a batch, so
+    // processAllAvailable never returns: wait for the expected rows instead
+    def rowsWhen(n: Int): Array[StallStatus] = {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      var rows = sp.table("stall_status").as[StallStatus].collect()
+      while (rows.length < n && System.nanoTime() < deadline) {
+        Thread.sleep(50)
+        rows = sp.table("stall_status").as[StallStatus].collect()
+      }
+      rows
+    }
+    try {
+      input.addData(Progress("j1", 1L, 100L), Progress("j2", 3L, 100L))
+      assert(rowsWhen(2).length == 2)
+      input.addData(Progress("j1", 2L, 200L))
+      val rows = rowsWhen(3)
+      assert(rows.forall(!_.stalled))
+      assert(rows.filter(_.jobId == "j1").map(_.frameCount).sorted.toSeq == Seq(1L, 2L))
+      assert(rows.filter(_.jobId == "j2").map(_.frameCount).toSeq == Seq(3L))
+    } finally query.stop()
   }
 
   test("end-to-end: task events stream through flatMapGroupsWithState") {

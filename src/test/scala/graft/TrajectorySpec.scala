@@ -20,6 +20,26 @@ class TrajectorySpec extends SparkSpec {
       assert(math.abs((u - y) % 360.0) < 1e-9) }
   }
 
+  test("yaw/pitch from points: known geometry, clamp, one-point sequence is null/null") {
+    // (0,0,0) → (1,0,0) → (1,1,1): the first step is flat along x (yaw 0,
+    // pitch 0); the second climbs 45° along y (yaw 90, pitch clamped to 30);
+    // the last row reuses the previous pair's angles
+    val df = Seq(("s", 0, 0.0, 0.0, 0.0), ("s", 1, 1.0, 0.0, 0.0), ("s", 2, 1.0, 1.0, 1.0),
+        ("solo", 0, 5.0, 5.0, 5.0)).toDF("seq", "i", "x", "y", "z")
+    val withYaw = TrajectoryOps.yawFromPoints(df, "seq", "i", col("x"), col("y"))
+    val out = TrajectoryOps.pitchFromSlope(withYaw, "seq", "i", col("x"), col("y"), col("z"),
+        minPitch = -30.0, maxPitch = 30.0)
+      .orderBy("seq", "i").select("seq", "yaw", "pitch").collect()
+      .map(r => r.getString(0) -> (Option(r.get(1)), Option(r.get(2))))
+    val expected = Seq(0.0 -> 0.0, 90.0 -> 30.0, 90.0 -> 30.0)
+    out.take(3).zip(expected).foreach { case ((seq, (yaw, pitch)), (ey, ep)) =>
+      assert(seq == "s")
+      assert(math.abs(yaw.get.asInstanceOf[Double] - ey) < 1e-9, s"yaw $yaw vs $ey")
+      assert(math.abs(pitch.get.asInstanceOf[Double] - ep) < 1e-9, s"pitch $pitch vs $ep")
+    }
+    assert(out(3) == ("solo" -> (None, None)))
+  }
+
   test("rateClamp bounds every output delta and fixpoints smooth input") {
     val targets = Seq(0.0, 100.0, -50.0, 3.0, 4.0, 5.0)
     val df = targets.zipWithIndex.map { case (t, i) => ("s", i.toLong, t) }

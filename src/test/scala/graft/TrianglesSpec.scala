@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.graph.Triangles
 
 /** Triangle counting on graphs with known counts. */
