@@ -1977,11 +1977,12 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("random projection: deterministic signs, cluster structure survives") {
+    import graft.functions.VectorExpressions.jlSigns
     // sign matrix: ±1 only, deterministic, seed-sensitive
-    val s1 = graft.functions.VectorExpressions.jlSigns("jl", 4, 8)
+    val s1 = jlSigns("jl", 4, 8)
     assert(s1.flatten.forall(v => v == 1.0 || v == -1.0))
-    assert(s1.map(_.toSeq).toSeq == graft.functions.VectorExpressions.jlSigns("jl", 4, 8).map(_.toSeq).toSeq)
-    assert(s1.map(_.toSeq).toSeq != graft.functions.VectorExpressions.jlSigns("other", 4, 8).map(_.toSeq).toSeq)
+    assert(s1.map(_.toSeq).toSeq == jlSigns("jl", 4, 8).map(_.toSeq).toSeq)
+    assert(s1.map(_.toSeq).toSeq != jlSigns("other", 4, 8).map(_.toSeq).toSeq)
     // JL guarantee, checked end-to-end: project 3 tight clusters 16→4 and
     // the projected-space brute-force top-k must recover the exact-space
     // neighbors (clones project to identical vectors, so cluster
