@@ -10,6 +10,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.VectorKernels
 import graft.llmops.{SegmentIO, VectorMath}
+import graft.operators.Concurrent
 
 /** S14 — per-map connectivity analysis cache (reference:
   * navmesh_connectivity.py:209-231, invalidation :272-290).
@@ -29,12 +30,13 @@ import graft.llmops.{SegmentIO, VectorMath}
   * Cost posture: a map is ≤ a few hundred samples, so a read-through is
   * dominated by Spark job launches, not by work, and the map is analysed
   * on the driver from ONE collect of its points. A hit is two jobs (that
-  * collect, which gives the fingerprint, and the cache probe); a miss is
-  * three (the collect, the probe, the write), and [[analysisDoc]] alone
-  * is one. Per-map bound: a map's points are held on the driver and
-  * scored in n² distance evaluations on one thread, so a map must fit in
-  * driver memory. The cache table stays one row per map — driver-size
-  * by construction.
+  * collect, which gives the fingerprint, and the cache probe, which does
+  * not need it, so the two run at once and the fingerprint is matched on
+  * the driver); a miss is three (the same two, then the write), and
+  * [[analysisDoc]] alone is one. Per-map bound: a map's points are held
+  * on the driver and scored in n² distance evaluations on one thread, so
+  * a map must fit in driver memory. The cache table stays one row per
+  * map — driver-size by construction.
   */
 object ConnectivityCache {
 
@@ -167,45 +169,60 @@ object ConnectivityCache {
 
   /** The cached document for `mapName` if present AND its fingerprint
     * matches, as a one-row local DataFrame; None on cold cache or stale
-    * inputs. The probe reads with [[DocSchema]] (no schema-inference job)
-    * and collects the partition-pruned match in one job. Existence is
-    * probed through the Hadoop FileSystem API (so HDFS/S3 cache roots
-    * hit, not just local paths), and ANY unreadable state — empty
-    * directory, `_SUCCESS`-only partial write, files without the
-    * fingerprint column, corrupt footer — is a normal cold cache, not an
-    * error (reference: navmesh_connectivity.py:272-290 treats load
-    * failure as analyze). */
+    * inputs. The probe is [[cachedRows]] and the match runs on the
+    * driver. */
   def readValid(spark: SparkSession, path: String, mapName: String,
-      fingerprint: Long): Option[DataFrame] = {
+      fingerprint: Long): Option[DataFrame] =
+    matching(spark, cachedRows(spark, path, mapName), fingerprint)
+
+  /** Every cached row of `mapName`, partition-pruned, read with
+    * [[DocSchema]] (no schema-inference job) and collected in one job;
+    * each row carries the read's schema. Existence is probed through the
+    * Hadoop FileSystem API (so HDFS/S3 cache roots hit, not just local
+    * paths), and ANY unreadable state — no directory, an empty one, a
+    * `_SUCCESS`-only partial write, corrupt footer — is a normal cold
+    * cache with no rows, not an error (reference:
+    * navmesh_connectivity.py:272-290 treats load failure as analyze). */
+  private def cachedRows(spark: SparkSession, path: String, mapName: String): Array[Row] = {
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(hPath)) return None
-    try {
-      val cached = spark.read.schema(DocSchema).parquet(path)
-        .filter(col("map_name") === mapName &&
-          col("input_fingerprint") === fingerprint)
-      cached.collect().headOption.map(r => spark.createDataFrame(
-        java.util.List.of(r), cached.schema))
-    } catch {
-      case NonFatal(_) => None // unreadable cache == cold cache
+    if (!fs.exists(hPath)) return Array.empty
+    try spark.read.schema(DocSchema).parquet(path)
+      .filter(col("map_name") === mapName).collect()
+    catch {
+      case NonFatal(_) => Array.empty // unreadable cache == cold cache
     }
   }
+
+  /** The first row stamped with `fingerprint`, as a one-row local
+    * DataFrame in the read's schema; rows from files without the
+    * fingerprint column read it as null and never match. */
+  private def matching(spark: SparkSession, rows: Array[Row],
+      fingerprint: Long): Option[DataFrame] =
+    rows.find { r =>
+      val i = r.fieldIndex("input_fingerprint")
+      !r.isNullAt(i) && r.getLong(i) == fingerprint
+    }.map(r => spark.createDataFrame(java.util.List.of(r), r.schema))
 
   /** Read-through entry point: serve the cached analysis when the inputs
     * are unchanged, else recompute, refresh the cache, and return the
     * fresh document (reference's load-or-analyze flow,
     * navmesh_connectivity.py:272-290). Either way the result is a
     * one-row local DataFrame in the cache's column order (`map_name`
-    * last, as a partitioned read returns it). One collect of the points
-    * gives the fingerprint and, on a miss, the analysis; the id column
-    * and `dim` are checked as in [[analysisDoc]]. */
+    * last, as a partitioned read returns it): a hit in the read's schema,
+    * nullable throughout, a miss in the schema it wrote. One collect of
+    * the points gives the fingerprint and, on a miss, the analysis; it
+    * runs beside the cache probe ([[Concurrent.runConcurrently]]), and a
+    * failing collect throws its own exception after the probe ends. The
+    * id column and `dim` are checked as in [[analysisDoc]]. */
   def readOrCompute(spark: SparkSession, path: String, points: DataFrame,
       mapName: String, idCol: String, vecCol: String, dim: Int, k: Int,
       minRatio: Double, analysisDate: String): DataFrame = {
     SegmentIO.requireIntegralIds(points, idCol, "ConnectivityCache.readOrCompute")
-    val rows = sample(points, idCol, vecCol)
+    val Seq(rows, cached) = Concurrent.runConcurrently(spark, Seq(
+      () => sample(points, idCol, vecCol), () => cachedRows(spark, path, mapName)))
     val fp = fingerprint(rows, k, minRatio)
-    readValid(spark, path, mapName, fp).getOrElse {
+    matching(spark, cached, fp).getOrElse {
       val doc = local(spark, analyse(rows, mapName, dim, k, minRatio,
         analysisDate, fp))
       write(doc, path)

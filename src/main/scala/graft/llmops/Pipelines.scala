@@ -3,6 +3,8 @@ package graft.llmops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Concurrent
+
 /** End-to-end corpus curation — the one-call composition of the
   * individually-verified operators, in the order production
   * training-data pipelines run them (each stage's contract, scale shape,
@@ -248,10 +250,10 @@ object Pipelines {
 
   private def writeRegistryTables(reg: CurationRegistry, dir: String): Unit = {
     // the three tables are mutually independent writes into the publish
-    // temp dir — overlap them (SegmentIO.runConcurrently, guide §2.6)
+    // temp dir — overlap them (Concurrent.runConcurrently, guide §2.6)
     // instead of paying three serial job round-trips; only the stats
     // derivation below must FOLLOW sigs (it reads the written parquet)
-    SegmentIO.runConcurrently(reg.keys.sparkSession, Seq(
+    Concurrent.runConcurrently(reg.keys.sparkSession, Seq(
       () => reg.keys.write.mode("overwrite").parquet(s"$dir/keys"),
       () => reg.sigs.write.mode("overwrite").parquet(s"$dir/sigs"),
       () => reg.texts.write.mode("overwrite").parquet(s"$dir/texts")))

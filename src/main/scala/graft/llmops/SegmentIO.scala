@@ -10,14 +10,16 @@ import org.apache.spark.sql.types._
   * [[Pipelines.CurationRegistry]]): every stored segment is a multi-table
   * parquet dir (data tables, then a one-row stats table derived from the
   * written data — independent tables may write concurrently via
-  * [[runConcurrently]]), and a registry is the segment LIST. A crash or
-  * retried ingest mid-write would otherwise leave new data beside stale
-  * stats — a segment the watermark guards can still pass and the open
-  * paths would serve with silently wrong statistics — so publication is
-  * all-or-nothing at the dir level: the tables land in a temp sibling and
-  * ONE rename publishes them. The rename is atomic on local filesystems
-  * and HDFS; on object stores it degrades to copy, where the temp dir
-  * still confines a partial write to a non-served path.
+  * [[graft.operators.Concurrent.runConcurrently]], and the rename below
+  * confines their partial writes), and a registry is the segment LIST. A
+  * crash or retried ingest mid-write would otherwise leave new data
+  * beside stale stats — a segment the watermark guards can still pass
+  * and the open paths would serve with silently wrong statistics — so
+  * publication is all-or-nothing at the dir level: the tables land in a
+  * temp sibling and ONE rename publishes them. The rename is atomic on
+  * local filesystems and HDFS; on object stores it degrades to copy,
+  * where the temp dir still confines a partial write to a non-served
+  * path.
   *
   * A segment list opens in a job count that does not grow with the list:
   * [[readStats]] reads every stats row in ONE multi-path scan, the guards
@@ -40,38 +42,6 @@ private[graft] object SegmentIO {
     fs.delete(target, true)
     if (!fs.rename(tmp, target))
       sys.error(s"SegmentIO.publish: failed to publish $tmp -> $target")
-  }
-
-  /** Run independent write jobs CONCURRENTLY from driver threads (the
-    * guide-§2.6 overlap: Spark schedules concurrent jobs FIFO, so the
-    * later writes back-fill cores the earlier one's tail leaves idle —
-    * a segment write otherwise pays one full job round-trip per table).
-    * Only legal for mutually independent actions into the publish temp
-    * dir, where [[publish]]'s rename already confines partial writes.
-    *
-    * The caller's job group is PROPAGATED to the worker threads: the
-    * group is a thread-local, and without this a Timebox cancel of the
-    * enclosing query would never reach the overlapped write jobs. */
-  def runConcurrently(spark: SparkSession, work: Seq[() => Unit]): Unit = {
-    val sc = spark.sparkContext
-    val inherit = Seq("spark.jobGroup.id", "spark.job.description",
-      "spark.job.interruptOnCancel")
-      .flatMap(k => Option(sc.getLocalProperty(k)).map(k -> _))
-    val tasks = work.map(w => new java.util.concurrent.FutureTask[Unit](() => {
-      inherit.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      w()
-    }))
-    val threads = tasks.map { t =>
-      val th = new Thread(t, "segment-write")
-      th.setDaemon(true); th.start(); th
-    }
-    threads.foreach(_.join())
-    // surface the FIRST failure (get() rethrows wrapped); the joins above
-    // guarantee no write is still in flight when the caller publishes
-    tasks.foreach { t =>
-      try t.get()
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-    }
   }
 
   /** Builder guard: ids must be integral, because the caller orders

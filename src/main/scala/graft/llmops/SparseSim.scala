@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.Concurrent
+
 /** Sparse lexical similarity search — IDF-weighted cosine over term
   * frequency vectors via an inverted index, the retrieval complement to
   * the embedding ANN family ([[Similarity]]) and the set-overlap family
@@ -414,9 +416,9 @@ object SparseSim {
     index.postings.write.mode("overwrite").parquet(s"$dir/postings")
     val post = spark.read.parquet(s"$dir/postings")
     // doc_lens and term_df are independent derivations of the WRITTEN
-    // postings — overlap the two jobs (SegmentIO.runConcurrently, guide
+    // postings — overlap the two jobs (Concurrent.runConcurrently, guide
     // §2.6); only corpus_stats below must follow doc_lens
-    SegmentIO.runConcurrently(spark, Seq(
+    Concurrent.runConcurrently(spark, Seq(
       () => post.groupBy("id").agg(sum("tf").as("len"))
         .write.mode("overwrite").parquet(s"$dir/doc_lens"),
       () => post.groupBy("term").agg(count(lit(1)).as("df"))

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Concurrent
+
 /** Scans / sources / sinks (SURVEY.md §2.1).
   *
   * Everything file-shaped goes through Spark's own file sources (parquet /
@@ -70,17 +72,22 @@ object Sources {
 
   /** S9 — camera CSV sinks with exact reference column order
     * (reference: camera_exporter.py:383-437). One directory per
-    * sequence; header row included. */
+    * sequence; header row included. The three projections are analysed
+    * on the calling thread, so a missing column fails before any
+    * directory is written; the three writes are independent and run at
+    * once ([[Concurrent.runConcurrently]]). Every write has ended when
+    * this returns or throws. After a task fails at run time, its sibling
+    * directories may already be written. */
   def writeCameraCsvs(extrinsic: DataFrame, transform: DataFrame,
       intrinsic: DataFrame, outDir: String): Unit = {
-    val opts = Map("header" -> "true")
-    extrinsic
-      .select(("frame" +: (for (r <- 0 until 4; c <- 0 until 4) yield s"m$r$c")).map(col): _*)
-      .write.mode("overwrite").options(opts).csv(s"$outDir/extrinsic")
-    transform
-      .select("frame", "loc_x", "loc_y", "loc_z", "rot_x", "rot_y", "rot_z")
-      .write.mode("overwrite").options(opts).csv(s"$outDir/transform")
-    intrinsic.write.mode("overwrite").options(opts).csv(s"$outDir/intrinsic")
+    val sinks = Seq(
+      "extrinsic" -> extrinsic.select(
+        ("frame" +: (for (r <- 0 until 4; c <- 0 until 4) yield s"m$r$c")).map(col): _*),
+      "transform" -> transform.select("frame", "loc_x", "loc_y", "loc_z", "rot_x", "rot_y", "rot_z"),
+      "intrinsic" -> intrinsic)
+    Concurrent.runConcurrently(extrinsic.sparkSession, sinks.map { case (name, df) =>
+      () => df.write.mode("overwrite").option("header", "true").csv(s"$outDir/$name")
+    })
   }
 
   /** S2 — scenes.json catalog read: nested {scenes: {name: {..., maps:

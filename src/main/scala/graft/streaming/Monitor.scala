@@ -86,6 +86,23 @@ object Monitor {
     }
   }
 
+  /** W9/Q5 — the stall detector as a streaming query: `progress` grouped
+    * by job, [[updateProgress]] per group under a processing-time
+    * timeout, append output. A batch emits one row per job that reported
+    * in it — `stalled = false` while its frame count grows or its
+    * deadline is ahead, `stalled = true` on the first batch at or past
+    * the deadline — and a job that goes silent emits one `stalled = true`
+    * row (its last frame count and `sinceMillis`) from the first batch
+    * after its timeout fires. A stalled job's state is dropped, so a
+    * later report starts it afresh.
+    *
+    * The caller must start the query with a processing-time trigger
+    * (`Trigger.ProcessingTime`, spaced well inside `stallTimeoutMillis`:
+    * detection lags the deadline by up to one interval). The timeout
+    * makes every trigger run a batch, data or not, so under the default
+    * trigger the query runs no-data batches back to back, each committing
+    * state files (3766 of them in ~10 min in one test run), and
+    * `processAllAvailable()` never returns on it. */
   def stallMonitor(progress: Dataset[Progress],
       stallTimeoutMillis: Long): Dataset[StallStatus] = {
     implicit val sEnc = Encoders.product[StallStatus]

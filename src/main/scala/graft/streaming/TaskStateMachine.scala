@@ -110,6 +110,20 @@ object TaskStateMachine {
     }
   }
 
+  /** Q3 — the heartbeat TTL as a streaming query: `beats` grouped by
+    * worker, [[updateWorker]] per group under a processing-time timeout,
+    * append output. A batch emits one `alive = true` row per worker that
+    * beat in it, carrying its latest heartbeat time; a worker with no
+    * heartbeat for `ttlMillis` of processing time emits one
+    * `alive = false` row with its last-seen time, from the first batch
+    * after the timeout fires, and its state is dropped.
+    *
+    * The caller must start the query with a processing-time trigger
+    * spaced well inside `ttlMillis` (the render_queue benchmark uses 5 s
+    * against a 60 s TTL). The timeout makes every trigger run a batch,
+    * data or not, so under the default trigger the query runs no-data
+    * batches back to back, each committing state files, and
+    * `processAllAvailable()` never returns on it. */
   def workerLiveness(beats: Dataset[Heartbeat], ttlMillis: Long): Dataset[WorkerStatus] = {
     implicit val wsEnc = Encoders.product[WorkerStatus]
     beats.groupByKey(_.workerId)(Encoders.STRING)

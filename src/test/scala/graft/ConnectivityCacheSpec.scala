@@ -359,6 +359,79 @@ class ConnectivityCacheSpec extends SparkSpec {
     }
   }
 
+  /** The document schema a read-through returns, `map_name` last. A miss
+    * returns the document it wrote, whose nullability is the cache's
+    * (`strict`); a hit returns the row as the partitioned parquet read gives
+    * it, nullable throughout. */
+  private def docSchema(strict: Boolean): StructType = {
+    def field(name: String, t: DataType, nullable: Boolean = !strict) =
+      StructField(name, t, nullable)
+    StructType(Seq(
+      field("analysis_date", StringType),
+      field("sample_count", LongType),
+      field("k_nearest", IntegerType),
+      field("num_islands", LongType),
+      field("island_ratios", ArrayType(StructType(Seq(
+        field("size", LongType),
+        field("ratio", DoubleType, nullable = true))), containsNull = !strict)),
+      field("selected_island_size", LongType, nullable = true),
+      field("input_fingerprint", LongType),
+      field("map_name", StringType)))
+  }
+
+  test("a miss returns the cache's document schema and a hit the parquet read's") {
+    Seq((clusters(5, 4, 4, 3), "id", "vec", 3, 2, 0.2),
+        (points, "vec_id", "embedding", 64, 3, 0.10)).foreach {
+      case (pts, idCol, vecCol, dim, k, minRatio) =>
+        val dir = Files.createTempDirectory("conncache-schema").toFile.getAbsolutePath
+        val miss = ConnectivityCache.readOrCompute(spark, dir, pts, "m", idCol, vecCol,
+          dim, k, minRatio, "2026-01-01")
+        assert(miss.schema == docSchema(strict = true), s"miss over $vecCol")
+        val hit = ConnectivityCache.readOrCompute(spark, dir, pts, "m", idCol, vecCol,
+          dim, k, minRatio, "2026-02-02")
+        assert(hit.schema == docSchema(strict = false), s"hit over $vecCol")
+        assert(byName(hit.head()) == byName(miss.head()), s"hit over $vecCol")
+    }
+  }
+
+  test("a cache written by the first release of the driver-side analysis is served as hits") {
+    // src/test/resources/connectivity_cache holds two maps written through
+    // readOrCompute before its cache probe ran beside the points collect:
+    // `clusters` (clusters(5, 4, 4, 3), k 2, ratio 0.2, 2026-01-01) and
+    // `embeddings` (vec_id < 30 of sf0.001, k 3, ratio 0.1, 2026-01-02)
+    val src = Path.of(getClass.getResource("/connectivity_cache").toURI)
+    val dir = Files.createTempDirectory("conncache-fixture")
+    Files.walk(src).iterator().asScala.foreach { f =>
+      val to = dir.resolve(src.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(to) else Files.copy(f, to)
+    }
+    val root = dir.toFile.getAbsolutePath
+    Seq(("clusters", clusters(5, 4, 4, 3), "id", "vec", 3, 2, 0.2, "2026-01-01"),
+        ("embeddings", points, "vec_id", "embedding", 64, 3, 0.1, "2026-01-02")).foreach {
+      case (map, pts, idCol, vecCol, dim, k, minRatio, written) =>
+        val before = files(root, map)
+        val hit = ConnectivityCache.readOrCompute(spark, root, pts, map, idCol, vecCol,
+          dim, k, minRatio, "2026-09-09").collect()
+        val fp = ConnectivityCache.inputFingerprint(pts, idCol, vecCol, k, minRatio)
+        val expected = ConnectivityCache.analysisDoc(pts, map, idCol, vecCol, dim, k,
+          minRatio, written, fp).head()
+        assert(hit.map(byName).toSeq == Seq(byName(expected)), map)
+        assert(files(root, map) == before, map)
+    }
+  }
+
+  test("a failing points collect throws the task's own exception and writes nothing") {
+    // 'x' cannot be cast to a double: the collect fails inside a task
+    val bad = Seq((1L, Seq("1", "x", "2")), (2L, Seq("1", "2", "3"))).toDF("id", "vec")
+      .repartition(2)
+    val dir = Files.createTempDirectory("conncache-badvec").toFile.getAbsolutePath
+    val e = intercept[NumberFormatException](ConnectivityCache.readOrCompute(spark, dir, bad,
+      "bad", "id", "vec", 3, 1, 0.1, "2026-01-01"))
+    assert(e.getClass.getName == "org.apache.spark.SparkNumberFormatException", e.toString)
+    assert(!Files.exists(Path.of(dir, "map_name=bad")))
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+  }
+
   test("a vector whose length is not dim fails the analysis, naming the map") {
     val pts = pointsOf(pt(1L, 0, 0, 0), pt(2L, 1, 0), pt(3L, 2, 0, 0))
     val e = intercept[IllegalArgumentException](ConnectivityCache.analysisDoc(pts, "bad_map",

@@ -5,6 +5,7 @@ import graft.sources.Sources
 import graft.llmops.Multimodal
 import graft.trajectory.Extrinsics
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
@@ -70,6 +71,71 @@ class SourcesSpec extends SparkSpec {
     // transform converts cm → m
     val t = spark.read.option("header", "true").csv(s"$tmp/transform").collect().head
     assert(t.getAs[String]("loc_x").toDouble == 1.0)
+  }
+
+  /** Two frames of a trajectory, in the exporter's column names. */
+  private def twoFrames = Seq((0, 100.0, 200.0, 170.0, 0.0, 5.0, 90.0),
+      (1, 150.0, -20.0, 165.5, 0.0, -12.5, 135.0))
+    .toDF("frame", "x", "y", "z", "roll", "pitch", "yaw")
+
+  /** A CSV sink dir as (header, data lines sorted): every part file must
+    * carry the same header. */
+  private def csvDir(dir: String): (String, Seq[String]) = {
+    val parts = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".csv"))
+      .map(f => Files.readAllLines(f.toPath).asScala.toSeq)
+    assert(parts.nonEmpty, s"no part file in $dir")
+    assert(parts.map(_.head).distinct.length == 1, s"headers differ in $dir")
+    (parts.head.head, parts.flatMap(_.tail).sorted.toSeq)
+  }
+
+  test("camera CSV sinks write the exporter's headers and rows") {
+    val tmp = Files.createTempDirectory("csv-rows").toString
+    val traj = twoFrames
+    Sources.writeCameraCsvs(
+      Extrinsics.extrinsicRows(traj, "frame", "x", "y", "z", "roll", "pitch", "yaw"),
+      Extrinsics.transformRows(traj, "frame", "x", "y", "z", "roll", "pitch", "yaw"),
+      Extrinsics.intrinsicsRow(spark), tmp)
+    assert(csvDir(s"$tmp/extrinsic") == (
+      "frame,m00,m01,m02,m03,m10,m11,m12,m13,m20,m21,m22,m23,m30,m31,m32,m33",
+      Seq("0,6.099933241728101E-17,0.9961946980917455,-0.08715574274765817," +
+          "-1.8442246335124721,-1.0,6.123233995736766E-17,0.0,0.9999999999999999," +
+          "5.336750069161486E-18,0.08715574274765817,0.9961946980917455," +
+          "-1.8678424722512836,0.0,0.0,0.0,1.0",
+        "1,-0.6903455270798547,0.6903455270798549,0.21643961393810288," +
+          "0.815379834968193,-0.7071067811865476,-0.7071067811865475,0.0," +
+          "0.919238815542512,0.15304591873303092,-0.15304591873303094," +
+          "0.9762960071199334,-1.8759479536296424,0.0,0.0,0.0,1.0")))
+    assert(csvDir(s"$tmp/transform") == ("frame,loc_x,loc_y,loc_z,rot_x,rot_y,rot_z",
+      Seq("0,1.0,2.0,1.7,0.0,5.0,90.0", "1,1.5,-0.2,1.655,0.0,-12.5,135.0")))
+    assert(csvDir(s"$tmp/intrinsic") == (
+      "fov,aspect_ratio,width,height,sensor_width,sensor_height,focal_length",
+      Seq("90.0,1.7777777777777777,1920,1080,24.576,13.824,35.0")))
+  }
+
+  test("camera CSV sinks: a frame missing a column fails before any directory is written") {
+    val traj = twoFrames
+    val ext = Extrinsics.extrinsicRows(traj, "frame", "x", "y", "z", "roll", "pitch", "yaw")
+    val tr = Extrinsics.transformRows(traj, "frame", "x", "y", "z", "roll", "pitch", "yaw")
+    Seq((ext.drop("m33"), tr), (ext, tr.drop("rot_z"))).foreach { case (e, t) =>
+      val tmp = Files.createTempDirectory("csv-missing").toString
+      intercept[org.apache.spark.sql.AnalysisException](
+        Sources.writeCameraCsvs(e, t, Extrinsics.intrinsicsRow(spark), tmp))
+      Seq("extrinsic", "transform", "intrinsic").foreach { sub =>
+        assert(!Files.exists(java.nio.file.Path.of(tmp, sub)), sub)
+      }
+    }
+  }
+
+  test("camera CSV sinks: a failing write leaves no job running") {
+    val tmp = Files.createTempDirectory("csv-fail").toString
+    // 'x0' cannot be cast to a double: the extrinsic write fails in a task
+    val bad = Extrinsics.extrinsicRows(twoFrames, "frame", "x", "y", "z", "roll", "pitch", "yaw")
+      .repartition(2).withColumn("m00", concat(lit("x"), col("frame").cast("string")).cast("double"))
+    val traj = twoFrames
+    intercept[NumberFormatException](Sources.writeCameraCsvs(bad,
+      Extrinsics.transformRows(traj, "frame", "x", "y", "z", "roll", "pitch", "yaw"),
+      Extrinsics.intrinsicsRow(spark), tmp))
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
   }
 
   test("fs inventory lists only matching files, metadata-only") {
